@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.DriverPool
 import graft.sources.Readers
 
 /** The reference's whole `main()` (etl.py:316-334) as one composable job,
@@ -56,50 +57,41 @@ object SparkifyJob {
       // CATALOG-side sinks (songs, artists) read only songData —
       // independent of those caches — so they launch BEFORE the
       // cache-fill count and overlap it (guide §2.6, r21).
-      // Independent sinks are submitted concurrently — the 100 TB
-      // posture: a sequential driver loop leaves the cluster idle in
-      // every small sink's tail (commit, file moves, last skewed
-      // task), while concurrent jobs let the scheduler backfill those
-      // slots with the next sink's tasks. Output paths are disjoint,
-      // so commits never contend; failure of any sink fails the job.
-      // Each sink is lifted to Try so a failure cannot orphan the
-      // others mid-write: all five run to completion (the pool's
-      // shutdown() does not interrupt in-flight jobs), and EVERY
+      // Independent sinks are submitted concurrently through
+      // DriverPool — the 100 TB posture: a sequential loop of actions
+      // leaves the cluster idle in every small sink's tail (commit,
+      // file moves, last skewed task), while concurrent jobs let the
+      // scheduler backfill those slots with the next sink's tasks.
+      // Output paths are disjoint, so commits never contend. Each sink
+      // is lifted to a named failure so one failing sink cannot orphan
+      // the others mid-write: all five run to completion, and EVERY
       // failed sink is reported — the first as the cause, the rest
       // suppressed — instead of only whichever failed first.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        def lifted(name: String, run: () => Unit) =
-          scala.concurrent.Future((name, scala.util.Try(run())))
-        val catalogSinks = Seq(
-          "songs" -> (() => SongPipeline.writeSongs(songs, s"$out/songs")),
-          "artists" -> (() =>
-            artists.write.mode("overwrite").parquet(s"$out/artists")))
-          .map { case (n, r) => lifted(n, r) }
-        time.count() // fills the cleanedLog + time caches (one pass)
-        val logSinks = Seq(
-          "users" -> (() =>
-            users.write.mode("overwrite").parquet(s"$out/users")),
-          "time" -> (() => LogPipeline.writeTime(time, s"$out/time")),
-          "songplays" -> (() =>
-            LogPipeline.writeSongplays(songplays, s"$out/songplays")))
-          .map { case (n, r) => lifted(n, r) }
-        val outcomes = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(catalogSinks ++ logSinks),
-          scala.concurrent.duration.Duration.Inf)
-        val failed = outcomes.collect {
-          case (name, scala.util.Failure(e)) => (name, e)
-        }
-        if (failed.nonEmpty) {
-          val err = new RuntimeException(
-            s"Sparkify sink(s) failed: ${failed.map(_._1).mkString(", ")}",
-            failed.head._2)
-          failed.tail.foreach { case (_, t) => err.addSuppressed(t) }
-          throw err
-        }
-      } finally pool.shutdown()
+      def sink(name: String,
+          write: => Unit): () => Option[(String, Throwable)] =
+        () => scala.util.Try(write).failed.toOption.map(name -> _)
+      val (catalogFailed, logFailed) = DriverPool.par2(
+        () => DriverPool.par(Seq(
+          sink("songs", SongPipeline.writeSongs(songs, s"$out/songs")),
+          sink("artists",
+            artists.write.mode("overwrite").parquet(s"$out/artists")))),
+        () => {
+          time.count() // fills the cleanedLog + time caches (one pass)
+          DriverPool.par(Seq(
+            sink("users",
+              users.write.mode("overwrite").parquet(s"$out/users")),
+            sink("time", LogPipeline.writeTime(time, s"$out/time")),
+            sink("songplays",
+              LogPipeline.writeSongplays(songplays, s"$out/songplays"))))
+        })
+      val failed = (catalogFailed ++ logFailed).flatten
+      if (failed.nonEmpty) {
+        val err = new RuntimeException(
+          s"Sparkify sink(s) failed: ${failed.map(_._1).mkString(", ")}",
+          failed.head._2)
+        failed.tail.foreach { case (_, t) => err.addSuppressed(t) }
+        throw err
+      }
     }
     Outputs(songs, artists, users, time, songplays)
   }

@@ -238,7 +238,7 @@ object ConcurrencyQueries {
       // (old ∪ new per file), so the final dead count is BOTH matched
       // sets — an illegal rebase would have replaced the winner's
       // vectors and resurrected its matched rows
-      val dead = ManifestLog.dvsAsOf(root, 2).values.map(_.nDeleted).sum
+      val dead = ManifestLog.snapshot(root, 2).dvs.values.map(_.nDeleted).sum
       val expect = flatEvents(s, dir)
         .filter(col("event_id") % 10 === 2 || col("event_id") % 10 === 7)
         .count()

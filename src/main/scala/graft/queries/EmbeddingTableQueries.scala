@@ -182,7 +182,8 @@ object EmbeddingTableQueries {
         // sync 1: the corpus bootstrap over the two append versions
         ManifestLog.replicateTo(s, src, d, keys = Seq("vec_id"))
         // source moves on: the COW rewrite of key-intersecting files
-        val touched = ManifestLog.filesMatchingCols(src, 2L,
+        val touched = ManifestLog.filesMatchingCols(
+          ManifestLog.snapshot(src, 2L),
           Seq(("vec_id", 0L, 49L)))
         val rewrite = ManifestLog.readVersionWhereCols(s, src, 2L,
             Seq(("vec_id", 0L, 49L)))

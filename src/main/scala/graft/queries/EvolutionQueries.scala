@@ -141,7 +141,7 @@ object EvolutionQueries {
       // a clean append validates against the set IN FORCE at its
       // snapshot, then commits through the serializable protocol
       val batch = ev.filter(col("event_id") % 4 >= 2)
-      ManifestLog.requireSatisfies(batch, ManifestLog.checksAsOf(root, 0))
+      ManifestLog.requireSatisfies(batch, ManifestLog.snapshot(root, 0).checks)
       batch.coalesce(2).write.parquet(s"$root/data/v1")
       // attest: the hand-sequenced requireSatisfies above IS the
       // row validation (since r17 the commit-time gate refuses
@@ -157,7 +157,7 @@ object EvolutionQueries {
         .withColumn("user_id", col("user_id") * -1 - 1)
       val err = scala.util.Try(
         ManifestLog.requireSatisfies(poison,
-          ManifestLog.checksAsOf(root, 1)))
+          ManifestLog.snapshot(root, 1).checks))
       require(err.isFailure &&
         err.failed.get.getMessage.contains("value_present") &&
         err.failed.get.getMessage.contains("user_nonneg"),

@@ -1029,7 +1029,8 @@ object MaintenanceQueries {
         colStats = fileColStats(s, root, "data/v0",
           Seq("user_id", "ts_us")))
       val box = Seq(("user_id", 1L, 8L), ("ts_us", BoxTsLo, BoxTsHi))
-      require(ManifestLog.filesMatchingCols(root, 0, box).size ==
+      require(ManifestLog.filesMatchingCols(
+        ManifestLog.snapshot(root, 0), box).size ==
         smalls.size,
         "a hash-scattered layout must defeat the box prune entirely")
       // OPTIMIZE ZORDER BY (user_id, ts_us): the same interleave as
@@ -1061,7 +1062,8 @@ object MaintenanceQueries {
       // keeps a small minority (1-3 of 8) — the multiplicative prune
       // a z-layout exists for, but tiny corpora (sf0.001 spans few
       // distinct ranks) only guarantee the subset property
-      val kept = ManifestLog.filesMatchingCols(root, 1, box)
+      val kept = ManifestLog.filesMatchingCols(
+        ManifestLog.snapshot(root, 1), box)
       require(kept.size < summaries.size,
         s"z-clustering must make the box prune selective: kept " +
           s"${kept.size} of ${summaries.size}")
@@ -1408,7 +1410,8 @@ object MaintenanceQueries {
 
       // the COW decision is metadata-only: which v0 files CAN contain a
       // band key — everything else carries over by identity
-      val touched = ManifestLog.filesMatching(root, 0, MergeLo, MergeHi)
+      val touched = ManifestLog.filesMatching(
+        ManifestLog.snapshot(root, 0), MergeLo, MergeHi)
       val target = s.read.parquet(touched.map(f => s"$root/$f"): _*)
       // full merge semantics over the touched slice only; target rows
       // outside the band have no source match and pass through, source
@@ -1560,7 +1563,7 @@ object MaintenanceQueries {
       require(locals.nonEmpty &&
         ManifestLog.filesAsOf(dst, 1).forall(!_.startsWith("/")),
         "materialization must leave zero absolute references")
-      require(locals.forall(f => ManifestLog.colStatsAsOf(dst, 1)
+      require(locals.forall(f => ManifestLog.snapshot(dst, 1).colStats
           .get(f).exists(_.contains("user_id"))),
         "the rewrite must re-commit prunable stats")
       val dvs = ManifestLog.deleteWhereMor(s, dst, 1, 2,
@@ -1626,12 +1629,12 @@ object MaintenanceQueries {
       // interval meets the bad band, from the raw corpus (a range-
       // partitioned layout puts each user in one file, so the doomed
       // files' intervals cover exactly their own rows)
-      val doomed = ManifestLog.filesMatchingCols(root, 0,
+      val doomed = ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
         Seq(("user_id", Long.MinValue, 3L)))
       require(doomed.nonEmpty && doomed.size <
         ManifestLog.filesAsOf(root, 0).size,
         s"the correction must touch a strict file subset: $doomed")
-      val cs = ManifestLog.colStatsAsOf(root, 0)
+      val cs = ManifestLog.snapshot(root, 0).colStats
       val cond = doomed.map { f =>
         val st = cs(f)("user_id")
         col("user_id").between(st.min, st.max)

@@ -108,13 +108,13 @@ object MorQueries {
         .withColumn("value", col("value") + 1000.0)
         .repartitionByRange(postFiles, col("user_id"))
         .write.parquet(s"$root/data/v2")
-      val cs1 = ManifestLog.colStatsAsOf(root, 1)
-      val candidates = ManifestLog.filesAsOf(root, 1).filter(f =>
-        cs1.getOrElse(f, Map.empty).get("user_id")
+      val r1 = ManifestLog.snapshot(root, 1)
+      val candidates = r1.files.filter(f =>
+        r1.colStats.getOrElse(f, Map.empty).get("user_id")
           .forall(st => st.max >= MrgLo && st.min <= MrgHi))
       val dvs2 =
         if (candidates.isEmpty) Map.empty[String, ManifestLog.DvRef]
-        else ManifestLog.buildDvs(s, root, 1, 2, candidates,
+        else ManifestLog.buildDvs(s, root, r1, 2, candidates,
           _.filter(matched))
       ManifestLog.commit(root, 2,
         adds = ManifestLog.partFiles(root, "data/v2"), removes = Seq.empty,
@@ -126,9 +126,9 @@ object MorQueries {
       val rewritten = ManifestLog.compactDvs(s, root, 2, 3,
         statsCols = Seq("user_id"))
       require(rewritten.nonEmpty, "compaction must rewrite vectored files")
-      require(ManifestLog.dvsAsOf(root, 3).isEmpty,
+      require(ManifestLog.snapshot(root, 3).dvs.isEmpty,
         "compaction must drop every deletion vector from the live state")
-      require(rewritten.forall(f => ManifestLog.colStatsAsOf(root, 3)
+      require(rewritten.forall(f => ManifestLog.snapshot(root, 3).colStats
           .get(f).exists(_.contains("user_id"))),
         "single-pass compaction must re-commit user_id stats")
     }
@@ -561,16 +561,16 @@ object MorQueries {
       require(ManifestLog.filesAsOf(root, 3).toSet ==
         ManifestLog.filesAsOf(root, 0).toSet,
         "restored live set must equal the target's")
-      require(ManifestLog.colStatsAsOf(root, 3) ==
-        ManifestLog.colStatsAsOf(root, 0),
+      require(ManifestLog.snapshot(root, 3).colStats ==
+        ManifestLog.snapshot(root, 0).colStats,
         "restored stats must equal the target's")
-      require(ManifestLog.dvsAsOf(root, 3).isEmpty,
+      require(ManifestLog.snapshot(root, 3).dvs.isEmpty,
         "restore must clear the since-added deletion vectors")
       // metadata-only: not one data file was written or deleted
       require(ManifestLog.partFilesRecursive(root, "data").size ==
         filesOnDisk, "restore must move zero data files")
       // history-preserving: the intermediate states still time-travel
-      require(ManifestLog.dvsAsOf(root, 1).nonEmpty,
+      require(ManifestLog.snapshot(root, 1).dvs.nonEmpty,
         "v1 must still read with its vectors applied")
     }
 

@@ -44,7 +44,7 @@ object WriterQueries {
         .collect()
         .map(r => s"data/v0/${r.getString(0).split('/').last}" ->
           ManifestLog.FileStat(r.getLong(1), r.getLong(2))).toMap
-      val committed = ManifestLog.colStatsAsOf(root, 0)
+      val committed = ManifestLog.snapshot(root, 0).colStats
         .view.mapValues(_("user_id")).toMap
       require(committed == readBack,
         s"single-pass stats diverge from read-back: $committed vs $readBack")
@@ -126,7 +126,7 @@ object WriterQueries {
         root, "data/v0", 0, statsCols = Seq("o_orderdate"))
       // the date predicate must prune at the metadata layer: only the
       // files whose day interval meets 1997+ survive
-      val kept = ManifestLog.filesMatchingCols(root, 0,
+      val kept = ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
         Seq(("o_orderdate", java.time.LocalDate.parse("1997-01-01")
           .toEpochDay, Long.MaxValue)))
       require(kept.size < ManifestLog.filesAsOf(root, 0).size,
@@ -182,7 +182,7 @@ object WriterQueries {
           .repartitionByRange(8, col("lang"), col("doc_id")),
         root, "data/v0", 0, statsCols = Seq("doc_id"),
         strStatsCols = Seq("lang"))
-      val bounds = ManifestLog.strColStatsAsOf(root, 0)
+      val bounds = ManifestLog.snapshot(root, 0).strColStats
       require(bounds.nonEmpty &&
         bounds.values.forall(_.contains("lang")),
         "every committed file must carry lang bounds")
@@ -303,7 +303,7 @@ object WriterQueries {
           .repartitionByRange(8, col("l_extendedprice")),
         root, "data/v0", 0, statsCols = Seq("l_extendedprice"))
       val key = graft.sources.ManifestFileIndex.dblKey _
-      val kept = ManifestLog.filesMatchingCols(root, 0,
+      val kept = ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
         Seq(("l_extendedprice", Long.MinValue, key(2000.0))))
       require(kept.size < ManifestLog.filesAsOf(root, 0).size,
         s"price stats must prune the above-2000 files: kept $kept")
@@ -472,11 +472,12 @@ object WriterQueries {
           summaries, Seq("l_extendedprice", "l_quantity")))
       val key = graft.sources.ManifestFileIndex.dblKey _
       val total = ManifestLog.filesAsOf(root, 0).size
-      val priceOnly = ManifestLog.filesMatchingCols(root, 0,
+      val priceOnly = ManifestLog.filesMatchingCols(
+        ManifestLog.snapshot(root, 0),
         Seq(("l_extendedprice", key(1000.0), key(5000.0)))).size
-      val qtyOnly = ManifestLog.filesMatchingCols(root, 0,
+      val qtyOnly = ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
         Seq(("l_quantity", Long.MinValue, key(5.0)))).size
-      val box = ManifestLog.filesMatchingCols(root, 0,
+      val box = ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
         Seq(("l_extendedprice", key(1000.0), key(5000.0)),
           ("l_quantity", Long.MinValue, key(5.0)))).size
       require(box < total && box <= priceOnly && box <= qtyOnly,
@@ -536,7 +537,8 @@ object WriterQueries {
           .repartition(8, col("doc_id")),
         root, "data/v0", 0, bloomCol = Some("tag"),
         strStatsCols = Seq("tag"))
-      val kept = ManifestLog.filesMatchingStrPoint(root, 0, "tag", "u42")
+      val kept = ManifestLog.filesMatchingStrPoint(
+        root, ManifestLog.snapshot(root, 0), "tag", "u42")
       require(kept.size < ManifestLog.filesAsOf(root, 0).size,
         s"the string bloom must prune tag-free files: kept $kept")
     }
@@ -555,7 +557,7 @@ object WriterQueries {
       "holds exactly as for long keys; a false positive costs one " +
       "file's IO, never a row (the exact equality still applies). " +
       "The same hash now composes into string-keyed dynamic file " +
-      "pruning (filesMatchingStrKeysIn consults blooms alongside " +
+      "pruning (filesMatchingStrKeys consults blooms alongside " +
       "bounds, closing lake_join_dfp_strings' documented no-bloom-" +
       "class gap). The builder asserts the point prune drops files " +
       "on the deliberately unclustered fixture. Oracle replays the " +
@@ -585,7 +587,7 @@ object WriterQueries {
       "total characters - unknowable at plan time), its collected " +
       "keys prune the lang-clustered manifest table's files through " +
       "the UTF-8 string bounds (readVersionStrKeys -> " +
-      "filesMatchingStrKeysIn; bounds-less files are must-read, no " +
+      "filesMatchingStrKeys; bounds-less files are must-read, no " +
       "bloom class - blooms are long-keyed), and the join still " +
       "applies exact equality so a prune false-positive costs one " +
       "file's IO, never a row. PlanSpec pins the post-prune file " +
@@ -631,7 +633,7 @@ object WriterQueries {
           .repartitionByRange(8,
             pmod(col("user_id"), lit(4)), col("user_id")),
         root, "data/v0", 0, statsCols = Seq("user_id", "opt_ts"))
-      val ns = ManifestLog.nullStatsAsOf(root, 0)
+      val ns = ManifestLog.snapshot(root, 0).nullStats
         .values.flatMap(_.get("opt_ts"))
       require(ns.exists(s => s.nulls == 0L) &&
         ns.exists(s => s.nulls == s.rows),

@@ -293,7 +293,7 @@ object CheckpointCodec {
 
   /** Per-row-group partial fold — merged in row-group order so the
     * live-set ordering matches the writer's file-major order. Exposed
-    * to [[ManifestLog.replayIn]], which folds the partials straight
+    * to [[ManifestLog.snapshotIn]], which folds the partials straight
     * into its own mutable replay state (one pass) instead of paying
     * the [[decode]] convenience merge plus an immutable copy plus a
     * re-fold — three serial million-entry passes — per resolve. */
@@ -436,7 +436,7 @@ object CheckpointCodec {
     * (= the writer's file-major order). A file's entries can straddle
     * a group boundary, so consumers folding partials must MERGE, not
     * overwrite, the per-file column maps (at most nGroups files are
-    * affected; [[decode]] below and replayIn both do). */
+    * affected; [[decode]] below and the snapshot fold both do). */
   private[sources] def decodeParts(bytes: Array[Byte]): Array[Partial] = {
     val input = new BytesIn(bytes)
     val nGroups = {

@@ -43,7 +43,7 @@ import scala.util.Using
   * manifests below the prune horizon form a prefix 0..j. A concurrent
   * reader of version w therefore either (a) replays an intact prefix /
   * an intact checkpoint + tail — exact; or (b) finds w missing from the
-  * listing and fails the [[filesAsOf]] membership require — loud. A
+  * listing and fails the [[snapshotIn]] membership require — loud. A
   * SILENT wrong resolution (replay over a gapped prefix, which
   * ascending-order deletion would permit) cannot occur; pinned by
   * ManifestLogSpec's torn-prune test. */
@@ -163,13 +163,17 @@ object ManifestLog {
   final case class BloomRef(column: String, sidecar: String, m: Int,
       k: Int, str: Boolean = false, legacy: Boolean = false)
 
-  /** The full fold of the log up to a version: live files, their
-    * single-column stats, their NAMED-column stats (path → column →
-    * [min, max]; the multi-dimensional skipping seam), their bloom
-    * sidecar refs (path → column → ref; the point-lookup seam), and
-    * the latest committed batch per writer appId (the exactly-once
-    * txn seam — Delta's setTransaction / txn action). */
-  final case class Replay(files: Seq[String],
+  /** The table's SNAPSHOT at `version`: the full fold of the log up to
+    * it, built by [[snapshotIn]] and the only way code reads table
+    * state. Live files, their single-column stats, their NAMED-column
+    * stats (path → column → [min, max]; the multi-dimensional skipping
+    * seam), their bloom sidecar refs (path → column → ref; the
+    * point-lookup seam), the latest committed batch per writer appId
+    * (the exactly-once txn seam — Delta's setTransaction / txn
+    * action), the live files' deletion vectors, and the declared
+    * schema and CHECK set in force. Immutable: an operation resolves
+    * one and passes it down. */
+  final case class Replay(version: Long, files: Seq[String],
       stats: Map[String, FileStat],
       colStats: Map[String, Map[String, FileStat]],
       blooms: Map[String, Map[String, BloomRef]],
@@ -188,7 +192,13 @@ object ManifestLog {
       // started from genesis); None when a legacy checkpoint without
       // the bit hides pruned history — callers fall back to
       // [[dvsEverThrough]]'s full surviving-metadata scan.
-      dvsEver: Option[Boolean] = None)
+      dvsEver: Option[Boolean] = None) {
+    /** The declared schema as a StructType — every snapshot-shaped
+      * read plans under it so evolved tables resolve mixed
+      * generations (r17). */
+    def declaredSchema: Option[org.apache.spark.sql.types.StructType] =
+      schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL)
+  }
 
   /** Per-file per-column NULL COUNT + the file's row count (r18; the
     * r17 verdict's task 5): the one pair that lets `IS NULL` /
@@ -221,6 +231,39 @@ object ManifestLog {
 
   private val ManifestRe = "^\\d{20}\\.json$".r
   private val CheckpointRe = "^\\d{20}\\.checkpoint\\.json$".r
+
+  /** ONE listing of `_log/`: every read of table state starts from
+    * exactly one, so the membership check, the checkpoint seed and the
+    * tail all see the same directory state (and a resolve pays one
+    * list call, not one per question). */
+  private final case class Listing(names: Set[String]) {
+    /** Committed versions, ascending (stage temps are dot-prefixed
+      * and already absent; checkpoints carry a `.checkpoint` infix). */
+    val manifests: Seq[Long] = names.iterator
+      .filter(n => ManifestRe.matches(n))
+      .map(_.stripSuffix(".json").toLong).toSeq.sorted
+    /** Versions with a published checkpoint, ascending. */
+    val checkpoints: Seq[Long] = names.iterator
+      .filter(n => CheckpointRe.matches(n))
+      .map(_.stripSuffix(".checkpoint.json").toLong).toSeq.sorted
+    def hasManifest(v: Long): Boolean = names(manifestName(v))
+    /** A checkpoint serves its own version even after the manifests
+      * it folded were pruned (the retention story checkpoints
+      * enable). */
+    def resolvable(v: Long): Boolean =
+      hasManifest(v) || names(checkpointName(v))
+    def latest: Option[Long] = (manifests ++ checkpoints).maxOption
+    /** The nearest checkpoint at or below `v` — the fold's seed. */
+    def seed(v: Long): Option[Long] = checkpoints.filter(_ <= v).lastOption
+    /** The manifests folded on top of [[seed]] to reach `v`. */
+    def tail(v: Long): Seq[Long] = {
+      val s = seed(v)
+      manifests.filter(m => m <= v && s.forall(m > _))
+    }
+  }
+
+  private def listingOf(store: LogStore): Listing =
+    Listing(store.list().toSet)
 
   /** True iff the flat manifest format can round-trip `s`: no field
     * ('|'), element (','), quote ('"') or field-terminator (']')
@@ -286,10 +329,10 @@ object ManifestLog {
     if (adds.nonEmpty && !attest && checks.isEmpty && version > 0) {
       // the gate needs only the in-force CHECKS and the declared
       // schema — resolved by the METADATA-ONLY fold (r18): a full
-      // replayIn builds the live-file maps too, which at 1M files is
+      // snapshot builds the live-file maps too, which at 1M files is
       // a multi-second parse paid by EVERY add-commit (the log-scale
       // probe's one cliff); this fold skips the file fields entirely
-      val (prevDdl, inForce) = metaAsOfIn(store, version - 1)
+      val (prevDdl, inForce) = metaAsOf(store, listingOf(store), version - 1)
       // mixed-type constraints resolve their columns' types from the
       // committed schemaDdl (r18; the session-free parser alone
       // cannot — closes §8.3.4-12's attest fallback for
@@ -503,24 +546,19 @@ object ManifestLog {
       // retention: manifests folded by the PREVIOUS checkpoint are now
       // folded twice over — prune them, newest first (see prune-safety
       // note in the object doc)
-      for (prev <- checkpointVersionsIn(store).filter(_ < version)
-             .lastOption;
-           v <- versionsIn(store).filter(_ <= prev).reverse)
+      val l = listingOf(store)
+      for (prev <- l.checkpoints.filter(_ < version).lastOption;
+           v <- l.manifests.filter(_ <= prev).reverse)
         store.delete(manifestName(v))
     }
   }
 
-  /** Committed versions in ascending order (stage temp files are
-    * dot-prefixed and already absent from [[LogStore.list]];
-    * checkpoints carry a `.checkpoint` infix and are skipped here). */
-  def versionsIn(store: LogStore): Seq[Long] =
-    store.list().filter(n => ManifestRe.matches(n))
-      .map(_.stripSuffix(".json").toLong).sorted
+  /** Committed versions in ascending order. */
+  def versionsIn(store: LogStore): Seq[Long] = listingOf(store).manifests
 
   /** Versions with a published checkpoint, ascending. */
   def checkpointVersionsIn(store: LogStore): Seq[Long] =
-    store.list().filter(n => CheckpointRe.matches(n))
-      .map(_.stripSuffix(".checkpoint.json").toLong).sorted
+    listingOf(store).checkpoints
 
   // self-authored JSON (writers above/below): fields are flat string
   // arrays, so this scan is a parser for exactly this format
@@ -540,8 +578,9 @@ object ManifestLog {
     * DERIVED state: every writer computes the identical content from
     * the immutable manifests, so publication is idempotent — the same
     * atomic-publish protocol as [[commitIn]] but a lost race is a
-    * no-op, not a conflict. */
-  /** `parquet = true` (the default since r19) publishes the per-file
+    * no-op, not a conflict.
+    *
+    * `parquet = true` (the default since r19) publishes the per-file
     * state as a columnar sidecar + a KB JSON checkpoint carrying only
     * the scalar fields and a `pq` marker (see [[CheckpointCodec]]);
     * `false` keeps the legacy all-JSON layout — the seam the
@@ -552,18 +591,17 @@ object ManifestLog {
     * content being a pure function of the immutable manifests). */
   def writeCheckpointIn(store: LogStore, version: Long,
       parquet: Boolean = true): Unit = {
-    val r = replayIn(store, version)
+    val l = listingOf(store)
+    val r = foldIn(store, l, version)
     def q(s: String) = "\"" + s + "\""
     // fold the version's own commit timestamp (when recorded) so the
     // checkpoint keeps its era TIME-addressable after retention prunes
     // the manifest (SURVEY §8.3.2-4); a re-publication after pruning
     // recovers it from the existing checkpoint
     val at: Seq[String] =
-      if (versionsIn(store).contains(version))
+      if (l.hasManifest(version))
         field(store.read(manifestName(version)), "at")
-      else if (checkpointVersionsIn(store).contains(version))
-        field(store.read(checkpointName(version)), "at")
-      else Seq.empty
+      else field(store.read(checkpointName(version)), "at")
     // the DVS-EVER bit (r19; r18 verdict next-8 #7): "has this table
     // EVER committed a deletion vector through `version`" folds
     // forward through checkpoints, so the image feed's unresolvable-
@@ -681,7 +719,8 @@ object ManifestLog {
     * log is therefore never weaker than the scan it replaces. */
   def dvsEverThrough(store: LogStore,
       version: Long): Boolean = {
-    val ckpts = checkpointVersionsIn(store).filter(_ <= version)
+    val l = listingOf(store)
+    val ckpts = l.checkpoints.filter(_ <= version)
     // prefer the KB meta sibling for the bit (r20): a legacy all-JSON
     // checkpoint can be tens of MiB; the sibling carries the same bit
     // since r19, and an r18-era sibling without it falls through to
@@ -690,7 +729,7 @@ object ManifestLog {
       store.read(checkpointName(cv)))
     val bit = ckpts.lastOption.flatMap { cv =>
       val fromMeta =
-        if (store.list().contains(checkpointMetaName(cv)))
+        if (l.names(checkpointMetaName(cv)))
           field(store.read(checkpointMetaName(cv)), "dvsever").headOption
         else None
       fromMeta.orElse(
@@ -698,7 +737,7 @@ object ManifestLog {
     }
     bit match {
       case Some(bit) =>
-        bit == "1" || versionsIn(store)
+        bit == "1" || l.manifests
           .filter(v => v <= version && v > ckpts.last)
           .exists(v => field(store.read(manifestName(v)), "dvs").nonEmpty)
       case None =>
@@ -711,7 +750,7 @@ object ManifestLog {
           field(j, "dvsever").headOption.contains("1") ||
             field(j, "dvs").nonEmpty
         } ||
-        versionsIn(store).filter(_ <= version).exists(v =>
+        l.manifests.filter(_ <= version).exists(v =>
           field(store.read(manifestName(v)), "dvs").nonEmpty)
     }
   }
@@ -809,13 +848,6 @@ object ManifestLog {
     }.groupBy(_._1).view.mapValues(
       _.map(t => t._2 -> t._3).toMap).toMap
 
-  /** Replay seeded from the nearest checkpoint ≤ `version` (full
-    * replay from 0 when none): fold the remaining manifests' adds,
-    * removes, per-file stats (single- and named-column) and txn
-    * markers in commit order. A removed file drops its stats; a
-    * stats-less add has no entry (never skippable); a writer's txn
-    * folds as the MAX batchId seen (batchIds are monotone per app, so
-    * max = latest even across a checkpoint + tail seam). */
   /** STRICT range decomposition of a CHECK expression (r17): the
     * per-column closed bounds that, when every add's [min, max]
     * stats sit inside them, PROVE the whole constraint holds for
@@ -1176,14 +1208,6 @@ object ManifestLog {
     }
   }
 
-  /** METADATA-ONLY fold (r18): the declared schema DDL and CHECK set
-    * in force at `version`, resolved WITHOUT building the live-file
-    * maps — checkpoint-seeded like [[replayIn]], but touching only
-    * the `schema` and `checks` fields, so the commit gate's
-    * per-commit cost stays flat in table size (a full replay of a
-    * 1M-file checkpoint is a multi-second parse; schema/checks are a
-    * few hundred bytes of it). Same resolution semantics: latest
-    * declaration wins, the `-` sentinel clears the check set. */
   /** Decode a manifest/checkpoint `schema` field (base64 DDL; the
     * LAST entry wins) — shared by every fold site so the format has
     * one reader. None = the field declared nothing. */
@@ -1207,19 +1231,28 @@ object ManifestLog {
           java.nio.charset.StandardCharsets.UTF_8)
       }.toMap)
 
-  /** Schema DDL + CHECK set as of `version` via a METADATA-ONLY fold:
-    * the KB checkpoint sibling (or the full checkpoint when the
-    * sibling is missing) plus the tail manifests — the r18 fix that
-    * keeps the gated-commit hot path flat at log scale. NOTE (r18
-    * advice): the flatness depends on checkpoints EXISTING — a table
-    * committed without any [[CheckpointPolicy]] still folds every
-    * manifest per gated commit, the same O(versions) shape
-    * [[replayIn]] has always had there. Acceptable by policy (the
-    * probe's measured per-manifest cost is ~µs and such tables are
-    * short-history by construction), but a long-lived gated table
-    * should commit with a policy — the 1M-file probe's 94 ms/commit
-    * number is the WITH-checkpoint path. */
-  private def metaAsOfIn(store: LogStore,
+  /** METADATA-ONLY fold (r18): the declared schema DDL and CHECK set
+    * in force at `version`, resolved WITHOUT building the live-file
+    * maps — seeded and tailed from listing `l` exactly like
+    * [[snapshotIn]], but reading the KB checkpoint sibling (or the
+    * full checkpoint when the sibling is missing) and touching only
+    * the `schema` and `checks` fields, so the commit gate's per-commit
+    * cost stays flat in table size (a full replay of a 1M-file
+    * checkpoint is a multi-second parse; schema/checks are a few
+    * hundred bytes of it). Same resolution semantics: latest
+    * declaration wins, the `-` sentinel clears the check set. No
+    * membership check: the commit gate folds `version - 1` of
+    * whatever log it is extending.
+    *
+    * NOTE (r18 advice): the flatness depends on checkpoints EXISTING
+    * — a table committed without any [[CheckpointPolicy]] still folds
+    * every manifest per gated commit, the same O(versions) shape the
+    * full fold has there. Acceptable by policy (the probe's measured
+    * per-manifest cost is ~µs and such tables are short-history by
+    * construction), but a long-lived gated table should commit with
+    * a policy — the 1M-file probe's 94 ms/commit number is the
+    * WITH-checkpoint path. */
+  private def metaAsOf(store: LogStore, l: Listing,
       version: Long): (Option[String], Map[String, String]) = {
     var schemaDdl: Option[String] = None
     var checks = Map.empty[String, String]
@@ -1228,33 +1261,46 @@ object ManifestLog {
         .foreach(d => schemaDdl = Some(d))
       decodeChecksField(field(json, "checks")).foreach(checks = _)
     }
-    // ONE directory listing serves the sibling lookup AND both
-    // version scans (this fold runs per gated commit — the hot path
-    // the r18 sibling exists for)
-    val listing = store.list()
-    val manifestVs = listing.filter(ManifestRe.matches)
-      .map(_.stripSuffix(".json").toLong).sorted
-    val ckptVs = listing.filter(CheckpointRe.matches)
-      .map(_.stripSuffix(".checkpoint.json").toLong).sorted
-    val ckpt = ckptVs.filter(_ <= version).lastOption
-    ckpt.foreach { cv =>
-      // prefer the KB-sized metadata sibling (r18); a checkpoint
-      // published before the sibling existed (or whose sibling was
-      // lost to a crash between the two publishes) falls back to the
-      // full checkpoint read — same content, just more bytes
-      val json =
-        if (listing.contains(checkpointMetaName(cv)))
-          store.read(checkpointMetaName(cv))
-        else store.read(checkpointName(cv))
-      fold(json)
+    l.seed(version).foreach { cv =>
+      fold(store.read(
+        if (l.names(checkpointMetaName(cv))) checkpointMetaName(cv)
+        else checkpointName(cv)))
     }
-    manifestVs
-      .filter(v => v <= version && ckpt.forall(v > _))
-      .foreach(v => fold(store.read(manifestName(v))))
+    l.tail(version).foreach(v => fold(store.read(manifestName(v))))
     (schemaDdl, checks)
   }
 
-  private[sources] def replayIn(store: LogStore, version: Long): Replay = {
+  /** THE RESOLVER: the table's [[Replay]] snapshot at `version`, from
+    * ONE listing of the log. Throws if `version` was never committed
+    * or has been pruned past (a time-travel read must not silently
+    * resolve a neighboring version). Not cached: every call lists and
+    * folds afresh, so a commit by any other writer is visible to the
+    * next call. */
+  def snapshotIn(store: LogStore, version: Long): Replay =
+    foldIn(store, listingOf(store), version)
+
+  def snapshot(root: String, version: Long): Replay =
+    snapshotIn(storeFor(root), version)
+
+  /** The snapshot at the latest resolvable version (None on an empty
+    * log) — one listing serves both the version and the fold. */
+  private[sources] def latestSnapshot(root: String): Option[Replay] = {
+    val store = storeFor(root)
+    val l = listingOf(store)
+    l.latest.map(foldIn(store, l, _))
+  }
+
+  /** The one fold of the log: seeded from the nearest checkpoint ≤
+    * `version` (from genesis when none), then the tail manifests'
+    * adds, removes, per-file stats (single- and named-column), blooms,
+    * DVs, txn markers, schema and checks in commit order — each file
+    * read once. A removed file drops its stats; a stats-less add has
+    * no entry (never skippable); a writer's txn folds as the MAX
+    * batchId seen (batchIds are monotone per app, so max = latest
+    * even across a checkpoint + tail seam). */
+  private def foldIn(store: LogStore, l: Listing, version: Long): Replay = {
+    require(l.resolvable(version),
+      s"version $version not in manifest log (have: ${l.manifests})")
     // concrete HashMaps so the columnar-checkpoint fold can PRESIZE
     // them (r20): a 10M-entry build pays ~20 doubling rehashes
     // otherwise — measured 42% of the put cost at that scale
@@ -1283,8 +1329,7 @@ object ManifestLog {
     def foldTxns(entries: Seq[(String, Long)]): Unit =
       entries.foreach { case (app, b) =>
         txns(app) = txns.get(app).fold(b)(math.max(_, b)) }
-    val ckpt = checkpointVersionsIn(store).filter(_ <= version).lastOption
-    ckpt.foreach { cv =>
+    l.seed(version).foreach { cv =>
       val json = store.read(checkpointName(cv))
       if (field(json, "pq").nonEmpty) {
         // columnar checkpoint (r19): the per-file state rides the
@@ -1338,34 +1383,34 @@ object ManifestLog {
         case None => if (dvs.nonEmpty) Some(true) else None
       }
     }
-    versionsIn(store)
-      .filter(v => v <= version && ckpt.forall(v > _))
-      .foreach { v =>
-        val json = store.read(manifestName(v))
-        field(json, "removes").foreach { f =>
-          live.remove(f); stats.remove(f); colStats.remove(f)
-          strColStats.remove(f); nullStats.remove(f); blooms.remove(f)
-          dvs.remove(f) }
-        field(json, "adds").foreach(live.add)
-        stats ++= parseStats(field(json, "stats"))
-        colStats ++= parseColStats(field(json, "colstats"))
-        strColStats ++= parseStrColStats(field(json, "strstats"))
-        nullStats ++= parseNullStats(field(json, "nullstats"))
-        blooms ++= parseBlooms(field(json, "blooms"),
-          legacyDefault = field(json, "fmt").isEmpty)
-        foldTxns(parseTxns(field(json, "txn")))
-        // a later DV REPLACES the file's earlier one (each vector is
-        // written as old ∪ newly-dead, so last-wins is exact); a later
-        // declared SCHEMA likewise supersedes (additive evolution)
-        val mDvs = parseDvs(field(json, "dvs"))
-        if (mDvs.nonEmpty) dvsEver = Some(true)
-        dvs ++= mDvs
-        foldSchema(field(json, "schema"))
-        foldChecks(field(json, "checks"))
-      }
-    Replay(live.toSeq, stats.toMap, colStats.toMap, blooms.toMap,
-      txns.toMap, dvs.toMap, schemaDdl, checks, strColStats.toMap,
-      nullStats.toMap, dvsEver)
+    l.tail(version).foreach { v =>
+      val json = store.read(manifestName(v))
+      field(json, "removes").foreach { f =>
+        live.remove(f); stats.remove(f); colStats.remove(f)
+        strColStats.remove(f); nullStats.remove(f); blooms.remove(f)
+        dvs.remove(f) }
+      field(json, "adds").foreach(live.add)
+      stats ++= parseStats(field(json, "stats"))
+      colStats ++= parseColStats(field(json, "colstats"))
+      strColStats ++= parseStrColStats(field(json, "strstats"))
+      nullStats ++= parseNullStats(field(json, "nullstats"))
+      blooms ++= parseBlooms(field(json, "blooms"),
+        legacyDefault = field(json, "fmt").isEmpty)
+      foldTxns(parseTxns(field(json, "txn")))
+      // a later DV REPLACES the file's earlier one (each vector is
+      // written as old ∪ newly-dead, so last-wins is exact); a later
+      // declared SCHEMA likewise supersedes (additive evolution)
+      val mDvs = parseDvs(field(json, "dvs"))
+      if (mDvs.nonEmpty) dvsEver = Some(true)
+      dvs ++= mDvs
+      foldSchema(field(json, "schema"))
+      foldChecks(field(json, "checks"))
+    }
+    // a vector on a file that is not live is dead weight: the
+    // snapshot carries live files' vectors only
+    Replay(version, live.toSeq, stats.toMap, colStats.toMap,
+      blooms.toMap, txns.toMap, dvs.iterator.filter(d => live(d._1)).toMap,
+      schemaDdl, checks, strColStats.toMap, nullStats.toMap, dvsEver)
   }
 
   /** TIMESTAMP time travel (r16) — `AS OF TIMESTAMP` resolved to a
@@ -1380,13 +1425,14 @@ object ManifestLog {
     * commit — "before the table existed" must be loud, never a silent
     * earliest-version read. */
   def versionAtTimestampIn(store: LogStore, tsMs: Long): Long = {
-    val fromManifests = versionsIn(store).flatMap { v =>
+    val l = listingOf(store)
+    val fromManifests = l.manifests.flatMap { v =>
       field(store.read(manifestName(v)), "at").headOption
         .map(at => v -> at.toLong)
     }
     // checkpoints carry their own version's stamp, so a checkpointed
     // era survives retention in the time-addressable set too
-    val fromCheckpoints = checkpointVersionsIn(store).flatMap { v =>
+    val fromCheckpoints = l.checkpoints.flatMap { v =>
       field(store.read(checkpointName(v)), "at").headOption
         .map(at => v -> at.toLong)
     }
@@ -1403,51 +1449,15 @@ object ManifestLog {
   def versionAtTimestamp(root: String, tsMs: Long): Long =
     versionAtTimestampIn(storeFor(root), tsMs)
 
-  /** Live data files as of `version`: checkpoint-seeded log replay.
-    * Throws if `version` was never committed or has been pruned past
-    * (a time-travel read must not silently resolve a neighboring
-    * version). */
-  def filesAsOfIn(store: LogStore, version: Long): Seq[String] = {
-    val vs = versionsIn(store)
-    // a checkpoint can serve its own version even after the manifests
-    // it folded were pruned (the retention story checkpoints enable)
-    require(vs.contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log (have: $vs)")
-    replayIn(store, version).files
-  }
-
-  /** Live per-file stats as of `version` (files committed without
-    * stats are absent). Same resolution rules as [[filesAsOfIn]]. */
-  def statsAsOfIn(store: LogStore,
-      version: Long): Map[String, FileStat] = {
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    replayIn(store, version).stats
-  }
-
-  /** Live per-file NAMED-column stats as of `version`. */
-  def colStatsAsOfIn(store: LogStore,
-      version: Long): Map[String, Map[String, FileStat]] = {
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    replayIn(store, version).colStats
-  }
-
   /** EXACTLY-ONCE writer seam (Delta's txn action): the highest
     * batchId this `appId` has ever committed, resolved from the log
     * itself — so an idempotence decision survives even TOTAL loss of
     * the writer's own checkpoint. None when the writer never
     * committed (or the log is empty). */
-  def lastTxnIn(store: LogStore, appId: String): Option[Long] = {
-    val latest =
-      (versionsIn(store) ++ checkpointVersionsIn(store)).maxOption
-    latest.flatMap(v => replayIn(store, v).txns.get(appId))
-  }
+  def lastTxn(root: String, appId: String): Option[Long] =
+    latestSnapshot(root).flatMap(_.txns.get(appId))
 
-  /** DATA SKIPPING: the live files as of `version` that can contain a
+  /** DATA SKIPPING: the live files of snapshot `r` that can contain a
     * row with tracked-column value in the CLOSED range [lo, hi] —
     * files whose [min, max] interval intersects it, plus every file
     * with no recorded stats (unknown means must-read; pruning is only
@@ -1455,18 +1465,11 @@ object ManifestLog {
     * consults manifest metadata only — at 100 TB this is the read
     * path's first and cheapest filter, ahead of parquet row-group and
     * page pruning inside the surviving files. */
-  def filesMatchingIn(store: LogStore, version: Long, lo: Long,
-      hi: Long): Seq[String] = {
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    val r = replayIn(store, version)
-    require(r.files.nonEmpty, s"version $version resolves to no files")
-    r.files.filter(f =>
+  def filesMatching(r: Replay, lo: Long, hi: Long): Seq[String] =
+    liveFiles(r).filter(f =>
       r.stats.get(f).forall(st => st.max >= lo && st.min <= hi))
-  }
 
-  /** MULTI-DIMENSIONAL data skipping: the live files as of `version`
+  /** MULTI-DIMENSIONAL data skipping: the live files of snapshot `r`
     * that can contain a row satisfying EVERY (column, [lo, hi]) range
     * in `preds` — a file survives a predicate when its recorded
     * interval for that column intersects the range, or when it carries
@@ -1475,18 +1478,19 @@ object ManifestLog {
     * (Z-order/Hilbert) is where named-column stats earn their keep:
     * 1-D stats leave every file spanning the second key's full
     * domain, so only ONE predicate of a box can ever prune. */
-  def filesMatchingColsIn(store: LogStore, version: Long,
-      preds: Seq[(String, Long, Long)]): Seq[String] = {
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    val r = replayIn(store, version)
-    require(r.files.nonEmpty, s"version $version resolves to no files")
-    r.files.filter { f =>
+  def filesMatchingCols(r: Replay,
+      preds: Seq[(String, Long, Long)]): Seq[String] =
+    liveFiles(r).filter { f =>
       val cs = r.colStats.getOrElse(f, Map.empty)
       preds.forall { case (c, lo, hi) =>
         cs.get(c).forall(st => st.max >= lo && st.min <= hi) }
     }
+
+  /** The live set a prune helper filters: loud when the snapshot has
+    * no files at all (a prune of an empty table is a caller bug). */
+  private def liveFiles(r: Replay): Seq[String] = {
+    require(r.files.nonEmpty, s"version ${r.version} resolves to no files")
+    r.files
   }
 
   /** INCREMENTAL CHANGE READ — the actions committed in versions
@@ -1498,18 +1502,23 @@ object ManifestLog {
     * re-reading the table. Requires every manifest in the range to
     * still exist (a tail pruned past `from` must fail loudly, never
     * silently skip actions — re-bootstrap from a snapshot instead). */
-  def changesBetweenIn(store: LogStore, from: Long,
-      to: Long): Seq[(Long, Seq[String], Seq[String])] = {
-    require(from <= to, s"empty change range: ($from, $to]")
-    val have = versionsIn(store).filter(v => v > from && v <= to)
-    val want = (from + 1) to to
-    require(have == want,
-      s"change range ($from, $to] has pruned/missing manifests " +
-        s"(have: $have) — re-bootstrap from a snapshot")
-    have.map { v =>
-      val json = store.read(manifestName(v))
+  def changesBetween(root: String, from: Long,
+      to: Long): Seq[(Long, Seq[String], Seq[String])] =
+    tailJsons(storeFor(root), from, to).map { case (v, json) =>
       (v, field(json, "adds"), field(json, "removes"))
     }
+
+  /** The manifests of versions (`from`, `to`], each read once — the
+    * dense-range contract every change reader shares: a range with a
+    * pruned or missing manifest is loud. */
+  private def tailJsons(store: LogStore, from: Long,
+      to: Long): Seq[(Long, String)] = {
+    require(from <= to, s"empty change range: ($from, $to]")
+    val have = versionsIn(store).filter(v => v > from && v <= to)
+    require(have == ((from + 1) to to),
+      s"change range ($from, $to] has pruned/missing manifests " +
+        s"(have: $have) — re-bootstrap from a snapshot")
+    have.map(v => v -> store.read(manifestName(v)))
   }
 
   /** OPTIMISTIC SERIALIZABLE COMMIT (r16) — the multi-writer protocol
@@ -1573,17 +1582,18 @@ object ManifestLog {
             s"gave up after $maxRetries rebases — every attempt lost " +
               "to a concurrent winner")
           val latest = versionsIn(store).max
-          changesBetweenIn(store, readVersion, latest).foreach {
-            case (v, _, wRemoves) =>
-              val overlap = wRemoves.toSet.intersect(footprint)
-              if (overlap.nonEmpty) throw LogicalConflict(v,
-                s"winner removed files this txn depends on: $overlap")
+          // the winners' manifests, read once for all three checks
+          val winners = tailJsons(store, readVersion, latest)
+          winners.foreach { case (v, json) =>
+            val overlap = field(json, "removes").toSet.intersect(footprint)
+            if (overlap.nonEmpty) throw LogicalConflict(v,
+              s"winner removed files this txn depends on: $overlap")
           }
-          dvChangesBetweenIn(store, readVersion, latest).foreach {
-            case (v, wDvs) =>
-              val overlap = wDvs.keySet.intersect(footprint)
-              if (overlap.nonEmpty) throw LogicalConflict(v,
-                s"winner vectored files this txn depends on: $overlap")
+          winners.foreach { case (v, json) =>
+            val overlap = parseDvs(field(json, "dvs")).keySet
+              .intersect(footprint)
+            if (overlap.nonEmpty) throw LogicalConflict(v,
+              s"winner vectored files this txn depends on: $overlap")
           }
           // METADATA conflict (r17 advice): a winner that declared a
           // new schema or CHECK set between this txn's snapshot and
@@ -1594,8 +1604,7 @@ object ManifestLog {
           // update for exactly this reason; so do we, for every txn
           // shape (appends included — the constraint set governs
           // appends above all).
-          ((readVersion + 1) to latest).foreach { v =>
-            val json = store.read(manifestName(v))
+          winners.foreach { case (v, json) =>
             if (field(json, "schema").nonEmpty ||
                 field(json, "checks").nonEmpty)
               throw LogicalConflict(v,
@@ -1614,33 +1623,13 @@ object ManifestLog {
     * changed ROWS without touching files: an append-only row feed
     * cannot replay a DV commit and must reject it, a change-image
     * feed turns its delta into delete images. */
-  def dvChangesBetweenIn(store: LogStore, from: Long,
-      to: Long): Seq[(Long, Map[String, DvRef])] = {
-    require(from <= to, s"empty change range: ($from, $to]")
-    val have = versionsIn(store).filter(v => v > from && v <= to)
-    val want = (from + 1) to to
-    require(have == want,
-      s"change range ($from, $to] has pruned/missing manifests " +
-        s"(have: $have) — re-bootstrap from a snapshot")
-    have.map(v => v -> parseDvs(field(store.read(manifestName(v)), "dvs")))
-  }
-
   def dvChangesBetween(root: String, from: Long,
       to: Long): Seq[(Long, Map[String, DvRef])] =
-    dvChangesBetweenIn(storeFor(root), from, to)
+    tailJsons(storeFor(root), from, to).map { case (v, json) =>
+      v -> parseDvs(field(json, "dvs"))
+    }
 
-  /** Live per-file bloom sidecar refs as of `version`. */
-  def bloomsAsOfIn(store: LogStore,
-      version: Long): Map[String, Map[String, BloomRef]] = {
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    replayIn(store, version).blooms
-  }
-
-  // ---- root-based API (POSIX binding; the callers' surface) ----
-
-  /** POINT-LOOKUP data skipping: the live files as of `version` whose
+  /** POINT-LOOKUP data skipping: the live files of snapshot `r` whose
     * bloom sidecar for `column` does not rule out `value` — plus every
     * file without a bloom for that column (must-read). Range stats
     * cannot serve this lookup when `column` is not the clustered key
@@ -1650,15 +1639,9 @@ object ManifestLog {
     * 100 TB that is KBs of index per file against GBs of data. A
     * false positive wastes a read; the exact row predicate still
     * decides membership (the oracle checks rows, never the prune). */
-  def filesMatchingPoint(root: String, version: Long, column: String,
-      value: Long): Seq[String] = {
-    val store = storeFor(root)
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    val r = replayIn(store, version)
-    require(r.files.nonEmpty, s"version $version resolves to no files")
-    r.files.filter { f =>
+  def filesMatchingPoint(root: String, r: Replay, column: String,
+      value: Long): Seq[String] =
+    liveFiles(r).filter { f =>
       r.blooms.getOrElse(f, Map.empty).get(column).forall { ref =>
         // a STRING-keyed bloom cannot answer a long probe (different
         // hash → false negatives = wrong pruning); mismatch = must-read
@@ -1669,7 +1652,6 @@ object ManifestLog {
         }
       }
     }
-  }
 
   /** LEGACY-BLOOM guard (r19; r18 advice, widened by this round's
     * review): a bloom parsed UNTAGGED from a pre-`fmt` manifest
@@ -1706,11 +1688,8 @@ object ManifestLog {
     * untouched. Returns the number of refs retagged (0 = no commit
     * published). */
   def retagBlooms(root: String): Int = {
-    val store = storeFor(root)
-    val latest = (versionsIn(store) ++ checkpointVersionsIn(store))
-      .maxOption.getOrElse(
-        throw new IllegalArgumentException(s"empty log at $root"))
-    val r = replayIn(store, latest)
+    val r = latestSnapshot(root).getOrElse(
+      throw new IllegalArgumentException(s"empty log at $root"))
     val footerCache =
       scala.collection.mutable.Map.empty[String, Map[String, Boolean]]
     // Some(true) = string keys, Some(false) = long keys, None = the
@@ -1788,7 +1767,7 @@ object ManifestLog {
     }.toMap
     if (retagged.isEmpty) 0
     else {
-      commitIn(store, latest + 1, Seq.empty, Seq.empty,
+      commit(root, r.version + 1, Seq.empty, Seq.empty,
         op = "retag_blooms", blooms = retagged)
       retagged.iterator.map { case (f, nb) =>
         val old = r.blooms(f)
@@ -1805,16 +1784,10 @@ object ManifestLog {
     * UTF-8 bounds — which every file's interval would contain —
     * prune nothing. String bounds compose when present; bloom-less,
     * bound-less files are must-read. */
-  def filesMatchingStrPoint(root: String, version: Long,
+  def filesMatchingStrPoint(root: String, r: Replay,
       column: String, value: String): Seq[String] = {
-    val store = storeFor(root)
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    val r = replayIn(store, version)
-    require(r.files.nonEmpty, s"version $version resolves to no files")
     val key = FileBloom.strKey(value)
-    r.files.filter { f =>
+    liveFiles(r).filter { f =>
       val boundsMaybe =
         r.strColStats.getOrElse(f, Map.empty).get(column).forall(st =>
           ManifestFileIndex.utf8Cmp(value, st.min) >= 0 &&
@@ -1838,25 +1811,22 @@ object ManifestLog {
     * live file when nothing matches. */
   def readVersionStrPoint(spark: SparkSession, root: String,
       version: Long, column: String, value: String): DataFrame = {
-    val matching = filesMatchingStrPoint(root, version, column, value)
-    val r = replayIn(storeFor(root), version)
-    val declared = r.schemaDdl
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
+    val r = snapshot(root, version)
+    val matching = filesMatchingStrPoint(root, r, column, value)
     if (matching.isEmpty)
       // DEFINITELY ABSENT everywhere — the miss case the bloom
       // exists for must not degrade to a full-table scan (review
       // finding, r17): shape the empty answer from one file's
       // metadata at zero row cost
       readFilesIndexed(spark, root, r.files.take(1),
-        declaredSchema = declared).limit(0)
+        declaredSchema = r.declaredSchema).limit(0)
     else
-      readFilesIndexed(spark, root, matching,
-        dvs = r.dvs.filter { case (f, _) => matching.contains(f) },
-        declaredSchema = declared, nullStats = r.nullStats)
+      readFilesIndexed(spark, root, matching, dvs = r.dvs,
+        declaredSchema = r.declaredSchema, nullStats = r.nullStats)
   }
 
   /** DYNAMIC FILE PRUNING (r16) — the dim-driven sibling of
-    * [[filesMatchingColsIn]]: the live files as of `version` that can
+    * [[filesMatchingCols]]: the live files of snapshot `r` that can
     * contain ANY of `keys` in `column`, decided from the manifest's
     * metadata indexes with BOTH classes composing per file:
     *
@@ -1873,16 +1843,11 @@ object ManifestLog {
     * reads the files that can match, not the table. The key set is
     * the join's SMALL side by definition (it would be broadcast
     * anyway); callers bound it — see [[readVersionKeys]]. */
-  def filesMatchingKeysIn(store: LogStore, root: String, version: Long,
-      column: String, keys: Seq[Long]): Seq[String] = {
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
+  def filesMatchingKeys(root: String, r: Replay, column: String,
+      keys: Seq[Long]): Seq[String] = {
     require(keys.nonEmpty, "dynamic file pruning needs a non-empty key set")
-    val r = replayIn(store, version)
-    require(r.files.nonEmpty, s"version $version resolves to no files")
     val sorted = keys.distinct.sorted
-    r.files.filter { f =>
+    liveFiles(r).filter { f =>
       val statsMaybe = r.colStats.getOrElse(f, Map.empty).get(column)
         .forall(st => sorted.exists(k => k >= st.min && k <= st.max))
       lazy val bloomMaybe = r.blooms.getOrElse(f, Map.empty).get(column)
@@ -1900,22 +1865,17 @@ object ManifestLog {
     }
   }
 
-  /** STRING-keyed dynamic file pruning (r17): the live files as of
-    * `version` whose `column` string bounds can contain ANY of
-    * `keys` in UTF-8 byte order — the [[filesMatchingKeysIn]]
-    * sibling for string layout keys (no bloom class: blooms are
-    * long-keyed; bounds-less files are must-read). */
-  def filesMatchingStrKeysIn(store: LogStore, root: String,
-      version: Long, column: String, keys: Seq[String]): Seq[String] = {
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
+  /** STRING-keyed dynamic file pruning (r17): the live files of
+    * snapshot `r` whose `column` string bounds can contain ANY of
+    * `keys` in UTF-8 byte order — the [[filesMatchingKeys]] sibling
+    * for string layout keys (bounds-less files are must-read; a
+    * string-keyed bloom composes). */
+  def filesMatchingStrKeys(root: String, r: Replay, column: String,
+      keys: Seq[String]): Seq[String] = {
     require(keys.nonEmpty, "dynamic file pruning needs a non-empty key set")
-    val r = replayIn(store, version)
-    require(r.files.nonEmpty, s"version $version resolves to no files")
     val distinct = keys.distinct
     val hashed = distinct.map(FileBloom.strKey)
-    r.files.filter { f =>
+    liveFiles(r).filter { f =>
       val boundsMaybe =
         r.strColStats.getOrElse(f, Map.empty).get(column).forall(st =>
           distinct.exists(k =>
@@ -1937,40 +1897,17 @@ object ManifestLog {
     }
   }
 
-  /** The declared schema as of `version` as a StructType, for the
-    * prune-helper readers — every snapshot-shaped read must plan
-    * under it so evolved tables resolve mixed generations (r17). */
-  private def declaredAsOf(root: String,
-      version: Long): Option[org.apache.spark.sql.types.StructType] =
-    replayIn(storeFor(root), version).schemaDdl
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
+  /** ONE-snapshot indexed read over the pruned `matching` files of
+    * `r`: stats, DV refs and the declared schema all come from the
+    * snapshot the prune used. Falls back to every live file when
+    * nothing matched (an empty parquet source list is a reader error,
+    * and "nothing can match" still needs a schema). */
+  private def readPruned(spark: SparkSession, root: String, r: Replay,
+      matching: Seq[String]): DataFrame =
+    readFilesIndexed(spark, root,
+      if (matching.nonEmpty) matching else r.files, r.colStats, r.dvs,
+      r.declaredSchema, r.nullStats)
 
-  /** ONE-replay indexed read over a pre-pruned file list: stats, DV
-    * refs and the declared schema all come from a single fold of the
-    * log (the prune helpers previously replayed 3-4 times per read —
-    * review finding, r17). */
-  private def readPrunedIndexed(spark: SparkSession, root: String,
-      version: Long, files: Seq[String]): DataFrame = {
-    val r = replayIn(storeFor(root), version)
-    // set-membership, not Seq scans: dvs x files is quadratic at the
-    // 10M-file decade (r20)
-    val fileSet = files.toSet
-    readFilesIndexed(spark, root, files, r.colStats,
-      r.dvs.filter { case (f, _) => fileSet(f) },
-      r.schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL),
-      r.nullStats)
-  }
-
-  /** Snapshot read AS OF `version` pruned by a RUNTIME key set from
-    * `keys` (one column of join keys — the dim side of a fact⋈dim):
-    * collects the distinct keys (loudly bounded by `maxKeys`; the dim
-    * side of a dynamic-file-pruning join is broadcast-sized by
-    * definition, and a dim that outgrows the bound should use the
-    * row-level bloom filter — graft.ops.RuntimeFilters — instead),
-    * prunes files through [[filesMatchingKeysIn]], and plans the
-    * survivors through the manifest index. The join itself still
-    * applies exact equality — the prune only shrinks the scan, so
-    * false positives cost IO, never correctness. */
   /** The plan-bounded dim-key collect (r20; r19 verdict what's-wrong
     * #1): a corpus-sized keys frame used to materialize on the driver
     * BEFORE the loud bound fired — limit(maxKeys + 2) caps the
@@ -1986,20 +1923,28 @@ object ManifestLog {
     keys.distinct().limit(maxKeys + 2).collect().toSeq
       .filterNot(_.isNullAt(0))
 
+  /** Snapshot read AS OF `version` pruned by a RUNTIME key set from
+    * `keys` (one column of join keys — the dim side of a fact⋈dim):
+    * collects the distinct keys (loudly bounded by `maxKeys`; the dim
+    * side of a dynamic-file-pruning join is broadcast-sized by
+    * definition, and a dim that outgrows the bound should use the
+    * row-level bloom filter — graft.ops.RuntimeFilters — instead),
+    * prunes files through [[filesMatchingKeys]], and plans the
+    * survivors through the manifest index. The join itself still
+    * applies exact equality — the prune only shrinks the scan, so
+    * false positives cost IO, never correctness. */
   def readVersionKeys(spark: SparkSession, root: String, version: Long,
       column: String, keys: DataFrame, maxKeys: Int = 100000): DataFrame = {
     val k = collectBoundedKeys(keys, maxKeys).map(_.getLong(0))
     require(k.size <= maxKeys,
       s"dim key set has more than $maxKeys keys — too large for " +
         "file-level pruning; use a row-level runtime bloom filter instead")
-    val matching =
-      filesMatchingKeysIn(storeFor(root), root, version, column, k)
-    val files = if (matching.nonEmpty) matching else filesAsOf(root, version)
-    readPrunedIndexed(spark, root, version, files)
+    val r = snapshot(root, version)
+    readPruned(spark, root, r, filesMatchingKeys(root, r, column, k))
   }
 
   /** STRING twin of [[readVersionKeys]] (r17): snapshot read pruned by
-    * a runtime STRING key set through [[filesMatchingStrKeysIn]] —
+    * a runtime STRING key set through [[filesMatchingStrKeys]] —
     * dynamic file pruning for category/language/country-style join
     * keys, where the dim's keys are only known after a runtime
     * computation. Same loud dim-size bound; the join still applies
@@ -2014,10 +1959,8 @@ object ManifestLog {
     require(k.size <= maxKeys,
       s"dim key set has more than $maxKeys keys — too large for " +
         "file-level pruning; use a row-level runtime bloom filter instead")
-    val matching =
-      filesMatchingStrKeysIn(storeFor(root), root, version, column, k)
-    val files = if (matching.nonEmpty) matching else filesAsOf(root, version)
-    readPrunedIndexed(spark, root, version, files)
+    val r = snapshot(root, version)
+    readPruned(spark, root, r, filesMatchingStrKeys(root, r, column, k))
   }
 
   /** Snapshot read AS OF `version` pruned to the files whose bloom for
@@ -2026,9 +1969,8 @@ object ManifestLog {
     * every live file when nothing matches. */
   def readVersionPoint(spark: SparkSession, root: String, version: Long,
       column: String, value: Long): DataFrame = {
-    val matching = filesMatchingPoint(root, version, column, value)
-    val files = if (matching.nonEmpty) matching else filesAsOf(root, version)
-    readPrunedIndexed(spark, root, version, files)
+    val r = snapshot(root, version)
+    readPruned(spark, root, r, filesMatchingPoint(root, r, column, value))
   }
 
   def commit(root: String, version: Long, adds: Seq[String],
@@ -2049,28 +1991,6 @@ object ManifestLog {
       colStats, blooms, txn, dvs, commitMs, schemaDdl, checks, attest,
       strColStats, nullStats)
 
-  /** Live per-file deletion-vector refs as of `version` (files without
-    * a DV are absent — every row is live). */
-  def dvsAsOfIn(store: LogStore, version: Long): Map[String, DvRef] = {
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    val r = replayIn(store, version)
-    val live = r.files.toSet
-    r.dvs.filter { case (f, _) => live(f) }
-  }
-
-  def dvsAsOf(root: String, version: Long): Map[String, DvRef] =
-    dvsAsOfIn(storeFor(root), version)
-
-  def bloomsAsOf(root: String,
-      version: Long): Map[String, Map[String, BloomRef]] =
-    bloomsAsOfIn(storeFor(root), version)
-
-  def changesBetween(root: String, from: Long,
-      to: Long): Seq[(Long, Seq[String], Seq[String])] =
-    changesBetweenIn(storeFor(root), from, to)
-
   /** The rows ADDED in versions (`from`, `to`] with their commit
     * version as `_commit_version` — the data half of the incremental
     * read, correct as a row-level change feed for APPEND-ONLY commits
@@ -2080,13 +2000,13 @@ object ManifestLog {
   def readChanges(spark: SparkSession, root: String, from: Long,
       to: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
+    val changes = changesBetween(root, from, to)
     // evolved ranges (r17): plan every per-version frame under the
     // `to` snapshot's declared schema, like the image feed — the
     // union across a schema-evolution boundary would otherwise crash,
     // and pre-evolution rows correctly surface NULL for new columns
-    val declared = replayIn(storeFor(root), to).schemaDdl
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-    val perVersion = changesBetween(root, from, to).collect {
+    val declared = snapshot(root, to).declaredSchema
+    val perVersion = changes.collect {
       case (v, adds, _) if adds.nonEmpty =>
         declared.fold(spark.read)(d => spark.read.schema(d))
           .parquet(adds.map(f =>
@@ -2178,19 +2098,17 @@ object ManifestLog {
     * with maxVersionsPerSync, r19); at a 10k-version lag the driver's
     * plan analysis alone would dominate. */
   def readChangeImages(spark: SparkSession, root: String, from: Long,
-      to: Long, keys: Seq[String]): DataFrame = {
+      to: Long, keys: Seq[String]): DataFrame =
+    changeImages(spark, root, from, to, keys)._1
+
+  /** [[readChangeImages]] plus the `to` snapshot it planned under, so
+    * a consumer (the replica sync) needs no second resolve of `to`. */
+  private def changeImages(spark: SparkSession, root: String, from: Long,
+      to: Long, keys: Seq[String]): (DataFrame, Replay) = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "change images need at least one key column")
     val store = storeFor(root)
-    // SCHEMA-EVOLVED ranges (r17): a range spanning an additive
-    // evolution mixes file generations — every frame must plan under
-    // the `to` snapshot's DECLARED schema (pre-evolution rows surface
-    // NULL for the new columns, exactly as the snapshot read does),
-    // or the per-version unions and the pre/post join mis-shape.
-    // Tables that never declared have one physical schema by
-    // construction and read from footers as before.
-    val declared = replayIn(store, to).schemaDdl
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
+    val l = listingOf(store)
     // The DV baseline: pre-images must exclude rows that were ALREADY
     // dead before the range (a compaction would otherwise re-emit
     // every earlier MOR delete as a fresh one), so the walk threads
@@ -2199,9 +2117,7 @@ object ManifestLog {
     // be resolvable — without its state the feed cannot know which
     // removed rows were alive (loud, like every pruned-tail read).
     var dvState: Map[String, DvRef] =
-      if (from >= 0 && (versionsIn(store).contains(from) ||
-          checkpointVersionsIn(store).contains(from)))
-        replayIn(store, from).dvs
+      if (from >= 0 && l.resolvable(from)) foldIn(store, l, from).dvs
       else if (from < 0) Map.empty
       else {
         // unresolvable baseline: exact ONLY for a table that has
@@ -2226,10 +2142,20 @@ object ManifestLog {
             "classified; re-bootstrap from a snapshot")
         Map.empty
       }
-    val perVersion = changesBetween(root, from, to).flatMap {
-      case (v, adds, removes) =>
-        val dvEntries = parseDvs(field(
-          store.read(manifestName(v)), "dvs"))
+    val changes = tailJsons(store, from, to)
+    // SCHEMA-EVOLVED ranges (r17): a range spanning an additive
+    // evolution mixes file generations — every frame must plan under
+    // the `to` snapshot's DECLARED schema (pre-evolution rows surface
+    // NULL for the new columns, exactly as the snapshot read does),
+    // or the per-version unions and the pre/post join mis-shape.
+    // Tables that never declared have one physical schema by
+    // construction and read from footers as before.
+    val rTo = foldIn(store, l, to)
+    val declared = rTo.declaredSchema
+    val perVersion = changes.flatMap { case (v, json) =>
+        val adds = field(json, "adds")
+        val removes = field(json, "removes")
+        val dvEntries = parseDvs(field(json, "dvs"))
         // pre side, two sources: rows of the files this commit
         // RETIRED (minus their already-dead rows), and rows this
         // commit's new VECTORS killed in files that stay live
@@ -2311,86 +2237,41 @@ object ManifestLog {
       // of crashing until a data commit lands. The frame still needs
       // the table's exact image schema; shape it from one live file
       // of the `to` snapshot at zero row cost (limit 0 plans nothing).
-      val live = filesAsOfIn(store, to)
+      val live = rTo.files
       require(live.nonEmpty,
         s"no file actions in ($from, $to] and no live files at $to — " +
           "cannot shape an empty change-image frame")
       val base = readFilesIndexed(spark, root, live.take(1),
         declaredSchema = declared).limit(0)
       val payload = base.columns.filterNot(keys.contains)
-      return base.select((keys.map(col) ++ payload.map(col) :+
+      return (base.select((keys.map(col) ++ payload.map(col) :+
         lit("").as("_change_type") :+
-        lit(0L).as("_commit_version")): _*)
+        lit(0L).as("_commit_version")): _*), rTo)
     }
-    perVersion.reduce(_.unionByName(_))
+    (perVersion.reduce(_.unionByName(_))
       .select((keys.map(col) ++
         perVersion.head.select(col("__img.*")).columns.map(c =>
           col(s"__img.$c").as(c)) ++
-        Seq(col("_change_type"), col("_commit_version"))): _*)
-  }
-
-  /** Live per-file NULL-count stats as of `version` (r18). */
-  def nullStatsAsOf(root: String,
-      version: Long): Map[String, Map[String, NullStat]] = {
-    val store = storeFor(root)
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    replayIn(store, version).nullStats
-  }
-
-  /** Live per-file STRING column bounds as of `version` (r17). */
-  def strColStatsAsOf(root: String,
-      version: Long): Map[String, Map[String, StrStat]] = {
-    val store = storeFor(root)
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    replayIn(store, version).strColStats
-  }
-
-  /** The CHECK-constraint set in force at `version` (name → SQL
-    * boolean expression over the table's columns). */
-  /** The DECLARED schema DDL in force as of `version` (None for
-    * tables that never declared — single physical generation by
-    * construction). Same resolution rules as [[filesAsOfIn]]. */
-  def schemaDdlAsOf(root: String, version: Long): Option[String] = {
-    val store = storeFor(root)
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    replayIn(store, version).schemaDdl
+        Seq(col("_change_type"), col("_commit_version"))): _*), rTo)
   }
 
   /** The in-force declared-schema DDL for EVERY version in
-    * (`from`, `to`], computed with ONE replay at `from` plus one
+    * (`from`, `to`], computed with ONE snapshot at `from` plus one
     * manifest read per version (the streaming gate previously
     * replayed per version — O(V^2); review finding, r17). `from < 0`
-    * seeds from nothing. */
-  private[sources] def schemaDdlsThroughIn(store: LogStore, from: Long,
+    * seeds from nothing; so does an unresolvable `from`. */
+  def schemaDdlsThrough(root: String, from: Long,
       to: Long): Map[Long, Option[String]] = {
+    val store = storeFor(root)
+    val l = listingOf(store)
     var cur: Option[String] =
-      if (from >= 0 && (versionsIn(store).contains(from) ||
-          checkpointVersionsIn(store).contains(from)))
-        replayIn(store, from).schemaDdl
+      if (from >= 0 && l.resolvable(from)) foldIn(store, l, from).schemaDdl
       else None
     ((from + 1) to to).map { v =>
       decodeSchemaField(field(store.read(manifestName(v)), "schema"))
         .foreach(d => cur = Some(d))
       v -> cur
     }.toMap
-  }
-
-  def schemaDdlsThrough(root: String, from: Long,
-      to: Long): Map[Long, Option[String]] =
-    schemaDdlsThroughIn(storeFor(root), from, to)
-
-  def checksAsOf(root: String, version: Long): Map[String, String] = {
-    val store = storeFor(root)
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    replayIn(store, version).checks
   }
 
   /** INVARIANT ENFORCEMENT at the write boundary (Delta's CHECK
@@ -2400,7 +2281,7 @@ object ManifestLog {
     * BEFORE anything lands or commits, naming each failed constraint
     * and its row count. Cost is one scan of the batch regardless of
     * how many constraints the table declares; the decision of WHICH
-    * constraints apply is manifest metadata ([[checksAsOf]]). */
+    * constraints apply is manifest metadata ([[Replay.checks]]). */
   def requireSatisfies(df: DataFrame,
       checks: Map[String, String]): Unit = {
     if (checks.isEmpty) return
@@ -2449,8 +2330,12 @@ object ManifestLog {
       policy: Option[CheckpointPolicy] = None,
       commitMs: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    val read = latestVersion(root)
-    val checks = read.map(checksAsOf(root, _)).getOrElse(Map.empty)
+    // the read version and its in-force checks come from ONE listing,
+    // and the checks from the metadata-only fold (no live-file maps)
+    val store = storeFor(root)
+    val l = listingOf(store)
+    val read = l.manifests.lastOption
+    val checks = read.map(metaAsOf(store, l, _)._2).getOrElse(Map.empty)
     val names = checks.keys.toSeq.sorted
     val violCols = names.indices.map(i => s"__graft_viol_$i")
     val guarded = names.zip(violCols).foldLeft(df) { case (d, (n, c)) =>
@@ -2508,16 +2393,11 @@ object ManifestLog {
       policy: Option[CheckpointPolicy] = None,
       commitMs: Option[Long] = None,
       txn: Option[(String, Long)] = None): Seq[String] = {
-    val srcStore = storeFor(srcRoot)
-    require(versionsIn(srcStore).contains(version) ||
-      checkpointVersionsIn(srcStore).contains(version),
-      s"clone source version $version not in manifest log")
+    val r = snapshot(srcRoot, version)
     val dstStore = storeFor(dstRoot)
-    require(versionsIn(dstStore).isEmpty &&
-      checkpointVersionsIn(dstStore).isEmpty,
+    require(listingOf(dstStore).latest.isEmpty,
       s"clone destination $dstRoot already has a log — clone only " +
         "seeds NEW tables")
-    val r = replayIn(srcStore, version)
     require(r.files.nonEmpty,
       s"clone source version $version resolves to no files")
     val abs = r.files.map(f =>
@@ -2626,11 +2506,9 @@ object ManifestLog {
       clusterBy: Seq[String] = Seq.empty, files: Int = 0,
       policy: Option[CheckpointPolicy] = None): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    val store = storeFor(root)
-    val latest = (versionsIn(store) ++ checkpointVersionsIn(store))
-      .maxOption.getOrElse(throw new IllegalArgumentException(
-        s"empty log at $root — nothing to materialize"))
-    val r = replayIn(store, latest)
+    val r = latestSnapshot(root).getOrElse(throw new IllegalArgumentException(
+      s"empty log at $root — nothing to materialize"))
+    val latest = r.version
     val ext = r.files.filter(_.startsWith("/"))
     if (ext.isEmpty) return Seq.empty
     // hive-layout references carry partition VALUES only in their
@@ -2664,18 +2542,15 @@ object ManifestLog {
       return materializeExternalHive(spark, root, latest, r, ext,
         extSegs, files, policy)
     }
-    val live = readFilesIndexed(spark, root, ext, r.colStats,
-      r.dvs.filter { case (f, _) => ext.contains(f) },
-      declaredSchema = r.schemaDdl.map(
-        org.apache.spark.sql.types.StructType.fromDDL))
+    val live = readFilesIndexed(spark, root, ext, r.colStats, r.dvs,
+      r.declaredSchema)
     val n = if (files > 0) files
       else math.max(8, spark.sparkContext.defaultParallelism)
     val df =
       if (clusterBy.nonEmpty)
         live.repartitionByRange(n, clusterBy.map(col): _*)
       else live.repartition(n)
-    val sub = s"data/mz${latest + 1}-" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val sub = s"data/mz${latest + 1}"
     val summaries = SinglePassWriter.writeFiles(df, root, sub,
       statsCols, strStatsCols = strStatsCols)
     // attested: a materialization is content-preserving by
@@ -2732,7 +2607,7 @@ object ManifestLog {
       val vals = ext.flatMap(f => segMaps(f).get(n))
       n -> vals.forall(v => scala.util.Try(v.toLong).isSuccess)
     }.toMap
-    val declared = r.schemaDdl.map(StructType.fromDDL)
+    val declared = r.declaredSchema
     val nFlat = if (files > 0) files
       else math.max(8, spark.sparkContext.defaultParallelism)
     val sub = s"data/mz${latest + 1}-" +
@@ -2742,8 +2617,7 @@ object ManifestLog {
     val generations = ext.groupBy(f => extSegs(f).map(_._1)).toSeq
       .sortBy(_._1.size)
     val adds = generations.flatMap { case (names, gFiles) =>
-      val live = readFilesIndexed(spark, root, gFiles, r.colStats,
-        r.dvs.filter { case (f, _) => gFiles.contains(f) },
+      val live = readFilesIndexed(spark, root, gFiles, r.colStats, r.dvs,
         declaredSchema = declared)
       val gSub = s"$sub/g${names.size}"
       if (names.isEmpty) {
@@ -2862,8 +2736,8 @@ object ManifestLog {
       s"bootstrap must be 'feed' or 'clone', got '$bootstrap'")
     require(maxVersionsPerSync.forall(_ > 0),
       "maxVersionsPerSync must be positive")
-    if (bootstrap == "clone" && latestVersion(dstRoot).isEmpty &&
-        lastTxn(dstRoot, appId).isEmpty) {
+    val dst = latestSnapshot(dstRoot)
+    if (bootstrap == "clone" && dst.isEmpty) {
       val bootTo = upTo.getOrElse(latestVersion(srcRoot).getOrElse(
         throw new IllegalArgumentException(
           s"empty source log: $srcRoot")))
@@ -2874,7 +2748,7 @@ object ManifestLog {
     val srcLatest = latestVersion(srcRoot).getOrElse(
       throw new IllegalArgumentException(s"empty source log: $srcRoot"))
     val to = upTo.getOrElse(srcLatest)
-    val applied = lastTxn(dstRoot, appId).getOrElse(-1L)
+    val applied = dst.flatMap(_.txns.get(appId)).getOrElse(-1L)
     if (applied >= to) return applied // replay: already mirrored
     // CHUNKED SYNC (r19; r18 verdict watch-item 2): readChangeImages
     // builds one plan branch per version in the range, so a batch
@@ -2895,20 +2769,23 @@ object ManifestLog {
         while (cur < to)
           cur = replicateWindow(spark, srcRoot, dstRoot, keys,
             math.min(cur + m, to), appId, mirrorFiles, maxAttempts,
-            maxKeys)
+            maxKeys, if (cur == applied) dst else latestSnapshot(dstRoot))
         cur
       case _ =>
         replicateWindow(spark, srcRoot, dstRoot, keys, to, appId,
-          mirrorFiles, maxAttempts, maxKeys)
+          mirrorFiles, maxAttempts, maxKeys, dst)
     }
   }
 
   /** One atomic sync window of [[replicateTo]]: mirror everything up
     * to source version `to`, commit with the txn marker (appId, to).
-    * A marker already >= `to` is a completed replay — no-op. */
+    * A marker already >= `to` is a completed replay — no-op. `dst0` is
+    * the mirror's latest snapshot, the first attempt's state; a retry
+    * resolves afresh. */
   private def replicateWindow(spark: SparkSession, srcRoot: String,
       dstRoot: String, keys: Seq[String], to: Long, appId: String,
-      mirrorFiles: Int, maxAttempts: Int, maxKeys: Int): Long = {
+      mirrorFiles: Int, maxAttempts: Int, maxKeys: Int,
+      dst0: Option[Replay]): Long = {
     // mirrorFiles <= 0 = auto: at least the cluster's parallelism, so
     // a corpus-sized BOOTSTRAP sync writes with every core (8 files
     // was a serialization chokepoint at the 100x rung) while trickle
@@ -2919,9 +2796,10 @@ object ManifestLog {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val applied = lastTxn(dstRoot, appId).getOrElse(-1L)
+    var dst = dst0
+    val applied = dst.flatMap(_.txns.get(appId)).getOrElse(-1L)
     if (applied >= to) return applied // replay: already mirrored
-    val images = readChangeImages(spark, srcRoot, applied, to, keys)
+    val (images, srcTo) = changeImages(spark, srcRoot, applied, to, keys)
     val ranked = images
       .filter(col("_change_type") =!= "update_preimage")
       .withColumn("__rk", row_number().over(
@@ -3005,7 +2883,6 @@ object ManifestLog {
     // when a prunable sync actually has files to rewrite.
     lazy val tupleBounded = replicaTupleBounded(changedKeys,
       keys.size, maxKeys)
-    val store = storeFor(dstRoot)
     val statsCols = if (integralKey) Seq(keyCol) else Seq.empty
     val strStatsCols = if (stringKey) Seq(keyCol) else Seq.empty
     // SCHEMA PROPAGATION (r17): the mirror is a table — after a
@@ -3015,33 +2892,34 @@ object ManifestLog {
     // the source's reads do). Each sync declares the source's current
     // schema on the mirror when it changed; undeclared sources
     // propagate nothing.
-    val srcDdl = replayIn(storeFor(srcRoot), to).schemaDdl
+    val srcDdl = srcTo.schemaDdl
     var attempt = 0
     var done = false
     while (!done) {
       attempt += 1
-      if (lastTxn(dstRoot, appId).exists(_ >= to)) done = true
+      // re-resolve only when another writer committed since `dst` was
+      // read: the marker re-check must see a same-appId winner
+      if (latestVersion(dstRoot) != dst.map(_.version))
+        dst = latestSnapshot(dstRoot)
+      if (dst.flatMap(_.txns.get(appId)).exists(_ >= to)) done = true
       else {
-        val curV = latestVersion(dstRoot)
         // the rewrite set: only mirror files whose lead-key interval /
         // bloom can hold a changed key (stats-less files are must-
         // rewrite, so a pre-r17 unclustered mirror heals itself)
-        val touched: Seq[String] = curV match {
-          case Some(v) if keyPrunable && integralKey =>
+        val touched: Seq[String] = dst match {
+          case Some(r) if keyPrunable && integralKey =>
             if (changedVals.isEmpty) Seq.empty
-            else filesMatchingKeysIn(store, dstRoot, v, keyCol,
-              changedVals)
-          case Some(v) if keyPrunable && stringKey =>
+            else filesMatchingKeys(dstRoot, r, keyCol, changedVals)
+          case Some(r) if keyPrunable && stringKey =>
             if (changedStrVals.isEmpty) Seq.empty
-            else filesMatchingStrKeysIn(store, dstRoot, v, keyCol,
-              changedStrVals)
-          case Some(v) => filesAsOf(dstRoot, v) // unprunable/over-bound
+            else filesMatchingStrKeys(dstRoot, r, keyCol, changedStrVals)
+          case Some(r) => r.files // unprunable/over-bound
           case None => Seq.empty
         }
         val next =
           if (touched.isEmpty) upserts
           else {
-            val r = replayIn(store, curV.get)
+            val r = dst.get
             // plan the mirror's files under the FEED's current image
             // schema: after a source evolution the mirror mixes file
             // generations, and a footer-inferred schema would either
@@ -3056,9 +2934,7 @@ object ManifestLog {
                else changedKeys)
                 .alias("__ck")
             val mirror = readFilesIndexed(spark, dstRoot, touched,
-                r.colStats,
-                r.dvs.filter { case (f, _) => touched.contains(f) },
-                declaredSchema = Some(upserts.schema))
+                r.colStats, r.dvs, declaredSchema = Some(upserts.schema))
               .alias("__m")
             // NULL-SAFE key equality (review finding, r18): a plain
             // equality anti-join can never remove a NULL-keyed
@@ -3071,16 +2947,14 @@ object ManifestLog {
             mirror.join(changedSide, cond, "left_anti")
               .unionByName(upserts)
           }
-        val sub =
-          s"data/r$to-${java.util.UUID.randomUUID().toString.take(8)}"
         val summaries = SinglePassWriter.writeFiles(
           next.repartitionByRange(nMirrorFiles, col(keyCol)),
-          dstRoot, sub, statsCols, strStatsCols = strStatsCols)
-        val mirrorDdl = curV.flatMap(v => replayIn(store, v).schemaDdl)
+          dstRoot, s"data/r$to", statsCols, strStatsCols = strStatsCols)
+        val mirrorDdl = dst.flatMap(_.schemaDdl)
         try {
           // attested: every mirrored row already passed the SOURCE
           // table's write-side validation before it entered the feed
-          commitSerializable(dstRoot, curV.getOrElse(-1L),
+          commitSerializable(dstRoot, dst.fold(-1L)(_.version),
             adds = summaries.map(_.rel), removes = touched,
             op = "replicate", readFiles = touched.toSet,
             txn = Some((appId, to)),
@@ -3105,34 +2979,15 @@ object ManifestLog {
     to
   }
 
-  def statsAsOf(root: String, version: Long): Map[String, FileStat] =
-    statsAsOfIn(storeFor(root), version)
-
-  def colStatsAsOf(root: String,
-      version: Long): Map[String, Map[String, FileStat]] =
-    colStatsAsOfIn(storeFor(root), version)
-
-  def lastTxn(root: String, appId: String): Option[Long] =
-    lastTxnIn(storeFor(root), appId)
-
-  def filesMatching(root: String, version: Long, lo: Long,
-      hi: Long): Seq[String] =
-    filesMatchingIn(storeFor(root), version, lo, hi)
-
-  def filesMatchingCols(root: String, version: Long,
-      preds: Seq[(String, Long, Long)]): Seq[String] =
-    filesMatchingColsIn(storeFor(root), version, preds)
-
   /** Snapshot read AS OF `version` pruned by the CONJUNCTION of
-    * named-column range predicates (see [[filesMatchingColsIn]]); the
+    * named-column range predicates (see [[filesMatchingCols]]); the
     * caller still applies its exact row-level filter. Falls back to
     * every live file when nothing matches (same reader contract as
     * [[readVersionWhere]]). */
   def readVersionWhereCols(spark: SparkSession, root: String,
       version: Long, preds: Seq[(String, Long, Long)]): DataFrame = {
-    val matching = filesMatchingCols(root, version, preds)
-    val files = if (matching.nonEmpty) matching else filesAsOf(root, version)
-    readPrunedIndexed(spark, root, version, files)
+    val r = snapshot(root, version)
+    readPruned(spark, root, r, filesMatchingCols(r, preds))
   }
 
   /** Snapshot read AS OF `version` PRUNED to the files whose stats
@@ -3142,9 +2997,8 @@ object ManifestLog {
     * is a reader error, and "nothing can match" still needs a schema). */
   def readVersionWhere(spark: SparkSession, root: String, version: Long,
       lo: Long, hi: Long): DataFrame = {
-    val matching = filesMatching(root, version, lo, hi)
-    val files = if (matching.nonEmpty) matching else filesAsOf(root, version)
-    readPrunedIndexed(spark, root, version, files)
+    val r = snapshot(root, version)
+    readPruned(spark, root, r, filesMatching(r, lo, hi))
   }
 
   /** Snapshot read AS OF `version` planned through a
@@ -3153,7 +3007,7 @@ object ManifestLog {
     * directory listing, no InMemoryFileIndex), and the manifest's
     * per-file column stats ride into the index so Catalyst's
     * pushed-down data filters prune files DURING PLANNING — the same
-    * prune [[filesMatchingColsIn]] offers pre-resolution, but composed
+    * prune [[filesMatchingCols]] offers pre-resolution, but composed
     * with the optimizer (filter pushdown, DPP, AQE) and applied
     * automatically to ANY predicate the query writes, not just the
     * ones the caller remembered to pass.
@@ -3162,26 +3016,27 @@ object ManifestLog {
     * ([[FileStat]] without a name) describe, mapping them into the
     * index; named colstats always ride. */
   def readVersionIndexed(spark: SparkSession, root: String, version: Long,
-      statsColumn: Option[String] = None): DataFrame = {
-    val store = storeFor(root)
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    val r = replayIn(store, version)
-    require(r.files.nonEmpty, s"version $version resolves to no files")
-    val entries = r.files.map { f =>
+      statsColumn: Option[String] = None): DataFrame =
+    readSnapshot(spark, root, snapshot(root, version), statsColumn)
+
+  /** [[readVersionIndexed]] over an already-resolved snapshot. */
+  private def readSnapshot(spark: SparkSession, root: String, r: Replay,
+      statsColumn: Option[String] = None): DataFrame =
+    applyDvs(spark, root, ManifestFileIndex.read(spark, root,
+      indexEntries(root, r, statsColumn),
+      declaredSchema = r.declaredSchema), r.dvs)
+
+  /** Every live file of `r` as an index entry carrying all its stats;
+    * `statsColumn` names the column the unnamed single-column stats
+    * describe. */
+  private def indexEntries(root: String, r: Replay,
+      statsColumn: Option[String]): Seq[ManifestFileEntry] =
+    liveFiles(r).map { f =>
       val merged = r.colStats.getOrElse(f, Map.empty[String, FileStat]) ++
         statsColumn.flatMap(c => r.stats.get(f).map(c -> _))
       entryFor(root, f, merged, r.strColStats.getOrElse(f, Map.empty),
         r.nullStats.getOrElse(f, Map.empty))
     }
-    applyDvs(spark, root,
-      ManifestFileIndex.read(spark, root, entries,
-        declaredSchema = r.schemaDdl.map(
-          org.apache.spark.sql.types.StructType.fromDDL)),
-      { val live = r.files.toSet
-        r.dvs.filter { case (f, _) => live(f) } })
-  }
 
   /** Snapshot read of a HIVE-PARTITIONED manifest table (r16): the
     * live files' `k=v` path segments become partition columns
@@ -3197,11 +3052,7 @@ object ManifestLog {
     * file to carry the same partition segments in the same order. */
   def readVersionHive(spark: SparkSession, root: String, version: Long,
       statsColumn: Option[String] = None): DataFrame = {
-    val store = storeFor(root)
-    require(versionsIn(store).contains(version) ||
-      checkpointVersionsIn(store).contains(version),
-      s"version $version not in manifest log")
-    val r = replayIn(store, version)
+    val r = snapshot(root, version)
     require(r.files.nonEmpty, s"version $version resolves to no files")
     // ancestry-aware segment parse (r18): a shallow clone's ABSOLUTE
     // refs include the source's own ancestors — an '=' up there (a
@@ -3232,18 +3083,9 @@ object ManifestLog {
         else org.apache.spark.sql.types.StringType,
         nullable = vals.size < r.files.size)
     })
-    val entries = r.files.map { f =>
-      val merged = r.colStats.getOrElse(f, Map.empty[String, FileStat]) ++
-        statsColumn.flatMap(c => r.stats.get(f).map(c -> _))
-      entryFor(root, f, merged, r.strColStats.getOrElse(f, Map.empty),
-        r.nullStats.getOrElse(f, Map.empty))
-    }
-    applyDvs(spark, root,
-      ManifestFileIndex.read(spark, root, entries, schema,
-        declaredSchema = r.schemaDdl.map(
-          org.apache.spark.sql.types.StructType.fromDDL)),
-      { val live = r.files.toSet
-        r.dvs.filter { case (f, _) => live(f) } })
+    applyDvs(spark, root, ManifestFileIndex.read(spark, root,
+      indexEntries(root, r, statsColumn), schema,
+      declaredSchema = r.declaredSchema), r.dvs)
   }
 
   private def entryFor(root: String, rel: String,
@@ -3397,7 +3239,7 @@ object ManifestLog {
   }
 
   /** Build deletion vectors for the rows of `candidates` (live data
-    * files of `version`) selected by `doomed` — the shared write half
+    * files of snapshot `r`) selected by `doomed` — the shared write half
     * of every merge-on-read mutation. `doomed` receives the candidate
     * scan with `__f`/`__idx` identity columns appended and must only
     * FILTER it (a predicate, a semi join against a source) — never
@@ -3417,13 +3259,12 @@ object ManifestLog {
     * Scales as O(matched rows): untouched files are never scanned
     * (callers stats-prune candidates first), no data file is ever
     * rewritten, and sidecar IO happens on the executors. */
-  def buildDvs(spark: SparkSession, root: String, version: Long,
+  def buildDvs(spark: SparkSession, root: String, r: Replay,
       newVersion: Long, candidates: Seq[String],
       doomed: DataFrame => DataFrame): Map[String, DvRef] = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     require(candidates.nonEmpty, "buildDvs needs candidate files")
-    val r = replayIn(storeFor(root), version)
     require({ val live = r.files.toSet; candidates.forall(live) },
       "DV candidates must be live files of the read version")
     // scan WITHOUT the MOR filter: already-dead rows that re-match
@@ -3434,8 +3275,7 @@ object ManifestLog {
     val scan = ManifestFileIndex.read(spark, root,
       candidates.map(f =>
         entryFor(root, f, r.colStats.getOrElse(f, Map.empty))),
-      declaredSchema = r.schemaDdl.map(
-        org.apache.spark.sql.types.StructType.fromDDL))
+      declaredSchema = r.declaredSchema)
     val matched = doomed(
         scan.withColumn("__f", col("_metadata.file_path"))
           .withColumn("__idx", col("_metadata.row_index")))
@@ -3484,21 +3324,29 @@ object ManifestLog {
   def deleteWhereMor(spark: SparkSession, root: String, version: Long,
       newVersion: Long, predicate: org.apache.spark.sql.Column,
       policy: Option[CheckpointPolicy] = None): Map[String, DvRef] = {
-    val r = replayIn(storeFor(root), version)
-    val ranges = ManifestFileIndex.ranges(Seq(
-      org.apache.spark.sql.GraftColumnBridge.expression(predicate)))
-    val candidates = r.files.filter { f =>
-      val cs = r.colStats.getOrElse(f, Map.empty)
-      ranges.forall { case (c, (lo, hi)) =>
-        cs.get(c).forall(st => st.max >= lo && st.min <= hi) }
-    }
+    val r = snapshot(root, version)
+    val candidates = morCandidates(r, predicate)
     val dvs =
       if (candidates.isEmpty) Map.empty[String, DvRef]
-      else buildDvs(spark, root, version, newVersion, candidates,
+      else buildDvs(spark, root, r, newVersion, candidates,
         _.filter(predicate))
     commit(root, newVersion, Seq.empty, Seq.empty, op = "delete",
       policy = policy, dvs = dvs)
     dvs
+  }
+
+  /** The live files of `r` whose stats cannot refute `predicate` —
+    * a merge-on-read mutation's candidates (a file whose manifest
+    * interval cannot satisfy the predicate is never even scanned). */
+  private def morCandidates(r: Replay,
+      predicate: org.apache.spark.sql.Column): Seq[String] = {
+    val ranges = ManifestFileIndex.ranges(Seq(
+      org.apache.spark.sql.GraftColumnBridge.expression(predicate)))
+    r.files.filter { f =>
+      val cs = r.colStats.getOrElse(f, Map.empty)
+      ranges.forall { case (c, (lo, hi)) =>
+        cs.get(c).forall(st => st.max >= lo && st.min <= hi) }
+    }
   }
 
   /** The OPERATOR-level retry loop over [[commitSerializable]]
@@ -3518,26 +3366,18 @@ object ManifestLog {
       predicate: org.apache.spark.sql.Column,
       policy: Option[CheckpointPolicy] = None,
       maxAttempts: Int = 5): Long = {
-    val store = storeFor(root)
     var attempt = 0
     var committed = -1L
     while (committed < 0) {
       attempt += 1
-      val read = versionsIn(store).maxOption
-        .orElse(checkpointVersionsIn(store).maxOption)
-        .getOrElse(throw new IllegalArgumentException(
+      val r = latestSnapshot(root).getOrElse(
+        throw new IllegalArgumentException(
           s"no committed version to delete from at $root"))
-      val r = replayIn(store, read)
-      val ranges = ManifestFileIndex.ranges(Seq(
-        org.apache.spark.sql.GraftColumnBridge.expression(predicate)))
-      val candidates = r.files.filter { f =>
-        val cs = r.colStats.getOrElse(f, Map.empty)
-        ranges.forall { case (c, (lo, hi)) =>
-          cs.get(c).forall(st => st.max >= lo && st.min <= hi) }
-      }
+      val read = r.version
+      val candidates = morCandidates(r, predicate)
       val dvs =
         if (candidates.isEmpty) Map.empty[String, DvRef]
-        else buildDvs(spark, root, read, read + 1, candidates,
+        else buildDvs(spark, root, r, read + 1, candidates,
           _.filter(predicate))
       try {
         committed = commitSerializable(root, read, Seq.empty, Seq.empty,
@@ -3579,25 +3419,15 @@ object ManifestLog {
       statsCols: Seq[String] = Seq.empty,
       policy: Option[CheckpointPolicy] = None,
       maxAttempts: Int = 5): Long = {
-    val store = storeFor(root)
     var attempt = 0
     var committed = -1L
     while (committed < 0) {
       attempt += 1
-      val read = versionsIn(store).maxOption
-        .orElse(checkpointVersionsIn(store).maxOption)
-        .getOrElse(throw new IllegalArgumentException(
+      val r = latestSnapshot(root).getOrElse(
+        throw new IllegalArgumentException(
           s"no committed version to merge into at $root"))
-      val r = replayIn(store, read)
-      val ranges = ManifestFileIndex.ranges(Seq(
-        org.apache.spark.sql.GraftColumnBridge.expression(matched)))
-      val candidates = r.files.filter { f =>
-        val cs = r.colStats.getOrElse(f, Map.empty)
-        ranges.forall { case (c, (lo, hi)) =>
-          cs.get(c).forall(st => st.max >= lo && st.min <= hi) }
-      }
-      val sub = s"data/m${read + 1}-" +
-        java.util.UUID.randomUUID().toString.take(8)
+      val read = r.version
+      val candidates = morCandidates(r, matched)
       // the post-image read plans ONLY the candidate files (r18;
       // matched rows can live nowhere else — the same prune the DV
       // build uses), MOR-filtered so already-dead rows produce no
@@ -3608,18 +3438,15 @@ object ManifestLog {
       // rows, shaped at zero row cost.
       val morMatched =
         if (candidates.isEmpty)
-          readVersion(spark, root, read).limit(0).filter(matched)
-        else readFilesIndexed(spark, root, candidates, r.colStats,
-          r.dvs.filter { case (f, _) => candidates.contains(f) },
-          declaredSchema = r.schemaDdl.map(
-            org.apache.spark.sql.types.StructType.fromDDL))
-          .filter(matched)
+          readSnapshot(spark, root, r).limit(0).filter(matched)
+        else readFilesIndexed(spark, root, candidates, r.colStats, r.dvs,
+          r.declaredSchema).filter(matched)
       val postDf = post(morMatched)
-      val summaries = SinglePassWriter.writeFiles(postDf, root, sub,
-        statsCols)
+      val summaries = SinglePassWriter.writeFiles(postDf, root,
+        s"data/m${read + 1}", statsCols)
       val dvs =
         if (candidates.isEmpty) Map.empty[String, DvRef]
-        else buildDvs(spark, root, read, read + 1, candidates,
+        else buildDvs(spark, root, r, read + 1, candidates,
           _.filter(matched))
       try {
         committed = commitSerializable(root, read,
@@ -3656,7 +3483,7 @@ object ManifestLog {
       newVersion: Long, minDead: Long = 1L,
       policy: Option[CheckpointPolicy] = None,
       statsCols: Seq[String] = Seq.empty): Seq[String] = {
-    val r = replayIn(storeFor(root), version)
+    val r = snapshot(root, version)
     val doomed = r.files.filter(f =>
       r.dvs.get(f).exists(_.nDeleted >= minDead))
     if (doomed.isEmpty) return Seq.empty
@@ -3665,10 +3492,8 @@ object ManifestLog {
     // an old-generation footer would silently DROP the new column's
     // values from the compacted files — the same hazard the replica
     // fold closed; old-generation rows correctly surface NULL
-    val live = readFilesIndexed(spark, root, doomed, r.colStats,
-      r.dvs.filter { case (f, _) => doomed.contains(f) },
-      declaredSchema = r.schemaDdl.map(
-        org.apache.spark.sql.types.StructType.fromDDL))
+    val live = readFilesIndexed(spark, root, doomed, r.colStats, r.dvs,
+      r.declaredSchema)
     // attested: a compaction is content-preserving by construction —
     // every surviving row was already committed (and validated) in
     // the files it rewrites, so re-proving constraints is redundant
@@ -3758,16 +3583,14 @@ object ManifestLog {
     var attempts = 0
     var committed = -1L
     while (committed < 0) {
-      val resolvable =
-        (versionsIn(store) ++ checkpointVersionsIn(store)).distinct
-      require(resolvable.contains(target),
-        s"restore target $target not resolvable (have: " +
-          s"${resolvable.sorted}) — pruned past by retention?")
-      val cur = resolvable.max
+      val l = listingOf(store)
+      // the target fold is the membership check: a target pruned past
+      // by retention fails loudly here
+      val rt = foldIn(store, l, target)
+      val cur = l.latest.get
       require(target < cur,
         s"restore target $target is already the latest version $cur")
-      val rt = replayIn(store, target)
-      val rc = replayIn(store, cur)
+      val rc = foldIn(store, l, cur)
       val curSet = rc.files.toSet
       val tgtSet = rt.files.toSet
       val reAdds = rt.files.filterNot(curSet)
@@ -3836,8 +3659,11 @@ object ManifestLog {
   def writeCheckpoint(root: String, version: Long): Unit =
     writeCheckpointIn(storeFor(root), version)
 
+  /** Live data files as of `version` — the one single-field reader
+    * kept beside [[snapshot]], because the benchmark
+    * (`perfbench/LakeIngest.scala`) calls it. */
   def filesAsOf(root: String, version: Long): Seq[String] =
-    filesAsOfIn(storeFor(root), version)
+    snapshot(root, version).files
 
   /** Snapshot read AS OF `version`, resolved through log replay —
     * never through path conventions. Plans through the manifest's own
@@ -3873,10 +3699,7 @@ object ManifestLog {
     * ascending. */
   def expireVersionsBefore(root: String, horizon: Long): Seq[Long] = {
     val store = storeFor(root)
-    require(versionsIn(store).contains(horizon) ||
-      checkpointVersionsIn(store).contains(horizon),
-      s"expiration horizon $horizon not in manifest log")
-    writeCheckpointIn(store, horizon)
+    writeCheckpointIn(store, horizon) // loud when horizon is unresolvable
     val doomed = versionsIn(store).filter(_ < horizon)
     doomed.reverse.foreach(v => store.delete(manifestName(v)))
     doomed
@@ -3955,13 +3778,12 @@ object ManifestLog {
     * Total cost: one checkpoint parse + one pass over the surviving
     * tail, manifest-sized. */
   private def vacuumKeepSet(store: LogStore): Set[String] = {
-    val manifests = versionsIn(store).toSet
-    val resolvable =
-      (versionsIn(store) ++ checkpointVersionsIn(store)).distinct.sorted
+    val l = listingOf(store)
+    val resolvable = (l.manifests ++ l.checkpoints).distinct.sorted
     val keep = scala.collection.mutable.Set.empty[String]
     var stateV = Long.MinValue
     resolvable.foreach { v =>
-      if (stateV == v - 1 && manifests.contains(v)) {
+      if (stateV == v - 1 && l.hasManifest(v)) {
         // warm fold: this manifest's additions are the only NEW
         // referenced paths this version can introduce
         val json = store.read(manifestName(v))
@@ -3975,15 +3797,13 @@ object ManifestLog {
           .map(_.sidecar)
       } else {
         // seed (first version, or a gap after an isolated checkpoint)
-        val r = replayIn(store, v)
+        val r = foldIn(store, l, v)
         keep ++= r.files
         keep ++= r.blooms.valuesIterator.flatMap(
           _.valuesIterator.map(_.sidecar))
         // each resolvable version's MOR reads need ITS deletion
-        // vectors (live files only — a dv whose file was removed is
-        // dead weight)
-        keep ++= { val live = r.files.toSet
-          r.dvs.collect { case (f, d) if live(f) => d.sidecar } }
+        // vectors (the snapshot carries live files' vectors only)
+        keep ++= r.dvs.valuesIterator.map(_.sidecar)
       }
       stateV = v
     }

@@ -45,9 +45,15 @@ import graft.sources.ManifestLog.{BloomRef, CheckpointPolicy, FileStat}
   * produces for pushed-down literals, so planning-time pruning
   * composes); `strStatsCols` (r17) fold UTF-8-ordered string bounds
   * for the FileIndex's string prune.
-  * Task retries are idempotent: deterministic file names per
-  * partition, OVERWRITE mode, and sidecar bytes that are a pure
-  * function of the partition's value set. */
+  * File names are `<sub>/part-<partition>-<token>.parquet`, the token
+  * minted once per [[writeFiles]] call, before any task runs (Spark's
+  * `part-<n>-<job UUID>` rule): two calls never share a name, even
+  * into the same `sub`, so a write can never overwrite a file an
+  * earlier version committed, and a rejected write's cleanup deletes
+  * only its own files. Task retries are idempotent: a retried task
+  * reuses the call's token, OVERWRITE mode replaces its own earlier
+  * attempt, and sidecar bytes are a pure function of the partition's
+  * value set. */
 object SinglePassWriter {
 
   /** One task's write result: the committed metadata for one file.
@@ -322,12 +328,13 @@ object SinglePassWriter {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(root, sub))
     val messageStr = message.toString
+    val token = java.util.UUID.randomUUID().toString.take(8)
 
     val summaries = df.mapPartitions { rows =>
       if (rows.isEmpty) Iterator.empty
       else {
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        val rel = f"$sub/part-$pid%05d.parquet"
+        val rel = f"$sub/part-$pid%05d-$token.parquet"
         val mt = org.apache.parquet.schema.MessageTypeParser
           .parseMessageType(messageStr)
         val factory =

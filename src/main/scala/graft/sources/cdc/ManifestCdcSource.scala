@@ -101,11 +101,9 @@ private[cdc] object ManifestCdc {
     * load() for ANY startingVersion — even one whose tail is fully
     * intact (r15 advice). */
   def schemaFor(root: String): StructType = {
-    val store = ManifestLog.storeFor(root)
-    val latest = (ManifestLog.versionsIn(store) ++
-      ManifestLog.checkpointVersionsIn(store)).maxOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"manifest CDC source: empty log at $root"))
+    val r = ManifestLog.latestSnapshot(root).getOrElse(
+      throw new IllegalArgumentException(
+        s"manifest CDC source: empty log at $root"))
     // a DECLARED schema wins over footer inference (r17): after an
     // evolution the probe file may be an old-generation one, and a
     // footer-inferred narrow schema would mis-shape every admitted
@@ -113,7 +111,7 @@ private[cdc] object ManifestCdc {
     // planInputPartitions guarantees admitted adds were committed
     // under this exact declaration. The feed's flat-primitive
     // contract still holds, checked here for the DDL path too.
-    ManifestLog.schemaDdlAsOf(root, latest) match {
+    r.schemaDdl match {
       case Some(ddl) =>
         val declared = StructType.fromDDL(ddl)
         declared.fields.foreach(f => require(okType(f.dataType),
@@ -123,9 +121,10 @@ private[cdc] object ManifestCdc {
         StructType(declared.fields.toSeq :+
           StructField("_commit_version", LongType, nullable = false))
       case None =>
-        val firstLive = ManifestLog.filesAsOfIn(store, latest)
-          .headOption.getOrElse(throw new IllegalArgumentException(
-            s"manifest CDC source: no live files at $root as of v$latest"))
+        val firstLive = r.files.headOption.getOrElse(
+          throw new IllegalArgumentException(
+            s"manifest CDC source: no live files at $root as of " +
+              s"v${r.version}"))
         val msg = footerSchema(
           ManifestLog.resolvePath(root, firstLive).getAbsolutePath)
         StructType(dataFields(msg) :+
@@ -371,7 +370,7 @@ private[cdc] class ManifestCdcStream(root: String, startingVersion: Long,
     // (both review findings, r17).
     val ddlAt = ManifestLog.schemaDdlsThrough(root, from, to)
     val declaringTable = ddlAt.get(to).flatten.isDefined ||
-      (from >= 0 && ManifestLog.schemaDdlAsOf(root, from).isDefined)
+      (from >= 0 && ManifestLog.snapshot(root, from).schemaDdl.isDefined)
     def shape(st: StructType): Seq[(String, DataType)] =
       st.fields.toSeq.map(f => (f.name, f.dataType))
     lazy val streamShape = dataSchema.map(shape)

@@ -139,8 +139,8 @@ class PlanSpec extends AnyFunSuite {
     // ARRAY payload column is must-read (no stats), but the scalar
     // prune machinery stays live beside it
     val root = queries.EmbeddingTableQueries.embTableRoot(spark, dir)
-    val cs = graft.sources.ManifestLog.colStatsAsOf(root,
-      graft.sources.ManifestLog.latestVersion(root).get)
+    val cs = graft.sources.ManifestLog.snapshot(root,
+      graft.sources.ManifestLog.latestVersion(root).get).colStats
     assert(cs.nonEmpty && cs.values.forall(_.contains("vec_id")),
       "every embedding file must commit scalar vec_id stats")
   }
@@ -164,8 +164,8 @@ class PlanSpec extends AnyFunSuite {
       s"probed cells must prune the corpus files: read $pruned of $total")
     // and the committed layout actually clusters: every file carries
     // cell stats for the prune to act on
-    val cs = graft.sources.ManifestLog.colStatsAsOf(root,
-      graft.sources.ManifestLog.latestVersion(root).get)
+    val cs = graft.sources.ManifestLog.snapshot(root,
+      graft.sources.ManifestLog.latestVersion(root).get).colStats
     assert(cs.nonEmpty && cs.values.forall(_.contains("cell")),
       "every IVF file must commit scalar cell stats")
   }
@@ -184,7 +184,7 @@ class PlanSpec extends AnyFunSuite {
     val total = graft.sources.ManifestLog.filesAsOf(root, 0).size
     // the exact expectation: every file with at least one non-null
     // opt_ts survives, every all-null file drops
-    val want = graft.sources.ManifestLog.nullStatsAsOf(root, 0)
+    val want = graft.sources.ManifestLog.snapshot(root, 0).nullStats
       .values.count(_.get("opt_ts").forall(s => s.nulls < s.rows))
     assert(pruned == want && pruned < total,
       s"IS NOT NULL must scan exactly the $want files with non-null " +

@@ -324,7 +324,8 @@ class QueriesSpec extends AnyFunSuite {
     val skipRoot = graft.TempDirs.cachedDir("graft_manifest_skip", d01)(_ =>
       fail("skipping root must already be built"))
     val all0 = ManifestLog.filesAsOf(skipRoot, 0)
-    val hit0 = ManifestLog.filesMatching(skipRoot, 0, 1, 8)
+    val hit0 = ManifestLog.filesMatching(
+      ManifestLog.snapshot(skipRoot, 0), 1, 8)
     assert(hit0.nonEmpty && hit0.size < all0.size,
       s"user band [1,8] must prune the 8-file scan: ${hit0.size}/${all0.size}")
 
@@ -332,7 +333,8 @@ class QueriesSpec extends AnyFunSuite {
     val cowRoot = graft.TempDirs.cachedDir("graft_merge_cow", d01)(_ =>
       fail("merge root must already be built"))
     val base = ManifestLog.filesAsOf(cowRoot, 0)
-    val touched = ManifestLog.filesMatching(cowRoot, 0, 1, 50)
+    val touched = ManifestLog.filesMatching(
+      ManifestLog.snapshot(cowRoot, 0), 1, 50)
     val v1 = ManifestLog.filesAsOf(cowRoot, 1).toSet
     assert(touched.size < base.size,
       s"the merge band must beat a full rewrite: ${touched.size}/${base.size}")

@@ -148,9 +148,51 @@ class CommitProtocolSpec extends AnyFunSuite {
       Seq((3L, 30L)).toDF("k", "v").coalesce(1), root, "data/b3",
       statsCols = Seq("k"))
     assert(v == 3L)
-    assert(ManifestLog.colStatsAsOf(root, v).values
+    assert(ManifestLog.snapshot(root, v).colStats.values
       .exists(_.get("k").exists(st => st.min == 3L && st.max == 3L)))
     assert(ManifestLog.readVersion(spark, root, v).count() == 3)
+  }
+
+  private def rowsAt(root: String, v: Long): Set[(Long, Long)] = {
+    import spark.implicits._
+    ManifestLog.readVersion(spark, root, v).as[(Long, Long)].collect().toSet
+  }
+
+  test("two appendChecked calls into ONE sub keep both versions: every " +
+      "writeFiles call mints its own file-name token, so v1 never " +
+      "overwrites the file v0 committed") {
+    import spark.implicits._
+    val root = newRoot()
+    val v0 = ManifestLog.appendChecked(spark,
+      Seq((1L, 10L)).toDF("k", "v").coalesce(1), root, "data/s",
+      statsCols = Seq("k"), bloomCol = Some("k"))
+    val v1 = ManifestLog.appendChecked(spark,
+      Seq((2L, 20L)).toDF("k", "v").coalesce(1), root, "data/s",
+      statsCols = Seq("k"), bloomCol = Some("k"))
+    assert((v0, v1) == ((0L, 1L)))
+    assert(rowsAt(root, 0) == Set((1L, 10L)))
+    assert(rowsAt(root, 1) == Set((1L, 10L), (2L, 20L)))
+    assert(ManifestLog.readVersionPoint(spark, root, 1, "k", 1L)
+      .filter(col("k") === 1L).count() == 1)
+  }
+
+  test("a CHECK-violating appendChecked into a used sub leaves v0 " +
+      "readable: the reject path deletes only the files it wrote") {
+    import spark.implicits._
+    val root = newRoot()
+    ManifestLog.appendChecked(spark,
+      Seq((1L, 10L)).toDF("k", "v").coalesce(1), root, "data/s",
+      statsCols = Seq("k"), bloomCol = Some("k"))
+    ManifestLog.commit(root, 1, Seq.empty, Seq.empty, op = "checks",
+      checks = Some(Seq("v_pos" -> "v > 0")))
+    intercept[IllegalArgumentException] {
+      ManifestLog.appendChecked(spark,
+        Seq((2L, -5L)).toDF("k", "v").coalesce(1), root, "data/s",
+        statsCols = Seq("k"), bloomCol = Some("k"))
+    }
+    assert(ManifestLog.latestVersion(root).contains(1L))
+    assert(rowsAt(root, 0) == Set((1L, 10L)))
+    assert(rowsAt(root, 1) == Set((1L, 10L)))
   }
 
   test("commit-time CHECK enforcement (r17): a direct commitIn whose " +
@@ -290,7 +332,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     // the tag round-trips through manifest replay AND checkpoint fold
     ManifestLog.writeCheckpointIn(store, 3)
     val st =
-      ManifestLog.colStatsAsOfIn(store, 3)("data/f3.parquet")("price")
+      ManifestLog.snapshotIn(store, 3).colStats("data/f3.parquet")("price")
     assert(st == ManifestLog.FileStat(key(5.5), key(9.0), dbl = true))
   }
 
@@ -560,7 +602,7 @@ class CommitProtocolSpec extends AnyFunSuite {
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(rows == Seq(0L, 1L, 4L, 5L, 6L, 8L, 9L))
     // the final vector is the union (the loser folded the winner's)
-    assert(ManifestLog.dvsAsOf(root, 2).head._2.nDeleted == 3)
+    assert(ManifestLog.snapshot(root, 2).dvs.head._2.nDeleted == 3)
     // v1 (whichever delete won) removed exactly its own set
     assert(ManifestLog.readVersion(spark, root, 1).count() >= 8)
   }
@@ -616,7 +658,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     }
     assert(rows == expect)
     // the base file's final vector is the union of both matched sets
-    assert(ManifestLog.dvsAsOf(root, 2)
+    assert(ManifestLog.snapshot(root, 2).dvs
       .filter { case (f, _) => f.startsWith("data/v0") }
       .values.map(_.nDeleted).sum == 7L)
     // the loser's post-image files re-derived against the winner's

@@ -46,7 +46,7 @@ class LogStoreCrashSpec extends AnyFunSuite {
       assert(ManifestLog.versionsIn(store) == Seq(0L, 1L, 2L))
       ManifestLog.commitIn(store, 3, Seq("data/v3/f.parquet"),
         Seq("data/v2/f.parquet"), "merge")
-      assert(ManifestLog.filesAsOfIn(store, 3) == Seq("data/v3/f.parquet"))
+      assert(ManifestLog.snapshotIn(store, 3).files == Seq("data/v3/f.parquet"))
     }
 
     test(s"[$label] checkpointer dying between fold and prune: the " +
@@ -61,11 +61,11 @@ class LogStoreCrashSpec extends AnyFunSuite {
         "crashed before prune: every manifest must still be present")
       // every version resolves exactly in the half-maintained state
       (0L to 5L).foreach { v =>
-        assert(ManifestLog.filesAsOfIn(store, v) ==
+        assert(ManifestLog.snapshotIn(store, v).files ==
           Seq(s"data/v$v/f.parquet"))
       }
       // txn markers survive the seam (checkpoint + tail fold)
-      assert(ManifestLog.lastTxnIn(store, "writer").contains(4L))
+      assert(ManifestLog.snapshotIn(store, 5).txns.get("writer").contains(4L))
       // recovery needs no special case: the next policy'd winning
       // commit folds its own checkpoint and prunes behind the
       // PREVIOUS one (the crashed fold), restoring the invariant
@@ -77,12 +77,12 @@ class LogStoreCrashSpec extends AnyFunSuite {
       assert(ManifestLog.versionsIn(store) == Seq(4L, 5L, 6L),
         "retention must prune the manifests the crashed fold covered")
       (3L to 6L).foreach { v =>
-        assert(ManifestLog.filesAsOfIn(store, v) ==
+        assert(ManifestLog.snapshotIn(store, v).files ==
           Seq(s"data/v$v/f.parquet"))
       }
-      assert(ManifestLog.lastTxnIn(store, "writer").contains(6L))
+      assert(ManifestLog.snapshotIn(store, 6).txns.get("writer").contains(6L))
       // pruned, checkpoint-less history fails loudly
-      intercept[IllegalArgumentException](ManifestLog.filesAsOfIn(store, 1))
+      intercept[IllegalArgumentException](ManifestLog.snapshotIn(store, 1))
     }
 
     test(s"[$label] EVERY intermediate state of a racing retention " +
@@ -103,12 +103,12 @@ class LogStoreCrashSpec extends AnyFunSuite {
           val intactPrefix = v < 6 - k // manifests v..5-k survive? prefix 0..5-k
           val viaCheckpoint = v == 5L
           if (intactPrefix || viaCheckpoint) {
-            assert(ManifestLog.filesAsOfIn(store, v) ==
+            assert(ManifestLog.snapshotIn(store, v).files ==
               Seq(s"data/v$v/f.parquet"),
               s"state k=$k version $v must resolve exactly")
           } else {
             intercept[IllegalArgumentException] {
-              ManifestLog.filesAsOfIn(store, v)
+              ManifestLog.snapshotIn(store, v).files
             }
           }
         }
@@ -159,14 +159,14 @@ class LogStoreCrashSpec extends AnyFunSuite {
       assert(marked.contains("\"pq\"") &&
         !marked.contains("data/a.parquet"),
         "marked checkpoint must carry scalars only")
-      assert(ManifestLog.replayIn(pq, 1) == ManifestLog.replayIn(legacy, 1),
+      assert(ManifestLog.snapshotIn(pq, 1) == ManifestLog.snapshotIn(legacy, 1),
         "columnar and JSON checkpoint replays diverged")
       // prune every manifest behind the checkpoint on both stores —
       // each checkpoint now resolves alone
       Seq(pq, legacy).foreach(s => (0L to 1L).foreach(v =>
         s.delete(f"$v%020d.json")))
-      val a = ManifestLog.replayIn(pq, 1)
-      val b = ManifestLog.replayIn(legacy, 1)
+      val a = ManifestLog.snapshotIn(pq, 1)
+      val b = ManifestLog.snapshotIn(legacy, 1)
       assert(a == b, s"post-prune replays diverged: $a vs $b")
       assert(a.files == Seq("data/a.parquet", "data/b.parquet",
         "data/c.parquet"), "live-set order must survive the sidecar")
@@ -223,7 +223,7 @@ class LogStoreCrashSpec extends AnyFunSuite {
       store.publish(f"${0L}%020d.checkpoint.json",
         """{"version":0,"pq":["1"],"fmt":["2"],"txns":[],"schema":[],""" +
           """"checks":["-"],"at":[],"dvsever":["0"]}""")
-      val r = ManifestLog.replayIn(store, 0)
+      val r = ManifestLog.snapshotIn(store, 0)
       assert(r.files == Seq("data/x.parquet"))
       val ref = r.blooms("data/x.parquet")("id")
       assert(ref.sidecar == "data/x.bloom" && ref.m == 1024 &&
@@ -236,7 +236,7 @@ class LogStoreCrashSpec extends AnyFunSuite {
         "completes through the lost-race no-op with an exact replay") {
       val store = mk()
       buildRich(store)
-      val before = ManifestLog.replayIn(store, 1)
+      val before = ManifestLog.snapshotIn(store, 1)
       ManifestLog.writeCheckpointIn(store, 1)
       // simulate the crash window: sidecar landed, JSON (the atomic
       // commit point) and meta sibling never published
@@ -244,13 +244,13 @@ class LogStoreCrashSpec extends AnyFunSuite {
       store.delete(f"${1L}%020d.checkpoint.meta.json")
       assert(ManifestLog.checkpointVersionsIn(store).isEmpty,
         "an orphan sidecar must never surface as a checkpoint")
-      assert(ManifestLog.replayIn(store, 1) == before)
+      assert(ManifestLog.snapshotIn(store, 1) == before)
       // the retry: publishBytes loses to its own orphan (derived
       // state, byte-identical), JSON publish completes the protocol
       ManifestLog.writeCheckpointIn(store, 1)
       assert(ManifestLog.checkpointVersionsIn(store) == Seq(1L))
       (0L to 1L).foreach(v => store.delete(f"$v%020d.json"))
-      assert(ManifestLog.replayIn(store, 1) == before,
+      assert(ManifestLog.snapshotIn(store, 1) == before,
         "retry-after-crash checkpoint must replay exactly")
     }
   }
@@ -269,10 +269,10 @@ class LogStoreCrashSpec extends AnyFunSuite {
     java.nio.file.Files.createFile(dir.resolve("garbage.tmp"))
     assert(ManifestLog.versionsIn(store) == Seq(0L, 1L),
       "torn litter must never parse as a version")
-    assert(ManifestLog.filesAsOfIn(store, 1) == Seq("data/v1/f.parquet"))
+    assert(ManifestLog.snapshotIn(store, 1).files == Seq("data/v1/f.parquet"))
     // the staged-but-dead version 2 is still free for the next writer
     ManifestLog.commitIn(store, 2, Seq("data/v2/f.parquet"),
       Seq("data/v1/f.parquet"), "merge")
-    assert(ManifestLog.filesAsOfIn(store, 2) == Seq("data/v2/f.parquet"))
+    assert(ManifestLog.snapshotIn(store, 2).files == Seq("data/v2/f.parquet"))
   }
 }

@@ -150,8 +150,8 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     assert(rows == Set((1L, 10L, -1L), (2L, 21L, 201L),
       (3L, 30L, 300L)), s"got: $rows")
     // the mirror carries the propagated declaration
-    assert(ManifestLog.schemaDdlAsOf(dst,
-      ManifestLog.latestVersion(dst).get)
+    assert(ManifestLog.snapshot(dst, ManifestLog.latestVersion(dst).get)
+      .schemaDdl
       .contains("k BIGINT, v BIGINT, w BIGINT"))
   }
 
@@ -293,7 +293,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     val v0 = ManifestLog.latestVersion(dst).get
     val mirrorFiles0 = ManifestLog.filesAsOf(dst, v0).toSet
     assert(mirrorFiles0.nonEmpty)
-    assert(ManifestLog.colStatsAsOf(dst, v0).nonEmpty,
+    assert(ManifestLog.snapshot(dst, v0).colStats.nonEmpty,
       "mirror files must commit lead-key stats for the next sync's prune")
     // source v3: an append whose id band (100..103) intersects NO
     // existing mirror file's id interval (mirror holds 1..7)
@@ -328,7 +328,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("id"))
     val v2 = ManifestLog.latestVersion(dst).get
     val (_, _, removes2) = ManifestLog.changesBetween(dst, v1, v2).head
-    val cs = ManifestLog.colStatsAsOf(dst, v1)
+    val cs = ManifestLog.snapshot(dst, v1).colStats
     removes2.foreach { f =>
       val st = cs.get(f).flatMap(_.get("id"))
       assert(st.forall(s => s.min <= 6L && s.max >= 6L),
@@ -373,7 +373,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("code"),
       mirrorFiles = 3)
     val v0 = ManifestLog.latestVersion(dst).get
-    assert(ManifestLog.strColStatsAsOf(dst, v0).nonEmpty,
+    assert(ManifestLog.snapshot(dst, v0).strColStats.nonEmpty,
       "string-keyed mirror files must commit code bounds")
     // v1: append codes in the 'q' band — no existing mirror file's
     // bound interval can hold them
@@ -655,7 +655,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     val f3 = land(root, "data/v3", Seq((9L, 90L)))
     ManifestLog.commit(root, 3, f3, Seq.empty, "append")
     ManifestLog.writeCheckpoint(root, 2)
-    assert(ManifestLog.dvsAsOf(root, 3).isEmpty)
+    assert(ManifestLog.snapshot(root, 3).dvs.isEmpty)
     // prune manifests 0..1 behind the checkpoint → baseline v1 is
     // unresolvable, surviving metadata carries NO dvs field at all
     ManifestLog.expireVersionsBefore(root, 2)

@@ -48,19 +48,20 @@ class ManifestCloneSpec extends AnyFunSuite {
       ManifestLog.readVersion(spark, src, 2).orderBy("k")
         .collect().toSeq)
     // stats prune through the absolute refs
-    val pruned = ManifestLog.filesMatchingCols(dst, 0,
+    val pruned = ManifestLog.filesMatchingCols(ManifestLog.snapshot(dst, 0),
       Seq(("k", 0L, 5L)))
     assert(pruned.size == 1 && pruned.head.startsWith("/"))
     // bloom point lookup reads the source's sidecar by absolute ref
-    assert(ManifestLog.filesMatchingPoint(dst, 0, "k", 12L).size == 1)
+    assert(ManifestLog.filesMatchingPoint(
+      dst, ManifestLog.snapshot(dst, 0), "k", 12L).size == 1)
     assert(ManifestLog.readVersionPoint(spark, dst, 0, "k", 12L)
       .filter(col("k") === 12L).count() == 1)
     // the CHECK set is in force on the clone's own ingest
-    assert(ManifestLog.checksAsOf(dst, 0) == Map("k_nonneg" -> "k >= 0"))
+    assert(ManifestLog.snapshot(dst, 0).checks == Map("k_nonneg" -> "k >= 0"))
     // the declared schema carries too (None here — but the seam is
     // the same passthrough the evolved-source clone rides)
-    assert(ManifestLog.schemaDdlAsOf(dst, 0) ==
-      ManifestLog.schemaDdlAsOf(src, 2))
+    assert(ManifestLog.snapshot(dst, 0).schemaDdl ==
+      ManifestLog.snapshot(src, 2).schemaDdl)
     // the raw change feed serves the clone's v0 add rows through the
     // refs too (raw file rows — vectors ride the image feed, as on
     // any dv-bearing commit)
@@ -166,10 +167,10 @@ class ManifestCloneSpec extends AnyFunSuite {
     assert(localBefore.forall(after.contains),
       "local files must carry through untouched")
     // the inherited vectors folded into the rewrite and dropped
-    assert(ManifestLog.dvsAsOf(dst, 2).isEmpty)
+    assert(ManifestLog.snapshot(dst, 2).dvs.isEmpty)
     // the rewrite re-committed prunable stats
     assert(locals.forall(f =>
-      ManifestLog.colStatsAsOf(dst, 2).get(f).exists(_.contains("k"))))
+      ManifestLog.snapshot(dst, 2).colStats.get(f).exists(_.contains("k"))))
     // the point of it all: delete the source, the clone still reads
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(java.nio.file.Paths.get(src))
@@ -369,7 +370,7 @@ class ManifestCloneSpec extends AnyFunSuite {
     assert(ManifestLog.partFilesRecursive(dst, "").isEmpty)
     assert(ManifestLog.lastTxn(dst, "graft_replica").contains(0L))
     // source moves on: one key changes (a COW rewrite of its file)
-    val touched = ManifestLog.filesMatchingCols(src, 0,
+    val touched = ManifestLog.filesMatchingCols(ManifestLog.snapshot(src, 0),
       Seq(("k", 5L, 5L)))
     assert(touched.size == 1)
     spark.read.parquet(s"$src/${touched.head}")

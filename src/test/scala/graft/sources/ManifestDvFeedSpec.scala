@@ -32,8 +32,9 @@ class ManifestDvFeedSpec extends AnyFunSuite {
       .filter(col("k").isin(7L, 8L))
       .withColumn("v", col("v") + 1L).coalesce(1)
       .write.parquet(s"$root/data/v2")
-    val dvs = ManifestLog.buildDvs(spark, root, 1, 2,
-      ManifestLog.filesAsOf(root, 1), _.filter(col("k").isin(7L, 8L)))
+    val r1 = ManifestLog.snapshot(root, 1)
+    val dvs = ManifestLog.buildDvs(spark, root, r1, 2, r1.files,
+      _.filter(col("k").isin(7L, 8L)))
     ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       Seq.empty, op = "merge", dvs = dvs)
     assert(ManifestLog.compactDvs(spark, root, 2, 3).nonEmpty)

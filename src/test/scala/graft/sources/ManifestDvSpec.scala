@@ -82,14 +82,14 @@ class ManifestDvSpec extends AnyFunSuite {
       col("user_id").between(13, 15))
     // one file (the 10-19 decade), one vector: union of both deletes
     assert(dvs2.size == 1 && dvs2.head._2.nDeleted == 4, dvs2)
-    assert(ManifestLog.dvsAsOf(root, 2) == dvs2)
+    assert(ManifestLog.snapshot(root, 2).dvs == dvs2)
     assert(users(ManifestLog.readVersion(spark, root, 2)) ==
       (0L to 29L).filterNot(u => u >= 12 && u <= 15))
     assert(users(ManifestLog.readVersion(spark, root, 1)) ==
       (0L to 29L).filterNot(u => u == 12 || u == 13))
     // the replaced v1 sidecar and the live v2 sidecar both exist
     // (immutable, never-reuse naming) until vacuum decides
-    val v1dv = ManifestLog.dvsAsOf(root, 1).head._2.sidecar
+    val v1dv = ManifestLog.snapshot(root, 1).dvs.head._2.sidecar
     assert(v1dv != dvs2.head._2.sidecar)
     assert(Files.exists(Paths.get(root, v1dv)))
   }
@@ -106,7 +106,7 @@ class ManifestDvSpec extends AnyFunSuite {
     // drops the vector from the live state
     val added = ManifestLog.compactDvs(spark, root, 1, 2)
     assert(added.nonEmpty)
-    assert(ManifestLog.dvsAsOf(root, 2).isEmpty)
+    assert(ManifestLog.snapshot(root, 2).dvs.isEmpty)
     assert(users(ManifestLog.readVersion(spark, root, 2)) == (5L to 29L))
     // the pre-compaction version still reads through its vector
     assert(users(ManifestLog.readVersion(spark, root, 1)) == (5L to 29L))
@@ -120,7 +120,7 @@ class ManifestDvSpec extends AnyFunSuite {
     val root = freshRoot()
     ManifestLog.deleteWhereMor(spark, root, 0, 1,
       col("user_id").between(2, 3))
-    val live = ManifestLog.dvsAsOf(root, 1).head._2.sidecar
+    val live = ManifestLog.snapshot(root, 1).dvs.head._2.sidecar
     val orphan = "data/v0/stray.dv"
     Files.write(Paths.get(root, orphan), Array[Byte](0, 0, 0, 0, 0, 0, 0, 9))
     // dry run: same sweep set, nothing deleted

@@ -86,7 +86,7 @@ class ManifestEvolutionSpec extends AnyFunSuite {
     ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, op = "write",
       checks = Some(Seq("v_pos" -> "v > 0", "k_pos" -> "k > 0")))
-    assert(ManifestLog.checksAsOf(root, 0) ==
+    assert(ManifestLog.snapshot(root, 0).checks ==
       Map("v_pos" -> "v > 0", "k_pos" -> "k > 0"))
     // a non-declaring commit leaves the set untouched — but since r17
     // a stats-less add on a constrained table must attest (the
@@ -100,26 +100,26 @@ class ManifestEvolutionSpec extends AnyFunSuite {
     }
     ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, op = "append", attest = true)
-    assert(ManifestLog.checksAsOf(root, 1).keySet == Set("v_pos", "k_pos"))
+    assert(ManifestLog.snapshot(root, 1).checks.keySet == Set("v_pos", "k_pos"))
     // the set folds through a checkpoint seed
     ManifestLog.writeCheckpoint(root, 1)
-    assert(ManifestLog.checksAsOf(root, 1).keySet == Set("v_pos", "k_pos"))
+    assert(ManifestLog.snapshot(root, 1).checks.keySet == Set("v_pos", "k_pos"))
     // SQL CHECK: NULL passes, FALSE violates
     ManifestLog.requireSatisfies(
       Seq((3L, Option.empty[Long])).toDF("k", "v"),
-      ManifestLog.checksAsOf(root, 1))
+      ManifestLog.snapshot(root, 1).checks)
     val e = intercept[IllegalArgumentException](
       ManifestLog.requireSatisfies(
         Seq((3L, Some(-1L)), (0L, Some(2L))).toDF("k", "v"),
-        ManifestLog.checksAsOf(root, 1)))
+        ManifestLog.snapshot(root, 1).checks))
     assert(e.getMessage.contains("v_pos") && e.getMessage.contains("k_pos"))
     // dropping ALL constraints is a real declaration, not an absence
     Seq((4L, Some(7L))).toDF("k", "v").coalesce(1)
       .write.parquet(s"$root/data/v2")
     ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       Seq.empty, op = "drop-checks", checks = Some(Seq.empty))
-    assert(ManifestLog.checksAsOf(root, 2).isEmpty)
-    assert(ManifestLog.checksAsOf(root, 1).nonEmpty)
+    assert(ManifestLog.snapshot(root, 2).checks.isEmpty)
+    assert(ManifestLog.snapshot(root, 1).checks.nonEmpty)
   }
 
   test("retention: pruned manifests leave the time-addressable set; " +

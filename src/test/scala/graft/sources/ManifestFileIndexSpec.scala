@@ -336,9 +336,9 @@ class ManifestFileIndexSpec extends AnyFunSuite {
     // bounds survive a checkpoint-seeded replay (the checkpoint at 0
     // becomes the replay seed, so this parses the checkpoint's own
     // strstats field)
-    val direct = ManifestLog.strColStatsAsOf(root, 0)
+    val direct = ManifestLog.snapshot(root, 0).strColStats
     ManifestLog.writeCheckpoint(root, 0)
-    assert(ManifestLog.strColStatsAsOf(root, 0) == direct &&
+    assert(ManifestLog.snapshot(root, 0).strColStats == direct &&
       direct.nonEmpty && direct.values.forall(_.contains("lang")))
   }
 

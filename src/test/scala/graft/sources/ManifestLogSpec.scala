@@ -145,7 +145,7 @@ class ManifestLogSpec extends AnyFunSuite {
       assert(wins == 1, s"expected exactly one winning commit, got $wins")
     } finally pool.shutdown()
     assert(ManifestLog.versionsIn(store) == Seq(0L, 1L))
-    val v1 = ManifestLog.filesAsOfIn(store, 1)
+    val v1 = ManifestLog.snapshotIn(store, 1).files
     assert(v1.length == 1 && v1.head.startsWith("data/v1/w"))
   }
 
@@ -195,22 +195,24 @@ class ManifestLogSpec extends AnyFunSuite {
         "data/v0/b.parquet" -> FileStat(10, 19),
         "data/v0/c.parquet" -> FileStat(20, 29)))
     // the prune keeps intersecting intervals + every unknown-stats file
-    assert(ManifestLog.filesMatching(root, 0, 12, 14) ==
+    assert(ManifestLog.filesMatching(ManifestLog.snapshot(root, 0), 12, 14) ==
       Seq("data/v0/b.parquet", "data/v0/legacy.parquet"))
     // closed-interval boundaries: touching counts as intersecting
-    assert(ManifestLog.filesMatching(root, 0, 9, 10).toSet ==
+    assert(ManifestLog.filesMatching(
+      ManifestLog.snapshot(root, 0), 9, 10).toSet ==
       Set("data/v0/a.parquet", "data/v0/b.parquet", "data/v0/legacy.parquet"))
     // a range nothing matches still returns the must-read files
-    assert(ManifestLog.filesMatching(root, 0, 1000, 2000) ==
+    assert(ManifestLog.filesMatching(
+      ManifestLog.snapshot(root, 0), 1000, 2000) ==
       Seq("data/v0/legacy.parquet"))
     // v1 rewrites b: its stats must die with the remove, the
     // replacement's must take over
     ManifestLog.commit(root, 1, Seq("data/v1/b2.parquet"),
       Seq("data/v0/b.parquet"), "merge",
       stats = Map("data/v1/b2.parquet" -> FileStat(10, 24)))
-    assert(ManifestLog.filesMatching(root, 1, 12, 14) ==
+    assert(ManifestLog.filesMatching(ManifestLog.snapshot(root, 1), 12, 14) ==
       Seq("data/v0/legacy.parquet", "data/v1/b2.parquet"))
-    assert(ManifestLog.statsAsOf(root, 1) ==
+    assert(ManifestLog.snapshot(root, 1).stats ==
       Map("data/v0/a.parquet" -> FileStat(0, 9),
         "data/v0/c.parquet" -> FileStat(20, 29),
         "data/v1/b2.parquet" -> FileStat(10, 24)))
@@ -220,11 +222,11 @@ class ManifestLogSpec extends AnyFunSuite {
       java.nio.file.Files.delete(java.nio.file.Paths.get(
         root, "_log", f"$v%020d.json"))
     }
-    assert(ManifestLog.filesMatching(root, 1, 12, 14) ==
+    assert(ManifestLog.filesMatching(ManifestLog.snapshot(root, 1), 12, 14) ==
       Seq("data/v0/legacy.parquet", "data/v1/b2.parquet"))
     // time travel before the rewrite is gone with the manifests: loud
     intercept[IllegalArgumentException](ManifestLog.filesMatching(
-      root, 0, 12, 14))
+      ManifestLog.snapshot(root, 0), 12, 14))
   }
 
   test("named-column stats: conjunctive prune multiplies on a z-grid, " +
@@ -253,24 +255,27 @@ class ManifestLogSpec extends AnyFunSuite {
     // the conjunction keeps exactly 1 quadrant (+ must-reads) —
     // strictly better than the best single axis
     val boxX = Seq(("x", 2L, 7L)); val boxY = Seq(("y", 2L, 7L))
-    assert(ManifestLog.filesMatchingCols(root, 0, boxX).toSet ==
+    assert(ManifestLog.filesMatchingCols(
+      ManifestLog.snapshot(root, 0), boxX).toSet ==
       Set("data/v0/q00.parquet", "data/v0/q01.parquet",
         "data/v0/xonly.parquet", "data/v0/legacy.parquet"))
-    assert(ManifestLog.filesMatchingCols(root, 0, boxY).toSet ==
+    assert(ManifestLog.filesMatchingCols(
+      ManifestLog.snapshot(root, 0), boxY).toSet ==
       Set("data/v0/q00.parquet", "data/v0/q10.parquet",
         "data/v0/xonly.parquet", "data/v0/legacy.parquet"))
-    assert(ManifestLog.filesMatchingCols(root, 0, boxX ++ boxY).toSet ==
+    assert(ManifestLog.filesMatchingCols(
+      ManifestLog.snapshot(root, 0), boxX ++ boxY).toSet ==
       Set("data/v0/q00.parquet", "data/v0/xonly.parquet",
         "data/v0/legacy.parquet"))
     // a predicate on a column nobody tracked prunes nothing
-    assert(ManifestLog.filesMatchingCols(root, 0,
+    assert(ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
       Seq(("z", 5L, 6L))).size == 6)
     // a rewrite drops the removed file's colstats with it
     ManifestLog.commit(root, 1, Seq("data/v1/q00b.parquet"),
       Seq("data/v0/q00.parquet"), "merge",
       colStats = Map("data/v1/q00b.parquet" ->
         Map("x" -> FileStat(0, 4), "y" -> FileStat(0, 4))))
-    assert(!ManifestLog.colStatsAsOf(root, 1)
+    assert(!ManifestLog.snapshot(root, 1).colStats
       .contains("data/v0/q00.parquet"))
     // colstats survive checkpoint folding + manifest pruning
     ManifestLog.writeCheckpoint(root, 1)
@@ -278,7 +283,8 @@ class ManifestLogSpec extends AnyFunSuite {
       java.nio.file.Files.delete(java.nio.file.Paths.get(
         root, "_log", f"$v%020d.json"))
     }
-    assert(ManifestLog.filesMatchingCols(root, 1, boxX ++ boxY).toSet ==
+    assert(ManifestLog.filesMatchingCols(
+      ManifestLog.snapshot(root, 1), boxX ++ boxY).toSet ==
       Set("data/v1/q00b.parquet", "data/v0/xonly.parquet",
         "data/v0/legacy.parquet"))
   }
@@ -345,24 +351,28 @@ class ManifestLogSpec extends AnyFunSuite {
           Map("id" -> BloomRef("id", "data/v0/b.bloom", m, k))))
     // the containing file always survives; the bloom-less file is
     // must-read; the other file is (deterministically, here) pruned
-    assert(ManifestLog.filesMatchingPoint(root, 0, "id", 2L) ==
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 0), "id", 2L) ==
       Seq("data/v0/a.parquet", "data/v0/legacy.parquet"))
-    assert(ManifestLog.filesMatchingPoint(root, 0, "id", 200L) ==
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 0), "id", 200L) ==
       Seq("data/v0/b.parquet", "data/v0/legacy.parquet"))
     // a column nobody indexed prunes nothing
-    assert(ManifestLog.filesMatchingPoint(root, 0, "other", 2L)
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 0), "other", 2L)
       .size == 3)
     // refs die with their file's remove...
     ManifestLog.commit(root, 1, Seq.empty,
       Seq("data/v0/a.parquet"), "delete")
-    assert(!ManifestLog.bloomsAsOf(root, 1).contains("data/v0/a.parquet"))
+    assert(!ManifestLog.snapshot(root, 1).blooms.contains("data/v0/a.parquet"))
     // ...and survive checkpoint folding + manifest pruning
     ManifestLog.writeCheckpoint(root, 1)
     (0L to 1L).foreach { v =>
       java.nio.file.Files.delete(java.nio.file.Paths.get(
         root, "_log", f"$v%020d.json"))
     }
-    assert(ManifestLog.filesMatchingPoint(root, 1, "id", 200L) ==
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 1), "id", 200L) ==
       Seq("data/v0/b.parquet", "data/v0/legacy.parquet"))
   }
 
@@ -393,7 +403,8 @@ class ManifestLogSpec extends AnyFunSuite {
         "data/b.parquet" -> Map("id" -> BloomRef("id", "data/b.bloom", m, k))))
     val store = ManifestLog.storeFor(root)
     def prune(keys: Long*): Set[String] =
-      ManifestLog.filesMatchingKeysIn(store, root, 0, "id", keys)
+      ManifestLog.filesMatchingKeys(
+        root, ManifestLog.snapshotIn(store, 0), "id", keys)
         .toSet
     // key 2: a survives (stats hit + bloom maybe), b pruned by STATS,
     // c pruned by stats, legacy must-read
@@ -409,7 +420,8 @@ class ManifestLogSpec extends AnyFunSuite {
     // a key nothing matches: only the must-read file remains
     assert(prune(5000L) == Set("data/legacy.parquet"))
     // an unindexed column prunes nothing
-    assert(ManifestLog.filesMatchingKeysIn(store, root, 0, "other",
+    assert(ManifestLog.filesMatchingKeys(
+      root, ManifestLog.snapshotIn(store, 0), "other",
       Seq(2L)).size == 4)
     intercept[IllegalArgumentException](prune())
   }
@@ -723,17 +735,21 @@ class ManifestLogSpec extends AnyFunSuite {
         """"nullstats":[]}""")
     // a's long probes MUST keep the file — probing string-keyed bits
     // with long hashes false-negatives (silently wrong pruning)
-    assert(ManifestLog.filesMatchingPoint(root, 0, "code", 42L)
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 0), "code", 42L)
       .contains("data/v0/a.parquet"))
-    assert(ManifestLog.filesMatchingKeysIn(store, root, 0, "code",
+    assert(ManifestLog.filesMatchingKeys(
+      root, ManifestLog.snapshotIn(store, 0), "code",
       Seq(42L)).contains("data/v0/a.parquet"))
     // b's long colStats corroborate a long-keyed fold: the bloom MAY
     // prune (9999 in [0,9]? no — stats prune; probe key 3 in range,
     // not in bloom → bloom prunes)
-    assert(!ManifestLog.filesMatchingKeysIn(store, root, 0, "id",
+    assert(!ManifestLog.filesMatchingKeys(
+      root, ManifestLog.snapshotIn(store, 0), "id",
       Seq(3L)).contains("data/v0/b.parquet"),
       "corroborated legacy long bloom must still prune")
-    assert(ManifestLog.filesMatchingKeysIn(store, root, 0, "id",
+    assert(ManifestLog.filesMatchingKeys(
+      root, ManifestLog.snapshotIn(store, 0), "id",
       Seq(7L)).contains("data/v0/b.parquet"),
       "no false negatives on the corroborated path")
     // the quarantine survives the CHECKPOINT fold (the |l mark):
@@ -741,17 +757,20 @@ class ManifestLogSpec extends AnyFunSuite {
     // the uncertainty away
     ManifestLog.writeCheckpoint(root, 0)
     store.delete(f"${0L}%020d.json")
-    assert(ManifestLog.filesMatchingPoint(root, 0, "code", 42L)
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 0), "code", 42L)
       .contains("data/v0/a.parquet"),
       "legacy quarantine must survive checkpoint folding")
-    assert(!ManifestLog.filesMatchingKeysIn(store, root, 0, "id",
+    assert(!ManifestLog.filesMatchingKeys(
+      root, ManifestLog.snapshotIn(store, 0), "id",
       Seq(3L)).contains("data/v0/b.parquet"))
     // an fmt-2 (current-writer) long bloom without stats still prunes
     sidecar("data/v1/c.bloom", Seq(7L, 8L).iterator)
     ManifestLog.commit(root, 1, Seq("data/v1/c.parquet"), Seq.empty,
       "write", blooms = Map("data/v1/c.parquet" ->
         Map("id" -> ManifestLog.BloomRef("id", "data/v1/c.bloom", m, k))))
-    val hit = ManifestLog.filesMatchingPoint(root, 1, "id", 9999L)
+    val hit = ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 1), "id", 9999L)
     assert(!hit.contains("data/v1/c.parquet"),
       s"fmt-2 long bloom should still prune: $hit")
   }
@@ -821,15 +840,17 @@ class ManifestLogSpec extends AnyFunSuite {
         """"nullstats":[]}""")
     // BEFORE the op: the r19 quarantine — a and u are must-read on
     // long probes, a's STRING probe cannot prune (untyped = str false)
-    assert(ManifestLog.filesMatchingPoint(root, 0, "code", 42L)
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 0), "code", 42L)
       .contains("data/v0/a.parquet"))
-    assert(ManifestLog.filesMatchingStrPoint(root, 0, "code", "zz")
+    assert(ManifestLog.filesMatchingStrPoint(
+      root, ManifestLog.snapshot(root, 0), "code", "zz")
       .contains("data/v0/a.parquet"),
       "an untyped ref must not answer string probes either")
     val n = ManifestLog.retagBlooms(root)
     assert(n == 2, s"expected 2 retagged refs (a, b), got $n")
     val v = ManifestLog.latestVersion(root).get
-    val refs = ManifestLog.bloomsAsOf(root, v)
+    val refs = ManifestLog.snapshot(root, v).blooms
     assert(refs("data/v0/a.parquet")("code") ==
       ManifestLog.BloomRef("code", "data/v0/a.bloom", m, k, str = true),
       s"footer evidence must retag a string fold: $refs")
@@ -841,24 +862,31 @@ class ManifestLogSpec extends AnyFunSuite {
         "physical type alone cannot prove the key fold")
     // AFTER: a's string probe PRUNES absent values, keeps present
     // ones, and long probes on it stay conservatively must-read
-    assert(!ManifestLog.filesMatchingStrPoint(root, v, "code", "zz")
+    assert(!ManifestLog.filesMatchingStrPoint(
+      root, ManifestLog.snapshot(root, v), "code", "zz")
       .contains("data/v0/a.parquet"),
       "the retagged string bloom must prune")
-    assert(ManifestLog.filesMatchingStrPoint(root, v, "code", "x1")
+    assert(ManifestLog.filesMatchingStrPoint(
+      root, ManifestLog.snapshot(root, v), "code", "x1")
       .contains("data/v0/a.parquet"), "no false negatives")
-    assert(ManifestLog.filesMatchingPoint(root, v, "code", 42L)
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, v), "code", 42L)
       .contains("data/v0/a.parquet"),
       "a string bloom can never answer a long probe")
     // b prunes as a first-class fmt-2 long bloom
-    assert(!ManifestLog.filesMatchingKeysIn(store, root, v, "id",
+    assert(!ManifestLog.filesMatchingKeys(
+      root, ManifestLog.snapshotIn(store, v), "id",
       Seq(3L)).contains("data/v0/b.parquet"))
-    assert(ManifestLog.filesMatchingKeysIn(store, root, v, "id",
+    assert(ManifestLog.filesMatchingKeys(
+      root, ManifestLog.snapshotIn(store, v), "id",
       Seq(7L)).contains("data/v0/b.parquet"))
     // u stays must-read on every path
-    assert(ManifestLog.filesMatchingPoint(root, v, "zz", 42L)
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, v), "zz", 42L)
       .contains("data/v0/u.parquet"))
     // WITHOUT the op (reads at v0) the quarantine is untouched
-    assert(ManifestLog.filesMatchingPoint(root, 0, "code", 42L)
+    assert(ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 0), "code", 42L)
       .contains("data/v0/a.parquet"))
     // idempotent: nothing left to retag, no new commit
     assert(ManifestLog.retagBlooms(root) == 0 &&
@@ -922,8 +950,8 @@ class ManifestLogSpec extends AnyFunSuite {
     // genesis fold, never vectored → exactly Some(false)
     val a = freshRoot(); val sA = ManifestLog.storeFor(a)
     ManifestLog.commit(a, 0, Seq("data/a.parquet"), Seq.empty, "write")
-    assert(ManifestLog.replayIn(sA, 0).dvsEver.contains(false))
-    assert(ManifestLog.replayIn(sA, 0).dvsEver.contains(
+    assert(ManifestLog.snapshotIn(sA, 0).dvsEver.contains(false))
+    assert(ManifestLog.snapshotIn(sA, 0).dvsEver.contains(
       ManifestLog.dvsEverThrough(sA, 0)))
     // a dv commit latches it — and it stays latched after a COW
     // rewrite drops every surviving ref (strictly-conservative, same
@@ -932,14 +960,14 @@ class ManifestLogSpec extends AnyFunSuite {
       dvs = Map("data/a.parquet" -> ManifestLog.DvRef("ext/a.dv", 2L)))
     ManifestLog.commit(a, 2, Seq("data/b.parquet"),
       Seq("data/a.parquet"), "rewrite")
-    assert(ManifestLog.replayIn(sA, 2).dvsEver.contains(true))
+    assert(ManifestLog.snapshotIn(sA, 2).dvsEver.contains(true))
     assert(ManifestLog.dvsEverThrough(sA, 2))
     // a checkpoint inherits the bit; checkpoint-seeded replays stay
     // exact (versions ≤ the checkpoint need no manifest reads at all)
     ManifestLog.writeCheckpoint(a, 2)
     ManifestLog.commit(a, 3, Seq("data/c.parquet"), Seq.empty, "append")
-    assert(ManifestLog.replayIn(sA, 3).dvsEver.contains(true))
-    assert(ManifestLog.replayIn(sA, 3).dvsEver.contains(
+    assert(ManifestLog.snapshotIn(sA, 3).dvsEver.contains(true))
+    assert(ManifestLog.snapshotIn(sA, 3).dvsEver.contains(
       ManifestLog.dvsEverThrough(sA, 3)))
     // forged legacy log: cv2 carries the only dv evidence, cv3 is
     // clean and bitless, manifest v4 clean → the cv3-seeded replay is
@@ -957,7 +985,7 @@ class ManifestLogSpec extends AnyFunSuite {
     sB.publish(f"${4L}%020d.json",
       """{"version":4,"adds":["data/h.parquet"],"removes":[],""" +
         """"op":["append"]}""")
-    assert(ManifestLog.replayIn(sB, 4).dvsEver.isEmpty,
+    assert(ManifestLog.snapshotIn(sB, 4).dvsEver.isEmpty,
       "a legacy-seeded replay must stay undecided, not guess")
     // the writer's fallback reproduces the full surviving-metadata
     // scan, so the NEW checkpoint bakes the RIGHT bit
@@ -965,10 +993,10 @@ class ManifestLogSpec extends AnyFunSuite {
     assert(sB.read(f"${4L}%020d.checkpoint.json").contains(
       """"dvsever":["1"]"""),
       "the legacy fallback must find the earlier checkpoint's dv ref")
-    assert(ManifestLog.replayIn(sB, 4).dvsEver.contains(true))
+    assert(ManifestLog.snapshotIn(sB, 4).dvsEver.contains(true))
     // a legacy checkpoint whose OWN surviving refs prove 'ever' is
     // decided without any fallback
-    assert(ManifestLog.replayIn(sB, 2).dvsEver.contains(true))
+    assert(ManifestLog.snapshotIn(sB, 2).dvsEver.contains(true))
   }
 
   test("dvsEverThrough prefers the KB meta sibling for the bit " +

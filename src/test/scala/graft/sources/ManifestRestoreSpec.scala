@@ -30,7 +30,7 @@ class ManifestRestoreSpec extends AnyFunSuite {
       root, "data/v0", 0, statsCols = Seq("k"))
     // v1: copy-on-write rewrite of the file holding k < 10 — its
     // rows' amounts double
-    val doomed = ManifestLog.filesMatchingCols(root, 0,
+    val doomed = ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
       Seq(("k", 0L, 5L)))
     assert(doomed.size == 1)
     spark.read.parquet(s"$root/${doomed.head}")
@@ -55,9 +55,9 @@ class ManifestRestoreSpec extends AnyFunSuite {
     // live state == v0 exactly
     assert(ManifestLog.filesAsOf(root, 3).toSet ==
       ManifestLog.filesAsOf(root, 0).toSet)
-    assert(ManifestLog.colStatsAsOf(root, 3) ==
-      ManifestLog.colStatsAsOf(root, 0))
-    assert(ManifestLog.dvsAsOf(root, 3).isEmpty)
+    assert(ManifestLog.snapshot(root, 3).colStats ==
+      ManifestLog.snapshot(root, 0).colStats)
+    assert(ManifestLog.snapshot(root, 3).dvs.isEmpty)
     // rows == v0's rows
     assert(ManifestLog.readVersion(spark, root, 3).orderBy("k")
       .collect().toSeq ==
@@ -94,10 +94,11 @@ class ManifestRestoreSpec extends AnyFunSuite {
       root, "data/v0", 0, statsCols = Seq("k"))
     ManifestLog.deleteWhereMor(spark, root, 0, 1, col("k") % 5 === 0)
     ManifestLog.deleteWhereMor(spark, root, 1, 2, col("k") % 7 === 0)
-    assert(ManifestLog.dvsAsOf(root, 2).values.head.nDeleted >
-      ManifestLog.dvsAsOf(root, 1).values.head.nDeleted)
+    assert(ManifestLog.snapshot(root, 2).dvs.values.head.nDeleted >
+      ManifestLog.snapshot(root, 1).dvs.values.head.nDeleted)
     val v = ManifestLog.restoreTo(root, 1)
-    assert(ManifestLog.dvsAsOf(root, v) == ManifestLog.dvsAsOf(root, 1))
+    assert(ManifestLog.snapshot(root, v).dvs ==
+      ManifestLog.snapshot(root, 1).dvs)
     assert(ManifestLog.readVersion(spark, root, v).orderBy("k")
       .collect().toSeq ==
       ManifestLog.readVersion(spark, root, 1).orderBy("k")
@@ -195,7 +196,7 @@ class ManifestRestoreSpec extends AnyFunSuite {
       removes = ManifestLog.filesAsOf(root, 0), op = "rewrite")
     // reclaim ONE removed file's bloom sidecar (the data file stays —
     // the old check, which only looked at adds + DV sidecars, passes)
-    val bloomSc = ManifestLog.bloomsAsOf(root, 0).values
+    val bloomSc = ManifestLog.snapshot(root, 0).blooms.values
       .flatMap(_.values.map(_.sidecar)).head
     Files.delete(java.nio.file.Paths.get(root, bloomSc))
     val e = intercept[IllegalArgumentException] {

@@ -38,16 +38,17 @@ class SinglePassWriterSpec extends AnyFunSuite {
       .agg(min("k").as("lo"), max("k").as("hi")).collect()
       .map(r => s"data/v0/${r.getString(0).split('/').last}" ->
         ManifestLog.FileStat(r.getLong(1), r.getLong(2))).toMap
-    assert(ManifestLog.colStatsAsOf(root, 0)
+    assert(ManifestLog.snapshot(root, 0).colStats
       .view.mapValues(_("k")).toMap == readBack)
     // blooms: every inserted key is contained; the point prune keeps
     // exactly the one range-partitioned file for an existing key
-    val hit = ManifestLog.filesMatchingPoint(root, 0, "k", 42L)
+    val hit = ManifestLog.filesMatchingPoint(
+      root, ManifestLog.snapshot(root, 0), "k", 42L)
     assert(hit.size == 1)
     assert(ManifestLog.readVersionPoint(spark, root, 0, "k", 42L)
       .filter(col("k") === 42L).count() == 1)
     // range prune serves the planning-time index
-    val pruned = ManifestLog.filesMatchingCols(root, 0,
+    val pruned = ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
       Seq(("k", 0L, 20L)))
     assert(pruned.size == 1, pruned)
   }
@@ -83,7 +84,7 @@ class SinglePassWriterSpec extends AnyFunSuite {
       df.orderBy("k").collect().toSeq)
     // day-granular stats prune: only the files whose interval meets
     // May/June survive
-    val kept = ManifestLog.filesMatchingCols(root, 0,
+    val kept = ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
       Seq(("d", java.time.LocalDate.parse("2024-05-01").toEpochDay,
         Long.MaxValue)))
     assert(kept.size < ManifestLog.filesAsOf(root, 0).size, kept)
@@ -140,21 +141,21 @@ class SinglePassWriterSpec extends AnyFunSuite {
     val summaries = SinglePassWriter.writeCommit(df, root, "data/v0", 0,
       statsCols = Seq("k", "dead"), strStatsCols = Seq("lang"))
     assert(summaries.size == 1)
-    val str = ManifestLog.strColStatsAsOf(root, 0).values.head("lang")
+    val str = ManifestLog.snapshot(root, 0).strColStats.values.head("lang")
     // UTF-8 order: the supplementary char is the MAX (UTF-16 order
     // would have picked U+FFFD — the collation hazard this feature
     // must not have)
     assert(str == ManifestLog.StrStat("de", supp), str)
     // the all-null integral column committed NO stat — no inverted
     // (MaxValue, MinValue) sentinel in the manifest (r17 advice)
-    val cols = ManifestLog.colStatsAsOf(root, 0).values.head
+    val cols = ManifestLog.snapshot(root, 0).colStats.values.head
     assert(cols.contains("k") && !cols.contains("dead"), cols)
     // an all-null STRING column is likewise omitted
     val root2 = newRoot()
     SinglePassWriter.writeCommit(
       Seq((1L, Option.empty[String])).toDF("k", "s").coalesce(1),
       root2, "data/v0", 0, strStatsCols = Seq("s"))
-    assert(ManifestLog.strColStatsAsOf(root2, 0).isEmpty)
+    assert(ManifestLog.snapshot(root2, 0).strColStats.isEmpty)
     // loud rejection: a non-string strStats column
     intercept[IllegalArgumentException] {
       SinglePassWriter.writeCommit(
@@ -199,7 +200,8 @@ class SinglePassWriterSpec extends AnyFunSuite {
       strStatsCols = Seq("tag"))
     // every present tag's containing files survive (no false negative)
     (0 until 97).foreach { t =>
-      val kept = ManifestLog.filesMatchingStrPoint(root, 0, "tag", s"t$t")
+      val kept = ManifestLog.filesMatchingStrPoint(
+        root, ManifestLog.snapshot(root, 0), "tag", s"t$t")
       val actual = ManifestLog.readVersion(spark, root, 0)
         .filter(col("tag") === s"t$t").count()
       assert(actual > 0)
@@ -212,11 +214,12 @@ class SinglePassWriterSpec extends AnyFunSuite {
     // an absent tag prunes everything (bounds contain it; the bloom
     // says definitely absent — modulo fp, overwhelmingly unlikely
     // across 4 small filters for one fixed probe)
-    assert(ManifestLog.filesMatchingStrPoint(root, 0, "tag", "zzz")
+    assert(ManifestLog.filesMatchingStrPoint(
+      root, ManifestLog.snapshot(root, 0), "tag", "zzz")
       .size <= 1)
     // the string-keyed DFP path consults the bloom too
-    val viaKeys = ManifestLog.filesMatchingStrKeysIn(
-      ManifestLog.storeFor(root), root, 0, "tag", Seq("zzz", "yyy"))
+    val viaKeys = ManifestLog.filesMatchingStrKeys(
+      root, ManifestLog.snapshot(root, 0), "tag", Seq("zzz", "yyy"))
     assert(viaKeys.size <= 1)
   }
 
@@ -231,7 +234,7 @@ class SinglePassWriterSpec extends AnyFunSuite {
       Seq(-2.5, -0.0, 3.25, Double.NaN, 0.5)
         .toDF("price").coalesce(1),
       root, "data/v0", 0, statsCols = Seq("price"))
-    val st = ManifestLog.colStatsAsOf(root, 0).values.head("price")
+    val st = ManifestLog.snapshot(root, 0).colStats.values.head("price")
     // min is -2.5's image; max is NaN's (above +Infinity's) — the
     // Spark ordering where NaN is larger than any other value; the
     // entry commits dbl-TAGGED so the CHECK proof picks image
@@ -260,7 +263,7 @@ class SinglePassWriterSpec extends AnyFunSuite {
     SinglePassWriter.writeCommit(
       Seq((1L, Option.empty[Double])).toDF("k", "d").coalesce(1),
       root2, "data/v0", 0, statsCols = Seq("d"))
-    assert(!ManifestLog.colStatsAsOf(root2, 0)
+    assert(!ManifestLog.snapshot(root2, 0).colStats
       .values.exists(_.contains("d")))
   }
 
@@ -275,18 +278,20 @@ class SinglePassWriterSpec extends AnyFunSuite {
       Seq(("aa", 1L), ("bb", 2L), ("mm", 3L), ("zz", 4L))
         .toDF("code", "v").repartitionByRange(2, col("code")),
       rootS, "data/v0", 0, bloomCol = Some("code"))
-    val refsS = ManifestLog.bloomsAsOf(rootS, 0)
+    val refsS = ManifestLog.snapshot(rootS, 0).blooms
     assert(refsS.nonEmpty && refsS.values.forall(_("code").str),
       s"string blooms must be tagged: $refsS")
     // a LONG probe of the string-bloomed column hashes differently —
     // with the tag it skips the bloom (must-read, every file
     // survives); without it, a false negative could DROP the
     // containing file
-    assert(ManifestLog.filesMatchingPoint(rootS, 0, "code", 42L)
+    assert(ManifestLog.filesMatchingPoint(
+      rootS, ManifestLog.snapshot(rootS, 0), "code", 42L)
       .size == ManifestLog.filesAsOf(rootS, 0).size)
     // the string path still probes string blooms: the containing
     // file always survives
-    assert(ManifestLog.filesMatchingStrPoint(rootS, 0, "code", "mm")
+    assert(ManifestLog.filesMatchingStrPoint(
+      rootS, ManifestLog.snapshot(rootS, 0), "code", "mm")
       .exists(f => spark.read.parquet(s"$rootS/$f")
         .filter(col("code") === "mm").count() == 1))
     // long-keyed bloom table: the STRING path must skip it
@@ -295,16 +300,17 @@ class SinglePassWriterSpec extends AnyFunSuite {
       (0L until 20L).map(k => (k, k * 10L)).toDF("k", "v")
         .repartitionByRange(2, col("k")),
       rootL, "data/v0", 0, bloomCol = Some("k"))
-    assert(ManifestLog.bloomsAsOf(rootL, 0)
+    assert(ManifestLog.snapshot(rootL, 0).blooms
       .values.forall(!_("k").str))
-    assert(ManifestLog.filesMatchingStrPoint(rootL, 0, "k", "7")
+    assert(ManifestLog.filesMatchingStrPoint(
+      rootL, ManifestLog.snapshot(rootL, 0), "k", "7")
       .size == ManifestLog.filesAsOf(rootL, 0).size,
       "a string probe of a long-keyed bloom must be must-read")
     // the tag survives checkpoint folding + manifest pruning
     ManifestLog.writeCheckpoint(rootS, 0)
     java.nio.file.Files.delete(java.nio.file.Paths.get(
       rootS, "_log", f"${0L}%020d.json"))
-    assert(ManifestLog.bloomsAsOf(rootS, 0)
+    assert(ManifestLog.snapshot(rootS, 0).blooms
       .values.forall(_("code").str),
       "the str tag must survive the checkpoint fold")
   }
@@ -330,7 +336,7 @@ class SinglePassWriterSpec extends AnyFunSuite {
       removes = Seq.empty, op = "write",
       colStats = SinglePassWriter.colStatsOf(all, Seq("k", "v")),
       nullStats = SinglePassWriter.nullStatsOf(all, Seq("k", "v")))
-    val ns = ManifestLog.nullStatsAsOf(root, 0)
+    val ns = ManifestLog.snapshot(root, 0).nullStats
     assert(ns(sa.head.rel)("v") == ManifestLog.NullStat(0L, 10L))
     assert(ns(sb.head.rel)("v") == ManifestLog.NullStat(5L, 10L))
     assert(ns(sc.head.rel)("v") == ManifestLog.NullStat(10L, 10L))
@@ -365,7 +371,7 @@ class SinglePassWriterSpec extends AnyFunSuite {
     ManifestLog.writeCheckpoint(root, 0)
     java.nio.file.Files.delete(java.nio.file.Paths.get(
       root, "_log", f"${0L}%020d.json"))
-    assert(ManifestLog.nullStatsAsOf(root, 0) == ns,
+    assert(ManifestLog.snapshot(root, 0).nullStats == ns,
       "null counts must survive the checkpoint fold")
     assert(scannedFiles(snap.filter(col("v").isNull)) == 2)
   }
@@ -405,7 +411,7 @@ class SinglePassWriterSpec extends AnyFunSuite {
       s"array round-trip diverged: $got")
     // scalar stats coexist: the id range prune still drops the other
     // file even though the payload column is a must-read array
-    val hit = ManifestLog.filesMatchingCols(root, 0,
+    val hit = ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
       Seq(("id", 1L, 1L)))
     assert(hit.size == 1, s"expected 1 pruned file, got $hit")
     // double + long element types bind too
@@ -503,7 +509,8 @@ class SinglePassWriterSpec extends AnyFunSuite {
       (4L, "null,5|s5")),
       s"list-of-struct round-trip diverged: $got")
     // scalar stats coexist: the id range prune still drops files
-    val hit = ManifestLog.filesMatchingCols(root, 0, Seq(("id", 1L, 1L)))
+    val hit = ManifestLog.filesMatchingCols(
+      ManifestLog.snapshot(root, 0), Seq(("id", 1L, 1L)))
     assert(hit.size == 1, s"expected 1 pruned file, got $hit")
     // ARRAY<STRUCT<STRUCT<...>>> refuses loudly at schema binding
     val deep = Seq((1L, Seq(((1L, 2L), "x")))).toDF("id", "m")
