@@ -32,16 +32,22 @@ import graft.sources.ManifestLog.{BloomRef, DvRef, FileStat, NullStat, StrStat}
   *   kind:0 file(f)            kind:1 stat(f,a=min,b=max)
   *   kind:2 colstat(f,c,a,b,g=dbl)  kind:3 strstat(f,c,s=min,t=max)
   *   kind:4 nullstat(f,c,a=nulls,b=rows)
-  *   kind:5 bloom(f,c,s=sidecar,a=m,b=k,g=str,h=legacy)
+  *   kind:5 bloom(f,c,s=sidecar,a=m,b=k,g=str)
   *   kind:6 dv(f,s=sidecar,a=nDeleted)
   * }}}
   * Rows are written file-major in replay order, so the decoded live
-  * set preserves the JSON checkpoint's ordering exactly; equality of
-  * the two replay paths is pinned by LogStoreCrashSpec on both
-  * stores. The bytes travel through [[LogStore.publishBytes]] —
-  * POSIX writes them raw, the CAS mock Base64s them — so the
-  * checkpoint protocol (sidecar first, JSON publish as the atomic
-  * commit point, lost races no-ops) is store-agnostic. */
+  * set preserves the replay's ordering exactly; equality with the
+  * manifest fold is pinned by LogStoreCrashSpec on both stores. The
+  * bytes travel through [[LogStore.publishBytes]] — POSIX writes them
+  * raw, the CAS mock Base64s them — so the checkpoint protocol
+  * (sidecar first, JSON publish as the atomic commit point, lost
+  * races no-ops) is store-agnostic.
+  *
+  * FORMAT FLOOR: sidecars written at the floor carry a ninth column
+  * `h`, a legacy-untyped-bloom mark. Such a sidecar decodes while no
+  * row sets it; a set mark is refused
+  * ([[ManifestLog.BelowFormatFloor]]) — the untyped bloom it marks
+  * is below the floor. */
 object CheckpointCodec {
 
   final case class PerFileState(
@@ -65,8 +71,7 @@ object CheckpointCodec {
       .named("s"),
     Types.optional(BINARY).as(LogicalTypeAnnotation.stringType())
       .named("t"),
-    Types.optional(BOOLEAN).named("g"),
-    Types.optional(BOOLEAN).named("h"))
+    Types.optional(BOOLEAN).named("g"))
 
   // ---- in-memory parquet IO (driver-side, zero temp files) ----
 
@@ -169,9 +174,6 @@ object CheckpointCodec {
       if (r.g) {
         rc.startField("g", 7); rc.addBoolean(true); rc.endField("g", 7)
       }
-      if (r.h) {
-        rc.startField("h", 8); rc.addBoolean(true); rc.endField("h", 8)
-      }
       rc.endMessage()
     }
   }
@@ -224,9 +226,7 @@ object CheckpointCodec {
       st.blooms.get(f).toSeq.flatMap(_.toSeq.sortBy(_._1)).foreach {
         case (c, b) => row(5, f) { r =>
           r.c = c; r.s = b.sidecar
-          r.setA(b.m.toLong); r.setB(b.k.toLong); r.g = b.str
-          // the legacy-untyped quarantine mark survives the fold
-          r.h = b.legacy && !b.str }
+          r.setA(b.m.toLong); r.setB(b.k.toLong); r.g = b.str }
       }
       st.dvs.get(f).foreach(d => row(6, f) { r =>
         r.s = d.sidecar; r.setA(d.nDeleted) })
@@ -237,11 +237,8 @@ object CheckpointCodec {
 
   // ---- decode ----
 
-  /** One flat row, shared by both directions: written in place by the
-    * decode materializer, filled in place by the encode loop. The
-    * presence flags matter only on the WRITE side (optional-field
-    * suppression); decode leaves stale a/b on kinds that don't carry
-    * them, which no kind reads. */
+  /** One flat row, filled in place by the encode loop; the presence
+    * flags drive optional-field suppression. */
   private final class RowBuf {
     var kind = 0
     var f: String = _
@@ -253,50 +250,27 @@ object CheckpointCodec {
     var s: String = _
     var t: String = _
     var g = false
-    var h = false
     def setA(v: Long): Unit = { a = v; hasA = true }
     def setB(v: Long): Unit = { b = v; hasB = true }
     def clear(): Unit = {
-      c = null; s = null; t = null; g = false; h = false
+      c = null; s = null; t = null; g = false
       hasA = false; hasB = false
     }
   }
 
-  private final class RowConverter(buf: RowBuf) extends GroupConverter {
-    private val converters: Array[Converter] = Array(
-      new PrimitiveConverter {
-        override def addInt(v: Int): Unit = buf.kind = v },
-      new PrimitiveConverter {
-        override def addBinary(v: Binary): Unit =
-          buf.f = v.toStringUsingUTF8 },
-      new PrimitiveConverter {
-        override def addBinary(v: Binary): Unit =
-          buf.c = v.toStringUsingUTF8 },
-      new PrimitiveConverter {
-        override def addLong(v: Long): Unit = buf.a = v },
-      new PrimitiveConverter {
-        override def addLong(v: Long): Unit = buf.b = v },
-      new PrimitiveConverter {
-        override def addBinary(v: Binary): Unit =
-          buf.s = v.toStringUsingUTF8 },
-      new PrimitiveConverter {
-        override def addBinary(v: Binary): Unit =
-          buf.t = v.toStringUsingUTF8 },
-      new PrimitiveConverter {
-        override def addBoolean(v: Boolean): Unit = buf.g = v },
-      new PrimitiveConverter {
-        override def addBoolean(v: Boolean): Unit = buf.h = v })
-    override def getConverter(i: Int): Converter = converters(i)
-    override def start(): Unit = buf.clear()
+  /** Column readers need a converter tree only structurally: the
+    * decode pulls values straight off each reader. */
+  private object NoConverter extends GroupConverter {
+    private val leaf = new PrimitiveConverter {}
+    override def getConverter(i: Int): Converter = leaf
+    override def start(): Unit = ()
     override def end(): Unit = ()
   }
 
   /** Per-row-group partial fold — merged in row-group order so the
-    * live-set ordering matches the writer's file-major order. Exposed
-    * to [[ManifestLog.snapshotIn]], which folds the partials straight
-    * into its own mutable replay state (one pass) instead of paying
-    * the [[decode]] convenience merge plus an immutable copy plus a
-    * re-fold — three serial million-entry passes — per resolve. */
+    * live-set ordering matches the writer's file-major order.
+    * [[ManifestLog.snapshotIn]] folds the partials straight into its
+    * own mutable replay state (one pass, no intermediate copy). */
   private[sources] final class Partial {
     val files = scala.collection.mutable.ArrayBuffer.empty[String]
     val stats = scala.collection.mutable.HashMap.empty[String, FileStat]
@@ -317,26 +291,19 @@ object CheckpointCodec {
     * in one tight loop, then a single row loop folds the arrays into
     * the partial maps. Measured ~3× over the RecordReader form at a
     * 1M-file checkpoint; combined with row-group parallelism it is
-    * what holds full replay under the probe's budget.
-    *
-    * ADDITIVE SIDECAR EVOLUTION (r19 review finding): a column the
-    * FILE's footer lacks decodes as its all-default array instead of
-    * crashing the page-store lookup — the `h` (bloom-legacy) column
-    * was appended after the first pq sidecars shipped, and a sidecar
-    * format change must read old sidecars exactly as the manifest
-    * format reads old manifests. New columns must always be appended
-    * LAST and default-meaningful. */
-  private def decodeGroup(input: InputFile, gi: Int): Partial = {
+    * what holds full replay under the probe's budget. `name` is the
+    * sidecar's log name, for the floor refusal. */
+  private def decodeGroup(input: InputFile, gi: Int,
+      name: String): Partial = {
     val reader = ParquetFileReader.open(input)
     try {
       val pages = reader.readRowGroup(gi)
       val n = pages.getRowCount.toInt
-      val fileCols =
-        reader.getFooter.getFileMetaData.getSchema.getFieldCount
-      // dummy converter tree: column readers only need it structurally
-      val dummy = new RowConverter(new RowBuf)
+      // the file's own schema: a floor-era sidecar also has `h`, which
+      // it may carry while no row sets it
+      val fileSchema = reader.getFooter.getFileMetaData.getSchema
       val store = new org.apache.parquet.column.impl.ColumnReadStoreImpl(
-        pages, dummy, Schema, "")
+        pages, NoConverter, fileSchema, "")
       val cols = Schema.getColumns
       def longs(ci: Int): (Array[Long], Array[Boolean]) = {
         val cd = cols.get(ci); val cr = store.getColumnReader(cd)
@@ -387,8 +354,9 @@ object CheckpointCodec {
       val (bs, _) = longs(4)
       val ss = strs(5)
       val ts = strs(6)
-      def bools(ci: Int): Array[Boolean] = {
-        val cd = cols.get(ci); val cr = store.getColumnReader(cd)
+      def bools(cd: org.apache.parquet.column.ColumnDescriptor)
+          : Array[Boolean] = {
+        val cr = store.getColumnReader(cd)
         val maxDl = cd.getMaxDefinitionLevel
         val v = new Array[Boolean](n)
         var i = 0
@@ -399,10 +367,14 @@ object CheckpointCodec {
         }
         v
       }
-      val gs = bools(7)
-      val hs =
-        if (fileCols > 8) bools(8)
-        else new Array[Boolean](n) // pre-h sidecar: legacy = false
+      val gs = bools(cols.get(7))
+      if (fileSchema.containsField("h")) {
+        val marked = bools(fileSchema.getColumnDescription(Array("h")))
+          .indexOf(true)
+        if (marked >= 0) throw new ManifestLog.BelowFormatFloor(name,
+          s"the bloom ref of ${fs(marked)} column ${cs(marked)} carries " +
+            "the legacy-untyped mark (h = true)")
+      }
       val p = new Partial
       var i = 0
       while (i < n) {
@@ -421,7 +393,7 @@ object CheckpointCodec {
           case 5 => p.blooms(fs(i)) =
             p.blooms.getOrElse(fs(i), Map.empty) +
               (cs(i) -> BloomRef(cs(i), ss(i), as(i).toInt,
-                bs(i).toInt, gs(i), legacy = hs(i)))
+                bs(i).toInt, gs(i)))
           case 6 => p.dvs(fs(i)) = DvRef(ss(i), as(i))
           case k => throw new IllegalStateException(
             s"unknown checkpoint row kind $k")
@@ -432,12 +404,13 @@ object CheckpointCodec {
     } finally reader.close()
   }
 
-  /** All row groups decoded in parallel, returned in row-group order
-    * (= the writer's file-major order). A file's entries can straddle
-    * a group boundary, so consumers folding partials must MERGE, not
-    * overwrite, the per-file column maps (at most nGroups files are
-    * affected; [[decode]] below and the snapshot fold both do). */
-  private[sources] def decodeParts(bytes: Array[Byte]): Array[Partial] = {
+  /** All row groups of sidecar `name` decoded in parallel, returned
+    * in row-group order (= the writer's file-major order). A file's
+    * entries can straddle a group boundary, so consumers folding
+    * partials must MERGE, not overwrite, the per-file column maps (at
+    * most nGroups files are affected; the snapshot fold does). */
+  private[sources] def decodeParts(bytes: Array[Byte],
+      name: String): Array[Partial] = {
     val input = new BytesIn(bytes)
     val nGroups = {
       val r = ParquetFileReader.open(input)
@@ -445,43 +418,8 @@ object CheckpointCodec {
     }
     val partials = new Array[Partial](nGroups)
     java.util.stream.IntStream.range(0, nGroups).parallel().forEach { gi =>
-      partials(gi) = decodeGroup(input, gi)
+      partials(gi) = decodeGroup(input, gi, name)
     }
     partials
-  }
-
-  def decode(bytes: Array[Byte]): PerFileState = {
-    val partials = decodeParts(bytes)
-    // merge in row-group order; a file's entries never split across
-    // the writer's row-group boundary mid-map in a way that matters —
-    // map merges are keyed, and the live set concatenates in order.
-    // (A file's colstat rows CAN land in the next group; the keyed
-    // merge below unions the per-column maps either way.)
-    val files = Seq.newBuilder[String]
-    val stats = Map.newBuilder[String, FileStat]
-    val dvs = Map.newBuilder[String, DvRef]
-    val colStats =
-      scala.collection.mutable.HashMap.empty[String, Map[String, FileStat]]
-    val strColStats =
-      scala.collection.mutable.HashMap.empty[String, Map[String, StrStat]]
-    val nullStats =
-      scala.collection.mutable.HashMap.empty[String, Map[String, NullStat]]
-    val blooms =
-      scala.collection.mutable.HashMap.empty[String, Map[String, BloomRef]]
-    partials.foreach { p =>
-      files ++= p.files
-      stats ++= p.stats
-      dvs ++= p.dvs
-      p.colStats.foreach { case (f, m) =>
-        colStats(f) = colStats.getOrElse(f, Map.empty) ++ m }
-      p.strColStats.foreach { case (f, m) =>
-        strColStats(f) = strColStats.getOrElse(f, Map.empty) ++ m }
-      p.nullStats.foreach { case (f, m) =>
-        nullStats(f) = nullStats.getOrElse(f, Map.empty) ++ m }
-      p.blooms.foreach { case (f, m) =>
-        blooms(f) = blooms.getOrElse(f, Map.empty) ++ m }
-    }
-    PerFileState(files.result(), stats.result(), colStats.toMap,
-      strColStats.toMap, nullStats.toMap, blooms.toMap, dvs.result())
   }
 }

@@ -148,20 +148,9 @@ object ManifestLog {
     * different value and produces FALSE NEGATIVES, i.e. silently
     * wrong file pruning; a type mismatch now degrades to must-read
     * instead. Serialized as a trailing `|s` on the flat entry
-    * (absent = long), like the colstats `|d` marker.
-    *
-    * `legacy` (r19 review finding): an UNTAGGED ref parsed from a
-    * manifest written before the format carried its `fmt` version
-    * field — its key type is unknowable from metadata (pre-r18 string
-    * blooms parse str = false), so the LONG-probe paths treat it as
-    * must-read unless the same file carries long colStats for the
-    * column (the writer folds bloom keys and stats from the same
-    * canonical image, so long stats prove a long-keyed fold).
-    * Re-serialization (checkpoints, clones) preserves the mark as a
-    * trailing `|l` so folding a legacy log into an fmt-2 checkpoint
-    * never launders the uncertainty away. */
+    * (absent = long), like the colstats `|d` marker. */
   final case class BloomRef(column: String, sidecar: String, m: Int,
-      k: Int, str: Boolean = false, legacy: Boolean = false)
+      k: Int, str: Boolean = false)
 
   /** The table's SNAPSHOT at `version`: the full fold of the log up to
     * it, built by [[snapshotIn]] and the only way code reads table
@@ -185,14 +174,8 @@ object ManifestLog {
       nullStats: Map[String, Map[String, NullStat]] = Map.empty,
       // "has the table EVER committed a deletion vector through the
       // replayed version" — folded DURING the replay from the same
-      // reads (r20; r19 verdict what's-wrong #3: writeCheckpointIn
-      // re-parsed the tail manifests dvsEverThrough had already
-      // covered). Some(bit) when the replay's own reads decide it
-      // exactly (the seeding checkpoint carried the bit, or the fold
-      // started from genesis); None when a legacy checkpoint without
-      // the bit hides pruned history — callers fall back to
-      // [[dvsEverThrough]]'s full surviving-metadata scan.
-      dvsEver: Option[Boolean] = None) {
+      // reads: the seeding checkpoint's bit OR any tail manifest's dvs
+      dvsEver: Boolean = false) {
     /** The declared schema as a StructType — every snapshot-shaped
       * read plans under it so evolved tables resolve mixed
       * generations (r17). */
@@ -216,12 +199,10 @@ object ManifestLog {
   private def manifestName(v: Long): String = f"$v%020d.json"
   private def checkpointName(v: Long): String = f"$v%020d.checkpoint.json"
   // the checkpoint's tiny metadata sibling (r18): just (version,
-  // schema, checks), so the per-commit CHECK gate reads KBs instead
-  // of the full checkpoint — at 1M files the checkpoint is ~76 MiB
-  // and reading it per gated commit grew commit cost 8 ms → 297 ms
-  // (the log-scale probe's one cliff). Published idempotently beside
-  // the checkpoint; pre-r18 checkpoints without one fall back to the
-  // full read.
+  // schema, checks, dvsever), so the per-commit CHECK gate reads KBs
+  // whatever the checkpoint's size. Published idempotently after the
+  // checkpoint; a crash between the two publishes leaves a checkpoint
+  // without one, which readers serve from the checkpoint itself.
   private def checkpointMetaName(v: Long): String =
     f"$v%020d.checkpoint.meta.json"
   // the columnar per-file-state sidecar (r19; see [[CheckpointCodec]])
@@ -264,6 +245,58 @@ object ManifestLog {
 
   private def listingOf(store: LogStore): Listing =
     Listing(store.list().toSet)
+
+  /** A log file older than the FORMAT FLOOR: the oldest shape this
+    * build reads, which is exactly what its writers produce —
+    * manifests tagged `"fmt":["2"]` whose bloom refs are typed (`|s`
+    * string keys, untagged long keys); columnar checkpoints (a
+    * `pq`-marked JSON plus parquet sidecar) whose JSON and meta
+    * sibling carry the dvs-ever bit; v2 DV sidecars. Older shapes are
+    * refused loudly, naming the file, and never guessed at — Delta's
+    * reader-protocol rule: a reader refuses a table it does not
+    * support. */
+  final class BelowFormatFloor(val file: String, detail: String)
+    extends IllegalStateException(
+      s"$file is below the manifest-log format floor: $detail. The " +
+        "floor is fmt 2 — fmt-tagged manifests with typed bloom refs, " +
+        "pq checkpoints carrying dvsever, v2 DV sidecars; a log " +
+        "written before it is refused, not read")
+
+  /** Manifest `v`, checked against the floor. Every manifest read
+    * goes through here. */
+  private def readManifest(store: LogStore, v: Long): String = {
+    val name = manifestName(v)
+    val json = store.read(name)
+    if (field(json, "fmt") != Seq("2"))
+      throw new BelowFormatFloor(name, "no \"fmt\":[\"2\"] version tag")
+    if (field(json, "blooms").exists(_.endsWith("|l")))
+      throw new BelowFormatFloor(name, "a legacy-untyped (|l) bloom ref")
+    json
+  }
+
+  /** Checkpoint `cv`'s scalar JSON, checked against the floor. Every
+    * checkpoint and meta-sibling read goes through here. `metaOnly`
+    * reads the KB meta sibling when it was published (else the
+    * checkpoint itself — the crash window between the two publishes);
+    * the sibling does not repeat the `pq` marker, so the listing
+    * stands in for it: a columnar checkpoint publishes its sidecar
+    * before its JSON. */
+  private def readCheckpoint(store: LogStore, l: Listing, cv: Long,
+      metaOnly: Boolean = false): String = {
+    val name = checkpointName(cv)
+    val fromMeta = metaOnly && l.names(checkpointMetaName(cv))
+    val read = if (fromMeta) checkpointMetaName(cv) else name
+    val json = store.read(read)
+    if (fromMeta && !l.names(checkpointParquetName(cv)))
+      throw new BelowFormatFloor(name, "no columnar sidecar (an all-JSON " +
+        "checkpoint)")
+    if (!fromMeta && field(json, "pq") != Seq("1"))
+      throw new BelowFormatFloor(name, "no \"pq\" marker (an all-JSON " +
+        "checkpoint)")
+    if (field(json, "dvsever").isEmpty)
+      throw new BelowFormatFloor(read, "no dvs-ever bit")
+    json
+  }
 
   /** True iff the flat manifest format can round-trip `s`: no field
     * ('|'), element (','), quote ('"') or field-terminator (']')
@@ -441,28 +474,12 @@ object ManifestLog {
     require(colStats.forall { case (f, cs) =>
       addSet(f) && cs.keySet.forall(flatSafe) },
       "colstats must describe committed adds with round-trippable columns")
-    // a PURE-METADATA commit (no adds, no removes) may target blooms
-    // at files that are ALREADY LIVE (r20: the retagBlooms
-    // maintenance op re-declares a live file's ref set with corrected
-    // key-type tags — same precedent as dvs). Every data-carrying
-    // commit keeps the strict adds-only rule, so a writer whose
-    // bloom map drifts from its adds (a renamed path, a typo) still
-    // fails LOUDLY here instead of committing an inert ref (r20
-    // second review pass). LIVENESS of the metadata-commit targets is
-    // the caller's contract (checking it would cost the full replay
-    // the r18 gate work removed): a ref for a dead path is INERT —
-    // never consulted by a scan, dropped by the next checkpoint's
-    // files-major fold — so the failure mode is lost metadata, never
-    // wrong results. retagBlooms derives its targets from the
-    // replay's own live set.
-    val metadataOnly = adds.isEmpty && removes.isEmpty
     require(blooms.forall { case (f, bs) =>
-      (addSet(f) || (metadataOnly && flatSafe(f))) &&
-        bs.forall { case (c, r) =>
-          flatSafe(c) && flatSafe(r.sidecar) && r.m > 0 &&
-            (r.m & (r.m - 1)) == 0 && r.k > 0 } },
-      "blooms must describe committed adds (or, on a pure-metadata " +
-        "commit, live files); round-trippable fields; m a power of two")
+      addSet(f) && bs.forall { case (c, r) =>
+        flatSafe(c) && flatSafe(r.sidecar) && r.m > 0 &&
+          (r.m & (r.m - 1)) == 0 && r.k > 0 } },
+      "blooms must describe committed adds with round-trippable " +
+        "fields and m a power of two")
     require(txn.forall { case (app, b) => flatSafe(app) && b >= 0 },
       "txn appId must be round-trippable with a non-negative batchId")
     // dvs target files that are ALREADY LIVE (a merge-on-read delete
@@ -479,15 +496,10 @@ object ManifestLog {
       colStats.get(f).toSeq.flatMap(_.toSeq.sortBy(_._1).map {
         case (c, st) => s"$f|$c|${st.min}|${st.max}" +
           (if (st.dbl) "|d" else "") })))
-    // adds first (byte-identical to the pre-r20 layout for every
-    // caller whose bloom keys are adds), then live-file retag targets
-    val bloomFiles = adds ++
-      blooms.keys.filterNot(addSet).toSeq.sorted
-    val bloomArr = arr(bloomFiles.flatMap(f =>
+    val bloomArr = arr(adds.flatMap(f =>
       blooms.get(f).toSeq.flatMap(_.toSeq.sortBy(_._1).map {
         case (c, r) => s"$f|$c|${r.sidecar}|${r.m}|${r.k}" +
-          (if (r.str) "|s" else "") +
-          (if (r.legacy && !r.str) "|l" else "") })))
+          (if (r.str) "|s" else "") })))
     val txnArr = arr(txn.toSeq.map { case (app, b) => s"$app|$b" })
     val dvArr = arr(dvs.toSeq.sortBy(_._1).map {
       case (f, d) => s"$f|${d.sidecar}|${d.nDeleted}" })
@@ -561,13 +573,19 @@ object ManifestLog {
     listingOf(store).checkpoints
 
   // self-authored JSON (writers above/below): fields are flat string
-  // arrays, so this scan is a parser for exactly this format
+  // arrays whose elements never hold ']' (enforced at commit), so a
+  // field is the text between its key and the next ']'. Two indexOf
+  // scans, not a regex compiled per call: the floor checks add field
+  // reads to every manifest read, and with the regex form the 10k
+  // gated commits of tools/probe_log_scale.scala (1M files, 4-core
+  // host) took 284 s against 194 s with this one
   private def field(json: String, name: String): Seq[String] = {
-    val m = ("\"" + name + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(json)
-    m.map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(",").map(_.trim.stripPrefix("\"")
-        .stripSuffix("\"")).toSeq)
-      .getOrElse(Seq.empty)
+    val key = "\"" + name + "\":["
+    val i = json.indexOf(key)
+    val j = if (i < 0) -1 else json.indexOf(']', i + key.length)
+    if (j <= i + key.length) Seq.empty
+    else json.substring(i + key.length, j).split(",")
+      .map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
   }
 
   /** CHECKPOINT COMPACTION — fold the log's replay up to `version` into
@@ -580,114 +598,47 @@ object ManifestLog {
     * atomic-publish protocol as [[commitIn]] but a lost race is a
     * no-op, not a conflict.
     *
-    * `parquet = true` (the default since r19) publishes the per-file
-    * state as a columnar sidecar + a KB JSON checkpoint carrying only
-    * the scalar fields and a `pq` marker (see [[CheckpointCodec]]);
-    * `false` keeps the legacy all-JSON layout — the seam the
-    * equality pin in LogStoreCrashSpec and legacy-log tests use.
-    * Publish order is sidecar FIRST, JSON second: the JSON publish is
-    * the atomic commit point, an orphaned sidecar from a crash
-    * in between is invisible (and byte-identical on the retry, the
-    * content being a pure function of the immutable manifests). */
-  def writeCheckpointIn(store: LogStore, version: Long,
-      parquet: Boolean = true): Unit = {
+    * The per-file state rides a columnar sidecar (see
+    * [[CheckpointCodec]]); the JSON carries only the scalar fields and
+    * a `pq` marker, and the meta sibling repeats schema, checks and
+    * the dvs-ever bit for the commit gate. Publish order is sidecar,
+    * JSON, sibling: the JSON publish is the atomic commit point, an
+    * orphaned sidecar from a crash before it is invisible (and
+    * byte-identical on the retry, the content being a pure function
+    * of the immutable manifests), and a checkpoint whose sibling never
+    * landed is read whole. */
+  def writeCheckpointIn(store: LogStore, version: Long): Unit = {
     val l = listingOf(store)
     val r = foldIn(store, l, version)
-    def q(s: String) = "\"" + s + "\""
     // fold the version's own commit timestamp (when recorded) so the
     // checkpoint keeps its era TIME-addressable after retention prunes
     // the manifest (SURVEY §8.3.2-4); a re-publication after pruning
     // recovers it from the existing checkpoint
-    val at: Seq[String] =
-      if (l.hasManifest(version))
-        field(store.read(manifestName(version)), "at")
-      else field(store.read(checkpointName(version)), "at")
-    // the DVS-EVER bit (r19; r18 verdict next-8 #7): "has this table
-    // EVER committed a deletion vector through `version`" folds
-    // forward through checkpoints, so the image feed's unresolvable-
-    // baseline probe reads one KB sibling + the tail instead of
-    // scanning every surviving manifest's dvs field (O(versions)
-    // driver reads per feed open at log scale). Strictly MORE
-    // conservative than the surviving-metadata scan it accelerates: a
-    // historical vector whose refs were later compacted away still
-    // sets the bit (its baseline genuinely is unclassifiable).
-    // Computed DURING the replay above from the same manifest reads
-    // (r20; r19 verdict what's-wrong #3 retired the duplicate O(tail)
-    // pass); only a legacy seeding checkpoint without the bit pays
-    // dvsEverThrough's full surviving-metadata scan.
-    val dvsEver =
-      if (r.dvsEver.getOrElse(dvsEverThrough(store, version))) "1"
-      else "0"
-    if (parquet) {
-      // the replay's per-file maps are live-only by construction
-      // (removes drop their entries in the fold), same invariant the
-      // legacy JSON writer leans on via its files-major iteration
-      val sidecar = CheckpointCodec.encode(CheckpointCodec.PerFileState(
-        r.files, r.stats, r.colStats, r.strColStats, r.nullStats,
-        r.blooms, r.dvs))
-      store.publishBytes(checkpointParquetName(version), sidecar)
-      val json = s"""{"version":$version,"pq":["1"],"fmt":["2"],""" +
+    val at = field(
+      if (l.hasManifest(version)) readManifest(store, version)
+      else readCheckpoint(store, l, version), "at")
+    // the DVS-EVER bit (r19): "has this table EVER committed a
+    // deletion vector through `version`" folds forward through
+    // checkpoints, so the image feed's unresolvable-baseline probe
+    // reads one KB sibling + the tail ([[dvsEverThrough]]). Strictly
+    // conservative: a vector whose refs were later compacted away
+    // still sets it (its baseline genuinely is unclassifiable).
+    val dvsEver = ckptQ(if (r.dvsEver) "1" else "0")
+    store.publishBytes(checkpointParquetName(version),
+      CheckpointCodec.encode(CheckpointCodec.PerFileState(r.files,
+        r.stats, r.colStats, r.strColStats, r.nullStats, r.blooms, r.dvs)))
+    store.publish(checkpointName(version),
+      s"""{"version":$version,"pq":["1"],"fmt":["2"],""" +
         s""""txns":[${txnsJson(r)}],"schema":[${schemaJson(r)}],""" +
         s""""checks":[${checksJson(r)}],"at":[""" +
-        at.map(q).mkString(",") +
-        """],"dvsever":[""" + q(dvsEver) + "]}"
-      store.publish(checkpointName(version), json)
-      publishCheckpointMeta(store, version, r, at, dvsEver)
-      return
-    }
-    val json = s"""{"version":$version,"fmt":["2"],"files":[""" +
-      r.files.map(q).mkString(",") + """],"stats":[""" +
-      r.files.flatMap(f => r.stats.get(f).map(st =>
-        q(s"$f|${st.min}|${st.max}"))).mkString(",") +
-      """],"colstats":[""" +
-      r.files.flatMap(f => r.colStats.get(f).toSeq
-        .flatMap(_.toSeq.sortBy(_._1).map { case (c, st) =>
-          q(s"$f|$c|${st.min}|${st.max}" +
-            (if (st.dbl) "|d" else "")) })).mkString(",") +
-      """],"blooms":[""" +
-      r.files.flatMap(f => r.blooms.get(f).toSeq
-        .flatMap(_.toSeq.sortBy(_._1).map { case (c, b) =>
-          q(s"$f|$c|${b.sidecar}|${b.m}|${b.k}" +
-            (if (b.str) "|s" else "") +
-            (if (b.legacy && !b.str) "|l" else "")) })).mkString(",") +
-      """],"txns":[""" + txnsJson(r) + """],"dvs":[""" +
-      r.files.flatMap(f => r.dvs.get(f).map(d =>
-        q(s"$f|${d.sidecar}|${d.nDeleted}"))).mkString(",") +
-      """],"schema":[""" + schemaJson(r) +
-      """],"checks":[""" + checksJson(r) +
-      """],"at":[""" + at.map(q).mkString(",") + """],"strstats":[""" +
-      r.files.flatMap(f => r.strColStats.get(f).toSeq
-        .flatMap(_.toSeq.sortBy(_._1).map { case (c, st) =>
-          def b64(s: String) = java.util.Base64.getEncoder
-            .encodeToString(s.getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-          q(s"$f|$c|${b64(st.min)}|${b64(st.max)}") })).mkString(",") +
-      """],"nullstats":[""" +
-      r.files.flatMap(f => r.nullStats.get(f).toSeq
-        .flatMap(_.toSeq.sortBy(_._1).map { case (c, s) =>
-          q(s"$f|$c|${s.nulls}|${s.rows}") })).mkString(",") +
-      """],"dvsever":[""" + q(dvsEver) + "]}"
-    store.publish(checkpointName(version), json) // false = lost race, ok
-    // the metadata sibling: derived state like the checkpoint itself,
-    // so a lost publish race is a no-op; a crash between the two
-    // publishes leaves a checkpoint without a sibling, which the
-    // metadata fold handles by falling back to the full read
-    publishCheckpointMeta(store, version, r, at, dvsEver)
+        at.map(ckptQ).mkString(",") + s"""],"dvsever":[$dvsEver]}""")
+    store.publish(checkpointMetaName(version),
+      s"""{"version":$version,"schema":[${schemaJson(r)}],""" +
+        s""""checks":[${checksJson(r)}],"dvsever":[$dvsEver]}""")
   }
 
-  private def publishCheckpointMeta(store: LogStore, version: Long,
-      r: Replay, at: Seq[String], dvsEver: String): Unit = {
-    def q(s: String) = "\"" + s + "\""
-    val metaJson = s"""{"version":$version,"schema":[${schemaJson(r)}],""" +
-      s""""checks":[${checksJson(r)}],""" +
-      """"dvsever":[""" + q(dvsEver) + "]}"
-    store.publish(checkpointMetaName(version), metaJson)
-  }
-
-  // the scalar checkpoint fields, serialized ONCE (review finding,
-  // r19: three hand-rolled copies of these fragments — checkpoint,
-  // pq checkpoint, meta sibling — had to be kept byte-identical by
-  // hand, a silent format fork waiting to happen)
+  // the scalar checkpoint fields, serialized ONCE for the checkpoint
+  // and its meta sibling, which must agree byte for byte
   private def ckptQ(s: String) = "\"" + s + "\""
   private def txnsJson(r: Replay): String =
     r.txns.toSeq.sortBy(_._1).map { case (app, b) =>
@@ -704,55 +655,17 @@ object ManifestLog {
       .mkString(",")
 
   /** Has the table EVER committed a deletion vector through
-    * `version`? When the nearest checkpoint ≤ `version` carries the
-    * bit, the answer is that bit OR'd with the tail manifests' dvs
-    * fields — O(tail). When it does NOT (a legacy, pre-r19
-    * checkpoint), the fallback reproduces the FULL surviving-metadata
-    * scan — every checkpoint ≤ `version` and every surviving manifest
-    * ≤ `version`, not just the last checkpoint + tail: earlier
-    * checkpoints are never auto-deleted and can be the only survivors
-    * still carrying a dv ref after a compaction + prune, so a
-    * last-checkpoint-only fallback would bake a FALSE "0" into the
-    * next checkpoint and the image feed's fast path would then
-    * silently serve an empty DV baseline where the old scan refused
-    * loudly (review finding, r19). The bit written on top of a legacy
-    * log is therefore never weaker than the scan it replaces. */
-  def dvsEverThrough(store: LogStore,
-      version: Long): Boolean = {
+    * `version`? The nearest checkpoint ≤ `version` carries the bit for
+    * all history it folded (read from its KB meta sibling), OR'd with
+    * the tail manifests' dvs fields — O(tail), whatever the table's
+    * age. */
+  def dvsEverThrough(store: LogStore, version: Long): Boolean = {
     val l = listingOf(store)
-    val ckpts = l.checkpoints.filter(_ <= version)
-    // prefer the KB meta sibling for the bit (r20): a legacy all-JSON
-    // checkpoint can be tens of MiB; the sibling carries the same bit
-    // since r19, and an r18-era sibling without it falls through to
-    // the full checkpoint read unchanged
-    lazy val lastJson = ckpts.lastOption.map(cv =>
-      store.read(checkpointName(cv)))
-    val bit = ckpts.lastOption.flatMap { cv =>
-      val fromMeta =
-        if (l.names(checkpointMetaName(cv)))
-          field(store.read(checkpointMetaName(cv)), "dvsever").headOption
-        else None
-      fromMeta.orElse(
-        lastJson.flatMap(j => field(j, "dvsever").headOption))
-    }
-    bit match {
-      case Some(bit) =>
-        bit == "1" || l.manifests
-          .filter(v => v <= version && v > ckpts.last)
-          .exists(v => field(store.read(manifestName(v)), "dvs").nonEmpty)
-      case None =>
-        // fallback: every checkpoint's bit-or-refs (each read ONCE;
-        // earlier fmt-2 checkpoints' bits count too — review
-        // finding, r19) plus every surviving manifest's refs
-        lastJson.exists(j => field(j, "dvs").nonEmpty) ||
-        ckpts.dropRight(1).exists { cv =>
-          val j = store.read(checkpointName(cv))
-          field(j, "dvsever").headOption.contains("1") ||
-            field(j, "dvs").nonEmpty
-        } ||
-        l.manifests.filter(_ <= version).exists(v =>
-          field(store.read(manifestName(v)), "dvs").nonEmpty)
-    }
+    l.seed(version).exists(cv =>
+      field(readCheckpoint(store, l, cv, metaOnly = true), "dvsever") ==
+        Seq("1")) ||
+      l.tail(version).exists(v =>
+        field(readManifest(store, v), "dvs").nonEmpty)
   }
 
   private def parseStats(entries: Seq[String]): Map[String, FileStat] =
@@ -818,33 +731,20 @@ object ManifestLog {
       e.substring(0, i) -> e.substring(i + 1).toLong
     }
 
-  /** "path|col|sidecar|m|k[|s][|l]" → path → col → ref ('|'-free
+  /** "path|col|sidecar|m|k[|s]" → path → col → ref ('|'-free
     * fields, enforced at commit, make rightmost-split parsing
     * unambiguous; the optional trailing "|s" marks a string-keyed
-    * bloom, "|l" a legacy-untyped one — neither can be confused with
-    * k, which is numeric). `legacyDefault` is true when the source
-    * json predates the `fmt` version field: every untagged ref in it
-    * was written before key-type tags existed and parses legacy. */
-  private def parseBlooms(entries: Seq[String],
-      legacyDefault: Boolean): Map[String, Map[String, BloomRef]] =
+    * bloom and cannot be confused with k, which is numeric). */
+  private def parseBlooms(
+      entries: Seq[String]): Map[String, Map[String, BloomRef]] =
     entries.map { raw =>
-      var e = raw
-      var str = false
-      var legacy = legacyDefault
-      var more = true
-      while (more) {
-        if (e.endsWith("|l")) { legacy = true; e = e.dropRight(2) }
-        else if (e.endsWith("|s")) { str = true; e = e.dropRight(2) }
-        else more = false
-      }
+      val str = raw.endsWith("|s")
+      val e = if (str) raw.dropRight(2) else raw
       val i = e.lastIndexOf('|'); val j = e.lastIndexOf('|', i - 1)
       val k = e.lastIndexOf('|', j - 1); val l = e.lastIndexOf('|', k - 1)
       (e.substring(0, l), e.substring(l + 1, k),
         BloomRef(e.substring(l + 1, k), e.substring(k + 1, j),
-          e.substring(j + 1, i).toInt, e.substring(i + 1).toInt, str,
-          // a TYPE-TAGGED ref's key type is known even in a legacy
-          // json — quarantine applies to untagged refs only
-          legacy = legacy && !str))
+          e.substring(j + 1, i).toInt, e.substring(i + 1).toInt, str))
     }.groupBy(_._1).view.mapValues(
       _.map(t => t._2 -> t._3).toMap).toMap
 
@@ -1261,21 +1161,19 @@ object ManifestLog {
         .foreach(d => schemaDdl = Some(d))
       decodeChecksField(field(json, "checks")).foreach(checks = _)
     }
-    l.seed(version).foreach { cv =>
-      fold(store.read(
-        if (l.names(checkpointMetaName(cv))) checkpointMetaName(cv)
-        else checkpointName(cv)))
-    }
-    l.tail(version).foreach(v => fold(store.read(manifestName(v))))
+    l.seed(version).foreach(cv =>
+      fold(readCheckpoint(store, l, cv, metaOnly = true)))
+    l.tail(version).foreach(v => fold(readManifest(store, v)))
     (schemaDdl, checks)
   }
 
   /** THE RESOLVER: the table's [[Replay]] snapshot at `version`, from
     * ONE listing of the log. Throws if `version` was never committed
     * or has been pruned past (a time-travel read must not silently
-    * resolve a neighboring version). Not cached: every call lists and
-    * folds afresh, so a commit by any other writer is visible to the
-    * next call. */
+    * resolve a neighboring version), and throws [[BelowFormatFloor]]
+    * when a file it reads is older than the format floor. Not cached:
+    * every call lists and folds afresh, so a commit by any other
+    * writer is visible to the next call. */
   def snapshotIn(store: LogStore, version: Long): Replay =
     foldIn(store, listingOf(store), version)
 
@@ -1284,7 +1182,7 @@ object ManifestLog {
 
   /** The snapshot at the latest resolvable version (None on an empty
     * log) — one listing serves both the version and the fold. */
-  private[sources] def latestSnapshot(root: String): Option[Replay] = {
+  private[graft] def latestSnapshot(root: String): Option[Replay] = {
     val store = storeFor(root)
     val l = listingOf(store)
     l.latest.map(foldIn(store, l, _))
@@ -1317,9 +1215,8 @@ object ManifestLog {
     val txns = scala.collection.mutable.HashMap.empty[String, Long]
     val dvs = scala.collection.mutable.HashMap.empty[String, DvRef]
     // a fold from genesis decides the dvs-ever bit exactly; a
-    // checkpoint-seeded fold inherits the checkpoint's bit (or stays
-    // undecided on a legacy checkpoint unless its refs prove "ever")
-    var dvsEver: Option[Boolean] = Some(false)
+    // checkpoint-seeded fold inherits the checkpoint's bit
+    var dvsEver = false
     var schemaDdl: Option[String] = None
     def foldSchema(entries: Seq[String]): Unit =
       decodeSchemaField(entries).foreach(d => schemaDdl = Some(d))
@@ -1330,61 +1227,44 @@ object ManifestLog {
       entries.foreach { case (app, b) =>
         txns(app) = txns.get(app).fold(b)(math.max(_, b)) }
     l.seed(version).foreach { cv =>
-      val json = store.read(checkpointName(cv))
-      if (field(json, "pq").nonEmpty) {
-        // columnar checkpoint (r19): the per-file state rides the
-        // parquet sidecar; the JSON keeps only the scalar fields. A
-        // marked checkpoint without its sidecar is impossible under
-        // the publish order (sidecar first) — a missing read here is
-        // genuine corruption and stays loud. Partials fold straight
-        // into the replay's own mutable state (the per-file column
-        // maps MERGE across partials — a file can straddle a
-        // row-group boundary).
-        val parts = CheckpointCodec.decodeParts(
-          store.readBytes(checkpointParquetName(cv)))
-        live.sizeHint(parts.iterator.map(_.files.size).sum)
-        stats.sizeHint(parts.iterator.map(_.stats.size).sum)
-        colStats.sizeHint(parts.iterator.map(_.colStats.size).sum)
-        strColStats.sizeHint(parts.iterator.map(_.strColStats.size).sum)
-        nullStats.sizeHint(parts.iterator.map(_.nullStats.size).sum)
-        blooms.sizeHint(parts.iterator.map(_.blooms.size).sum)
-        dvs.sizeHint(parts.iterator.map(_.dvs.size).sum)
-        parts.foreach { p =>
-          p.files.foreach(live.add)
-          stats ++= p.stats
-          dvs ++= p.dvs
-          p.colStats.foreach { case (f, m) =>
-            colStats(f) = colStats.getOrElse(f, Map.empty) ++ m }
-          p.strColStats.foreach { case (f, m) =>
-            strColStats(f) = strColStats.getOrElse(f, Map.empty) ++ m }
-          p.nullStats.foreach { case (f, m) =>
-            nullStats(f) = nullStats.getOrElse(f, Map.empty) ++ m }
-          p.blooms.foreach { case (f, m) =>
-            blooms(f) = blooms.getOrElse(f, Map.empty) ++ m }
-        }
-      } else {
-        field(json, "files").foreach(live.add)
-        stats ++= parseStats(field(json, "stats"))
-        colStats ++= parseColStats(field(json, "colstats"))
-        strColStats ++= parseStrColStats(field(json, "strstats"))
-        nullStats ++= parseNullStats(field(json, "nullstats"))
-        blooms ++= parseBlooms(field(json, "blooms"),
-          legacyDefault = field(json, "fmt").isEmpty)
-        dvs ++= parseDvs(field(json, "dvs"))
+      val json = readCheckpoint(store, l, cv)
+      // the per-file state rides the parquet sidecar; the JSON keeps
+      // only the scalar fields. The sidecar is published before the
+      // JSON, so a missing read here is genuine corruption and stays
+      // loud. Partials fold straight into the replay's own mutable
+      // state (the per-file column maps MERGE across partials — a
+      // file can straddle a row-group boundary).
+      val parts = CheckpointCodec.decodeParts(
+        store.readBytes(checkpointParquetName(cv)),
+        checkpointParquetName(cv))
+      live.sizeHint(parts.iterator.map(_.files.size).sum)
+      stats.sizeHint(parts.iterator.map(_.stats.size).sum)
+      colStats.sizeHint(parts.iterator.map(_.colStats.size).sum)
+      strColStats.sizeHint(parts.iterator.map(_.strColStats.size).sum)
+      nullStats.sizeHint(parts.iterator.map(_.nullStats.size).sum)
+      blooms.sizeHint(parts.iterator.map(_.blooms.size).sum)
+      dvs.sizeHint(parts.iterator.map(_.dvs.size).sum)
+      parts.foreach { p =>
+        p.files.foreach(live.add)
+        stats ++= p.stats
+        dvs ++= p.dvs
+        p.colStats.foreach { case (f, m) =>
+          colStats(f) = colStats.getOrElse(f, Map.empty) ++ m }
+        p.strColStats.foreach { case (f, m) =>
+          strColStats(f) = strColStats.getOrElse(f, Map.empty) ++ m }
+        p.nullStats.foreach { case (f, m) =>
+          nullStats(f) = nullStats.getOrElse(f, Map.empty) ++ m }
+        p.blooms.foreach { case (f, m) =>
+          blooms(f) = blooms.getOrElse(f, Map.empty) ++ m }
       }
       foldTxns(parseTxns(field(json, "txns")))
       foldSchema(field(json, "schema"))
       foldChecks(field(json, "checks"))
-      // the seeding checkpoint's folded bit covers all history ≤ it;
-      // a legacy checkpoint without the bit leaves the answer
-      // undecided — unless its own surviving refs already prove it
-      dvsEver = field(json, "dvsever").headOption match {
-        case Some(bit) => Some(bit == "1")
-        case None => if (dvs.nonEmpty) Some(true) else None
-      }
+      // the seeding checkpoint's bit covers all history ≤ it
+      dvsEver = field(json, "dvsever") == Seq("1")
     }
     l.tail(version).foreach { v =>
-      val json = store.read(manifestName(v))
+      val json = readManifest(store, v)
       field(json, "removes").foreach { f =>
         live.remove(f); stats.remove(f); colStats.remove(f)
         strColStats.remove(f); nullStats.remove(f); blooms.remove(f)
@@ -1394,14 +1274,13 @@ object ManifestLog {
       colStats ++= parseColStats(field(json, "colstats"))
       strColStats ++= parseStrColStats(field(json, "strstats"))
       nullStats ++= parseNullStats(field(json, "nullstats"))
-      blooms ++= parseBlooms(field(json, "blooms"),
-        legacyDefault = field(json, "fmt").isEmpty)
+      blooms ++= parseBlooms(field(json, "blooms"))
       foldTxns(parseTxns(field(json, "txn")))
       // a later DV REPLACES the file's earlier one (each vector is
       // written as old ∪ newly-dead, so last-wins is exact); a later
       // declared SCHEMA likewise supersedes (additive evolution)
       val mDvs = parseDvs(field(json, "dvs"))
-      if (mDvs.nonEmpty) dvsEver = Some(true)
+      if (mDvs.nonEmpty) dvsEver = true
       dvs ++= mDvs
       foldSchema(field(json, "schema"))
       foldChecks(field(json, "checks"))
@@ -1427,13 +1306,13 @@ object ManifestLog {
   def versionAtTimestampIn(store: LogStore, tsMs: Long): Long = {
     val l = listingOf(store)
     val fromManifests = l.manifests.flatMap { v =>
-      field(store.read(manifestName(v)), "at").headOption
+      field(readManifest(store, v), "at").headOption
         .map(at => v -> at.toLong)
     }
     // checkpoints carry their own version's stamp, so a checkpointed
     // era survives retention in the time-addressable set too
     val fromCheckpoints = l.checkpoints.flatMap { v =>
-      field(store.read(checkpointName(v)), "at").headOption
+      field(readCheckpoint(store, l, v), "at").headOption
         .map(at => v -> at.toLong)
     }
     val stamped = (fromCheckpoints.toMap ++ fromManifests.toMap)
@@ -1518,7 +1397,7 @@ object ManifestLog {
     require(have == ((from + 1) to to),
       s"change range ($from, $to] has pruned/missing manifests " +
         s"(have: $have) — re-bootstrap from a snapshot")
-    have.map(v => v -> store.read(manifestName(v)))
+    have.map(v => v -> readManifest(store, v))
   }
 
   /** OPTIMISTIC SERIALIZABLE COMMIT (r16) — the multi-writer protocol
@@ -1645,136 +1524,13 @@ object ManifestLog {
       r.blooms.getOrElse(f, Map.empty).get(column).forall { ref =>
         // a STRING-keyed bloom cannot answer a long probe (different
         // hash → false negatives = wrong pruning); mismatch = must-read
-        ref.str || legacyUntypedBloom(r, f, column, ref) || {
+        ref.str || {
           val bits =
             Files.readAllBytes(resolvePath(root, ref.sidecar).toPath)
           FileBloom.mightContain(bits, ref.m, ref.k, value)
         }
       }
     }
-
-  /** LEGACY-BLOOM guard (r19; r18 advice, widened by this round's
-    * review): a bloom parsed UNTAGGED from a pre-`fmt` manifest
-    * ([[BloomRef.legacy]]) has an unknowable key type — pre-r18
-    * string blooms parse str = false, and a long-hash probe against
-    * one false-negatives, i.e. silently wrong pruning. The long-probe
-    * paths treat such a ref as must-read UNLESS the same file carries
-    * long colStats for the column (the writer folds bloom keys and
-    * stats from one canonical image, so long stats prove a long-keyed
-    * fold). This subsumes the narrower string-bounds heuristic the
-    * first r19 cut used: a legacy string bloom committed with NO
-    * string bounds — blooms and stats are independent commit
-    * parameters — is quarantined too. Newly written (fmt-2) blooms
-    * are always type-tagged and never quarantined. */
-  private def legacyUntypedBloom(r: Replay, f: String,
-      column: String, ref: BloomRef): Boolean =
-    ref.legacy &&
-      !r.colStats.getOrElse(f, Map.empty).contains(column)
-
-  /** RETAG quarantined legacy bloom refs (r20; r19 verdict next-8
-    * #7): the r19 quarantine is correct but permanently costs a
-    * pre-`fmt` log its long-bloom prunes — this explicit maintenance
-    * op VERIFIES each legacy ref's key type and rewrites the file's
-    * ref set as fmt-2 tagged in one metadata-only commit. Evidence,
-    * in cost order: the file's long colStats for the column prove a
-    * long-keyed fold (the writer folds bloom keys and stats from one
-    * canonical image); string bounds prove a string column, hence
-    * the [[FileBloom.strKey]] fold every string-bloom writer used;
-    * otherwise ONE parquet footer read decides the column's physical
-    * type (BINARY → string keys, INT32/INT64 → canonical longs). A
-    * column the evidence cannot decide (double/absent/unreadable)
-    * stays quarantined — the op only ever STRENGTHENS metadata it
-    * can prove, and without running it the quarantine semantics are
-    * untouched. Returns the number of refs retagged (0 = no commit
-    * published). */
-  def retagBlooms(root: String): Int = {
-    val r = latestSnapshot(root).getOrElse(
-      throw new IllegalArgumentException(s"empty log at $root"))
-    val footerCache =
-      scala.collection.mutable.Map.empty[String, Map[String, Boolean]]
-    // Some(true) = string keys, Some(false) = long keys, None = the
-    // evidence cannot decide
-    def keyTypeOf(f: String, c: String): Option[Boolean] = {
-      val cs = r.colStats.getOrElse(f, Map.empty).get(c)
-      if (cs.exists(!_.dbl)) Some(false)
-      else if (r.strColStats.getOrElse(f, Map.empty).contains(c))
-        Some(true)
-      else footerCache.getOrElseUpdate(f,
-        scala.util.Try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(
-              new org.apache.hadoop.fs.Path(
-                resolvePath(root, f).getAbsolutePath),
-              new org.apache.hadoop.conf.Configuration())
-          Using.resource(
-            org.apache.parquet.hadoop.ParquetFileReader.open(in)) { pr =>
-            val msg = pr.getFooter.getFileMetaData.getSchema
-            (0 until msg.getFieldCount).map(msg.getType)
-              .filter(_.isPrimitive).flatMap { t =>
-                // the LOGICAL annotation must corroborate, not just
-                // the physical type (r20 second review pass): a raw
-                // un-annotated BINARY proves nothing about the key
-                // fold — only a STRING column implies the strKey
-                // hash every string-bloom writer used. Long keys
-                // accept the writer's own canonical-image encodings
-                // (plain integers, epoch-day dates, epoch-µs
-                // timestamps); any other annotation (decimal, MILLIS
-                // timestamps, …) stays undecidable → quarantined.
-                import org.apache.parquet.schema.LogicalTypeAnnotation
-                import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-                val ann = t.getLogicalTypeAnnotation
-                (t.asPrimitiveType().getPrimitiveTypeName, ann) match {
-                  case (BINARY, a)
-                      if a == LogicalTypeAnnotation.stringType() =>
-                    Some(t.getName -> true)
-                  case (INT64, null) | (INT32, null) =>
-                    Some(t.getName -> false)
-                  case (INT32, a)
-                      if a == LogicalTypeAnnotation.dateType() =>
-                    Some(t.getName -> false)
-                  case (INT64,
-                      a: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation)
-                      if a.getUnit ==
-                        LogicalTypeAnnotation.TimeUnit.MICROS =>
-                    Some(t.getName -> false)
-                  case (INT32,
-                      a: LogicalTypeAnnotation.IntLogicalTypeAnnotation)
-                      if a.getBitWidth == 32 && a.isSigned =>
-                    Some(t.getName -> false)
-                  case (INT64,
-                      a: LogicalTypeAnnotation.IntLogicalTypeAnnotation)
-                      if a.getBitWidth == 64 && a.isSigned =>
-                    Some(t.getName -> false)
-                  case _ => None
-                }
-              }.toMap
-          }
-        }.getOrElse(Map.empty)).get(c)
-    }
-    val retagged = r.files.flatMap { f =>
-      val bs = r.blooms.getOrElse(f, Map.empty)
-      if (!bs.valuesIterator.exists(_.legacy)) None
-      else {
-        val newBs = bs.map { case (c, ref) =>
-          if (!ref.legacy) c -> ref
-          else keyTypeOf(f, c) match {
-            case Some(str) => c -> ref.copy(str = str, legacy = false)
-            case None => c -> ref
-          }
-        }
-        if (newBs == bs) None else Some(f -> newBs)
-      }
-    }.toMap
-    if (retagged.isEmpty) 0
-    else {
-      commit(root, r.version + 1, Seq.empty, Seq.empty,
-        op = "retag_blooms", blooms = retagged)
-      retagged.iterator.map { case (f, nb) =>
-        val old = r.blooms(f)
-        nb.count { case (c, ref) => old(c) != ref }
-      }.sum
-    }
-  }
 
   /** STRING point-lookup prune (r17): the live files whose bloom
     * for `column` might contain the STRING `value` — keyed through
@@ -1852,9 +1608,8 @@ object ManifestLog {
         .forall(st => sorted.exists(k => k >= st.min && k <= st.max))
       lazy val bloomMaybe = r.blooms.getOrElse(f, Map.empty).get(column)
         .forall { ref =>
-          // string-keyed (tagged) and legacy-untyped (quarantined)
-          // blooms cannot answer long probes
-          ref.str || legacyUntypedBloom(r, f, column, ref) || {
+          // a string-keyed bloom cannot answer long probes
+          ref.str || {
             val bits =
               Files.readAllBytes(resolvePath(root, ref.sidecar).toPath)
             sorted.exists(k =>
@@ -2041,12 +1796,9 @@ object ManifestLog {
     }
     val delta = spark.createDataset(pairs)
       .flatMap { case (dataPath, newSc, oldSc) =>
-        val fresh = decodeDv(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(newSc)))
+        val fresh = readDv(newSc)
         val old: Set[Long] =
-          if (oldSc.isEmpty) Set.empty
-          else decodeDv(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(oldSc))).toSet
+          if (oldSc.isEmpty) Set.empty else readDv(oldSc).toSet
         fresh.iterator.filterNot(old).map(i => (dataPath, i))
       }.toDF("__dv_f", "__dv_idx")
     val scan = ManifestFileIndex.read(spark, root,
@@ -2121,20 +1873,9 @@ object ManifestLog {
       else if (from < 0) Map.empty
       else {
         // unresolvable baseline: exact ONLY for a table that has
-        // never used vectors. Any DV state that outlived retention is
-        // folded into a surviving checkpoint (the policy checkpoints
-        // before it prunes), so "no dv field anywhere in surviving
-        // metadata" proves the empty baseline — otherwise loud.
-        // FAST PATH (r19; r18 verdict next-8 #7): the latest
-        // checkpoint's folded dvs-ever bit covers all history ≤ it —
-        // O(tail) instead of O(versions). The probe is SHARED with
-        // [[dvsEverThrough]] (r20; r19 advice): the duplicate scan
-        // this replaced consulted only the checkpoints' inline "dvs"
-        // fields on the no-bit path, so an earlier pq checkpoint whose
-        // dv refs ride the parquet sidecar could be the only surviving
-        // DV evidence and the feed would silently serve an empty DV
-        // baseline; dvsEverThrough's fallback checks earlier
-        // checkpoints' dvsever bits too.
+        // never used vectors, which the latest checkpoint's folded
+        // dvs-ever bit plus the tail decides in O(tail) — otherwise
+        // loud
         val dvVisible = dvsEverThrough(store, Long.MaxValue)
         require(!dvVisible,
           s"change-image baseline $from not resolvable and the log " +
@@ -2258,20 +1999,23 @@ object ManifestLog {
   /** The in-force declared-schema DDL for EVERY version in
     * (`from`, `to`], computed with ONE snapshot at `from` plus one
     * manifest read per version (the streaming gate previously
-    * replayed per version — O(V^2); review finding, r17). `from < 0`
-    * seeds from nothing; so does an unresolvable `from`. */
+    * replayed per version — O(V^2); review finding, r17). The map
+    * also holds `from` itself when `from` is resolvable; `from < 0`
+    * and an unresolvable `from` seed from nothing and leave it out. */
   def schemaDdlsThrough(root: String, from: Long,
       to: Long): Map[Long, Option[String]] = {
     val store = storeFor(root)
     val l = listingOf(store)
-    var cur: Option[String] =
-      if (from >= 0 && l.resolvable(from)) foldIn(store, l, from).schemaDdl
-      else None
-    ((from + 1) to to).map { v =>
-      decodeSchemaField(field(store.read(manifestName(v)), "schema"))
+    val seed =
+      if (from >= 0 && l.resolvable(from))
+        Map(from -> foldIn(store, l, from).schemaDdl)
+      else Map.empty[Long, Option[String]]
+    var cur = seed.get(from).flatten
+    seed ++ ((from + 1) to to).map { v =>
+      decodeSchemaField(field(readManifest(store, v), "schema"))
         .foreach(d => cur = Some(d))
       v -> cur
-    }.toMap
+    }
   }
 
   /** INVARIANT ENFORCEMENT at the write boundary (Delta's CHECK
@@ -3146,8 +2890,7 @@ object ManifestLog {
         resolvePath(root, d.sidecar).getAbsolutePath)
     }
     val dead = spark.createDataset(pairs).flatMap { case (dataPath, sc) =>
-      decodeDv(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(sc))).iterator.map(i => (dataPath, i))
+      readDv(sc).iterator.map(i => (dataPath, i))
     }.toDF("__dv_f", "__dv_idx")
     base.join(broadcast(dead),
       col("_metadata.file_path") === col("__dv_f") &&
@@ -3172,9 +2915,9 @@ object ManifestLog {
     * smaller by construction: 4096·2 B = 8 KB). Bytes remain a pure
     * function of the dead set — container order follows index order,
     * layouts are canonical — so sidecar writes stay idempotent under
-    * task retry. v1 sidecars (raw 8-byte big-endian longs) still
-    * decode: their first byte is 0 for any index < 2^56, while v2
-    * leads with the format tag 2. */
+    * task retry. Bytes lead with the format tag 2; anything else (the
+    * raw 8-byte big-endian longs of v1 start with 0) is below the
+    * format floor and refused. */
   private[sources] def encodeDv(indexes: Array[Long]): Array[Byte] = {
     val sorted = indexes.distinct.sorted
     val out = new java.io.ByteArrayOutputStream()
@@ -3208,12 +2951,12 @@ object ManifestLog {
     out.toByteArray
   }
 
-  private[sources] def decodeDv(bytes: Array[Byte]): Array[Long] = {
-    if (bytes.isEmpty) return Array.empty
-    if (bytes(0) != 2) { // v1: raw 8-byte big-endian longs
-      val buf = java.nio.ByteBuffer.wrap(bytes)
-      return Array.fill(bytes.length / 8)(buf.getLong)
-    }
+  /** Decode DV sidecar bytes read from `name` (named in a refusal). */
+  private[sources] def decodeDv(bytes: Array[Byte],
+      name: String): Array[Long] = {
+    if (bytes.isEmpty || bytes(0) != 2)
+      throw new BelowFormatFloor(name, "not a v2 DV sidecar (format tag " +
+        s"${bytes.headOption.getOrElse("missing")}, want 2)")
     val in = new java.io.DataInputStream(
       new java.io.ByteArrayInputStream(bytes))
     in.readByte()
@@ -3237,6 +2980,9 @@ object ManifestLog {
     }
     acc.result()
   }
+
+  private def readDv(path: String): Array[Long] =
+    decodeDv(Files.readAllBytes(Paths.get(path)), path)
 
   /** Build deletion vectors for the rows of `candidates` (live data
     * files of snapshot `r`) selected by `doomed` — the shared write half
@@ -3291,9 +3037,8 @@ object ManifestLog {
       .mapGroups { (abs, it) =>
         val rel = absToRel(abs)
         val fresh = it.map(_._2).toArray
-        val old = oldDv.get(rel).map(sc => decodeDv(
-            java.nio.file.Files.readAllBytes(
-              resolvePath(root, sc).toPath)))
+        val old = oldDv.get(rel)
+          .map(sc => readDv(resolvePath(root, sc).getPath))
           .getOrElse(Array.empty[Long])
         val all = (old ++ fresh).distinct.sorted
         // a shallow clone's absolute-ref file gets its vector under
@@ -3786,10 +3531,9 @@ object ManifestLog {
       if (stateV == v - 1 && l.hasManifest(v)) {
         // warm fold: this manifest's additions are the only NEW
         // referenced paths this version can introduce
-        val json = store.read(manifestName(v))
+        val json = readManifest(store, v)
         keep ++= field(json, "adds")
-        keep ++= parseBlooms(field(json, "blooms"),
-          legacyDefault = field(json, "fmt").isEmpty).valuesIterator
+        keep ++= parseBlooms(field(json, "blooms")).valuesIterator
           .flatMap(_.valuesIterator.map(_.sidecar))
         // a committed dv's file is live at this version by the commit
         // invariants (dvs never target a file the commit removes)

@@ -370,7 +370,9 @@ private[cdc] class ManifestCdcStream(root: String, startingVersion: Long,
     // (both review findings, r17).
     val ddlAt = ManifestLog.schemaDdlsThrough(root, from, to)
     val declaringTable = ddlAt.get(to).flatten.isDefined ||
-      (from >= 0 && ManifestLog.snapshot(root, from).schemaDdl.isDefined)
+      (from >= 0 && ddlAt.getOrElse(from, throw new IllegalArgumentException(
+        s"version $from not in manifest log — the stream start must " +
+          "resolve to gate its schema")).isDefined)
     def shape(st: StructType): Seq[(String, DataType)] =
       st.fields.toSeq.map(f => (f.name, f.dataType))
     lazy val streamShape = dataSchema.map(shape)

@@ -46,28 +46,31 @@ object ManifestSink {
     StructField("ts_us", LongType),
     StructField("value", DoubleType)))
 
-  /** One micro-batch's commit: land the batch's rows under a
-    * UNIQUE-per-attempt directory `data/b{batchId}-{attempt}`, then
-    * publish the next version with the txn marker — unless the log
-    * already carries a marker at or past this batchId (a replay), in
-    * which case do NOTHING.
+  /** One micro-batch's commit: land the batch's rows under
+    * `data/b{batchId}`, then publish the next version with the txn
+    * marker — unless the log already carries a marker at or past this
+    * batchId (a replay), in which case do NOTHING. Each attempt reads
+    * the marker and the next version from ONE snapshot of the log.
     *
     * NEVER-REUSE-PATHS (r15 advice): an earlier shape landed with
     * mode("overwrite") into the deterministic `data/b{batchId}` — a
     * zombie second driver replaying the same batch past the early txn
-    * check would re-overwrite that directory with differently-named
-    * part files, deleting part files a concurrent winner had just
-    * committed into the manifest. The log's atomic publish protects
-    * only the MANIFEST race, not a data overwrite, so the data path
-    * itself must be unique per attempt (the rule every real format
-    * follows: data files are immutable, losers become orphans). A
-    * crash between landing and commit — or a lost txn race — leaves
-    * an orphan dir invisible to every log reader; [[ManifestLog.vacuum]]
-    * reclaims it (exclude the landing dir: see [[vacuumIngest]]). */
+    * check would re-overwrite that directory, deleting part files a
+    * concurrent winner had just committed into the manifest. The
+    * log's atomic publish protects only the MANIFEST race, not a data
+    * overwrite, so every data file name is unique per attempt: the
+    * writer's per-call token ([[graft.sources.SinglePassWriter]]), the
+    * rule every real format follows — data files are immutable,
+    * losers become orphans. A crash between landing and commit — or a
+    * lost txn race — leaves orphan files invisible to every log
+    * reader; [[ManifestLog.vacuum]] reclaims them (exclude the landing
+    * dir: see [[vacuumIngest]]). */
   private[graft] def commitBatch(root: String, batch: DataFrame,
       batchId: Long): Unit = {
-    if (ManifestLog.lastTxn(root, AppId).exists(_ >= batchId)) return
-    val sub = s"data/b$batchId-${java.util.UUID.randomUUID().toString.take(8)}"
+    def replayed(s: Option[ManifestLog.Replay]): Boolean =
+      s.exists(_.txns.get(AppId).exists(_ >= batchId))
+    if (replayed(ManifestLog.latestSnapshot(root))) return
+    val sub = s"data/b$batchId"
     // SINGLE-PASS landing (r16): the batch's files, their per-file
     // [min, max] user_id/ts_us stats, and their event_id bloom
     // sidecars all come out of the one write pass — the streaming
@@ -84,10 +87,11 @@ object ManifestSink {
       summaries, Some("event_id"))
     var committed = false
     while (!committed) {
-      if (ManifestLog.lastTxn(root, AppId).exists(_ >= batchId)) {
+      val snap = ManifestLog.latestSnapshot(root)
+      if (replayed(snap)) {
         committed = true // a concurrent duplicate won the race: done
       } else {
-        val v = ManifestLog.latestVersion(root).map(_ + 1).getOrElse(0L)
+        val v = snap.map(_.version + 1).getOrElse(0L)
         try {
           ManifestLog.commit(root, v, adds, Seq.empty,
             op = "stream-append",
@@ -108,8 +112,8 @@ object ManifestSink {
   val NonTableDirs: Seq[String] = Seq("landing")
 
   /** GC an ingest root safely: sweep crashed-attempt orphans (the
-    * unique per-attempt dirs [[commitBatch]] abandons on a lost txn
-    * race) without touching the landing dir the stream reads from. */
+    * files [[commitBatch]] abandons on a lost txn race) without
+    * touching the landing dir the stream reads from. */
   def vacuumIngest(root: String): Seq[String] =
     ManifestLog.vacuum(root, exclude = NonTableDirs)
 

@@ -4,12 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The v2 deletion-vector codec (SURVEY §8.3.2-1): roaring-style
   * containers — array ≤4096 dead rows, 8 KB bitmap above — with
-  * canonical, idempotent bytes and legacy (raw-longs) decode. */
+  * canonical, idempotent bytes; pre-v2 bytes are refused. */
 class DvCodecSpec extends AnyFunSuite {
   import ManifestLog.{decodeDv, encodeDv}
 
   private def roundTrip(xs: Array[Long]): Unit = {
-    val back = decodeDv(encodeDv(xs))
+    val back = decodeDv(encodeDv(xs), "t.dv")
     assert(back.toSeq == xs.distinct.sorted.toSeq, xs.take(10).toSeq)
   }
 
@@ -48,10 +48,15 @@ class DvCodecSpec extends AnyFunSuite {
       8000 * 2, "bitmap must beat the array layout above the threshold")
   }
 
-  test("legacy v1 sidecars (raw big-endian longs) still decode") {
-    val xs = Array(3L, 9L, 70000L)
-    val v1 = java.nio.ByteBuffer.allocate(xs.length * 8)
-    xs.foreach(v1.putLong)
-    assert(decodeDv(v1.array()).toSeq == xs.toSeq)
+  test("v1 sidecars (raw big-endian longs) and tagless bytes are " +
+      "refused as below the format floor, naming the sidecar") {
+    val v1 = java.nio.ByteBuffer.allocate(3 * 8)
+    Seq(3L, 9L, 70000L).foreach(v1.putLong)
+    Seq(v1.array(), Array.empty[Byte]).foreach { bytes =>
+      val e = intercept[ManifestLog.BelowFormatFloor](
+        decodeDv(bytes, "data/f.parquet.v1-0.dv"))
+      assert(e.file == "data/f.parquet.v1-0.dv" &&
+        e.getMessage.contains("format floor"), e.getMessage)
+    }
   }
 }

@@ -146,28 +146,27 @@ class LogStoreCrashSpec extends AnyFunSuite {
   for ((label, mk) <- stores) {
 
     test(s"[$label] PARQUET checkpoints (r19): replay through the " +
-        "columnar sidecar equals the legacy all-JSON checkpoint's " +
-        "replay field-for-field, before and after manifest pruning, " +
-        "and the marked JSON is scalar-only") {
-      val pq = mk(); val legacy = mk()
-      buildRich(pq); buildRich(legacy)
-      ManifestLog.writeCheckpointIn(pq, 1) // parquet default
-      ManifestLog.writeCheckpointIn(legacy, 1, parquet = false)
-      assert(pq.list().contains(f"${1L}%020d.checkpoint.parquet"))
-      assert(!legacy.list().contains(f"${1L}%020d.checkpoint.parquet"))
-      val marked = pq.read(f"${1L}%020d.checkpoint.json")
+        "columnar sidecar equals the genesis fold field-for-field, " +
+        "before and after manifest pruning, and the marked JSON is " +
+        "scalar-only") {
+      val store = mk()
+      buildRich(store)
+      // no checkpoint yet: this snapshot folds every manifest from v0
+      val genesis = ManifestLog.snapshotIn(store, 1)
+      ManifestLog.writeCheckpointIn(store, 1)
+      assert(store.list().contains(f"${1L}%020d.checkpoint.parquet"))
+      val marked = store.read(f"${1L}%020d.checkpoint.json")
       assert(marked.contains("\"pq\"") &&
         !marked.contains("data/a.parquet"),
         "marked checkpoint must carry scalars only")
-      assert(ManifestLog.snapshotIn(pq, 1) == ManifestLog.snapshotIn(legacy, 1),
-        "columnar and JSON checkpoint replays diverged")
-      // prune every manifest behind the checkpoint on both stores —
-      // each checkpoint now resolves alone
-      Seq(pq, legacy).foreach(s => (0L to 1L).foreach(v =>
-        s.delete(f"$v%020d.json")))
-      val a = ManifestLog.snapshotIn(pq, 1)
-      val b = ManifestLog.snapshotIn(legacy, 1)
-      assert(a == b, s"post-prune replays diverged: $a vs $b")
+      // seeded from the checkpoint with an empty tail: every per-file
+      // field now comes through the sidecar
+      assert(ManifestLog.snapshotIn(store, 1) == genesis,
+        "columnar checkpoint replay diverged from the genesis fold")
+      // prune every manifest behind the checkpoint — it resolves alone
+      (0L to 1L).foreach(v => store.delete(f"$v%020d.json"))
+      val a = ManifestLog.snapshotIn(store, 1)
+      assert(a == genesis, s"post-prune replay diverged: $a vs $genesis")
       assert(a.files == Seq("data/a.parquet", "data/b.parquet",
         "data/c.parquet"), "live-set order must survive the sidecar")
       assert(a.dvs("data/a.parquet").nDeleted == 3L &&
@@ -179,20 +178,17 @@ class LogStoreCrashSpec extends AnyFunSuite {
         a.checks == Map("k_nn" -> "k IS NOT NULL"))
       // scalar consumers on the marked checkpoint: time travel + the
       // metadata fold + the dvs-ever bit
-      assert(ManifestLog.versionAtTimestampIn(pq, 1700000000001L) == 1L)
-      assert(ManifestLog.dvsEverThrough(pq, 1))
+      assert(ManifestLog.versionAtTimestampIn(store, 1700000000001L) == 1L)
+      assert(ManifestLog.dvsEverThrough(store, 1))
     }
 
-    test(s"[$label] a pre-h (8-column) pq sidecar still decodes (r19 " +
-        "review finding): the legacy-bloom column was appended after " +
-        "the first sidecars shipped, and additive sidecar evolution " +
-        "must read them with legacy defaulting to false — never crash " +
-        "the page-store lookup") {
+    test(s"[$label] a floor-era 9-column pq sidecar decodes while its " +
+        "legacy-bloom mark (h) is unset, and a row with the mark set " +
+        "is refused loudly, naming the sidecar and the floor") {
       import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      val store = mk()
-      // forge the original 8-column sidecar layout on disk
-      val oldSchema: MessageType = new MessageType("graft_ckpt",
+      // the floor-era layout: the current eight columns plus `h`
+      val floorSchema: MessageType = new MessageType("graft_ckpt",
         Types.required(INT32).named("kind"),
         Types.required(BINARY).as(LogicalTypeAnnotation.stringType())
           .named("f"),
@@ -204,31 +200,38 @@ class LogStoreCrashSpec extends AnyFunSuite {
           .named("s"),
         Types.optional(BINARY).as(LogicalTypeAnnotation.stringType())
           .named("t"),
-        Types.optional(BOOLEAN).named("g"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_preh")
-        .resolve("side.parquet")
-      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(new org.apache.hadoop.fs.Path(tmp.toString))
-        .withType(oldSchema).build()
-      val fac = new org.apache.parquet.example.data.simple
-        .SimpleGroupFactory(oldSchema)
-      val g0 = fac.newGroup(); g0.add(0, 0); g0.add(1, "data/x.parquet")
-      w.write(g0)
-      val g5 = fac.newGroup(); g5.add(0, 5); g5.add(1, "data/x.parquet")
-      g5.add(2, "id"); g5.add(3, 1024L); g5.add(4, 4L)
-      g5.add(5, "data/x.bloom")
-      w.write(g5); w.close()
-      store.publishBytes(f"${0L}%020d.checkpoint.parquet",
-        java.nio.file.Files.readAllBytes(tmp))
-      store.publish(f"${0L}%020d.checkpoint.json",
-        """{"version":0,"pq":["1"],"fmt":["2"],"txns":[],"schema":[],""" +
-          """"checks":["-"],"at":[],"dvsever":["0"]}""")
-      val r = ManifestLog.snapshotIn(store, 0)
+        Types.optional(BOOLEAN).named("g"),
+        Types.optional(BOOLEAN).named("h"))
+      def checkpointWith(h: Boolean): LogStore = {
+        val store = mk()
+        val tmp = java.nio.file.Files.createTempDirectory("graft_floorh")
+          .resolve("side.parquet")
+        val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+          .builder(new org.apache.hadoop.fs.Path(tmp.toString))
+          .withType(floorSchema).build()
+        val fac = new org.apache.parquet.example.data.simple
+          .SimpleGroupFactory(floorSchema)
+        val g0 = fac.newGroup(); g0.add(0, 0); g0.add(1, "data/x.parquet")
+        w.write(g0)
+        val g5 = fac.newGroup(); g5.add(0, 5); g5.add(1, "data/x.parquet")
+        g5.add(2, "id"); g5.add(3, 1024L); g5.add(4, 4L)
+        g5.add(5, "data/x.bloom"); g5.add(8, h)
+        w.write(g5); w.close()
+        store.publishBytes(f"${0L}%020d.checkpoint.parquet",
+          java.nio.file.Files.readAllBytes(tmp))
+        store.publish(f"${0L}%020d.checkpoint.json",
+          """{"version":0,"pq":["1"],"fmt":["2"],"txns":[],"schema":[],""" +
+            """"checks":["-"],"at":[],"dvsever":["0"]}""")
+        store
+      }
+      val r = ManifestLog.snapshotIn(checkpointWith(h = false), 0)
       assert(r.files == Seq("data/x.parquet"))
-      val ref = r.blooms("data/x.parquet")("id")
-      assert(ref.sidecar == "data/x.bloom" && ref.m == 1024 &&
-        !ref.str && !ref.legacy,
-        s"pre-h sidecar must decode with legacy=false: $ref")
+      assert(r.blooms("data/x.parquet")("id") ==
+        ManifestLog.BloomRef("id", "data/x.bloom", 1024, 4))
+      val e = intercept[ManifestLog.BelowFormatFloor](
+        ManifestLog.snapshotIn(checkpointWith(h = true), 0))
+      assert(e.file == f"${0L}%020d.checkpoint.parquet" &&
+        e.getMessage.contains("format floor"), e.getMessage)
     }
 
     test(s"[$label] crash BETWEEN sidecar and JSON publish (r19): the " +

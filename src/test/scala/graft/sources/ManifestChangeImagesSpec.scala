@@ -707,7 +707,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     ManifestLog.writeCheckpoint(root, 1)
     val f2 = land("data/v2", Seq((9L, 90L)))
     ManifestLog.commit(root, 2, f2, Seq.empty, "append")
-    // forge a NEWER legacy checkpoint without the bit — the
+    // forge a NEWER all-JSON checkpoint without the bit — the
     // rollback/mixed-version writer shape; it now masks the pq
     // checkpoint as "last"
     val store = ManifestLog.storeFor(root)
@@ -715,16 +715,18 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       """{"version":2,"files":["data/v2/x.parquet"],"stats":[],""" +
         """"colstats":[],"blooms":[],"txns":[],"dvs":[],"schema":[],""" +
         """"checks":["-"],"at":[],"strstats":[],"nullstats":[]}""")
-    // prune manifests 0..1 → baseline v0 is unresolvable and the dv
-    // evidence survives ONLY as the pq checkpoint's dvsever bit (its
-    // refs are sidecar-borne — the pre-r20 duplicate scan read only
-    // inline "dvs" fields and returned a false negative here)
-    ManifestLog.expireVersionsBefore(root, 2)
-    assert(ManifestLog.dvsEverThrough(store, Long.MaxValue),
-      "the pq checkpoint's bit must survive the bitless-last fallback")
-    val e = intercept[IllegalArgumentException](
+    // prune manifests 0..1 (newest first, as retention does) →
+    // baseline v0 is unresolvable and the dv evidence survives ONLY
+    // as the pq checkpoint's dvsever bit, which the bitless checkpoint
+    // masks. That checkpoint is below the format floor, so the probe
+    // and the feed refuse it by name instead of guessing a baseline.
+    Seq(1L, 0L).foreach(v => store.delete(f"$v%020d.json"))
+    val probe = intercept[ManifestLog.BelowFormatFloor](
+      ManifestLog.dvsEverThrough(store, Long.MaxValue))
+    assert(probe.file == f"${2L}%020d.checkpoint.json")
+    val e = intercept[ManifestLog.BelowFormatFloor](
       ManifestLog.readChangeImages(spark, root, 0, 2, Seq("id")))
-    assert(e.getMessage.contains("deletion vectors"),
+    assert(e.getMessage.contains("format floor"),
       s"wrong refusal: ${e.getMessage}")
   }
 

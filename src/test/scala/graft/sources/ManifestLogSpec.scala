@@ -701,258 +701,14 @@ class ManifestLogSpec extends AnyFunSuite {
       mix._4 == Seq("price"))
   }
 
-  test("LEGACY untagged blooms are quarantined on the long-probe " +
-      "paths (r19; r18 advice + review widening): a ref parsed from " +
-      "a pre-fmt manifest has an unknowable key type — must-read " +
-      "unless the file's long colStats prove a long-keyed fold — and " +
-      "the quarantine mark survives checkpoint folding; fmt-2 blooms " +
-      "keep full pruning") {
-    import ManifestLog.FileStat
-    val root = freshRoot()
-    val m = 1024; val k = 4
-    def sidecar(rel: String, keys: Iterator[Long]): Unit = {
-      val p = java.nio.file.Paths.get(root, rel)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, FileBloom.build(keys, m, k))
-    }
-    // a: a STRING-keyed bloom a pre-r18 writer committed UNTAGGED and
-    //    WITHOUT any stats (blooms and stats are independent params)
-    // b: a LONG-keyed legacy bloom WITH long colStats [0, 9] (the
-    //    corroboration that permits probing)
-    sidecar("data/v0/a.bloom",
-      Seq("x1", "x2").iterator.map(FileBloom.strKey))
-    sidecar("data/v0/b.bloom", Seq(7L, 8L).iterator)
-    // forge the pre-fmt manifest verbatim (no fmt field, no tags) —
-    // the commit API can no longer produce this shape
-    val store = ManifestLog.storeFor(root)
-    store.publish(f"${0L}%020d.json",
-      """{"version":0,"op":"write","adds":["data/v0/a.parquet",""" +
-        """"data/v0/b.parquet","data/v0/plain.parquet"],"removes":[],""" +
-        """"stats":[],"colstats":["data/v0/b.parquet|id|0|9"],""" +
-        """"blooms":["data/v0/a.parquet|code|data/v0/a.bloom|1024|4",""" +
-        """"data/v0/b.parquet|id|data/v0/b.bloom|1024|4"],"txn":[],""" +
-        """"dvs":[],"at":[],"schema":[],"checks":[],"strstats":[],""" +
-        """"nullstats":[]}""")
-    // a's long probes MUST keep the file — probing string-keyed bits
-    // with long hashes false-negatives (silently wrong pruning)
-    assert(ManifestLog.filesMatchingPoint(
-      root, ManifestLog.snapshot(root, 0), "code", 42L)
-      .contains("data/v0/a.parquet"))
-    assert(ManifestLog.filesMatchingKeys(
-      root, ManifestLog.snapshotIn(store, 0), "code",
-      Seq(42L)).contains("data/v0/a.parquet"))
-    // b's long colStats corroborate a long-keyed fold: the bloom MAY
-    // prune (9999 in [0,9]? no — stats prune; probe key 3 in range,
-    // not in bloom → bloom prunes)
-    assert(!ManifestLog.filesMatchingKeys(
-      root, ManifestLog.snapshotIn(store, 0), "id",
-      Seq(3L)).contains("data/v0/b.parquet"),
-      "corroborated legacy long bloom must still prune")
-    assert(ManifestLog.filesMatchingKeys(
-      root, ManifestLog.snapshotIn(store, 0), "id",
-      Seq(7L)).contains("data/v0/b.parquet"),
-      "no false negatives on the corroborated path")
-    // the quarantine survives the CHECKPOINT fold (the |l mark):
-    // folding a legacy log into an fmt-2 checkpoint must not launder
-    // the uncertainty away
-    ManifestLog.writeCheckpoint(root, 0)
-    store.delete(f"${0L}%020d.json")
-    assert(ManifestLog.filesMatchingPoint(
-      root, ManifestLog.snapshot(root, 0), "code", 42L)
-      .contains("data/v0/a.parquet"),
-      "legacy quarantine must survive checkpoint folding")
-    assert(!ManifestLog.filesMatchingKeys(
-      root, ManifestLog.snapshotIn(store, 0), "id",
-      Seq(3L)).contains("data/v0/b.parquet"))
-    // an fmt-2 (current-writer) long bloom without stats still prunes
-    sidecar("data/v1/c.bloom", Seq(7L, 8L).iterator)
-    ManifestLog.commit(root, 1, Seq("data/v1/c.parquet"), Seq.empty,
-      "write", blooms = Map("data/v1/c.parquet" ->
-        Map("id" -> ManifestLog.BloomRef("id", "data/v1/c.bloom", m, k))))
-    val hit = ManifestLog.filesMatchingPoint(
-      root, ManifestLog.snapshot(root, 1), "id", 9999L)
-    assert(!hit.contains("data/v1/c.parquet"),
-      s"fmt-2 long bloom should still prune: $hit")
-  }
-
-  test("retagBlooms (r20; r19 verdict next-8 #7): a forged pre-fmt " +
-      "log regains its bloom prunes after the explicit retag — long " +
-      "colStats retag a long fold, a parquet footer retags a string " +
-      "fold, undecidable refs stay quarantined, and the quarantine " +
-      "semantics WITHOUT the op are unchanged") {
-    val root = freshRoot()
-    val m = 1024; val k = 4
-    def sidecar(rel: String, keys: Iterator[Long]): Unit = {
-      val p = java.nio.file.Paths.get(root, rel)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, FileBloom.build(keys, m, k))
-    }
-    // a: string-keyed legacy bloom, NO stats — only the file's own
-    //    footer can prove the key type (the data-pass evidence)
-    sidecar("data/v0/a.bloom",
-      Seq("x1", "x2").iterator.map(FileBloom.strKey))
-    // b: long-keyed legacy bloom WITH long colStats (metadata evidence)
-    sidecar("data/v0/b.bloom", Seq(7L, 8L).iterator)
-    // u: legacy bloom whose file EXISTS but carries a raw
-    //    un-annotated BINARY column — the physical type alone proves
-    //    nothing about the key fold (r20 second review pass), so the
-    //    footer pass must refuse to decide and the ref must stay
-    //    quarantined
-    sidecar("data/v0/u.bloom", Seq(1L).iterator)
-    locally {
-      import org.apache.parquet.schema.{MessageType, Types}
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      val msg: MessageType = new MessageType("m",
-        Types.optional(BINARY).named("zz"))
-      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(new org.apache.hadoop.fs.Path(s"$root/data/v0/u.parquet"))
-        .withType(msg).build()
-      val g = new org.apache.parquet.example.data.simple
-        .SimpleGroupFactory(msg).newGroup()
-      g.add(0, "raw-bytes")
-      w.write(g); w.close()
-    }
-    // the real a.parquet: one BINARY(STRING) `code` column, so the
-    // footer decides string keys
-    locally {
-      import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      val msg: MessageType = new MessageType("m",
-        Types.optional(BINARY).as(LogicalTypeAnnotation.stringType())
-          .named("code"))
-      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(new org.apache.hadoop.fs.Path(s"$root/data/v0/a.parquet"))
-        .withType(msg).build()
-      val g = new org.apache.parquet.example.data.simple
-        .SimpleGroupFactory(msg).newGroup()
-      g.add(0, "x1")
-      w.write(g); w.close()
-    }
-    val store = ManifestLog.storeFor(root)
-    store.publish(f"${0L}%020d.json",
-      """{"version":0,"op":"write","adds":["data/v0/a.parquet",""" +
-        """"data/v0/b.parquet","data/v0/u.parquet"],"removes":[],""" +
-        """"stats":[],"colstats":["data/v0/b.parquet|id|0|9"],""" +
-        """"blooms":["data/v0/a.parquet|code|data/v0/a.bloom|1024|4",""" +
-        """"data/v0/b.parquet|id|data/v0/b.bloom|1024|4",""" +
-        """"data/v0/u.parquet|zz|data/v0/u.bloom|1024|4"],"txn":[],""" +
-        """"dvs":[],"at":[],"schema":[],"checks":[],"strstats":[],""" +
-        """"nullstats":[]}""")
-    // BEFORE the op: the r19 quarantine — a and u are must-read on
-    // long probes, a's STRING probe cannot prune (untyped = str false)
-    assert(ManifestLog.filesMatchingPoint(
-      root, ManifestLog.snapshot(root, 0), "code", 42L)
-      .contains("data/v0/a.parquet"))
-    assert(ManifestLog.filesMatchingStrPoint(
-      root, ManifestLog.snapshot(root, 0), "code", "zz")
-      .contains("data/v0/a.parquet"),
-      "an untyped ref must not answer string probes either")
-    val n = ManifestLog.retagBlooms(root)
-    assert(n == 2, s"expected 2 retagged refs (a, b), got $n")
-    val v = ManifestLog.latestVersion(root).get
-    val refs = ManifestLog.snapshot(root, v).blooms
-    assert(refs("data/v0/a.parquet")("code") ==
-      ManifestLog.BloomRef("code", "data/v0/a.bloom", m, k, str = true),
-      s"footer evidence must retag a string fold: $refs")
-    assert(refs("data/v0/b.parquet")("id") ==
-      ManifestLog.BloomRef("id", "data/v0/b.bloom", m, k),
-      s"colStats evidence must retag a long fold: $refs")
-    assert(refs("data/v0/u.parquet")("zz").legacy,
-      "an un-annotated BINARY column must stay quarantined — the " +
-        "physical type alone cannot prove the key fold")
-    // AFTER: a's string probe PRUNES absent values, keeps present
-    // ones, and long probes on it stay conservatively must-read
-    assert(!ManifestLog.filesMatchingStrPoint(
-      root, ManifestLog.snapshot(root, v), "code", "zz")
-      .contains("data/v0/a.parquet"),
-      "the retagged string bloom must prune")
-    assert(ManifestLog.filesMatchingStrPoint(
-      root, ManifestLog.snapshot(root, v), "code", "x1")
-      .contains("data/v0/a.parquet"), "no false negatives")
-    assert(ManifestLog.filesMatchingPoint(
-      root, ManifestLog.snapshot(root, v), "code", 42L)
-      .contains("data/v0/a.parquet"),
-      "a string bloom can never answer a long probe")
-    // b prunes as a first-class fmt-2 long bloom
-    assert(!ManifestLog.filesMatchingKeys(
-      root, ManifestLog.snapshotIn(store, v), "id",
-      Seq(3L)).contains("data/v0/b.parquet"))
-    assert(ManifestLog.filesMatchingKeys(
-      root, ManifestLog.snapshotIn(store, v), "id",
-      Seq(7L)).contains("data/v0/b.parquet"))
-    // u stays must-read on every path
-    assert(ManifestLog.filesMatchingPoint(
-      root, ManifestLog.snapshot(root, v), "zz", 42L)
-      .contains("data/v0/u.parquet"))
-    // WITHOUT the op (reads at v0) the quarantine is untouched
-    assert(ManifestLog.filesMatchingPoint(
-      root, ManifestLog.snapshot(root, 0), "code", 42L)
-      .contains("data/v0/a.parquet"))
-    // idempotent: nothing left to retag, no new commit
-    assert(ManifestLog.retagBlooms(root) == 0 &&
-      ManifestLog.latestVersion(root).contains(v))
-  }
-
-  test("dvsEverThrough's legacy fallback reproduces the FULL " +
-      "surviving-metadata scan (r19 review finding): an EARLIER " +
-      "legacy checkpoint still carrying a dv ref sets the bit even " +
-      "when the LAST legacy checkpoint's dv set is empty — a " +
-      "last-checkpoint-only fallback would bake a false 0 and the " +
-      "image feed would silently serve an empty DV baseline") {
-    val root = freshRoot()
-    val store = ManifestLog.storeFor(root)
-    // forge the legacy log shape directly: cv0 carries a dv, cv1
-    // (after a compaction dropped the ref) carries none; manifests
-    // pruned — only the two LEGACY checkpoints survive
-    store.publish(f"${2L}%020d.checkpoint.json",
-      """{"version":2,"files":["data/f.parquet"],"stats":[],""" +
-        """"colstats":[],"blooms":[],"txns":[],""" +
-        """"dvs":["data/f.parquet|ext/f.dv|3"],"schema":[],""" +
-        """"checks":["-"],"at":[],"strstats":[],"nullstats":[]}""")
-    store.publish(f"${3L}%020d.checkpoint.json",
-      """{"version":3,"files":["data/g.parquet"],"stats":[],""" +
-        """"colstats":[],"blooms":[],"txns":[],"dvs":[],"schema":[],""" +
-        """"checks":["-"],"at":[],"strstats":[],"nullstats":[]}""")
-    assert(ManifestLog.dvsEverThrough(store, 3),
-      "the earlier checkpoint's surviving dv ref must set the bit")
-    // an earlier fmt-2 checkpoint's BIT (refs compacted away) counts
-    // in the fallback too — a writer-downgrade shape, but the bit is
-    // evidence exactly like a surviving ref (review finding, r19)
-    val rootB = freshRoot()
-    val sB = ManifestLog.storeFor(rootB)
-    sB.publish(f"${2L}%020d.checkpoint.json",
-      """{"version":2,"files":["data/f.parquet"],"stats":[],""" +
-        """"colstats":[],"blooms":[],"txns":[],"dvs":[],"schema":[],""" +
-        """"checks":["-"],"at":[],"strstats":[],"nullstats":[],""" +
-        """"dvsever":["1"]}""")
-    sB.publish(f"${3L}%020d.checkpoint.json",
-      """{"version":3,"files":["data/g.parquet"],"stats":[],""" +
-        """"colstats":[],"blooms":[],"txns":[],"dvs":[],"schema":[],""" +
-        """"checks":["-"],"at":[],"strstats":[],"nullstats":[]}""")
-    assert(ManifestLog.dvsEverThrough(sB, 3),
-      "an earlier checkpoint's dvsever bit must survive the fallback")
-    // and a truly clean legacy pair stays 0
-    val clean = freshRoot()
-    val s2 = ManifestLog.storeFor(clean)
-    s2.publish(f"${2L}%020d.checkpoint.json",
-      """{"version":2,"files":["data/f.parquet"],"stats":[],""" +
-        """"colstats":[],"blooms":[],"txns":[],"dvs":[],"schema":[],""" +
-        """"checks":["-"],"at":[],"strstats":[],"nullstats":[]}""")
-    assert(!ManifestLog.dvsEverThrough(s2, 2))
-  }
-
   test("Replay folds the dvs-ever bit from the same reads the " +
-      "checkpoint writer needs (r20; retires the duplicate O(tail) " +
-      "pass): exact from genesis, inherited from a bitted " +
-      "checkpoint, undecided ONLY behind a legacy checkpoint — " +
-      "where writeCheckpoint falls back to the full scan and still " +
-      "writes the right bit") {
-    // genesis fold, never vectored → exactly Some(false)
+      "checkpoint writer needs: exact from genesis, latched by a dv " +
+      "commit, inherited from a checkpoint and baked into its JSON " +
+      "and meta sibling") {
     val a = freshRoot(); val sA = ManifestLog.storeFor(a)
     ManifestLog.commit(a, 0, Seq("data/a.parquet"), Seq.empty, "write")
-    assert(ManifestLog.snapshotIn(sA, 0).dvsEver.contains(false))
-    assert(ManifestLog.snapshotIn(sA, 0).dvsEver.contains(
-      ManifestLog.dvsEverThrough(sA, 0)))
+    assert(!ManifestLog.snapshotIn(sA, 0).dvsEver)
+    assert(!ManifestLog.dvsEverThrough(sA, 0))
     // a dv commit latches it — and it stays latched after a COW
     // rewrite drops every surviving ref (strictly-conservative, same
     // contract as dvsEverThrough)
@@ -960,69 +716,34 @@ class ManifestLogSpec extends AnyFunSuite {
       dvs = Map("data/a.parquet" -> ManifestLog.DvRef("ext/a.dv", 2L)))
     ManifestLog.commit(a, 2, Seq("data/b.parquet"),
       Seq("data/a.parquet"), "rewrite")
-    assert(ManifestLog.snapshotIn(sA, 2).dvsEver.contains(true))
+    assert(ManifestLog.snapshotIn(sA, 2).dvsEver)
     assert(ManifestLog.dvsEverThrough(sA, 2))
     // a checkpoint inherits the bit; checkpoint-seeded replays stay
     // exact (versions ≤ the checkpoint need no manifest reads at all)
     ManifestLog.writeCheckpoint(a, 2)
     ManifestLog.commit(a, 3, Seq("data/c.parquet"), Seq.empty, "append")
-    assert(ManifestLog.snapshotIn(sA, 3).dvsEver.contains(true))
-    assert(ManifestLog.snapshotIn(sA, 3).dvsEver.contains(
-      ManifestLog.dvsEverThrough(sA, 3)))
-    // forged legacy log: cv2 carries the only dv evidence, cv3 is
-    // clean and bitless, manifest v4 clean → the cv3-seeded replay is
-    // honestly UNDECIDED (None), never a baked false 0
-    val b = freshRoot(); val sB = ManifestLog.storeFor(b)
-    sB.publish(f"${2L}%020d.checkpoint.json",
-      """{"version":2,"files":["data/f.parquet"],"stats":[],""" +
-        """"colstats":[],"blooms":[],"txns":[],""" +
-        """"dvs":["data/f.parquet|ext/f.dv|3"],"schema":[],""" +
-        """"checks":["-"],"at":[],"strstats":[],"nullstats":[]}""")
-    sB.publish(f"${3L}%020d.checkpoint.json",
-      """{"version":3,"files":["data/g.parquet"],"stats":[],""" +
-        """"colstats":[],"blooms":[],"txns":[],"dvs":[],"schema":[],""" +
-        """"checks":["-"],"at":[],"strstats":[],"nullstats":[]}""")
-    sB.publish(f"${4L}%020d.json",
-      """{"version":4,"adds":["data/h.parquet"],"removes":[],""" +
-        """"op":["append"]}""")
-    assert(ManifestLog.snapshotIn(sB, 4).dvsEver.isEmpty,
-      "a legacy-seeded replay must stay undecided, not guess")
-    // the writer's fallback reproduces the full surviving-metadata
-    // scan, so the NEW checkpoint bakes the RIGHT bit
-    ManifestLog.writeCheckpointIn(sB, 4)
-    assert(sB.read(f"${4L}%020d.checkpoint.json").contains(
-      """"dvsever":["1"]"""),
-      "the legacy fallback must find the earlier checkpoint's dv ref")
-    assert(ManifestLog.snapshotIn(sB, 4).dvsEver.contains(true))
-    // a legacy checkpoint whose OWN surviving refs prove 'ever' is
-    // decided without any fallback
-    assert(ManifestLog.snapshotIn(sB, 2).dvsEver.contains(true))
+    assert(ManifestLog.snapshotIn(sA, 3).dvsEver)
+    assert(ManifestLog.dvsEverThrough(sA, 3))
+    Seq(f"${2L}%020d.checkpoint.json", f"${2L}%020d.checkpoint.meta.json")
+      .foreach(f => assert(sA.read(f).contains(""""dvsever":["1"]"""), f))
   }
 
-  test("dvsEverThrough prefers the KB meta sibling for the bit " +
-      "(r20): a bit present only in the sibling is honored — the " +
-      "probe must not require the full checkpoint read, and an " +
-      "r18-era sibling without the bit falls through unchanged") {
+  test("dvsEverThrough reads the bit from the KB meta sibling, not the " +
+      "full checkpoint, and refuses a sibling without the bit as below " +
+      "the format floor") {
     val root = freshRoot(); val s = ManifestLog.storeFor(root)
-    // legacy-clean checkpoint + sibling carrying the bit (the shape a
-    // partial writer upgrade leaves behind)
-    s.publish(f"${2L}%020d.checkpoint.json",
-      """{"version":2,"files":["data/f.parquet"],"stats":[],""" +
-        """"colstats":[],"blooms":[],"txns":[],"dvs":[],"schema":[],""" +
-        """"checks":["-"],"at":[],"strstats":[],"nullstats":[]}""")
-    s.publish(f"${2L}%020d.checkpoint.meta.json",
-      """{"version":2,"schema":[],"checks":["-"],"dvsever":["1"]}""")
-    assert(ManifestLog.dvsEverThrough(s, 2),
+    ManifestLog.commit(root, 0, Seq("data/f.parquet"), Seq.empty, "write")
+    ManifestLog.writeCheckpoint(root, 0)
+    val meta = f"${0L}%020d.checkpoint.meta.json"
+    def setMeta(json: String): Unit = { s.delete(meta); s.publish(meta, json) }
+    // the sibling alone says 1 (the checkpoint says 0): it is honored
+    setMeta("""{"version":0,"schema":[],"checks":["-"],"dvsever":["1"]}""")
+    assert(ManifestLog.dvsEverThrough(s, 0),
       "the sibling's bit must be honored")
-    // r18-era sibling WITHOUT the bit: falls through to the full
-    // checkpoint (which here is clean and bitless → fallback → false)
-    val r2 = freshRoot(); val s2 = ManifestLog.storeFor(r2)
-    s2.publish(f"${2L}%020d.checkpoint.json",
-      """{"version":2,"files":["data/f.parquet"],"stats":[],""" +
-        """"colstats":[],"blooms":[],"txns":[],"dvs":[],"schema":[],""" +
-        """"checks":["-"],"at":[],"strstats":[],"nullstats":[]}""")
-    s2.publish(f"${2L}%020d.checkpoint.meta.json",
-      """{"version":2,"schema":[],"checks":["-"]}""")
-    assert(!ManifestLog.dvsEverThrough(s2, 2))
+    // an r18-era sibling WITHOUT the bit is refused, naming it
+    setMeta("""{"version":0,"schema":[],"checks":["-"]}""")
+    val e = intercept[ManifestLog.BelowFormatFloor](
+      ManifestLog.dvsEverThrough(s, 0))
+    assert(e.file == meta && e.getMessage.contains("format floor"))
   }
 }

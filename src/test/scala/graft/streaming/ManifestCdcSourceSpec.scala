@@ -200,6 +200,29 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
       s"expected the dense-range error, got: ${messages(e)}")
   }
 
+  test("a cursor one below an expired horizon fails loudly at " +
+      "planning: its tail is intact, but the undeclared table's " +
+      "schema gate needs the start version, which no longer resolves") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_cdc_horizon").toString
+    import spark.implicits._
+    (0L to 3L).foreach { v =>
+      Seq((v, v, v, v.toDouble)).toDF("user_id", "event_id", "ts_us", "value")
+        .write.parquet(s"$root/data/b$v")
+      ManifestLog.commit(root, v, ManifestLog.partFiles(root, s"data/b$v"),
+        Seq.empty, "stream-append")
+    }
+    ManifestLog.expireVersionsBefore(root, 2)
+    assert(ManifestLog.versions(root) == Seq(2L, 3L))
+    val e = intercept[Exception](
+      ManifestSink.cdcDrained(spark, root, startingVersion = 1L))
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("version 1 not in manifest log")),
+      s"expected the unresolvable-start error, got: ${messages(e)}")
+  }
+
   test("a rewriting commit in range fails the stream loudly - an " +
       "append-only row feed must never silently replay a rewrite") {
     val root = java.nio.file.Files

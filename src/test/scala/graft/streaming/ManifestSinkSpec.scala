@@ -67,7 +67,7 @@ class ManifestSinkSpec extends AnyFunSuite {
         try s.iterator().asScala.map(_.getFileName.toString).toSeq
         finally s.close()
       }
-    assert(!landed.exists(_.startsWith("b7-")),
+    assert(!landed.contains("b7"),
       s"slow copy landed data despite the marker: $landed")
     assert(ManifestLog.filesAsOf(root, 0) == Seq("data/b7/f.parquet"))
   }
@@ -79,8 +79,8 @@ class ManifestSinkSpec extends AnyFunSuite {
     // two drivers replaying the same batch, both past the early txn
     // check (the marker is not yet visible to either): with the old
     // deterministic data/b0 overwrite the loser's re-write deleted
-    // the winner's just-committed part files; unique attempt dirs
-    // make the loser's landing garbage instead of corruption
+    // the winner's just-committed part files; the writer's per-call
+    // token makes the loser's landing garbage instead of corruption
     val gate = new java.util.concurrent.CountDownLatch(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
@@ -98,10 +98,18 @@ class ManifestSinkSpec extends AnyFunSuite {
     // exactly one version, one marker
     assert(ManifestLog.versions(root) == Seq(0L))
     assert(ManifestLog.lastTxn(root, ManifestSink.AppId).contains(0L))
-    // the attempt dir is unique-per-attempt (never-reuse-paths pin)
+    // never-reuse-paths pin: both attempts landed their one-row batch
+    // into data/b0 under distinct per-attempt tokens, and the commit
+    // references exactly one attempt's files
+    val token = "data/b0/part-\\d{5}-([0-9a-f]{8})\\.parquet".r
+    val landedFiles = ManifestLog.partFiles(root, "data/b0")
+    val tokens = landedFiles.map { case token(t) => t }
+    assert(landedFiles.size == 2 && tokens.distinct.size == 2,
+      s"the two attempts must land distinct file names: $landedFiles")
     val committed = ManifestLog.filesAsOf(root, 0)
-    assert(committed.forall(_.matches("data/b0-[0-9a-f]{8}/.+\\.parquet")),
-      s"committed paths must be unique attempt dirs: $committed")
+    assert(committed.nonEmpty && committed.forall(landedFiles.contains) &&
+      committed.map { case token(t) => t }.distinct.size == 1,
+      s"the commit must reference one attempt's files: $committed")
     // every committed file EXISTS — no overwrite ate the winner's data
     committed.foreach { f =>
       assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, f)),

@@ -6,8 +6,8 @@
 // times the operations whose cost could cliff with table age:
 //
 //   - commit throughput, early vs late (the CHECK gate's per-commit
-//     metadata fold must stay flat — the r18 metaAsOfIn fix);
-//   - full replay (filesAsOf) at 1M files: checkpoint + tail parse;
+//     metadata fold must stay flat — the r18 metaAsOf fix);
+//   - full replay (snapshotIn) at 1M files: checkpoint + tail parse;
 //   - checkpoint write cost and on-disk size at 1M files;
 //   - versionAtTimestamp resolution over the surviving manifests;
 //   - expireVersionsBefore at the final horizon.
@@ -57,10 +57,10 @@ println(s"PROBE commits: total ${totalCommitMs} ms for $nVersions " +
   s"commits (${totalCommitMs / nVersions} ms/commit); first-100 " +
   s"${earlyMs / 100} ms/commit, last-100 ${lateMs / 100} ms/commit")
 
-val (files, replayMs) = ms { ManifestLog.filesAsOfIn(store, nVersions) }
-println(s"PROBE replay: filesAsOf($nVersions) = ${files.size} files " +
+val (files, replayMs) = ms { ManifestLog.snapshotIn(store, nVersions).files }
+println(s"PROBE replay: snapshotIn($nVersions) = ${files.size} files " +
   s"in ${replayMs} ms")
-val (files2, replay2Ms) = ms { ManifestLog.filesAsOfIn(store, nVersions) }
+val (files2, replay2Ms) = ms { ManifestLog.snapshotIn(store, nVersions).files }
 println(s"PROBE replay(2nd): ${replay2Ms} ms (${files2.size} files)")
 
 val (_, ckptMs) = ms { ManifestLog.writeCheckpointIn(store, nVersions.toLong) }
@@ -76,7 +76,7 @@ val pqBytes = if (java.nio.file.Files.exists(pqPath))
 println(s"PROBE checkpoint: write ${ckptMs} ms, " +
   s"json ${ckptBytes} B + sidecar ${pqBytes / 1048576} MiB " +
   s"(${pqBytes} B) at ${files.size} files")
-val (filesPq, replayPqMs) = ms { ManifestLog.filesAsOfIn(store, nVersions) }
+val (filesPq, replayPqMs) = ms { ManifestLog.snapshotIn(store, nVersions).files }
 println(s"PROBE replay(via columnar ckpt): ${replayPqMs} ms " +
   s"(${filesPq.size} files)")
 
@@ -97,7 +97,7 @@ val (expired, expMs) = ms {
 }
 println(s"PROBE expire: ${expired.size} versions expired in ${expMs} ms")
 val (files3, replay3Ms) = ms {
-  ManifestLog.filesAsOfIn(store, nVersions.toLong)
+  ManifestLog.snapshotIn(store, nVersions.toLong).files
 }
 println(s"PROBE replay(post-expire): ${replay3Ms} ms (${files3.size} files)")
 

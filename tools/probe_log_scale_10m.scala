@@ -59,10 +59,10 @@ println(s"PROBE10M commits: total ${totalCommitMs} ms for $nVersions " +
 // replays inflates every later step with GC pressure (first-run
 // artifact: the via-ckpt replay read 173 s contended/retained, then
 // 25.7 s clean post-expire on the same path)
-val (nF, replayMs) = ms { ManifestLog.filesAsOfIn(store, nVersions).size }
-println(s"PROBE10M replay: filesAsOf($nVersions) = ${nF} files " +
+val (nF, replayMs) = ms { ManifestLog.snapshotIn(store, nVersions).files.size }
+println(s"PROBE10M replay: snapshotIn($nVersions) = ${nF} files " +
   s"in ${replayMs} ms")
-val (nF2, replay2Ms) = ms { ManifestLog.filesAsOfIn(store, nVersions).size }
+val (nF2, replay2Ms) = ms { ManifestLog.snapshotIn(store, nVersions).files.size }
 println(s"PROBE10M replay(2nd): ${replay2Ms} ms (${nF2} files)")
 
 val (_, ckptMs) = ms { ManifestLog.writeCheckpointIn(store, nVersions.toLong) }
@@ -75,7 +75,7 @@ val pqBytes = if (java.nio.file.Files.exists(pqPath))
 println(s"PROBE10M checkpoint: write ${ckptMs} ms, " +
   s"json ${ckptBytes} B + sidecar ${pqBytes / 1048576} MiB " +
   s"(${pqBytes} B) at ${nF} files")
-val (nFpq, replayPqMs) = ms { ManifestLog.filesAsOfIn(store, nVersions).size }
+val (nFpq, replayPqMs) = ms { ManifestLog.snapshotIn(store, nVersions).files.size }
 println(s"PROBE10M replay(via columnar ckpt): ${replayPqMs} ms " +
   s"(${nFpq} files)")
 
@@ -92,7 +92,7 @@ val (expired, expMs) = ms {
 }
 println(s"PROBE10M expire: ${expired.size} versions expired in ${expMs} ms")
 val (nF3, replay3Ms) = ms {
-  ManifestLog.filesAsOfIn(store, nVersions.toLong).size
+  ManifestLog.snapshotIn(store, nVersions.toLong).files.size
 }
 println(s"PROBE10M replay(post-expire): ${replay3Ms} ms (${nF3} files)")
 
