@@ -1,12 +1,14 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 
 import org.apache.spark.sql.{DataFrame, GraftRelationBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.ManifestLog.{FileStat, NullStat, StrStat}
@@ -411,33 +413,46 @@ object ManifestFileIndex {
       }
 
   /** Plan a parquet scan over `entries` through a [[ManifestFileIndex]]:
-    * schema from ONE footer via the format's own `inferSchema` (flat
-    * cost at any file count — manifest tables have one schema by
-    * construction), relation built directly (no DataSource resolution,
-    * no InMemoryFileIndex, no listing). A non-empty `partitionSchema`
+    * relation built directly (no DataSource resolution, no
+    * InMemoryFileIndex, no listing). A non-empty `partitionSchema`
     * appends hive-style path-partition columns to the output, with
-    * static AND dynamic partition pruning composing at the scan. */
-  /** `declaredSchema` (r16) overrides footer inference — the
+    * static AND dynamic partition pruning composing at the scan.
+    *
+    * The data schema is `declaredSchema` when given — the
     * schema-evolution seam: when the manifest log carries a declared
     * table schema, files written under an OLDER (narrower) schema
     * surface NULL for the columns they predate, exactly as a real
     * format's additive evolution reads (parquet's reader resolves
     * requested-but-absent columns to null per file; no mergeSchema
-    * footer sweep, which at 100k files is a listing-scale job). */
+    * footer sweep, which at 100k files is a listing-scale job).
+    * Otherwise it is read from ONE footer, the first entry's, on the
+    * driver: the same footer-to-`StructType` conversion the format's
+    * `inferSchema` runs, under the session's parquet settings, minus
+    * the Spark job `inferSchema` launches to read it. Manifest tables
+    * have one schema by construction, so one footer is the table's
+    * schema and planning costs one small read at any file count. */
   def read(spark: SparkSession, root: String,
       entries: Seq[ManifestFileEntry],
       partitionSchema: StructType = new StructType(),
       declaredSchema: Option[StructType] = None): DataFrame = {
     val index = new ManifestFileIndex(root, entries, partitionSchema)
-    val format = new ParquetFileFormat
-    val probe = index.listFiles(Nil, Nil).head.files.head.fileStatus
-    val dataSchema = declaredSchema.getOrElse(format
-      .inferSchema(spark, Map.empty[String, String], Seq(probe))
-      .getOrElse(throw new IllegalStateException(
-        s"cannot infer schema from ${probe.getPath}")))
+    val dataSchema = declaredSchema.getOrElse(footerSchema(spark,
+      index.listFiles(Nil, Nil).head.files.head.fileStatus))
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
-      None, format, Map.empty[String, String])(spark)
+      None, new ParquetFileFormat, Map.empty[String, String])(spark)
     GraftRelationBridge.ofRows(spark,
       LogicalRelation(relation, isStreaming = false))
+  }
+
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver with the session's Hadoop and SQL parquet settings (binary
+    * as string, INT96 and NTZ timestamps, nanos as long). */
+  private[sources] def footerSchema(spark: SparkSession,
+      file: FileStatus): StructType = {
+    val footer = ParquetFileReader.readFooter(
+      spark.sessionState.newHadoopConf(), file, SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 }

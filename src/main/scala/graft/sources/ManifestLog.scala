@@ -1784,8 +1784,8 @@ object ManifestLog {
     * or empty). */
   private def readDvDeltaRows(spark: SparkSession, root: String,
       entries: Seq[(String, String, String)],
-      declaredSchema: Option[org.apache.spark.sql.types.StructType] =
-        None): DataFrame = {
+      declaredSchema: Option[org.apache.spark.sql.types.StructType])
+      : DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
     val pairs = entries.map { case (f, newSc, oldSc) =>
@@ -2848,8 +2848,7 @@ object ManifestLog {
       files: Seq[String],
       stats: Map[String, Map[String, FileStat]] = Map.empty,
       dvs: Map[String, DvRef] = Map.empty,
-      declaredSchema: Option[org.apache.spark.sql.types.StructType] =
-        None,
+      declaredSchema: Option[org.apache.spark.sql.types.StructType],
       nullStats: Map[String, Map[String, NullStat]] = Map.empty)
       : DataFrame =
     applyDvs(spark, root,

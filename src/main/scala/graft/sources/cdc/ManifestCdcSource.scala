@@ -2,8 +2,6 @@ package graft.sources.cdc
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
@@ -21,7 +19,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.ManifestLog
+import graft.sources.{CheckpointCodec, ManifestLog}
 
 /** A real DataSource-V2 STREAMING SOURCE over the manifest log's
   * version tail — the binding §8.3.1-5 named as the one manifest
@@ -133,8 +131,9 @@ private[cdc] object ManifestCdc {
   }
 
   def footerSchema(abs: String): MessageType = {
-    val in = HadoopInputFile.fromPath(new HPath(abs), new Configuration())
-    val r = ParquetFileReader.open(in)
+    val in = HadoopInputFile.fromPath(new HPath(abs),
+      CheckpointCodec.loadedConf)
+    val r = ParquetFileReader.open(in, CheckpointCodec.readOptions())
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
 

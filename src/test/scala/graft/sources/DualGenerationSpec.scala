@@ -24,47 +24,9 @@ import graft.streaming.EventStream
   * planted on purpose so the floor (`div 1000`) semantics are exercised,
   * not just the unit. */
 class DualGenerationSpec extends AnyFunSuite {
+  import DualGenerationSpec._
+
   lazy val spark = TestSpark.spark
-
-  /** (event_id, µs) fixture rows; µs values carry odd micro digits. */
-  private val rows: Seq[(Long, Long)] =
-    (0L until 12L).map(i => (i, 1700000000123456L + i * 1000003L))
-
-  /** Single NANOS-generation parquet FILE at `file`, one row group,
-    * isAdjustedToUTC=false like the driver's pyarrow generation; ts
-    * carries a +789ns sub-µs remainder that floor-division must drop. */
-  private def writeNanosFile(file: String): Unit = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val schema = Types.buildMessage()
-      .required(INT64).named("event_id")
-      .required(INT64)
-      .as(LogicalTypeAnnotation.timestampType(false,
-        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
-      .required(INT64).named("user_id")
-      .required(BINARY).as(LogicalTypeAnnotation.stringType())
-      .named("event_type")
-      .required(DOUBLE).named("value")
-      .required(BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
-      .named("events")
-    val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file))
-      .withConf(new Configuration()).withType(schema).build()
-    val fac = new SimpleGroupFactory(schema)
-    try rows.foreach { case (id, us) =>
-      val g = fac.newGroup()
-      g.add("event_id", id)
-      g.add("ts", us * 1000L + 789L)
-      g.add("user_id", id % 3)
-      g.add("event_type", "purchase")
-      g.add("value", 1.5)
-      g.add("props", "{}")
-      writer.write(g)
-    } finally writer.close()
-  }
 
   /** MICROS-generation parquet dir: ts as TIMESTAMP_NTZ (Spark writes
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) — the current driver
@@ -168,5 +130,49 @@ class DualGenerationSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("UTC"))
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
+  }
+}
+
+/** The NANOS-generation fixture, shared with the footer-schema
+  * equivalence check in [[ManifestPlanningSpec]]. */
+object DualGenerationSpec {
+  /** (event_id, µs) fixture rows; µs values carry odd micro digits. */
+  private[sources] val rows: Seq[(Long, Long)] =
+    (0L until 12L).map(i => (i, 1700000000123456L + i * 1000003L))
+
+  /** Single NANOS-generation parquet FILE at `file`, one row group,
+    * isAdjustedToUTC=false like the driver's pyarrow generation; ts
+    * carries a +789ns sub-µs remainder that floor-division must drop. */
+  private[sources] def writeNanosFile(file: String): Unit = {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val schema = Types.buildMessage()
+      .required(INT64).named("event_id")
+      .required(INT64)
+      .as(LogicalTypeAnnotation.timestampType(false,
+        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .required(INT64).named("user_id")
+      .required(BINARY).as(LogicalTypeAnnotation.stringType())
+      .named("event_type")
+      .required(DOUBLE).named("value")
+      .required(BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
+      .named("events")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(file))
+      .withConf(new Configuration()).withType(schema).build()
+    val fac = new SimpleGroupFactory(schema)
+    try rows.foreach { case (id, us) =>
+      val g = fac.newGroup()
+      g.add("event_id", id)
+      g.add("ts", us * 1000L + 789L)
+      g.add("user_id", id % 3)
+      g.add("event_type", "purchase")
+      g.add("value", 1.5)
+      g.add("props", "{}")
+      writer.write(g)
+    } finally writer.close()
   }
 }
