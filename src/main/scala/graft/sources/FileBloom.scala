@@ -1,5 +1,8 @@
 package graft.sources
 
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Deterministic per-file BLOOM FILTER for manifest-level point-lookup
   * skipping — the "beyond min/max" index class real formats ship as
   * SIDECAR files (Iceberg's puffin, Delta's bloom index directories,
@@ -46,12 +49,16 @@ object FileBloom {
     * the read-side membership test key strings through here, so the
     * bloom contract (no false negatives for inserted values) holds
     * for string columns exactly as for longs. */
-  def strKey(s: String): Long = {
+  def strKey(s: String): Long = utf8Key(UTF8String.fromString(s))
+
+  /** [[strKey]] over a Spark string's own UTF-8 bytes, read in place. */
+  def utf8Key(s: UTF8String): Long = {
     var h = 0xcbf29ce484222325L
-    val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
     var i = 0
-    while (i < bytes.length) {
-      h ^= bytes(i) & 0xffL
+    while (i < s.numBytes) {
+      h ^= Platform.getByte(base, off + i) & 0xffL
       h *= 0x100000001b3L
       i += 1
     }

@@ -1759,13 +1759,15 @@ object ManifestLog {
     // evolved ranges (r17): plan every per-version frame under the
     // `to` snapshot's declared schema, like the image feed — the
     // union across a schema-evolution boundary would otherwise crash,
-    // and pre-evolution rows correctly surface NULL for new columns
+    // and pre-evolution rows correctly surface NULL for new columns.
+    // Index-planned, so an undeclared schema costs one footer read per
+    // version, not a schema-inference job
     val declared = snapshot(root, to).declaredSchema
     val perVersion = changes.collect {
       case (v, adds, _) if adds.nonEmpty =>
-        declared.fold(spark.read)(d => spark.read.schema(d))
-          .parquet(adds.map(f =>
-            resolvePath(root, f).getAbsolutePath): _*)
+        ManifestFileIndex.read(spark, root,
+          adds.map(f => entryFor(root, f, Map.empty)),
+          declaredSchema = declared)
           .withColumn("_commit_version", lit(v))
     }
     require(perVersion.nonEmpty,

@@ -1,14 +1,20 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.schema.{MessageType, PrimitiveType, Types}
+import org.apache.parquet.io.api.{Binary, RecordConsumer}
+import org.apache.parquet.schema.{MessageType, MessageTypeParser,
+  PrimitiveType, Types}
 import org.apache.parquet.schema.LogicalTypeAnnotation.stringType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.ManifestLog.{BloomRef, CheckpointPolicy, FileStat}
 
@@ -33,10 +39,11 @@ import graft.sources.ManifestLog.{BloomRef, CheckpointPolicy, FileStat}
   * manifest index class (planning-time range prune, bloom point
   * prune, DFP).
   *
-  * Parquet encoding goes through parquet-java's example Group API
-  * (the symmetric twin of the CDC source's non-columnar fallback
-  * reader) — writer-controlled, no Spark write job, which is what
-  * lets the stats fold live inside the row loop. Supported column
+  * Each task streams the plan's internal rows (`toRdd`, no external
+  * `Row` per row) straight into parquet's record consumer — writer-
+  * controlled, no Spark write job, which is what lets the stats fold
+  * live inside the row loop — and the summaries come back through a
+  * plain RDD collect. Supported column
   * types: LONG, INT, DOUBLE, STRING, BOOLEAN, TIMESTAMP (INT64 µs
   * UTC), DATE (INT32 epoch days), DECIMAL(p<=18) (INT64 unscaled,
   * r17); `statsCols` must be integral, timestamp, date or double
@@ -98,19 +105,6 @@ object SinglePassWriter {
 
   private def listElement(name: String, et: DataType): PrimitiveType =
     flatPrimitive(name, "element", et)
-
-  /** One primitive value into slot `j` of `g` — the shared leaf of
-    * the array and struct encoders. */
-  private def addPrim(g: org.apache.parquet.example.data.Group,
-      j: Int, et: DataType, v: Any): Unit = et match {
-    case FloatType => g.add(j, v.asInstanceOf[Float])
-    case DoubleType => g.add(j, v.asInstanceOf[Double])
-    case LongType => g.add(j, v.asInstanceOf[Long])
-    case IntegerType => g.add(j, v.asInstanceOf[Int])
-    case BooleanType => g.add(j, v.asInstanceOf[Boolean])
-    case StringType => g.add(j, v.asInstanceOf[String])
-    case dt => throw new IllegalStateException(dt.toString)
-  }
 
   private def parquetType(f: StructField)
       : org.apache.parquet.schema.Type = {
@@ -288,10 +282,10 @@ object SinglePassWriter {
       s"check column $c must be boolean, got ${schema(c).dataType}"))
     strStatsCols.foreach(c => require(schema(c).dataType == StringType,
       s"string stats column $c must be string, got ${schema(c).dataType}"))
-    val dataFields = schema.fields.zipWithIndex
-      .filterNot { case (f, _) => checkCols.contains(f.name) }
+    val dataIdx = schema.fields.indices
+      .filterNot(i => checkCols.contains(schema(i).name)).toArray
     val message: MessageType = new MessageType("spark_schema",
-      dataFields.map { case (f, _) => parquetType(f) }: _*)
+      dataIdx.map(i => parquetType(schema(i))): _*)
     // stats/bloom columns need a canonical long image: integrals as
     // themselves, timestamps as epoch-µs, dates as epoch days — the
     // SAME longs Catalyst's pushed-down literals carry for those
@@ -320,153 +314,89 @@ object SinglePassWriter {
         s"bloom column $c must be integral/timestamp/date/string, " +
           s"got ${schema(c).dataType}")
     }
-    val statIdx = statsCols.map(schema.fieldIndex)
-    val strIdx = strStatsCols.map(schema.fieldIndex)
-    val bloomIdx = bloomCol.map(schema.fieldIndex)
-    val checkIdx = checkCols.map(schema.fieldIndex)
-    val fields = dataFields
+    val statIdx = statsCols.map(schema.fieldIndex).toArray
+    val strIdx = strStatsCols.map(schema.fieldIndex).toArray
+    val bloomIdx = bloomCol.fold(-1)(schema.fieldIndex)
+    val checkIdx = checkCols.map(schema.fieldIndex).toArray
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(root, sub))
     val messageStr = message.toString
     val token = java.util.UUID.randomUUID().toString.take(8)
 
-    val summaries = df.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
+    df.queryExecution.toRdd.mapPartitions { rows =>
+      if (!rows.hasNext) Iterator.empty
       else {
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val rel = f"$sub/part-$pid%05d-$token.parquet"
-        val mt = org.apache.parquet.schema.MessageTypeParser
-          .parseMessageType(messageStr)
-        val factory =
-          new org.apache.parquet.example.data.simple.SimpleGroupFactory(mt)
-        val writer = ExampleParquetWriter
-          .builder(new Path(new java.io.File(root, rel).toURI))
-          .withType(mt)
+        val writer = new RowParquetBuilder(
+            new Path(new java.io.File(root, rel).toURI),
+            new RowWriteSupport(schema, dataIdx,
+              MessageTypeParser.parseMessageType(messageStr)))
+          .withConf(CheckpointCodec.loadedConf)
           .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
           .withCompressionCodec(CompressionCodecName.SNAPPY)
           .build()
+        val statKey = statIdx.map(i => longKey(schema(i).dataType))
+        val bloomKey: LongKey =
+          if (bloomIdx < 0) null
+          else if (schema(bloomIdx).dataType == StringType)
+            (r, i) => FileBloom.utf8Key(r.getUTF8String(i))
+          else longKey(schema(bloomIdx).dataType)
         var n = 0L
-        val los = Array.fill(statIdx.size)(Long.MaxValue)
-        val his = Array.fill(statIdx.size)(Long.MinValue)
-        val viols = Array.fill(checkIdx.size)(0L)
+        val los = Array.fill(statIdx.length)(Long.MaxValue)
+        val his = Array.fill(statIdx.length)(Long.MinValue)
+        val viols = new Array[Long](checkIdx.length)
         // per-column null counts (r18) — same loop, zero extra IO
-        val nullsArr = Array.fill(statIdx.size)(0L)
-        val sNullsArr = Array.fill(strIdx.size)(0L)
-        // string bounds fold in UTF-8 BYTE order (the prune's
-        // collation); null sentinel until the first non-null value
-        val sLos = Array.fill[String](strIdx.size)(null)
-        val sHis = Array.fill[String](strIdx.size)(null)
+        val nulls = new Array[Long](statIdx.length)
+        val sNulls = new Array[Long](strIdx.length)
+        // string bounds fold in UTF-8 BYTE order (the prune's collation,
+        // [[ManifestFileIndex.utf8Cmp]]); null until the first non-null
+        // value. A kept bound is a copy: the row's bytes are reused.
+        val sLos = new Array[UTF8String](strIdx.length)
+        val sHis = new Array[UTF8String](strIdx.length)
         val seen = new java.util.HashSet[java.lang.Long]()
-        def longAt(row: org.apache.spark.sql.Row, i: Int): Long =
-          schema(i).dataType match {
-            case IntegerType => row.getInt(i).toLong
-            case TimestampType =>
-              val t = row.getTimestamp(i)
-              t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-            case DateType => row.getDate(i).toLocalDate.toEpochDay
-            // the sortable-bits image; min/max comparisons below run
-            // in IMAGE space, so NaN rows fold correctly (double-space
-            // < / > would let NaN poison the bounds)
-            case DoubleType => ManifestFileIndex.dblKey(row.getDouble(i))
-            case _ => row.getLong(i)
-          }
-        rows.foreach { row =>
-          val g = factory.newGroup()
-          fields.foreach { case (f, i) =>
-            if (!row.isNullAt(i)) f.dataType match {
-              case LongType => g.add(f.name, row.getLong(i))
-              case IntegerType => g.add(f.name, row.getInt(i))
-              case DoubleType => g.add(f.name, row.getDouble(i))
-              case BooleanType => g.add(f.name, row.getBoolean(i))
-              case StringType => g.add(f.name, row.getString(i))
-              case TimestampType | DateType =>
-                val v = longAt(row, i)
-                if (f.dataType == DateType) g.add(f.name, v.toInt)
-                else g.add(f.name, v)
-              case d: DecimalType =>
-                // exact unscaled long; longValueExact throws on
-                // overflow rather than corrupting (p<=18 guarantees
-                // fit for values Spark accepted into the type)
-                g.add(f.name, row.getDecimal(i)
-                  .setScale(d.scale).unscaledValue().longValueExact())
-              case ArrayType(st: StructType, _) =>
-                // LIST of struct (r20): each "list" entry holds an
-                // "element" GROUP; a null element leaves the group
-                // absent, a null field leaves its slot absent —
-                // the same three-way distinction as the primitive
-                // list (NULL array / empty array / null element)
-                val lg = g.addGroup(f.name)
-                row.getSeq[org.apache.spark.sql.Row](i).foreach { v =>
-                  val e = lg.addGroup(0)
-                  if (v != null) {
-                    val eg = e.addGroup(0)
-                    st.fields.indices.foreach { j =>
-                      if (!v.isNullAt(j))
-                        addPrim(eg, j, st.fields(j).dataType, v.get(j))
-                    }
-                  }
-                }
-              case ArrayType(et, _) =>
-                // standard 3-level LIST: one "list" group per element
-                // (an empty array is the LIST group with no entries,
-                // distinct from the absent group a NULL array leaves;
-                // a null element is a "list" entry with no "element")
-                val lg = g.addGroup(f.name)
-                row.getSeq[Any](i).foreach { v =>
-                  val e = lg.addGroup(0)
-                  if (v != null) addPrim(e, 0, et, v)
-                }
-              case st: StructType =>
-                // flat struct: one optional group, one primitive per
-                // field (a NULL struct leaves the group absent; a
-                // null field leaves its slot absent)
-                val sg = g.addGroup(f.name)
-                val sr = row.getStruct(i)
-                st.fields.indices.foreach { j =>
-                  if (!sr.isNullAt(j))
-                    addPrim(sg, j, st.fields(j).dataType, sr.get(j))
-                }
-              case dt => throw new IllegalStateException(dt.toString)
-            }
-          }
-          writer.write(g)
+        while (rows.hasNext) {
+          val row = rows.next()
+          writer.write(row)
           n += 1
-          statIdx.indices.foreach { k =>
+          var k = 0
+          while (k < statIdx.length) {
             val i = statIdx(k)
-            if (row.isNullAt(i)) nullsArr(k) += 1L
+            if (row.isNullAt(i)) nulls(k) += 1L
             else {
-              val v = longAt(row, i)
+              val v = statKey(k)(row, i)
               if (v < los(k)) los(k) = v
               if (v > his(k)) his(k) = v
             }
+            k += 1
           }
-          bloomIdx.foreach(i =>
-            if (!row.isNullAt(i)) seen.add(
-              if (schema(i).dataType == StringType)
-                FileBloom.strKey(row.getString(i))
-              else longAt(row, i)))
-          checkIdx.indices.foreach { k =>
+          if (bloomIdx >= 0 && !row.isNullAt(bloomIdx))
+            seen.add(bloomKey(row, bloomIdx))
+          k = 0
+          while (k < checkIdx.length) {
             val i = checkIdx(k)
             if (!row.isNullAt(i) && row.getBoolean(i)) viols(k) += 1L
+            k += 1
           }
-          strIdx.indices.foreach { k =>
+          k = 0
+          while (k < strIdx.length) {
             val i = strIdx(k)
-            if (row.isNullAt(i)) sNullsArr(k) += 1L
+            if (row.isNullAt(i)) sNulls(k) += 1L
             else {
-              val v = row.getString(i)
-              if (sLos(k) == null ||
-                  ManifestFileIndex.utf8Cmp(v, sLos(k)) < 0) sLos(k) = v
-              if (sHis(k) == null ||
-                  ManifestFileIndex.utf8Cmp(v, sHis(k)) > 0) sHis(k) = v
+              val v = row.getUTF8String(i)
+              if (sLos(k) == null || v.compareTo(sLos(k)) < 0)
+                sLos(k) = v.clone()
+              if (sHis(k) == null || v.compareTo(sHis(k)) > 0)
+                sHis(k) = v.clone()
             }
+            k += 1
           }
         }
         writer.close()
         // the bloom sidecar lands from the SAME task, sized by the
         // pass's own distinct count (exact ndv, not the row-count
         // upper bound the read-back builder had to use)
-        val m = if (bloomIdx.isEmpty || seen.isEmpty) 0
-          else FileBloom.sizeFor(seen.size.toLong)
+        val m = if (seen.isEmpty) 0 else FileBloom.sizeFor(seen.size.toLong)
         if (m > 0) {
           val bits = FileBloom.build(
             scala.jdk.CollectionConverters.IteratorHasAsScala(
@@ -474,19 +404,139 @@ object SinglePassWriter {
           java.nio.file.Files.write(
             java.nio.file.Paths.get(root, s"$rel.bloom"), bits)
         }
-        Iterator.single(
-          FileSummary(rel, n, los.toSeq, his.toSeq, m, viols.toSeq,
-            // Encoders reject nulls in Seq[String]: all-null columns
-            // carry "" with sSeen=false and are omitted at commit
-            sLos.map(v => if (v == null) "" else v).toSeq,
-            sHis.map(v => if (v == null) "" else v).toSeq,
-            sLos.map(_ != null).toSeq,
-            statIdx.map(i => schema(i).dataType == DoubleType).toSeq,
-            bloomIdx.exists(i => schema(i).dataType == StringType),
-            nullsArr.toSeq, sNullsArr.toSeq))
+        Iterator.single(FileSummary(rel, n, los.toSeq, his.toSeq, m,
+          viols.toSeq,
+          // all-null columns carry "" with sSeen=false and are omitted
+          // at commit
+          sLos.map(v => if (v == null) "" else v.toString).toSeq,
+          sHis.map(v => if (v == null) "" else v.toString).toSeq,
+          sLos.map(_ != null).toSeq,
+          statIdx.map(i => schema(i).dataType == DoubleType).toSeq,
+          bloomIdx >= 0 && schema(bloomIdx).dataType == StringType,
+          nulls.toSeq, sNulls.toSeq))
       }
-    }(Encoders.product[FileSummary]).collect().toSeq.sortBy(_.rel)
+    }.collect().toSeq.sortBy(_.rel)
+  }
 
-    summaries
+  private trait LongKey { def apply(r: InternalRow, i: Int): Long }
+
+  /** The canonical long image of a stats or bloom column: integrals,
+    * epoch-µs timestamps and epoch-day dates as themselves (the values
+    * Spark holds them as), doubles as their sortable bits. Min/max
+    * compare in IMAGE space, so NaN rows fold correctly (double-space
+    * < / > would let NaN poison the bounds). */
+  private def longKey(dt: DataType): LongKey =
+    dt match {
+      case IntegerType | DateType => (r, i) => r.getInt(i).toLong
+      case DoubleType => (r, i) => ManifestFileIndex.dblKey(r.getDouble(i))
+      case _ => (r, i) => r.getLong(i)
+    }
+
+  private final class RowParquetBuilder(path: Path,
+      support: WriteSupport[InternalRow])
+      extends ParquetWriter.Builder[InternalRow, RowParquetBuilder](path) {
+    override protected def self(): RowParquetBuilder = this
+    override protected def getWriteSupport(conf: Configuration)
+        : WriteSupport[InternalRow] = support
+  }
+
+  /** Streams Spark's internal rows into parquet's record consumer, one
+    * value writer per column resolved up front (the model is Spark's
+    * own `ParquetWriteSupport`, whose encodings — INT96 timestamps,
+    * INT32 small decimals, Spark footer keys — this format does not
+    * use). The events are the ones parquet's example Group writer
+    * emitted for the same rows, and the model name stays `example`, so
+    * files are byte-identical to that writer's. Values are written as
+    * Spark holds them: a timestamp is its µs long, a date its day
+    * number, a string its UTF-8 bytes. */
+  private final class RowWriteSupport(schema: StructType,
+      dataIdx: Array[Int], message: MessageType)
+      extends WriteSupport[InternalRow] {
+    private trait ValueWriter {
+      def apply(r: SpecializedGetters, i: Int): Unit
+    }
+    private var rc: RecordConsumer = _
+    private val names = dataIdx.map(schema(_).name)
+    private val writers = dataIdx.map(i => valueWriter(schema(i).dataType))
+
+    override def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(message,
+        new java.util.HashMap[String, String]())
+    override def getName: String = "example"
+    override def prepareForWrite(consumer: RecordConsumer): Unit =
+      rc = consumer
+
+    override def write(row: InternalRow): Unit = {
+      rc.startMessage()
+      writeFields(row, dataIdx, names, writers)
+      rc.endMessage()
+    }
+
+    /** Field `k` of the group is `row`'s ordinal `ords(k)`; a null
+      * value leaves the field absent. */
+    private def writeFields(row: SpecializedGetters, ords: Array[Int],
+        fieldNames: Array[String], ws: Array[ValueWriter]): Unit = {
+      var k = 0
+      while (k < ords.length) {
+        val i = ords(k)
+        if (!row.isNullAt(i)) {
+          rc.startField(fieldNames(k), k)
+          ws(k)(row, i)
+          rc.endField(fieldNames(k), k)
+        }
+        k += 1
+      }
+    }
+
+    private def valueWriter(dt: DataType): ValueWriter = dt match {
+      case LongType | TimestampType => (r, i) => rc.addLong(r.getLong(i))
+      case IntegerType | DateType => (r, i) => rc.addInteger(r.getInt(i))
+      case DoubleType => (r, i) => rc.addDouble(r.getDouble(i))
+      case FloatType => (r, i) => rc.addFloat(r.getFloat(i))
+      case BooleanType => (r, i) => rc.addBoolean(r.getBoolean(i))
+      case StringType => (r, i) =>
+        rc.addBinary(Binary.fromReusedByteArray(r.getUTF8String(i).getBytes))
+      // DECIMAL(p<=18) as its unscaled long (parquetType refuses p>18)
+      case d: DecimalType => (r, i) =>
+        rc.addLong(r.getDecimal(i, d.precision, d.scale).toUnscaledLong)
+      case st: StructType =>
+        // a flat struct is one group: a NULL struct leaves the group
+        // absent, a null field leaves its slot absent
+        val ords = st.fields.indices.toArray
+        val fieldNames = st.fieldNames
+        val ws = st.fields.map(f => valueWriter(f.dataType))
+        (r, i) => {
+          rc.startGroup()
+          writeFields(r.getStruct(i, st.length), ords, fieldNames, ws)
+          rc.endGroup()
+        }
+      case ArrayType(et, _) =>
+        // standard 3-level LIST: one "list" group per element. An
+        // empty array is the LIST group with no entries, distinct from
+        // the absent group a NULL array leaves; a null element is a
+        // "list" entry with no "element"
+        val ew = valueWriter(et)
+        (r, i) => {
+          val a = r.getArray(i)
+          rc.startGroup()
+          if (a.numElements() > 0) {
+            rc.startField("list", 0)
+            var j = 0
+            while (j < a.numElements()) {
+              rc.startGroup()
+              if (!a.isNullAt(j)) {
+                rc.startField("element", 0)
+                ew(a, j)
+                rc.endField("element", 0)
+              }
+              rc.endGroup()
+              j += 1
+            }
+            rc.endField("list", 0)
+          }
+          rc.endGroup()
+        }
+      case other => throw new IllegalStateException(other.toString)
+    }
   }
 }

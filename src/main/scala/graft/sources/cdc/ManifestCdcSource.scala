@@ -2,10 +2,10 @@ package graft.sources.cdc
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
@@ -556,10 +556,14 @@ private[cdc] case class CdcListOfStruct(
 private[cdc] class CdcPartitionReader(absPath: String, version: Long,
     padCount: Int = 0, expectWidth: Int = -1)
     extends PartitionReader[InternalRow] {
-  private val conf = new Configuration()
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new GroupReadSupport(), new HPath(absPath))
-    .withConf(conf).build()
+  // options from the JVM's one loaded configuration: a path-built
+  // reader creates and loads a fresh Configuration per file
+  private val reader = new ParquetReader.Builder[Group](
+      HadoopInputFile.fromPath(new HPath(absPath),
+        CheckpointCodec.loadedConf)) {
+    override protected def getReadSupport(): ReadSupport[Group] =
+      new GroupReadSupport()
+  }.build()
   // the footer read and the width gate both fire AFTER the builder
   // opened the file — close the reader before any throw or the handle
   // leaks across task retries, the same edge the columnar twin closes

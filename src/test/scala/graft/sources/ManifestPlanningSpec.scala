@@ -1,11 +1,9 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -101,31 +99,8 @@ class ManifestPlanningSpec extends AnyFunSuite {
     }
   }
 
-  /** The frame `build` returns and the number of Spark jobs launched
-    * while building it (jobs of this thread's group only, so a job
-    * another suite left running cannot count). */
-  private def jobsWhile(build: => DataFrame): (DataFrame, Int) = {
-    val sc = spark.sparkContext
-    val group = s"plan-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    GraftListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "planning probe", interruptOnCancel = false)
-    try {
-      val df = build
-      GraftListenerBus.drain(sc)
-      (df, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsWhile(build: => DataFrame): (DataFrame, Int) =
+    GraftListenerBus.jobsWhile(spark.sparkContext)(build)
 
   test("planning readVersionPoint and readVersion on a table without " +
       "a declared schema launches no Spark job") {
@@ -146,5 +121,46 @@ class ManifestPlanningSpec extends AnyFunSuite {
     assert(point.filter(col("id") === 15L).collect().map(_.getLong(0))
       .toSeq == Seq(15L))
     assert(full.count() == 30L)
+  }
+  test("planning readChanges over three appends without a declared " +
+      "schema launches no Spark job, and its rows are the appends'") {
+    val root = newDir("graft_plan_changes")
+    (0 until 3).foreach { b =>
+      ManifestLog.appendChecked(spark,
+        spark.range(b * 10L, b * 10L + 4L).toDF("id").coalesce(1),
+        root, s"data/b$b", statsCols = Seq("id"))
+    }
+    val v = ManifestLog.latestVersion(root).get
+    assert(ManifestLog.snapshot(root, v).declaredSchema.isEmpty)
+    val (changes, jobs) =
+      jobsWhile(ManifestLog.readChanges(spark, root, -1, v))
+    assert(jobs == 0, s"readChanges planning launched $jobs jobs")
+    assert(changes.columns.toSeq == Seq("_commit_version", "id"))
+    val versions = ManifestLog.versions(root).sorted
+    assert(changes.collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sorted.toSeq == (0 until 3).flatMap(b =>
+        (b * 10L until b * 10L + 4L).map(id => (versions(b), id))))
+  }
+
+  test("readChanges across an additive evolution plans every version " +
+      "under the newest declared schema: older rows read NULL") {
+    import spark.implicits._
+    val root = newDir("graft_plan_changes_evo")
+    Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
+      .coalesce(1).write.parquet(s"$root/data/v0")
+    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+      Seq.empty, "write", schemaDdl = Some("k BIGINT, v BIGINT"))
+    Seq((3L, 30L, 300L)).toDF("k", "v", "w")
+      .coalesce(1).write.parquet(s"$root/data/v1")
+    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+      Seq.empty, "evolve", schemaDdl = Some("k BIGINT, v BIGINT, w BIGINT"))
+    val (changes, jobs) =
+      jobsWhile(ManifestLog.readChanges(spark, root, -1, 1))
+    assert(jobs == 0)
+    assert(changes.columns.toSeq == Seq("_commit_version", "k", "v", "w"))
+    assert(changes.collect().map(r => (r.getLong(0), r.getLong(1),
+        r.getLong(2), if (r.isNullAt(3)) -1L else r.getLong(3)))
+      .sortBy(_._2).toSeq ==
+      Seq((0L, 1L, 10L, -1L), (0L, 2L, 20L, -1L), (1L, 3L, 30L, 300L)))
   }
 }

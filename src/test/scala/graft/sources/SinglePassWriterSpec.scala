@@ -53,6 +53,18 @@ class SinglePassWriterSpec extends AnyFunSuite {
     assert(pruned.size == 1, pruned)
   }
 
+  test("one write pass is one Spark job, whatever the partition count") {
+    val root = newRoot()
+    val df = spark.range(0, 1000, 1, 4).selectExpr("id",
+      "concat('s', id % 7) AS s", "id / 3.0D AS d")
+    val (summaries, jobs) = org.apache.spark.GraftListenerBus
+      .jobsWhile(spark.sparkContext)(SinglePassWriter.writeFiles(df, root,
+        "data/v0", statsCols = Seq("id", "d"), bloomCol = Some("s"),
+        strStatsCols = Seq("s")))
+    assert(jobs == 1)
+    assert(summaries.size == 4 && summaries.map(_.n).sum == 1000)
+  }
+
   test("empty partitions write no file; stats skip null-only values") {
     import spark.implicits._
     val root = newRoot()
@@ -93,6 +105,40 @@ class SinglePassWriterSpec extends AnyFunSuite {
       .filter(col("d") >= org.apache.spark.sql.functions.lit("2024-05-01")
         .cast(org.apache.spark.sql.types.DateType))
       .count() == 20)
+  }
+
+  test("pre-1582 timestamps and dates land as Spark's own µs and day " +
+      "numbers, in the file and in the committed stats") {
+    val root = newRoot()
+    val df = spark.sql("SELECT 1L AS k, " +
+      "timestamp'1500-03-01 12:00:00.123456' AS t, date'1500-03-01' AS d")
+    val Seq(micros, day) = spark.sql("SELECT unix_micros(" +
+      "timestamp'1500-03-01 12:00:00.123456'), " +
+      "CAST(unix_date(date'1500-03-01') AS BIGINT)").head().toSeq
+    assert(micros == -14826628799876544L)
+    SinglePassWriter.writeCommit(df, root, "data/v0", 0,
+      statsCols = Seq("t", "d"))
+    val stats = ManifestLog.snapshot(root, 0).colStats.values.head
+    assert(stats("t") == ManifestLog.FileStat(-14826628799876544L,
+      -14826628799876544L))
+    assert(stats("d") == ManifestLog.FileStat(day.asInstanceOf[Long],
+      day.asInstanceOf[Long]))
+    val file = ManifestLog.filesAsOf(root, 0).head
+    val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+        new org.apache.parquet.hadoop.example.GroupReadSupport(),
+        new org.apache.hadoop.fs.Path(new java.io.File(root, file).toURI))
+      .build()
+    val g = try reader.read() finally reader.close()
+    assert(g.getLong("t", 0) == -14826628799876544L)
+    assert(g.getInteger("d", 0).toLong == day)
+    // the file carries no Spark version, so its values are read as
+    // written under the CORRECTED rebase mode
+    val key = "spark.sql.parquet.datetimeRebaseModeInRead"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "CORRECTED")
+    try assert(ManifestLog.readVersion(spark, root, 0).collect().toSeq ==
+      df.collect().toSeq)
+    finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("decimal(p<=18) round-trips exactly as INT64 unscaled; " +

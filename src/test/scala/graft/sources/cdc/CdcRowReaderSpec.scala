@@ -146,4 +146,47 @@ class CdcRowReaderSpec extends AnyFunSuite {
     // matching width constructs fine
     new CdcPartitionReader(abs, 0L, 0, expectWidth = 3).close()
   }
+  test("a micro-batch through the row reader shares the JVM's loaded " +
+      "configuration: its entries stay unchanged and the rows equal " +
+      "the columnar reader's") {
+    import scala.jdk.CollectionConverters._
+    val root = graft.TempDirs.deleteOnExit(java.nio.file.Files
+      .createTempDirectory("graft_cdc_conf")).toString
+    (0 until 2).foreach { b =>
+      graft.sources.ManifestLog.appendChecked(spark,
+        spark.range(b * 5L, b * 5L + 5L)
+          .selectExpr("id", "concat('t', id) AS tag").coalesce(1),
+        root, s"data/b$b")
+    }
+    val conf = graft.sources.CheckpointCodec.loadedConf
+    def entries: Map[String, String] =
+      conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val before = entries
+    val stream = new ManifestCdcStream(root, -1L, None)
+    val start = stream.initialOffset()
+    val parts = stream.planInputPartitions(start,
+      stream.latestOffset(start, stream.getDefaultReadLimit)).toSeq
+    val factory = stream.createReaderFactory()
+    val rows = parts.flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r).takeWhile(_.next()).map(_.get())
+        .map(x => (x.getLong(0), x.getUTF8String(1).toString, x.getLong(2)))
+        .toList
+      finally r.close()
+    }
+    val columnar = parts.flatMap { p =>
+      val r = factory.createColumnarReader(p)
+      try Iterator.continually(r).takeWhile(_.next())
+        .flatMap(_.get().rowIterator().asScala)
+        .map(x => (x.getLong(0), x.getUTF8String(1).toString, x.getLong(2)))
+        .toList
+      finally r.close()
+    }
+    val versions = graft.sources.ManifestLog.versions(root).sorted
+    assert(rows.sorted == (0L until 10L).map(id =>
+      (id, s"t$id", versions((id / 5).toInt))))
+    assert(columnar.sorted == rows.sorted)
+    assert(entries == before, "the micro-batch changed the shared " +
+      "configuration")
+  }
 }
