@@ -446,8 +446,8 @@ object SinglePassWriter {
     * INT32 small decimals, Spark footer keys — this format does not
     * use). The events are the ones parquet's example Group writer
     * emitted for the same rows, and the model name stays `example`, so
-    * files are byte-identical to that writer's. Values are written as
-    * Spark holds them: a timestamp is its µs long, a date its day
+    * the data pages and footer equal that writer's. Values are written
+    * as Spark holds them: a timestamp is its µs long, a date its day
     * number, a string its UTF-8 bytes. */
   private final class RowWriteSupport(schema: StructType,
       dataIdx: Array[Int], message: MessageType)
