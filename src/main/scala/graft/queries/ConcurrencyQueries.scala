@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.GraftQuery
 import graft.sources.ManifestLog
+import graft.sources.ManifestLog.{AddFile, Commit}
 import graft.sources.Readers.table
 
 /** Multi-writer commit protocol as a registered operator (r16): the
@@ -49,8 +50,7 @@ object ConcurrencyQueries {
           def run(): Unit = {
             latch.await()
             versions.add(ManifestLog.commitSerializable(root,
-              readVersion = -1L, adds = adds(i), removes = Seq.empty,
-              op = "append"))
+              readVersion = -1L, Commit("append", adds(i).map(AddFile(_)))))
           }
         })
       }
@@ -121,9 +121,8 @@ object ConcurrencyQueries {
       val summaries = SinglePassWriter.writeFiles(
         flatEvents(s, dir).repartitionByRange(8, col("user_id")),
         root, "data/v0", statsCols = Seq("user_id"))
-      ManifestLog.commit(root, 0, summaries.map(_.rel),
-        Seq.empty, op = "write",
-        colStats = SinglePassWriter.colStatsOf(summaries, Seq("user_id")))
+      ManifestLog.commit(root, 0, Commit("write",
+        SinglePassWriter.addFiles(summaries, Seq("user_id"))))
       val latch = new CountDownLatch(1)
       val pool = Executors.newFixedThreadPool(2)
       val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -203,9 +202,8 @@ object ConcurrencyQueries {
       val summaries = SinglePassWriter.writeFiles(
         flatEvents(s, dir).repartitionByRange(8, col("user_id")),
         root, "data/v0", statsCols = Seq("user_id"))
-      ManifestLog.commit(root, 0, summaries.map(_.rel),
-        Seq.empty, op = "write",
-        colStats = SinglePassWriter.colStatsOf(summaries, Seq("user_id")))
+      ManifestLog.commit(root, 0, Commit("write",
+        SinglePassWriter.addFiles(summaries, Seq("user_id"))))
       val latch = new CountDownLatch(1)
       val pool = Executors.newFixedThreadPool(2)
       val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -238,7 +236,8 @@ object ConcurrencyQueries {
       // (old ∪ new per file), so the final dead count is BOTH matched
       // sets — an illegal rebase would have replaced the winner's
       // vectors and resurrected its matched rows
-      val dead = ManifestLog.snapshot(root, 2).dvs.values.map(_.nDeleted).sum
+      val dead = ManifestLog.snapshot(root, 2).live.values
+        .flatMap(_.dv).map(_.nDeleted).sum
       val expect = flatEvents(s, dir)
         .filter(col("event_id") % 10 === 2 || col("event_id") % 10 === 7)
         .count()

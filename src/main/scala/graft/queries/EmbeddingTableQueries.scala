@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.GraftQuery
 import graft.ops.VectorOps
 import graft.sources.ManifestLog
+import graft.sources.ManifestLog.Commit
 import graft.sources.Readers.table
 
 /** EMBEDDING COLUMNS IN THE MANIFEST TABLE PATH (r19; the r18
@@ -41,9 +42,9 @@ object EmbeddingTableQueries {
     graft.TempDirs.cachedDir("graft_embtable", dir) { root =>
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), col("label"))
-      ManifestLog.commit(root, 0, Seq.empty, Seq.empty, op = "declare",
+      ManifestLog.commit(root, 0, Commit("declare",
         schemaDdl = Some("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"),
-        checks = Some(Seq("vid_nn" -> "vec_id IS NOT NULL")))
+        checks = Some(Seq("vid_nn" -> "vec_id IS NOT NULL"))))
       ManifestLog.appendChecked(s,
         e.filter(col("vec_id") % 2 === 0)
           .repartitionByRange(4, col("vec_id")),
@@ -166,9 +167,8 @@ object EmbeddingTableQueries {
       val src = graft.TempDirs.cachedDir("graft_embrepsrc", dir) { r =>
         val e = table(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"), col("label"))
-        ManifestLog.commit(r, 0, Seq.empty, Seq.empty, op = "declare",
-          schemaDdl =
-            Some("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"))
+        ManifestLog.commit(r, 0, Commit("declare", schemaDdl =
+          Some("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")))
         ManifestLog.appendChecked(s,
           e.filter(col("vec_id") % 2 === 0)
             .repartitionByRange(4, col("vec_id")),
@@ -192,10 +192,9 @@ object EmbeddingTableQueries {
         val sums = graft.sources.SinglePassWriter.writeFiles(
           rewrite.repartitionByRange(2, col("vec_id")), src, "data/rw3",
           statsCols = Seq("vec_id"))
-        ManifestLog.commit(src, 3L, sums.map(_.rel), touched,
-          "rewrite", colStats = graft.sources.SinglePassWriter
-            .colStatsOf(sums, Seq("vec_id")),
-          attest = true)
+        ManifestLog.commit(src, 3L, Commit("rewrite",
+          graft.sources.SinglePassWriter.addFiles(sums, Seq("vec_id")),
+          removes = touched), attest = true)
         // sync 2: must rewrite ONLY key-intersecting mirror files
         ManifestLog.replicateTo(s, src, d, keys = Seq("vec_id"))
       }
@@ -233,10 +232,10 @@ object EmbeddingTableQueries {
           .select(col("doc_id"),
             struct(col("lang"), col("source"), col("n_chars"))
               .as("meta"))
-        ManifestLog.commit(r, 0, Seq.empty, Seq.empty, op = "declare",
+        ManifestLog.commit(r, 0, Commit("declare",
           schemaDdl = Some("doc_id BIGINT, meta STRUCT<lang: STRING, " +
             "source: STRING, n_chars: BIGINT>"),
-          checks = Some(Seq("did_nn" -> "doc_id IS NOT NULL")))
+          checks = Some(Seq("did_nn" -> "doc_id IS NOT NULL"))))
         ManifestLog.appendChecked(s,
           d.filter(col("doc_id") % 2 === 0)
             .repartitionByRange(4, col("doc_id")),
@@ -302,10 +301,10 @@ object EmbeddingTableQueries {
             "'span_end', i * 10 + n_chars % 10, " +
             "'label', CASE WHEN i % 2 = 1 THEN CAST(NULL AS STRING) " +
             "ELSE concat('s', i) END)) END").as("spans"))
-        ManifestLog.commit(r, 0, Seq.empty, Seq.empty, op = "declare",
+        ManifestLog.commit(r, 0, Commit("declare",
           schemaDdl = Some("doc_id BIGINT, spans ARRAY<STRUCT<" +
             "span_start: BIGINT, span_end: BIGINT, label: STRING>>"),
-          checks = Some(Seq("did_nn" -> "doc_id IS NOT NULL")))
+          checks = Some(Seq("did_nn" -> "doc_id IS NOT NULL"))))
         ManifestLog.appendChecked(s,
           d.filter(col("doc_id") % 2 === 0)
             .repartitionByRange(4, col("doc_id")),
@@ -356,10 +355,10 @@ object EmbeddingTableQueries {
       val cent = KMeans.train(pts, k = 16, iters = 2, dims = 64)
       val cells = KMeans.assign(pts, cent)
         .select(col("vec_id"), col("cid").as("cell"))
-      ManifestLog.commit(root, 0, Seq.empty, Seq.empty, op = "declare",
+      ManifestLog.commit(root, 0, Commit("declare",
         schemaDdl = Some("vec_id BIGINT, embedding ARRAY<FLOAT>, " +
           "label INT, cell BIGINT"),
-        checks = Some(Seq("vid_nn" -> "vec_id IS NOT NULL")))
+        checks = Some(Seq("vid_nn" -> "vec_id IS NOT NULL"))))
       ManifestLog.appendChecked(s,
         e.join(cells, "vec_id")
           .select(col("vec_id"), col("embedding"), col("label"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.GraftQuery
 import graft.sources.ManifestLog
+import graft.sources.ManifestLog.{AddFile, Commit}
 import graft.sources.Readers.table
 
 /** Log-carried SCHEMA EVOLUTION + TIMESTAMP time travel (r16): the two
@@ -44,17 +45,19 @@ object EvolutionQueries {
       ev.filter(col("event_id") % 4 <= 1)
         .groupBy("user_id").agg(count(lit(1)).as("n_events"))
         .coalesce(2).write.parquet(s"$root/data/v0")
-      ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
-        Seq.empty, op = "write", commitMs = Some(1000L),
-        schemaDdl = Some("user_id BIGINT, n_events BIGINT"))
+      ManifestLog.commit(root, 0, Commit("write",
+        ManifestLog.partFiles(root, "data/v0").map(AddFile(_)),
+        commitMs = Some(1000L),
+        schemaDdl = Some("user_id BIGINT, n_events BIGINT")))
       ev.filter(col("event_id") % 4 >= 2)
         .groupBy("user_id").agg(count(lit(1)).as("n_events"),
           dsum(col("value")).as("sum_value"))
         .coalesce(2).write.parquet(s"$root/data/v1")
-      ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
-        Seq.empty, op = "evolve", commitMs = Some(2000L),
+      ManifestLog.commit(root, 1, Commit("evolve",
+        ManifestLog.partFiles(root, "data/v1").map(AddFile(_)),
+        commitMs = Some(2000L),
         schemaDdl = Some(
-          "user_id BIGINT, n_events BIGINT, sum_value DOUBLE"))
+          "user_id BIGINT, n_events BIGINT, sum_value DOUBLE")))
     }
 
   private val evolution = GraftQuery(
@@ -136,8 +139,9 @@ object EvolutionQueries {
       val base = ev.filter(col("event_id") % 4 <= 1)
       ManifestLog.requireSatisfies(base, constraints.toMap)
       base.coalesce(2).write.parquet(s"$root/data/v0")
-      ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
-        Seq.empty, op = "write", checks = Some(constraints))
+      ManifestLog.commit(root, 0, Commit("write",
+        ManifestLog.partFiles(root, "data/v0").map(AddFile(_)),
+        checks = Some(constraints)))
       // a clean append validates against the set IN FORCE at its
       // snapshot, then commits through the serializable protocol
       val batch = ev.filter(col("event_id") % 4 >= 2)
@@ -148,8 +152,9 @@ object EvolutionQueries {
       // stats-less adds on a constrained table without it —
       // appendChecked is the one-call form of this sequence)
       ManifestLog.commitSerializable(root, readVersion = 0,
-        adds = ManifestLog.partFiles(root, "data/v1"),
-        removes = Seq.empty, op = "append", attest = true)
+        Commit("append",
+          ManifestLog.partFiles(root, "data/v1").map(AddFile(_))),
+        attest = true)
       // the poisoned batch must die at validation, before any land
       val poison = ev.limit(10)
         .withColumn("value",

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
+import graft.sources.ManifestLog
+import graft.sources.ManifestLog.{AddFile, Commit, FileStat}
 import graft.sources.Readers.table
 
 /** Data-lake maintenance operators (the category this engine lives in):
@@ -431,7 +433,8 @@ object MaintenanceQueries {
         // itself maintains the fold (here: at v2) — the explicit
         // writeCheckpoint in lake_snapshot_checkpoint is then the
         // idempotent republication the spec pins
-        ManifestLog.commit(root, b, adds, removes, op = "merge",
+        ManifestLog.commit(root, b,
+          Commit("merge", adds.map(AddFile(_)), removes = removes),
           policy = Some(ManifestLog.CheckpointPolicy(every = 2)))
       }
     }
@@ -626,21 +629,21 @@ object MaintenanceQueries {
   // Manifest-level DATA SKIPPING + stats-pruned copy-on-write MERGE.
   // -------------------------------------------------------------------
 
-  /** Relative paths + per-file [min, max] of `statCol` for the parquet
-    * files under `root/$sub`, computed in ONE distributed pass keyed by
-    * `input_file_name()`. The collect is bounded by the FILE count of
-    * the commit (here 8; a production writer emits these stats inline
-    * from its own write buffers and collects nothing). */
+  /** The parquet files under `root/$sub` as add records carrying
+    * per-file [min, max] of `statCol`, computed in ONE distributed pass
+    * keyed by `input_file_name()`. The collect is bounded by the FILE
+    * count of the commit (here 8; a production writer emits these
+    * stats inline from its own write buffers and collects nothing). */
   private def fileStats(s: SparkSession, root: String, sub: String,
-      statCol: String): Map[String, graft.sources.ManifestLog.FileStat] = {
-    import graft.sources.ManifestLog.FileStat
-    s.read.parquet(s"$root/$sub")
+      statCol: String): Seq[AddFile] = {
+    val st = s.read.parquet(s"$root/$sub")
       .groupBy(input_file_name().as("f"))
       .agg(min(col(statCol)).cast(LongType).as("lo"),
         max(col(statCol)).cast(LongType).as("hi"))
       .collect()
       .map(r => s"$sub/${r.getString(0).split('/').last}" ->
         FileStat(r.getLong(1), r.getLong(2))).toMap
+    ManifestLog.partFiles(root, sub).map(f => AddFile(f, stat = st.get(f)))
   }
 
   /** Events flattened to the (user_id, event_id, ts_us, value) shape
@@ -654,13 +657,11 @@ object MaintenanceQueries {
     * of every column in `cols`, one distributed pass. Same bounded
     * collect (file count of the commit). */
   private def fileColStats(s: SparkSession, root: String, sub: String,
-      cols: Seq[String])
-      : Map[String, Map[String, graft.sources.ManifestLog.FileStat]] = {
-    import graft.sources.ManifestLog.FileStat
+      cols: Seq[String]): Seq[AddFile] = {
     val aggs = cols.flatMap(c => Seq(
       min(col(c)).cast(LongType).as(s"lo_$c"),
       max(col(c)).cast(LongType).as(s"hi_$c")))
-    s.read.parquet(s"$root/$sub")
+    val cs = s.read.parquet(s"$root/$sub")
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -670,6 +671,8 @@ object MaintenanceQueries {
             r.getLong(r.fieldIndex(s"lo_$c")),
             r.getLong(r.fieldIndex(s"hi_$c")))).toMap
       }.toMap
+    ManifestLog.partFiles(root, sub).map(f =>
+      AddFile(f, colStats = cs.getOrElse(f, Map.empty)))
   }
 
   /** A stats-bearing single-commit events table: v0 is the flat events
@@ -681,9 +684,8 @@ object MaintenanceQueries {
       import graft.sources.ManifestLog
       flatEvents(s, dir).repartitionByRange(8, col("user_id"))
         .write.parquet(s"$root/data/v0")
-      val adds = ManifestLog.partFiles(root, "data/v0")
-      ManifestLog.commit(root, 0, adds, Seq.empty, op = "write",
-        stats = fileStats(s, root, "data/v0", "user_id"))
+      ManifestLog.commit(root, 0,
+        Commit("write", fileStats(s, root, "data/v0", "user_id")))
     }
 
   private val manifestSkipping = GraftQuery(
@@ -756,7 +758,8 @@ object MaintenanceQueries {
         val removes =
           if (b == 0) Seq.empty[String]
           else ManifestLog.partFiles(root, s"data/v${b - 1}")
-        ManifestLog.commit(root, b, adds, removes, op = "merge",
+        ManifestLog.commit(root, b,
+          Commit("merge", adds.map(AddFile(_)), removes = removes),
           policy = Some(ManifestLog.CheckpointPolicy(every = 2)))
       }
       // the crashed writer: landed, never committed
@@ -886,15 +889,16 @@ object MaintenanceQueries {
         .select(col("user_id"), col("event_id"), col("ts_us"),
           col("value"))
         .write.parquet(s"$root/data/v0")
-      val adds = ManifestLog.partFiles(root, "data/v0")
       // one commit, two index classes: range stats on the clustered
       // box columns, bloom sidecars on the UNclustered event_id (the
       // point-lookup column range stats cannot serve — every file's
       // event_id interval spans nearly the whole domain here)
-      ManifestLog.commit(root, 0, adds, Seq.empty, op = "write",
-        colStats = fileColStats(s, root, "data/v0",
-          Seq("user_id", "ts_us")),
-        blooms = fileBlooms(s, root, "data/v0", "event_id"))
+      // stats first: the bloom sidecars land beside the data files,
+      // where a directory read would take them for parquet
+      val stats = fileColStats(s, root, "data/v0", Seq("user_id", "ts_us"))
+      val blooms = fileBlooms(s, root, "data/v0", "event_id")
+      ManifestLog.commit(root, 0, Commit("write", stats.map(a =>
+        a.copy(blooms = blooms.getOrElse(a.path, Map.empty)))))
     }
 
   private val skippingMulticol = GraftQuery(
@@ -992,8 +996,8 @@ object MaintenanceQueries {
         .write.parquet(s"$root/data/v0")
       val smalls = ManifestLog.partFiles(root, "data/v0")
       require(smalls.size == 16, s"expected 16 small files: $smalls")
-      ManifestLog.commit(root, 0, smalls, Seq.empty, op = "write",
-        stats = fileStats(s, root, "data/v0", "user_id"))
+      ManifestLog.commit(root, 0,
+        Commit("write", fileStats(s, root, "data/v0", "user_id")))
       // OPTIMIZE: same rows, 4 range-clustered files, stats recomputed
       ManifestLog.readVersion(s, root, 0)
         .repartitionByRange(4, col("user_id"))
@@ -1001,8 +1005,8 @@ object MaintenanceQueries {
       val packed = ManifestLog.partFiles(root, "data/v1")
       require(packed.size < smalls.size,
         s"optimize must reduce file count: ${packed.size}")
-      ManifestLog.commit(root, 1, packed, removes = smalls,
-        op = "optimize", stats = fileStats(s, root, "data/v1", "user_id"))
+      ManifestLog.commit(root, 1, Commit("optimize",
+        fileStats(s, root, "data/v1", "user_id"), removes = smalls))
       // retention + GC: fold v1, prune v0's manifest, reclaim smalls
       ManifestLog.writeCheckpoint(root, 1)
       graft.sources.ManifestLog.storeFor(root).delete(f"${0L}%020d.json")
@@ -1025,9 +1029,8 @@ object MaintenanceQueries {
       val ev = flatEvents(s, dir)
       ev.repartition(16, col("event_id")).write.parquet(s"$root/data/v0")
       val smalls = ManifestLog.partFiles(root, "data/v0")
-      ManifestLog.commit(root, 0, smalls, Seq.empty, op = "write",
-        colStats = fileColStats(s, root, "data/v0",
-          Seq("user_id", "ts_us")))
+      ManifestLog.commit(root, 0, Commit("write",
+        fileColStats(s, root, "data/v0", Seq("user_id", "ts_us"))))
       val box = Seq(("user_id", 1L, 8L), ("ts_us", BoxTsLo, BoxTsHi))
       require(ManifestLog.filesMatchingCols(
         ManifestLog.snapshot(root, 0), box).size ==
@@ -1054,10 +1057,9 @@ object MaintenanceQueries {
           col("value"))
       val summaries = SinglePassWriter.writeFiles(clustered, root,
         "data/v1", statsCols = Seq("user_id", "ts_us"))
-      ManifestLog.commit(root, 1, adds = summaries.map(_.rel),
-        removes = smalls, op = "optimize-zorder",
-        colStats = SinglePassWriter.colStatsOf(summaries,
-          Seq("user_id", "ts_us")))
+      ManifestLog.commit(root, 1, Commit("optimize-zorder",
+        SinglePassWriter.addFiles(summaries, Seq("user_id", "ts_us")),
+        removes = smalls))
       // strict improvement at every sf; at the tracked sfs the box
       // keeps a small minority (1-3 of 8) — the multiplicative prune
       // a z-layout exists for, but tiny corpora (sf0.001 spans few
@@ -1144,7 +1146,7 @@ object MaintenanceQueries {
     doc = "INCREMENTAL CHANGE-FEED READ (r15) - the consumption half " +
       "of the exactly-once sink: a downstream consumer that has " +
       "processed up to version 1 of stream_manifest_sink's table " +
-      "reads ONLY the version tail (1, 3] - changesBetween resolves " +
+      "reads ONLY the version tail (1, 3] - readChanges resolves " +
       "each tail version's adds from its manifest (metadata first), " +
       "then reads just those files' data stamped with " +
       "_commit_version (Delta's startingVersion read / Iceberg " +
@@ -1186,9 +1188,8 @@ object MaintenanceQueries {
         .withColumn("cohort", pmod(col("event_id"), lit(4)))
         .repartition(2, col("user_id"))
         .write.partitionBy("cohort").parquet(s"$root/data/v0")
-      ManifestLog.commit(root, 0,
-        ManifestLog.partFilesRecursive(root, "data/v0"), Seq.empty,
-        op = "write")
+      ManifestLog.commit(root, 0, Commit("write",
+        ManifestLog.partFilesRecursive(root, "data/v0").map(AddFile(_))))
     }
 
   private val snapshotPartitioned = GraftQuery(
@@ -1397,9 +1398,8 @@ object MaintenanceQueries {
           .as("latest"), count(lit(1)).as("n_events"))
       base.repartitionByRange(8, col("user_id"))
         .write.parquet(s"$root/data/v0")
-      ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
-        Seq.empty, op = "write",
-        stats = fileStats(s, root, "data/v0", "user_id"))
+      ManifestLog.commit(root, 0,
+        Commit("write", fileStats(s, root, "data/v0", "user_id")))
 
       val source = ev.filter(col("event_id") % 4 === 3 &&
           col("user_id").between(MergeLo, MergeHi))
@@ -1427,9 +1427,8 @@ object MaintenanceQueries {
             coalesce(col("s_n"), lit(0L))).as("n_events"))
       merged.repartitionByRange(4, col("user_id"))
         .write.parquet(s"$root/data/v1")
-      val adds = ManifestLog.partFiles(root, "data/v1")
-      ManifestLog.commit(root, 1, adds, removes = touched, op = "merge",
-        stats = fileStats(s, root, "data/v1", "user_id"))
+      ManifestLog.commit(root, 1, Commit("merge",
+        fileStats(s, root, "data/v1", "user_id"), removes = touched))
     }
 
   private val mergeCow = GraftQuery(
@@ -1491,15 +1490,14 @@ object MaintenanceQueries {
       val ev = flatEvents(s, dir)
       ev.filter(col("event_id") % 2 === 0)
         .coalesce(2).write.parquet(s"$root/data/v0")
-      ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
-        Seq.empty, op = "write")
+      ManifestLog.commit(root, 0, Commit("write",
+        ManifestLog.partFiles(root, "data/v0").map(AddFile(_))))
       ev.filter(col("event_id") % 2 === 1)
         .withColumn("day",
           date_format(timestamp_micros(col("ts_us")), "yyyy-MM-dd"))
         .write.partitionBy("day").parquet(s"$root/data/v1")
-      ManifestLog.commit(root, 1,
-        ManifestLog.partFilesRecursive(root, "data/v1"), Seq.empty,
-        op = "evolve-partitioning")
+      ManifestLog.commit(root, 1, Commit("evolve-partitioning",
+        ManifestLog.partFilesRecursive(root, "data/v1").map(AddFile(_))))
       val t = ManifestLog.readVersionHive(s, root, 1)
       val preRows = ev.filter(col("event_id") % 2 === 0).count()
       require(t.filter(col("day").isNull).count() == preRows,
@@ -1563,8 +1561,8 @@ object MaintenanceQueries {
       require(locals.nonEmpty &&
         ManifestLog.filesAsOf(dst, 1).forall(!_.startsWith("/")),
         "materialization must leave zero absolute references")
-      require(locals.forall(f => ManifestLog.snapshot(dst, 1).colStats
-          .get(f).exists(_.contains("user_id"))),
+      require(locals.forall(f =>
+          ManifestLog.snapshot(dst, 1).live(f).colStats.contains("user_id")),
         "the rewrite must re-commit prunable stats")
       val dvs = ManifestLog.deleteWhereMor(s, dst, 1, 2,
         col("event_id") % 13 === 1)
@@ -1634,17 +1632,16 @@ object MaintenanceQueries {
       require(doomed.nonEmpty && doomed.size <
         ManifestLog.filesAsOf(root, 0).size,
         s"the correction must touch a strict file subset: $doomed")
-      val cs = ManifestLog.snapshot(root, 0).colStats
+      val r0 = ManifestLog.snapshot(root, 0)
       val cond = doomed.map { f =>
-        val st = cs(f)("user_id")
+        val st = r0.live(f).colStats("user_id")
         col("user_id").between(st.min, st.max)
       }.reduce(_ || _)
       val fixed = SinglePassWriter.writeFiles(
         ev.filter(cond).repartitionByRange(1, col("user_id")),
         root, "data/v1", statsCols = Seq("user_id"))
-      ManifestLog.commit(root, 1, adds = fixed.map(_.rel),
-        removes = doomed, op = "rewrite",
-        colStats = SinglePassWriter.colStatsOf(fixed, Seq("user_id")))
+      ManifestLog.commit(root, 1, Commit("rewrite",
+        SinglePassWriter.addFiles(fixed, Seq("user_id")), removes = doomed))
       // the lifecycle: resolvable history pins the bytes ...
       require(ManifestLog.vacuum(root, dryRun = true).isEmpty,
         "nothing may be sweepable while every version resolves")

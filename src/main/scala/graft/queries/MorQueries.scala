@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.GraftQuery
 import graft.sources.ManifestLog
+import graft.sources.ManifestLog.{AddFile, Commit}
 import graft.sources.Readers.table
 
 /** MERGE-ON-READ operators over the manifest log (r16): deletion
@@ -83,8 +84,9 @@ object MorQueries {
         .map(r => s"data/v0/${r.getString(0).split('/').last}" ->
           Map("user_id" -> ManifestLog.FileStat(r.getLong(1), r.getLong(2))))
         .toMap
-      ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
-        Seq.empty, op = "write", colStats = colStats)
+      ManifestLog.commit(root, 0, Commit("write",
+        ManifestLog.partFiles(root, "data/v0").map(f =>
+          AddFile(f, colStats = colStats.getOrElse(f, Map.empty)))))
 
       // v1: MOR delete — sidecars only, data files untouched
       val dvs1 = ManifestLog.deleteWhereMor(s, root, 0, 1,
@@ -110,15 +112,14 @@ object MorQueries {
         .write.parquet(s"$root/data/v2")
       val r1 = ManifestLog.snapshot(root, 1)
       val candidates = r1.files.filter(f =>
-        r1.colStats.getOrElse(f, Map.empty).get("user_id")
+        r1.live(f).colStats.get("user_id")
           .forall(st => st.max >= MrgLo && st.min <= MrgHi))
       val dvs2 =
         if (candidates.isEmpty) Map.empty[String, ManifestLog.DvRef]
         else ManifestLog.buildDvs(s, root, r1, 2, candidates,
           _.filter(matched))
-      ManifestLog.commit(root, 2,
-        adds = ManifestLog.partFiles(root, "data/v2"), removes = Seq.empty,
-        op = "merge", dvs = dvs2)
+      ManifestLog.commit(root, 2, Commit("merge",
+        ManifestLog.partFiles(root, "data/v2").map(AddFile(_)), dvs = dvs2))
 
       // v3: DV compaction — rewrite vectored files WITH fresh stats
       // (the single-pass rewrite restores the skipping the old files'
@@ -126,10 +127,10 @@ object MorQueries {
       val rewritten = ManifestLog.compactDvs(s, root, 2, 3,
         statsCols = Seq("user_id"))
       require(rewritten.nonEmpty, "compaction must rewrite vectored files")
-      require(ManifestLog.snapshot(root, 3).dvs.isEmpty,
+      val r3 = ManifestLog.snapshot(root, 3)
+      require(r3.live.values.forall(_.dv.isEmpty),
         "compaction must drop every deletion vector from the live state")
-      require(rewritten.forall(f => ManifestLog.snapshot(root, 3).colStats
-          .get(f).exists(_.contains("user_id"))),
+      require(rewritten.forall(f => r3.live(f).colStats.contains("user_id")),
         "single-pass compaction must re-commit user_id stats")
     }
 
@@ -327,8 +328,8 @@ object MorQueries {
           .groupBy("user_id").agg(count(lit(1)).as("n_events"))
           .repartitionByRange(3, col("user_id")),
         root, "data/v0", 0, statsCols = Seq("user_id"))
-      ManifestLog.commit(root, 1, Seq.empty, Seq.empty, op = "alter",
-        schemaDdl = Some("user_id BIGINT, n_events BIGINT"))
+      ManifestLog.commit(root, 1, Commit("alter",
+        schemaDdl = Some("user_id BIGINT, n_events BIGINT")))
     }
     val dst = graft.TempDirs.cachedDir("graft_evorep_dst", dir) { root =>
       ManifestLog.replicateTo(s, src, root, keys = Seq("user_id"))
@@ -342,12 +343,10 @@ object MorQueries {
           .repartitionByRange(2, col("user_id")),
         src, "data/v2", statsCols = Seq("user_id")) match {
         case summaries =>
-          ManifestLog.commit(src, 2, adds = summaries.map(_.rel),
-            removes = Seq.empty, op = "evolve",
-            colStats = graft.sources.SinglePassWriter.colStatsOf(
-              summaries, Seq("user_id")),
+          ManifestLog.commit(src, 2, Commit("evolve",
+            graft.sources.SinglePassWriter.addFiles(summaries, Seq("user_id")),
             schemaDdl = Some(
-              "user_id BIGINT, n_events BIGINT, sum_value DOUBLE"))
+              "user_id BIGINT, n_events BIGINT, sum_value DOUBLE")))
       }
       ManifestLog.replicateTo(s, src, root, keys = Seq("user_id"))
       // the mirror now mixes generations and must read with NULL
@@ -369,10 +368,9 @@ object MorQueries {
           .repartitionByRange(3, col("user_id")),
         src, "data/v3", statsCols = Seq("user_id")) match {
         case summaries =>
-          ManifestLog.commit(src, 3, adds = summaries.map(_.rel),
-            removes = gen1, op = "rewrite",
-            colStats = graft.sources.SinglePassWriter.colStatsOf(
-              summaries, Seq("user_id")), attest = true)
+          ManifestLog.commit(src, 3, Commit("rewrite",
+            graft.sources.SinglePassWriter.addFiles(summaries, Seq("user_id")),
+            removes = gen1), attest = true)
       }
       ManifestLog.replicateTo(s, src, root, keys = Seq("user_id"))
     }
@@ -551,8 +549,8 @@ object MorQueries {
       base.filter(col("user_id") <= 3)
         .withColumn("user_id", col("user_id") + 100000L)
         .coalesce(1).write.parquet(s"$root/data/v2")
-      ManifestLog.commit(root, 2,
-        ManifestLog.partFiles(root, "data/v2"), Seq.empty, op = "write")
+      ManifestLog.commit(root, 2, Commit("write",
+        ManifestLog.partFiles(root, "data/v2").map(AddFile(_))))
       val filesOnDisk =
         ManifestLog.partFilesRecursive(root, "data").size
       val v = ManifestLog.restoreTo(root, 0)
@@ -561,16 +559,17 @@ object MorQueries {
       require(ManifestLog.filesAsOf(root, 3).toSet ==
         ManifestLog.filesAsOf(root, 0).toSet,
         "restored live set must equal the target's")
-      require(ManifestLog.snapshot(root, 3).colStats ==
-        ManifestLog.snapshot(root, 0).colStats,
+      def colStats(v: Long) =
+        ManifestLog.snapshot(root, v).live.view.mapValues(_.colStats).toMap
+      require(colStats(3) == colStats(0),
         "restored stats must equal the target's")
-      require(ManifestLog.snapshot(root, 3).dvs.isEmpty,
+      require(ManifestLog.snapshot(root, 3).live.values.forall(_.dv.isEmpty),
         "restore must clear the since-added deletion vectors")
       // metadata-only: not one data file was written or deleted
       require(ManifestLog.partFilesRecursive(root, "data").size ==
         filesOnDisk, "restore must move zero data files")
       // history-preserving: the intermediate states still time-travel
-      require(ManifestLog.snapshot(root, 1).dvs.nonEmpty,
+      require(ManifestLog.snapshot(root, 1).live.values.exists(_.dv.isDefined),
         "v1 must still read with its vectors applied")
     }
 

@@ -44,8 +44,8 @@ object WriterQueries {
         .collect()
         .map(r => s"data/v0/${r.getString(0).split('/').last}" ->
           ManifestLog.FileStat(r.getLong(1), r.getLong(2))).toMap
-      val committed = ManifestLog.snapshot(root, 0).colStats
-        .view.mapValues(_("user_id")).toMap
+      val committed = ManifestLog.snapshot(root, 0).live.values
+        .flatMap(a => a.colStats.get("user_id").map(a.path -> _)).toMap
       require(committed == readBack,
         s"single-pass stats diverge from read-back: $committed vs $readBack")
     }
@@ -182,7 +182,8 @@ object WriterQueries {
           .repartitionByRange(8, col("lang"), col("doc_id")),
         root, "data/v0", 0, statsCols = Seq("doc_id"),
         strStatsCols = Seq("lang"))
-      val bounds = ManifestLog.snapshot(root, 0).strColStats
+      val bounds = ManifestLog.snapshot(root, 0).live.view
+        .mapValues(_.strColStats).filter(_._2.nonEmpty).toMap
       require(bounds.nonEmpty &&
         bounds.values.forall(_.contains("lang")),
         "every committed file must carry lang bounds")
@@ -364,10 +365,10 @@ object WriterQueries {
     * Cached per sfDir. */
   def checkDblRoot(s: SparkSession, dir: String): String =
     graft.TempDirs.cachedDir("graft_check_dbl", dir) { root =>
-      ManifestLog.commit(root, 0, Seq.empty, Seq.empty, op = "checks",
+      ManifestLog.commit(root, 0, ManifestLog.Commit("checks",
         checks = Some(Seq(
           "price_floor" -> "l_extendedprice >= 900.0",
-          "tax_band" -> "l_tax >= 0.0 AND l_tax <= 0.08")))
+          "tax_band" -> "l_tax >= 0.0 AND l_tax <= 0.08"))))
       val slice = table(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_extendedprice"),
           col("l_tax"), col("l_quantity"), col("l_returnflag"))
@@ -466,10 +467,9 @@ object WriterQueries {
       val summaries = graft.sources.SinglePassWriter.writeFiles(
         clustered, root, "data/v0",
         statsCols = Seq("l_extendedprice", "l_quantity"))
-      ManifestLog.commit(root, 0, adds = summaries.map(_.rel),
-        removes = Seq.empty, op = "write",
-        colStats = graft.sources.SinglePassWriter.colStatsOf(
-          summaries, Seq("l_extendedprice", "l_quantity")))
+      ManifestLog.commit(root, 0, ManifestLog.Commit("write",
+        graft.sources.SinglePassWriter.addFiles(
+          summaries, Seq("l_extendedprice", "l_quantity"))))
       val key = graft.sources.ManifestFileIndex.dblKey _
       val total = ManifestLog.filesAsOf(root, 0).size
       val priceOnly = ManifestLog.filesMatchingCols(
@@ -633,8 +633,8 @@ object WriterQueries {
           .repartitionByRange(8,
             pmod(col("user_id"), lit(4)), col("user_id")),
         root, "data/v0", 0, statsCols = Seq("user_id", "opt_ts"))
-      val ns = ManifestLog.snapshot(root, 0).nullStats
-        .values.flatMap(_.get("opt_ts"))
+      val ns = ManifestLog.snapshot(root, 0).live.values
+        .flatMap(_.nullStats.get("opt_ts"))
       require(ns.exists(s => s.nulls == 0L) &&
         ns.exists(s => s.nulls == s.rows),
         s"null-skipping fixture needs both prune classes, got $ns")

@@ -154,33 +154,228 @@ object ManifestLog {
 
   /** The table's SNAPSHOT at `version`: the full fold of the log up to
     * it, built by [[snapshotIn]] and the only way code reads table
-    * state. Live files, their single-column stats, their NAMED-column
-    * stats (path → column → [min, max]; the multi-dimensional skipping
-    * seam), their bloom sidecar refs (path → column → ref; the
-    * point-lookup seam), the latest committed batch per writer appId
-    * (the exactly-once txn seam — Delta's setTransaction / txn
-    * action), the live files' deletion vectors, and the declared
-    * schema and CHECK set in force. Immutable: an operation resolves
-    * one and passes it down. */
-  final case class Replay(version: Long, files: Seq[String],
-      stats: Map[String, FileStat],
-      colStats: Map[String, Map[String, FileStat]],
-      blooms: Map[String, Map[String, BloomRef]],
+    * state. `live` maps each live file, in commit order, to its
+    * [[AddFile]] record (stats, string bounds, null counts, bloom refs,
+    * deletion vector); beside it ride the latest committed batch per
+    * writer appId (the exactly-once txn seam — Delta's setTransaction /
+    * txn action) and the declared schema and CHECK set in force.
+    * Immutable: the fold builds `live` and never touches it again; an
+    * operation resolves one snapshot and passes it down. */
+  final case class Replay(version: Long,
+      live: scala.collection.SeqMap[String, AddFile],
       txns: Map[String, Long],
-      dvs: Map[String, DvRef] = Map.empty,
       schemaDdl: Option[String] = None,
       checks: Map[String, String] = Map.empty,
-      strColStats: Map[String, Map[String, StrStat]] = Map.empty,
-      nullStats: Map[String, Map[String, NullStat]] = Map.empty,
       // "has the table EVER committed a deletion vector through the
       // replayed version" — folded DURING the replay from the same
       // reads: the seeding checkpoint's bit OR any tail manifest's dvs
       dvsEver: Boolean = false) {
+    /** The live paths, in commit order. */
+    lazy val files: Seq[String] = live.keys.toVector
     /** The declared schema as a StructType — every snapshot-shaped
       * read plans under it so evolved tables resolve mixed
       * generations (r17). */
     def declaredSchema: Option[org.apache.spark.sql.types.StructType] =
       schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL)
+  }
+
+  /** One data file and everything the log records about it — Delta's
+    * add action: the unnamed single-column stat, named-column stats,
+    * string bounds, null counts and bloom refs (each keyed by column),
+    * and in a snapshot the file's deletion vector. A commit may carry a
+    * vector on an add it re-adds (restore, clone); it encodes the same
+    * as the entry in [[Commit.dvs]]. */
+  final case class AddFile(path: String, stat: Option[FileStat] = None,
+      colStats: Map[String, FileStat] = Map.empty,
+      strColStats: Map[String, StrStat] = Map.empty,
+      nullStats: Map[String, NullStat] = Map.empty,
+      blooms: Map[String, BloomRef] = Map.empty,
+      dv: Option[DvRef] = None)
+
+  /** One manifest's record: what a commit adds, removes and vectors,
+    * its txn marker, commit timestamp, and any schema or CHECK
+    * declaration (`checks = Some(Seq.empty)` drops them all). The
+    * version is not part of the record: a rebase re-publishes the
+    * same record at a later version. [[encode]] is the one manifest
+    * writer and [[Commit.decode]] the one reader; a decoded commit
+    * holds every vector in `dvs` and parses its file records only
+    * when `adds` is first read, so metadata-only readers (the CHECK
+    * gate's fold) never build per-file state. */
+  final class Commit(val op: String, addsOf: => Seq[AddFile],
+      val removes: Seq[String], val dvs: Map[String, DvRef],
+      val txn: Option[(String, Long)], val commitMs: Option[Long],
+      val schemaDdl: Option[String],
+      val checks: Option[Seq[(String, String)]]) {
+    lazy val adds: Seq[AddFile] = addsOf
+
+    /** Every vector this commit records, on re-added files included. */
+    def allDvs: Map[String, DvRef] =
+      dvs ++ adds.flatMap(a => a.dv.map(a.path -> _))
+
+    /** The manifest JSON for `version`. Refuses a record the flat
+      * format cannot round-trip: fields are '|'-delimited, elements
+      * ','-delimited, strings '"'-quoted, and a field ends at the
+      * first ']' — a path, column or appId holding one of those four
+      * would serialize fine and then mis-split on replay, corrupting
+      * the live set, so the refusal is loud at the write (r15 advice).
+      * String bounds, schema and CHECK text are base64-wrapped, since
+      * they are arbitrary user strings. */
+    def encode(version: Long): String = {
+      val paths = adds.map(_.path)
+      require((paths ++ removes).forall(flatSafe),
+        "committed paths must not contain '|', ',', '\"' or ']' — " +
+          "the flat manifest format cannot round-trip them")
+      // the unnamed channel's flat "path|min|max" entries carry no type
+      // tag — a dbl-tagged stat committed through it would round-trip
+      // UNTAGGED, a latent hole in the typed-proof invariant (r17
+      // advice). Double-image stats must ride as NAMED colStats.
+      require(adds.forall(_.stat.forall(!_.dbl)),
+        "double-image stats cannot ride the unnamed 'stats' channel " +
+          "(its flat entries drop the '|d' type tag the CHECK proof " +
+          "decides by) — commit them as named colStats")
+      require(adds.forall(a => a.colStats.keySet.forall(flatSafe) &&
+        a.strColStats.keySet.forall(flatSafe)),
+        "stats columns must be round-trippable")
+      require(adds.forall(_.blooms.forall { case (c, r) =>
+        flatSafe(c) && flatSafe(r.sidecar) && r.m > 0 &&
+          (r.m & (r.m - 1)) == 0 && r.k > 0 }),
+        "blooms need round-trippable fields and m a power of two")
+      require(adds.forall(_.nullStats.forall { case (c, s) =>
+        flatSafe(c) && s.nulls >= 0 && s.rows >= s.nulls }),
+        "nullstats need round-trippable columns and 0 <= nulls <= rows")
+      require(txn.forall { case (app, b) => flatSafe(app) && b >= 0 },
+        "txn appId must be round-trippable with a non-negative batchId")
+      // dvs target files that are ALREADY LIVE (a merge-on-read delete
+      // touches no data files), so membership in `adds` is NOT
+      // required; a dv for a file this same commit removes would be
+      // dead on arrival
+      val removeSet = removes.toSet
+      val vectors = allDvs
+      require(vectors.forall { case (f, d) =>
+        flatSafe(f) && flatSafe(d.sidecar) && d.nDeleted > 0 &&
+          !removeSet(f) },
+        "dvs need round-trippable paths, a positive dead-row count, and " +
+          "must not target a file this commit removes")
+      require(commitMs.forall(_ >= 0), "commit timestamp must be >= 0")
+      require(checks.forall(_.forall { case (n, e) =>
+        flatSafe(n) && n.nonEmpty && n != "-" && e.nonEmpty }),
+        "check names must be round-trippable, non-empty, and not '-'")
+      def arr(fs: Iterable[String]) =
+        fs.map(f => "\"" + f + "\"").mkString("[", ",", "]")
+      def perColumn[A](m: AddFile => Map[String, A])(
+          entry: (String, String, A) => String) =
+        arr(adds.flatMap(a => m(a).toSeq.sortBy(_._1).map {
+          case (c, x) => entry(a.path, c, x) }))
+      // a declaring commit replaces the WHOLE check set (latest
+      // declaration wins, like schema); the empty declaration
+      // serializes as the "-" sentinel so "drop all constraints"
+      // survives the flat format's absent-vs-empty ambiguity
+      val checkEntries = checks match {
+        case Some(cs) if cs.isEmpty => Seq("-")
+        case Some(cs) => cs.sortBy(_._1).map { case (n, e) => s"$n|${b64(e)}" }
+        case None => Seq.empty
+      }
+      s"""{"version":$version,"op":"$op","fmt":["2"],""" +
+        s""""adds":${arr(paths)},"removes":${arr(removes)},""" +
+        s""""stats":${arr(adds.flatMap(a => a.stat.map(st =>
+          s"${a.path}|${st.min}|${st.max}")))},""" +
+        s""""colstats":${perColumn(_.colStats) { (f, c, st) =>
+          s"$f|$c|${st.min}|${st.max}" + (if (st.dbl) "|d" else "") }},""" +
+        s""""blooms":${perColumn(_.blooms) { (f, c, r) =>
+          s"$f|$c|${r.sidecar}|${r.m}|${r.k}" +
+            (if (r.str) "|s" else "") }},""" +
+        s""""txn":${arr(txn.map { case (app, b) => s"$app|$b" })},""" +
+        s""""dvs":${arr(vectors.toSeq.sortBy(_._1).map { case (f, d) =>
+          s"$f|${d.sidecar}|${d.nDeleted}" })},""" +
+        s""""at":${arr(commitMs.map(_.toString))},""" +
+        s""""schema":${arr(schemaDdl.map(b64))},""" +
+        s""""checks":${arr(checkEntries)},""" +
+        s""""strstats":${perColumn(_.strColStats) { (f, c, st) =>
+          s"$f|$c|${b64(st.min)}|${b64(st.max)}" }},""" +
+        s""""nullstats":${perColumn(_.nullStats) { (f, c, s) =>
+          s"$f|$c|${s.nulls}|${s.rows}" }}}"""
+    }
+  }
+
+  object Commit {
+    def apply(op: String, adds: Seq[AddFile] = Seq.empty,
+        removes: Seq[String] = Seq.empty,
+        dvs: Map[String, DvRef] = Map.empty,
+        txn: Option[(String, Long)] = None,
+        commitMs: Option[Long] = None,
+        schemaDdl: Option[String] = None,
+        checks: Option[Seq[(String, String)]] = None): Commit =
+      new Commit(op, adds, removes, dvs, txn, commitMs, schemaDdl, checks)
+
+    /** Decode manifest `json` read from log file `name`, refusing a
+      * shape below the format floor ([[BelowFormatFloor]], naming the
+      * file). Entries split rightmost-first: paths and columns hold no
+      * '|' (enforced at encode), and the optional trailing "|d" /
+      * "|s" type tags can never be confused with the numeric field
+      * before them. */
+    def decode(json: String, name: String): Commit = {
+      val f = fieldsOf(json)
+      def get(k: String): Seq[String] = entries(f.getOrElse(k, ""))
+      if (get("fmt") != Seq("2"))
+        throw new BelowFormatFloor(name, "no \"fmt\":[\"2\"] version tag")
+      if (f.getOrElse("blooms", "").contains("|l\""))
+        throw new BelowFormatFloor(name, "a legacy-untyped (|l) bloom ref")
+      val opAt = json.indexOf("\"op\":\"") + 6
+      val dvs = get("dvs").map { e =>
+        val i = e.lastIndexOf('|'); val j = e.lastIndexOf('|', i - 1)
+        e.substring(0, j) ->
+          DvRef(e.substring(j + 1, i), e.substring(i + 1).toLong)
+      }.toMap
+      new Commit(json.substring(opAt, json.indexOf('"', opAt)),
+        decodeAdds(get("adds"), get("stats"), get("colstats"),
+          get("strstats"), get("nullstats"), get("blooms")),
+        get("removes"), dvs, get("txn").headOption.map(splitTxn),
+        get("at").headOption.map(_.toLong), decodeSchema(get("schema")),
+        decodeChecks(get("checks")).map(_.toSeq))
+    }
+
+    private def decodeAdds(paths: Seq[String], stats: Seq[String],
+        colStats: Seq[String], strStats: Seq[String],
+        nullStats: Seq[String], blooms: Seq[String]): Seq[AddFile] = {
+      // "rest|x|y" → (rest, x, y)
+      def last2(e: String): (String, String, String) = {
+        val i = e.lastIndexOf('|'); val j = e.lastIndexOf('|', i - 1)
+        (e.substring(0, j), e.substring(j + 1, i), e.substring(i + 1))
+      }
+      // "path|col|x|y" → (path, col, x, y)
+      def last3(e: String): (String, String, String, String) = {
+        val (rest, x, y) = last2(e)
+        val k = rest.lastIndexOf('|')
+        (rest.substring(0, k), rest.substring(k + 1), x, y)
+      }
+      def byPath[A](es: Seq[String])(parse: String => (String, String, A))
+          : Map[String, Map[String, A]] =
+        es.map(parse).groupBy(_._1).view
+          .mapValues(_.map(t => t._2 -> t._3).toMap).toMap
+      val st = stats.map { e =>
+        val (p, lo, hi) = last2(e); p -> FileStat(lo.toLong, hi.toLong)
+      }.toMap
+      val cs = byPath(colStats) { raw =>
+        val dbl = raw.endsWith("|d")
+        val (p, c, lo, hi) = last3(if (dbl) raw.dropRight(2) else raw)
+        (p, c, FileStat(lo.toLong, hi.toLong, dbl))
+      }
+      val ss = byPath(strStats) { e =>
+        val (p, c, lo, hi) = last3(e); (p, c, StrStat(unb64(lo), unb64(hi)))
+      }
+      val ns = byPath(nullStats) { e =>
+        val (p, c, n, rows) = last3(e); (p, c, NullStat(n.toLong, rows.toLong))
+      }
+      val bs = byPath(blooms) { raw =>
+        val str = raw.endsWith("|s")
+        val (rest, m, k) = last2(if (str) raw.dropRight(2) else raw)
+        val (p, c, sidecar) = last2(rest)
+        (p, c, BloomRef(c, sidecar, m.toInt, k.toInt, str))
+      }
+      paths.map(p => AddFile(p, st.get(p), cs.getOrElse(p, Map.empty),
+        ss.getOrElse(p, Map.empty), ns.getOrElse(p, Map.empty),
+        bs.getOrElse(p, Map.empty)))
+    }
   }
 
   /** Per-file per-column NULL COUNT + the file's row count (r18; the
@@ -262,41 +457,130 @@ object ManifestLog {
         "pq checkpoints carrying dvsever, v2 DV sidecars; a log " +
         "written before it is refused, not read")
 
-  /** Manifest `v`, checked against the floor. Every manifest read
-    * goes through here. */
-  private def readManifest(store: LogStore, v: Long): String = {
-    val name = manifestName(v)
-    val json = store.read(name)
-    if (field(json, "fmt") != Seq("2"))
-      throw new BelowFormatFloor(name, "no \"fmt\":[\"2\"] version tag")
-    if (field(json, "blooms").exists(_.endsWith("|l")))
-      throw new BelowFormatFloor(name, "a legacy-untyped (|l) bloom ref")
-    json
+  /** Manifest `v`, decoded and checked against the floor. Every
+    * manifest read goes through here. */
+  private def readCommit(store: LogStore, v: Long): Commit =
+    Commit.decode(store.read(manifestName(v)), manifestName(v))
+
+  /** The scalar fields of a checkpoint JSON, the part its KB meta
+    * sibling repeats for the commit gate (schema, checks, dvs-ever
+    * bit), plus the txn markers and the checkpointed version's commit
+    * timestamp, which only the checkpoint JSON carries. The
+    * DVS-EVER bit (r19) says "has this table EVER committed a
+    * deletion vector through this version"; it folds forward through
+    * checkpoints, so the image feed's unresolvable-baseline probe reads
+    * one KB sibling + the tail ([[dvsEverThrough]]). Strictly
+    * conservative: a vector whose refs were later compacted away still
+    * sets it (its baseline genuinely is unclassifiable). */
+  private final case class CheckpointMeta(txns: Map[String, Long],
+      schemaDdl: Option[String], checks: Map[String, String],
+      commitMs: Option[Long], dvsEver: Boolean) {
+    // the fields both files carry, serialized ONCE so the two agree
+    // byte for byte
+    private def q(s: String) = "\"" + s + "\""
+    private def shared =
+      s""""schema":[${schemaDdl.map(d => q(b64(d))).mkString}],""" +
+      s""""checks":[${(if (checks.isEmpty) Seq("-") else checks.toSeq
+        .sortBy(_._1).map { case (n, e) => s"$n|${b64(e)}" })
+        .map(q).mkString(",")}],"""
+    private def bit = s""""dvsever":[${q(if (dvsEver) "1" else "0")}]}"""
+    /** The checkpoint JSON: scalars plus the `pq` marker naming the
+      * columnar sidecar that carries the per-file state. */
+    def encode(version: Long): String =
+      s"""{"version":$version,"pq":["1"],"fmt":["2"],""" +
+        s""""txns":[${txns.toSeq.sortBy(_._1).map { case (app, b) =>
+          q(s"$app|$b") }.mkString(",")}],""" + shared +
+        s""""at":[${commitMs.map(t => q(t.toString)).mkString}],""" + bit
+    /** The meta sibling. */
+    def encodeSibling(version: Long): String =
+      s"""{"version":$version,""" + shared + bit
   }
 
-  /** Checkpoint `cv`'s scalar JSON, checked against the floor. Every
-    * checkpoint and meta-sibling read goes through here. `metaOnly`
-    * reads the KB meta sibling when it was published (else the
-    * checkpoint itself — the crash window between the two publishes);
-    * the sibling does not repeat the `pq` marker, so the listing
-    * stands in for it: a columnar checkpoint publishes its sidecar
-    * before its JSON. */
+  /** Checkpoint `cv`'s scalar fields, checked against the floor.
+    * Every checkpoint and meta-sibling read goes through here.
+    * `metaOnly` reads the KB meta sibling when it was published (else
+    * the checkpoint itself — the crash window between the two
+    * publishes); the sibling does not repeat the `pq` marker, so the
+    * listing stands in for it: a columnar checkpoint publishes its
+    * sidecar before its JSON. */
   private def readCheckpoint(store: LogStore, l: Listing, cv: Long,
-      metaOnly: Boolean = false): String = {
+      metaOnly: Boolean = false): CheckpointMeta = {
     val name = checkpointName(cv)
     val fromMeta = metaOnly && l.names(checkpointMetaName(cv))
     val read = if (fromMeta) checkpointMetaName(cv) else name
-    val json = store.read(read)
+    val f = fieldsOf(store.read(read))
+    def get(k: String): Seq[String] = entries(f.getOrElse(k, ""))
     if (fromMeta && !l.names(checkpointParquetName(cv)))
       throw new BelowFormatFloor(name, "no columnar sidecar (an all-JSON " +
         "checkpoint)")
-    if (!fromMeta && field(json, "pq") != Seq("1"))
+    if (!fromMeta && get("pq") != Seq("1"))
       throw new BelowFormatFloor(name, "no \"pq\" marker (an all-JSON " +
         "checkpoint)")
-    if (field(json, "dvsever").isEmpty)
+    if (get("dvsever").isEmpty)
       throw new BelowFormatFloor(read, "no dvs-ever bit")
-    json
+    CheckpointMeta(get("txns").map(splitTxn).toMap,
+      decodeSchema(get("schema")),
+      decodeChecks(get("checks")).getOrElse(Map.empty),
+      get("at").headOption.map(_.toLong), get("dvsever") == Seq("1"))
   }
+
+  // ---- the flat JSON both log-file decoders read ----
+  // self-authored JSON: every field but `version` and `op` is a flat
+  // string array whose elements never hold '"' or ']' (enforced at
+  // commit), so one forward scan cuts each array's text at its key's
+  // `":[` and the next ']'. One pass per file, not one scan per field:
+  // the CHECK gate folds a tail manifest per commit, and the 10k gated
+  // commits of tools/probe_log_scale.scala (1M files, 4-core host)
+  // took 284 s with a regex compiled per field read and 194 s with an
+  // indexOf scan per field.
+  private def fieldsOf(json: String): Map[String, String] = {
+    val out = Map.newBuilder[String, String]
+    var i = json.indexOf("\":[")
+    while (i >= 0) {
+      val j = json.indexOf(']', i + 3)
+      out += json.substring(json.lastIndexOf('"', i - 1) + 1, i) ->
+        json.substring(i + 3, j)
+      i = json.indexOf("\":[", j)
+    }
+    out.result()
+  }
+
+  /** The elements of one array's text. */
+  private def entries(raw: String): Seq[String] =
+    if (raw.isEmpty) Seq.empty
+    else raw.split(",").iterator
+      .map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
+
+  private def b64(s: String): String = java.util.Base64.getEncoder
+    .encodeToString(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  private def unb64(s: String): String = new String(
+    java.util.Base64.getDecoder.decode(s),
+    java.nio.charset.StandardCharsets.UTF_8)
+
+  /** "appId|batchId" → (appId, batchId). */
+  private def splitTxn(e: String): (String, Long) = {
+    val i = e.lastIndexOf('|')
+    e.substring(0, i) -> e.substring(i + 1).toLong
+  }
+
+  /** A `schema` field: base64 DDL, the LAST entry wins; None = the
+    * record declared nothing. */
+  private def decodeSchema(entries: Seq[String]): Option[String] =
+    entries.lastOption.map(unb64)
+
+  /** A `checks` field: None = no declaration in this record,
+    * Some(empty) = the explicit `-` drop-all sentinel, Some(set) =
+    * the declared set. */
+  private def decodeChecks(
+      entries: Seq[String]): Option[Map[String, String]] =
+    if (entries.isEmpty) None
+    else Some(
+      if (entries == Seq("-")) Map.empty
+      else entries.map { e =>
+        val i = e.lastIndexOf('|')
+        e.substring(0, i) -> unb64(e.substring(i + 1))
+      }.toMap)
 
   /** True iff the flat manifest format can round-trip `s`: no field
     * ('|'), element (','), quote ('"') or field-terminator (']')
@@ -345,21 +629,10 @@ object ManifestLog {
     * CONSTRAINT does. This closes the hole where a raw [[commitIn]]
     * could land violating rows under a constraint the guarded paths
     * enforce. */
-  def commitIn(store: LogStore, version: Long, adds: Seq[String],
-      removes: Seq[String], op: String,
+  def commitIn(store: LogStore, version: Long, c: Commit,
       policy: Option[CheckpointPolicy] = None,
-      stats: Map[String, FileStat] = Map.empty,
-      colStats: Map[String, Map[String, FileStat]] = Map.empty,
-      blooms: Map[String, Map[String, BloomRef]] = Map.empty,
-      txn: Option[(String, Long)] = None,
-      dvs: Map[String, DvRef] = Map.empty,
-      commitMs: Option[Long] = None,
-      schemaDdl: Option[String] = None,
-      checks: Option[Seq[(String, String)]] = None,
-      attest: Boolean = false,
-      strColStats: Map[String, Map[String, StrStat]] = Map.empty,
-      nullStats: Map[String, Map[String, NullStat]] = Map.empty): Unit = {
-    if (adds.nonEmpty && !attest && checks.isEmpty && version > 0) {
+      attest: Boolean = false): Unit = {
+    if (c.adds.nonEmpty && !attest && c.checks.isEmpty && version > 0) {
       // the gate needs only the in-force CHECKS and the declared
       // schema — resolved by the METADATA-ONLY fold (r18): a full
       // snapshot builds the live-file maps too, which at 1M files is
@@ -397,9 +670,9 @@ object ManifestLog {
               ", which file stats cannot prove — commit adds " +
               "through appendChecked (row-validated) or pass " +
               "attest = true after validating")
-        adds.foreach { f =>
-          val cs = colStats.getOrElse(f, Map.empty)
-          val ss = strColStats.getOrElse(f, Map.empty)
+        c.adds.foreach { a =>
+          val cs = a.colStats
+          val ss = a.strColStats
           val provenLong = lb.exists(_.forall { case (c, (lo, hi)) =>
             cs.get(c).exists(s => !s.dbl && s.min >= lo && s.max <= hi)
           })
@@ -409,7 +682,7 @@ object ManifestLog {
           val provenStr = sa.exists(_.forall { case (c, op, v) =>
             ss.get(c).exists(strAtomProven(_, op, v))
           })
-          val ns = nullStats.getOrElse(f, Map.empty)
+          val ns = a.nullStats
           def notNullProven(c: String): Boolean =
             ns.get(c).exists(_.nulls == 0L)
           val provenNotNull = nn.exists(_.forall(notNullProven))
@@ -426,7 +699,7 @@ object ManifestLog {
           }
           require(provenLong || provenDbl || provenStr ||
               provenNotNull || provenTyped,
-            s"add $f cannot prove CHECK $n [$sqlText]: committed " +
+            s"add ${a.path} cannot prove CHECK $n [$sqlText]: committed " +
               "stats must sit inside the constraint's bounds IN THE " +
               "COLUMN'S TYPE (integral bounds prove against raw-long " +
               "stats, fractional against double-image stats, string " +
@@ -437,122 +710,8 @@ object ManifestLog {
         }
       }
     }
-    def arr(fs: Seq[String]) =
-      fs.map(f => "\"" + f + "\"").mkString("[", ",", "]")
-    // EVERY string the self-authored flat format carries must be
-    // round-trippable by its parser: fields are '|'-delimited,
-    // elements ','-delimited, strings '"'-quoted, and the field regex
-    // stops at the first ']' — a path/column/appId containing any of
-    // those four chars would serialize fine and then silently
-    // mis-split on replay, corrupting the live set. Rejecting them at
-    // commit time keeps the corruption loud at the write (r15 advice).
-    // Spark part-file names never contain them; this guards the
-    // PUBLIC commit API against arbitrary caller strings.
-    require((adds ++ removes).forall(flatSafe),
-      "committed paths must not contain '|', ',', '\"' or ']' — " +
-        "the flat manifest format cannot round-trip them")
-    // membership checks below run against SETS (r20): a 100k-add bulk
-    // commit with per-file colStats used to pay adds.contains — an
-    // O(adds) Seq scan — PER map entry, i.e. 10^10 comparisons; the
-    // probe that found it spent minutes per commit on pure validation
-    val addSet = adds.toSet
-    val removeSet = removes.toSet
-    // stats ride as flat "path|min|max" strings so the self-authored
-    // parser stays one shape
-    require(stats.keySet.forall(addSet),
-      "stats must describe committed adds")
-    // the unnamed channel's flat "path|min|max" entries carry no type
-    // tag — a dbl-tagged stat committed through it would round-trip
-    // UNTAGGED, a latent hole in the typed-proof invariant (r17
-    // advice). Double-image stats must ride as NAMED colStats.
-    require(stats.valuesIterator.forall(!_.dbl),
-      "double-image stats cannot ride the unnamed 'stats' channel " +
-        "(its flat entries drop the '|d' type tag the CHECK proof " +
-        "decides by) — commit them as named colStats")
-    // colstats ride as "path|col|min|max"; blooms as
-    // "path|col|sidecar|m|k"; txn as "appId|batchId"
-    require(colStats.forall { case (f, cs) =>
-      addSet(f) && cs.keySet.forall(flatSafe) },
-      "colstats must describe committed adds with round-trippable columns")
-    require(blooms.forall { case (f, bs) =>
-      addSet(f) && bs.forall { case (c, r) =>
-        flatSafe(c) && flatSafe(r.sidecar) && r.m > 0 &&
-          (r.m & (r.m - 1)) == 0 && r.k > 0 } },
-      "blooms must describe committed adds with round-trippable " +
-        "fields and m a power of two")
-    require(txn.forall { case (app, b) => flatSafe(app) && b >= 0 },
-      "txn appId must be round-trippable with a non-negative batchId")
-    // dvs target files that are ALREADY LIVE (a merge-on-read delete
-    // touches no data files), so membership in `adds` is NOT required;
-    // a dv for a file this same commit removes would be dead on arrival
-    require(dvs.forall { case (f, d) =>
-      flatSafe(f) && flatSafe(d.sidecar) && d.nDeleted > 0 &&
-        !removeSet(f) },
-      "dvs need round-trippable paths, a positive dead-row count, and " +
-        "must not target a file this commit removes")
-    val statArr = arr(adds.flatMap(f =>
-      stats.get(f).map(st => s"$f|${st.min}|${st.max}")))
-    val colStatArr = arr(adds.flatMap(f =>
-      colStats.get(f).toSeq.flatMap(_.toSeq.sortBy(_._1).map {
-        case (c, st) => s"$f|$c|${st.min}|${st.max}" +
-          (if (st.dbl) "|d" else "") })))
-    val bloomArr = arr(adds.flatMap(f =>
-      blooms.get(f).toSeq.flatMap(_.toSeq.sortBy(_._1).map {
-        case (c, r) => s"$f|$c|${r.sidecar}|${r.m}|${r.k}" +
-          (if (r.str) "|s" else "") })))
-    val txnArr = arr(txn.toSeq.map { case (app, b) => s"$app|$b" })
-    val dvArr = arr(dvs.toSeq.sortBy(_._1).map {
-      case (f, d) => s"$f|${d.sidecar}|${d.nDeleted}" })
-    require(commitMs.forall(_ >= 0), "commit timestamp must be >= 0")
-    val atArr = arr(commitMs.toSeq.map(_.toString))
-    // schema DDL carries every delimiter the flat format cannot
-    // round-trip (commas, quotes, brackets) — base64 the whole string
-    val schemaArr = arr(schemaDdl.toSeq.map(d =>
-      java.util.Base64.getEncoder.encodeToString(
-        d.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
-    // CHECK constraints: "name|b64(sqlExpr)" entries; a declaring
-    // commit replaces the WHOLE set (latest declaration wins, like
-    // schema), and the empty declaration serializes as the "-"
-    // sentinel so "drop all constraints" survives the flat parser's
-    // absent-vs-empty ambiguity
-    require(checks.forall(_.forall { case (n, e) =>
-      flatSafe(n) && n.nonEmpty && n != "-" && e.nonEmpty }),
-      "check names must be round-trippable, non-empty, and not '-'")
-    val checkArr = arr(checks match {
-      case Some(cs) if cs.isEmpty => Seq("-")
-      case Some(cs) => cs.sortBy(_._1).map { case (n, e) =>
-        s"$n|${java.util.Base64.getEncoder.encodeToString(
-          e.getBytes(java.nio.charset.StandardCharsets.UTF_8))}" }
-      case None => Seq.empty
-    })
-    // string bounds ride as "path|col|b64(min)|b64(max)" — base64
-    // because the bounds are ARBITRARY user strings (every delimiter
-    // the flat format cannot round-trip is fair game in data)
-    require(strColStats.forall { case (f, cs) =>
-      addSet(f) && cs.keySet.forall(flatSafe) },
-      "strstats must describe committed adds with round-trippable " +
-        "columns")
-    def b64s(s: String) = java.util.Base64.getEncoder.encodeToString(
-      s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val strStatArr = arr(adds.flatMap(f =>
-      strColStats.get(f).toSeq.flatMap(_.toSeq.sortBy(_._1).map {
-        case (c, st) => s"$f|$c|${b64s(st.min)}|${b64s(st.max)}" })))
-    // null stats ride as "path|col|nulls|rows" (r18); nulls ∈ [0, rows]
-    require(nullStats.forall { case (f, ns) =>
-      addSet(f) && ns.forall { case (c, s) =>
-        flatSafe(c) && s.nulls >= 0 && s.rows >= s.nulls } },
-      "nullstats must describe committed adds with round-trippable " +
-        "columns and 0 <= nulls <= rows")
-    val nullStatArr = arr(adds.flatMap(f =>
-      nullStats.get(f).toSeq.flatMap(_.toSeq.sortBy(_._1).map {
-        case (c, s) => s"$f|$c|${s.nulls}|${s.rows}" })))
-    val json = s"""{"version":$version,"op":"$op","fmt":["2"],""" +
-      s""""adds":${arr(adds)},"removes":${arr(removes)},""" +
-      s""""stats":$statArr,"colstats":$colStatArr,""" +
-      s""""blooms":$bloomArr,"txn":$txnArr,"dvs":$dvArr,""" +
-      s""""at":$atArr,"schema":$schemaArr,"checks":$checkArr,""" +
-      s""""strstats":$strStatArr,"nullstats":$nullStatArr}"""
-    if (!store.publish(manifestName(version), json)) throw Conflict(version)
+    if (!store.publish(manifestName(version), c.encode(version)))
+      throw Conflict(version)
     for (p <- policy if version > 0 && version % p.every == 0) {
       writeCheckpointIn(store, version)
       // retention: manifests folded by the PREVIOUS checkpoint are now
@@ -571,22 +730,6 @@ object ManifestLog {
   /** Versions with a published checkpoint, ascending. */
   def checkpointVersionsIn(store: LogStore): Seq[Long] =
     listingOf(store).checkpoints
-
-  // self-authored JSON (writers above/below): fields are flat string
-  // arrays whose elements never hold ']' (enforced at commit), so a
-  // field is the text between its key and the next ']'. Two indexOf
-  // scans, not a regex compiled per call: the floor checks add field
-  // reads to every manifest read, and with the regex form the 10k
-  // gated commits of tools/probe_log_scale.scala (1M files, 4-core
-  // host) took 284 s against 194 s with this one
-  private def field(json: String, name: String): Seq[String] = {
-    val key = "\"" + name + "\":["
-    val i = json.indexOf(key)
-    val j = if (i < 0) -1 else json.indexOf(']', i + key.length)
-    if (j <= i + key.length) Seq.empty
-    else json.substring(i + key.length, j).split(",")
-      .map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
-  }
 
   /** CHECKPOINT COMPACTION — fold the log's replay up to `version` into
     * one snapshot file, so readers replay only the manifest TAIL after
@@ -614,45 +757,15 @@ object ManifestLog {
     // checkpoint keeps its era TIME-addressable after retention prunes
     // the manifest (SURVEY §8.3.2-4); a re-publication after pruning
     // recovers it from the existing checkpoint
-    val at = field(
-      if (l.hasManifest(version)) readManifest(store, version)
-      else readCheckpoint(store, l, version), "at")
-    // the DVS-EVER bit (r19): "has this table EVER committed a
-    // deletion vector through `version`" folds forward through
-    // checkpoints, so the image feed's unresolvable-baseline probe
-    // reads one KB sibling + the tail ([[dvsEverThrough]]). Strictly
-    // conservative: a vector whose refs were later compacted away
-    // still sets it (its baseline genuinely is unclassifiable).
-    val dvsEver = ckptQ(if (r.dvsEver) "1" else "0")
+    val at =
+      if (l.hasManifest(version)) readCommit(store, version).commitMs
+      else readCheckpoint(store, l, version).commitMs
+    val meta = CheckpointMeta(r.txns, r.schemaDdl, r.checks, at, r.dvsEver)
     store.publishBytes(checkpointParquetName(version),
-      CheckpointCodec.encode(CheckpointCodec.PerFileState(r.files,
-        r.stats, r.colStats, r.strColStats, r.nullStats, r.blooms, r.dvs)))
-    store.publish(checkpointName(version),
-      s"""{"version":$version,"pq":["1"],"fmt":["2"],""" +
-        s""""txns":[${txnsJson(r)}],"schema":[${schemaJson(r)}],""" +
-        s""""checks":[${checksJson(r)}],"at":[""" +
-        at.map(ckptQ).mkString(",") + s"""],"dvsever":[$dvsEver]}""")
-    store.publish(checkpointMetaName(version),
-      s"""{"version":$version,"schema":[${schemaJson(r)}],""" +
-        s""""checks":[${checksJson(r)}],"dvsever":[$dvsEver]}""")
+      CheckpointCodec.encode(r.live.values))
+    store.publish(checkpointName(version), meta.encode(version))
+    store.publish(checkpointMetaName(version), meta.encodeSibling(version))
   }
-
-  // the scalar checkpoint fields, serialized ONCE for the checkpoint
-  // and its meta sibling, which must agree byte for byte
-  private def ckptQ(s: String) = "\"" + s + "\""
-  private def txnsJson(r: Replay): String =
-    r.txns.toSeq.sortBy(_._1).map { case (app, b) =>
-      ckptQ(s"$app|$b") }.mkString(",")
-  private def schemaJson(r: Replay): String =
-    r.schemaDdl.map(d => ckptQ(java.util.Base64.getEncoder
-      .encodeToString(d.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8)))).getOrElse("")
-  private def checksJson(r: Replay): String =
-    if (r.checks.isEmpty) ckptQ("-")
-    else r.checks.toSeq.sortBy(_._1).map { case (n, e) =>
-      ckptQ(s"$n|" + java.util.Base64.getEncoder.encodeToString(
-        e.getBytes(java.nio.charset.StandardCharsets.UTF_8))) }
-      .mkString(",")
 
   /** Has the table EVER committed a deletion vector through
     * `version`? The nearest checkpoint ≤ `version` carries the bit for
@@ -662,91 +775,9 @@ object ManifestLog {
   def dvsEverThrough(store: LogStore, version: Long): Boolean = {
     val l = listingOf(store)
     l.seed(version).exists(cv =>
-      field(readCheckpoint(store, l, cv, metaOnly = true), "dvsever") ==
-        Seq("1")) ||
-      l.tail(version).exists(v =>
-        field(readManifest(store, v), "dvs").nonEmpty)
+      readCheckpoint(store, l, cv, metaOnly = true).dvsEver) ||
+      l.tail(version).exists(v => readCommit(store, v).dvs.nonEmpty)
   }
-
-  private def parseStats(entries: Seq[String]): Map[String, FileStat] =
-    entries.map { e =>
-      val i = e.lastIndexOf('|'); val j = e.lastIndexOf('|', i - 1)
-      e.substring(0, j) ->
-        FileStat(e.substring(j + 1, i).toLong, e.substring(i + 1).toLong)
-    }.toMap
-
-  /** "path|col|min|max[|d]" → path → col → stat (path may contain
-    * no '|', enforced at commit, so rightmost-split parsing is
-    * unambiguous; the optional trailing "|d" marks double-image
-    * bounds and can never be confused with max, which is numeric). */
-  private def parseColStats(
-      entries: Seq[String]): Map[String, Map[String, FileStat]] =
-    entries.map { raw =>
-      val dbl = raw.endsWith("|d")
-      val e = if (dbl) raw.dropRight(2) else raw
-      val i = e.lastIndexOf('|'); val j = e.lastIndexOf('|', i - 1)
-      val k = e.lastIndexOf('|', j - 1)
-      (e.substring(0, k), e.substring(k + 1, j),
-        FileStat(e.substring(j + 1, i).toLong,
-          e.substring(i + 1).toLong, dbl))
-    }.groupBy(_._1).view.mapValues(
-      _.map(t => t._2 -> t._3).toMap).toMap
-
-  /** "path|sidecar|n" → path → dv ref (rightmost-split, '|'-free
-    * fields enforced at commit). */
-  private def parseStrColStats(
-      entries: Seq[String]): Map[String, Map[String, StrStat]] =
-    entries.map { e =>
-      val parts = e.split('|')
-      def un(b64: String) = new String(
-        java.util.Base64.getDecoder.decode(b64),
-        java.nio.charset.StandardCharsets.UTF_8)
-      (parts(0), parts(1), StrStat(un(parts(2)), un(parts(3))))
-    }.groupBy(_._1).view
-      .mapValues(_.map(t => t._2 -> t._3).toMap).toMap
-
-  /** "path|col|nulls|rows" → path → col → null stat (rightmost-split,
-    * '|'-free fields enforced at commit). */
-  private def parseNullStats(
-      entries: Seq[String]): Map[String, Map[String, NullStat]] =
-    entries.map { e =>
-      val i = e.lastIndexOf('|'); val j = e.lastIndexOf('|', i - 1)
-      val k = e.lastIndexOf('|', j - 1)
-      (e.substring(0, k), e.substring(k + 1, j),
-        NullStat(e.substring(j + 1, i).toLong,
-          e.substring(i + 1).toLong))
-    }.groupBy(_._1).view.mapValues(
-      _.map(t => t._2 -> t._3).toMap).toMap
-
-  private def parseDvs(entries: Seq[String]): Map[String, DvRef] =
-    entries.map { e =>
-      val i = e.lastIndexOf('|'); val j = e.lastIndexOf('|', i - 1)
-      e.substring(0, j) ->
-        DvRef(e.substring(j + 1, i), e.substring(i + 1).toLong)
-    }.toMap
-
-  private def parseTxns(entries: Seq[String]): Seq[(String, Long)] =
-    entries.map { e =>
-      val i = e.lastIndexOf('|')
-      e.substring(0, i) -> e.substring(i + 1).toLong
-    }
-
-  /** "path|col|sidecar|m|k[|s]" → path → col → ref ('|'-free
-    * fields, enforced at commit, make rightmost-split parsing
-    * unambiguous; the optional trailing "|s" marks a string-keyed
-    * bloom and cannot be confused with k, which is numeric). */
-  private def parseBlooms(
-      entries: Seq[String]): Map[String, Map[String, BloomRef]] =
-    entries.map { raw =>
-      val str = raw.endsWith("|s")
-      val e = if (str) raw.dropRight(2) else raw
-      val i = e.lastIndexOf('|'); val j = e.lastIndexOf('|', i - 1)
-      val k = e.lastIndexOf('|', j - 1); val l = e.lastIndexOf('|', k - 1)
-      (e.substring(0, l), e.substring(l + 1, k),
-        BloomRef(e.substring(l + 1, k), e.substring(k + 1, j),
-          e.substring(j + 1, i).toInt, e.substring(i + 1).toInt, str))
-    }.groupBy(_._1).view.mapValues(
-      _.map(t => t._2 -> t._3).toMap).toMap
 
   /** STRICT range decomposition of a CHECK expression (r17): the
     * per-column closed bounds that, when every add's [min, max]
@@ -1108,29 +1139,6 @@ object ManifestLog {
     }
   }
 
-  /** Decode a manifest/checkpoint `schema` field (base64 DDL; the
-    * LAST entry wins) — shared by every fold site so the format has
-    * one reader. None = the field declared nothing. */
-  private def decodeSchemaField(entries: Seq[String]): Option[String] =
-    entries.lastOption.map(b64 => new String(
-      java.util.Base64.getDecoder.decode(b64),
-      java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Decode a `checks` field: None = no declaration in this record,
-    * Some(empty) = the explicit `-` drop-all sentinel, Some(set) =
-    * the declared set. Shared by every fold site. */
-  private def decodeChecksField(
-      entries: Seq[String]): Option[Map[String, String]] =
-    if (entries.isEmpty) None
-    else Some(
-      if (entries == Seq("-")) Map.empty
-      else entries.map { e =>
-        val i = e.lastIndexOf('|')
-        e.substring(0, i) -> new String(
-          java.util.Base64.getDecoder.decode(e.substring(i + 1)),
-          java.nio.charset.StandardCharsets.UTF_8)
-      }.toMap)
-
   /** METADATA-ONLY fold (r18): the declared schema DDL and CHECK set
     * in force at `version`, resolved WITHOUT building the live-file
     * maps — seeded and tailed from listing `l` exactly like
@@ -1156,14 +1164,15 @@ object ManifestLog {
       version: Long): (Option[String], Map[String, String]) = {
     var schemaDdl: Option[String] = None
     var checks = Map.empty[String, String]
-    def fold(json: String): Unit = {
-      decodeSchemaField(field(json, "schema"))
-        .foreach(d => schemaDdl = Some(d))
-      decodeChecksField(field(json, "checks")).foreach(checks = _)
+    l.seed(version).foreach { cv =>
+      val m = readCheckpoint(store, l, cv, metaOnly = true)
+      schemaDdl = m.schemaDdl; checks = m.checks
     }
-    l.seed(version).foreach(cv =>
-      fold(readCheckpoint(store, l, cv, metaOnly = true)))
-    l.tail(version).foreach(v => fold(readManifest(store, v)))
+    l.tail(version).foreach { v =>
+      val c = readCommit(store, v)
+      c.schemaDdl.foreach(d => schemaDdl = Some(d))
+      c.checks.foreach(cs => checks = cs.toMap)
+    }
     (schemaDdl, checks)
   }
 
@@ -1189,107 +1198,52 @@ object ManifestLog {
   }
 
   /** The one fold of the log: seeded from the nearest checkpoint ≤
-    * `version` (from genesis when none), then the tail manifests'
-    * adds, removes, per-file stats (single- and named-column), blooms,
-    * DVs, txn markers, schema and checks in commit order — each file
-    * read once. A removed file drops its stats; a stats-less add has
-    * no entry (never skippable); a writer's txn folds as the MAX
-    * batchId seen (batchIds are monotone per app, so max = latest
-    * even across a checkpoint + tail seam). */
+    * `version` (from genesis when none), then each tail manifest's
+    * removes, adds and deletion vectors, in that order, plus its txn
+    * marker, schema and checks — each file read once. An add replaces
+    * the file's whole record; a vector replaces the live file's
+    * earlier one (each vector is written as old ∪ newly dead, so last
+    * wins is exact) and is dropped when its file is not live at that
+    * point, which is also all a checkpoint keeps. A writer's txn folds
+    * as the MAX batchId seen (batchIds are monotone per app, so max =
+    * latest even across a checkpoint + tail seam). */
   private def foldIn(store: LogStore, l: Listing, version: Long): Replay = {
     require(l.resolvable(version),
       s"version $version not in manifest log (have: ${l.manifests})")
-    // concrete HashMaps so the columnar-checkpoint fold can PRESIZE
-    // them (r20): a 10M-entry build pays ~20 doubling rehashes
-    // otherwise — measured 42% of the put cost at that scale
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    val stats = scala.collection.mutable.HashMap.empty[String, FileStat]
-    val colStats =
-      scala.collection.mutable.HashMap.empty[String, Map[String, FileStat]]
-    val strColStats =
-      scala.collection.mutable.HashMap.empty[String, Map[String, StrStat]]
-    val nullStats =
-      scala.collection.mutable.HashMap.empty[String, Map[String, NullStat]]
-    val blooms =
-      scala.collection.mutable.HashMap.empty[String, Map[String, BloomRef]]
+    val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
     val txns = scala.collection.mutable.HashMap.empty[String, Long]
-    val dvs = scala.collection.mutable.HashMap.empty[String, DvRef]
+    def foldTxn(app: String, b: Long): Unit =
+      txns(app) = txns.get(app).fold(b)(math.max(_, b))
+    var schemaDdl: Option[String] = None
+    var checks = Map.empty[String, String]
     // a fold from genesis decides the dvs-ever bit exactly; a
     // checkpoint-seeded fold inherits the checkpoint's bit
     var dvsEver = false
-    var schemaDdl: Option[String] = None
-    def foldSchema(entries: Seq[String]): Unit =
-      decodeSchemaField(entries).foreach(d => schemaDdl = Some(d))
-    var checks = Map.empty[String, String]
-    def foldChecks(entries: Seq[String]): Unit =
-      decodeChecksField(entries).foreach(checks = _)
-    def foldTxns(entries: Seq[(String, Long)]): Unit =
-      entries.foreach { case (app, b) =>
-        txns(app) = txns.get(app).fold(b)(math.max(_, b)) }
     l.seed(version).foreach { cv =>
-      val json = readCheckpoint(store, l, cv)
-      // the per-file state rides the parquet sidecar; the JSON keeps
-      // only the scalar fields. The sidecar is published before the
-      // JSON, so a missing read here is genuine corruption and stays
-      // loud. Partials fold straight into the replay's own mutable
-      // state (the per-file column maps MERGE across partials — a
-      // file can straddle a row-group boundary).
-      val parts = CheckpointCodec.decodeParts(
-        store.readBytes(checkpointParquetName(cv)),
-        checkpointParquetName(cv))
-      live.sizeHint(parts.iterator.map(_.files.size).sum)
-      stats.sizeHint(parts.iterator.map(_.stats.size).sum)
-      colStats.sizeHint(parts.iterator.map(_.colStats.size).sum)
-      strColStats.sizeHint(parts.iterator.map(_.strColStats.size).sum)
-      nullStats.sizeHint(parts.iterator.map(_.nullStats.size).sum)
-      blooms.sizeHint(parts.iterator.map(_.blooms.size).sum)
-      dvs.sizeHint(parts.iterator.map(_.dvs.size).sum)
-      parts.foreach { p =>
-        p.files.foreach(live.add)
-        stats ++= p.stats
-        dvs ++= p.dvs
-        p.colStats.foreach { case (f, m) =>
-          colStats(f) = colStats.getOrElse(f, Map.empty) ++ m }
-        p.strColStats.foreach { case (f, m) =>
-          strColStats(f) = strColStats.getOrElse(f, Map.empty) ++ m }
-        p.nullStats.foreach { case (f, m) =>
-          nullStats(f) = nullStats.getOrElse(f, Map.empty) ++ m }
-        p.blooms.foreach { case (f, m) =>
-          blooms(f) = blooms.getOrElse(f, Map.empty) ++ m }
-      }
-      foldTxns(parseTxns(field(json, "txns")))
-      foldSchema(field(json, "schema"))
-      foldChecks(field(json, "checks"))
-      // the seeding checkpoint's bit covers all history ≤ it
-      dvsEver = field(json, "dvsever") == Seq("1")
+      val m = readCheckpoint(store, l, cv)
+      // the per-file state rides the parquet sidecar, published before
+      // the JSON, so a missing read here is genuine corruption and
+      // stays loud. Presized (r20): a 10M-entry build pays ~20
+      // doubling rehashes otherwise — measured 42% of the put cost
+      val files = CheckpointCodec.decode(
+        store.readBytes(checkpointParquetName(cv)), checkpointParquetName(cv))
+      live.sizeHint(files.size)
+      files.foreach(a => live(a.path) = a)
+      m.txns.foreach { case (app, b) => foldTxn(app, b) }
+      schemaDdl = m.schemaDdl; checks = m.checks; dvsEver = m.dvsEver
     }
     l.tail(version).foreach { v =>
-      val json = readManifest(store, v)
-      field(json, "removes").foreach { f =>
-        live.remove(f); stats.remove(f); colStats.remove(f)
-        strColStats.remove(f); nullStats.remove(f); blooms.remove(f)
-        dvs.remove(f) }
-      field(json, "adds").foreach(live.add)
-      stats ++= parseStats(field(json, "stats"))
-      colStats ++= parseColStats(field(json, "colstats"))
-      strColStats ++= parseStrColStats(field(json, "strstats"))
-      nullStats ++= parseNullStats(field(json, "nullstats"))
-      blooms ++= parseBlooms(field(json, "blooms"))
-      foldTxns(parseTxns(field(json, "txn")))
-      // a later DV REPLACES the file's earlier one (each vector is
-      // written as old ∪ newly-dead, so last-wins is exact); a later
-      // declared SCHEMA likewise supersedes (additive evolution)
-      val mDvs = parseDvs(field(json, "dvs"))
-      if (mDvs.nonEmpty) dvsEver = true
-      dvs ++= mDvs
-      foldSchema(field(json, "schema"))
-      foldChecks(field(json, "checks"))
+      val c = readCommit(store, v)
+      c.removes.foreach(live.remove)
+      c.adds.foreach(a => live(a.path) = a)
+      c.dvs.foreach { case (f, d) =>
+        live.get(f).foreach(a => live(f) = a.copy(dv = Some(d))) }
+      if (c.dvs.nonEmpty) dvsEver = true
+      c.txn.foreach { case (app, b) => foldTxn(app, b) }
+      c.schemaDdl.foreach(d => schemaDdl = Some(d))
+      c.checks.foreach(cs => checks = cs.toMap)
     }
-    // a vector on a file that is not live is dead weight: the
-    // snapshot carries live files' vectors only
-    Replay(version, live.toSeq, stats.toMap, colStats.toMap,
-      blooms.toMap, txns.toMap, dvs.iterator.filter(d => live(d._1)).toMap,
-      schemaDdl, checks, strColStats.toMap, nullStats.toMap, dvsEver)
+    Replay(version, live, txns.toMap, schemaDdl, checks, dvsEver)
   }
 
   /** TIMESTAMP time travel (r16) — `AS OF TIMESTAMP` resolved to a
@@ -1298,23 +1252,19 @@ object ManifestLog {
     * was then"). Resolution scans the SURVIVING manifests' "at"
     * fields — metadata-sized, no data IO; versions pruned behind a
     * checkpoint are no longer time-addressable (the same retention
-    * contract as [[changesBetweenIn]] — pin a VERSION for reads that
+    * contract as [[commitsBetween]] — pin a VERSION for reads that
     * must outlive retention), and commits that recorded no timestamp
     * are skipped. Throws when `tsMs` predates every timestamped
     * commit — "before the table existed" must be loud, never a silent
     * earliest-version read. */
   def versionAtTimestampIn(store: LogStore, tsMs: Long): Long = {
     val l = listingOf(store)
-    val fromManifests = l.manifests.flatMap { v =>
-      field(readManifest(store, v), "at").headOption
-        .map(at => v -> at.toLong)
-    }
+    val fromManifests = l.manifests.flatMap(v =>
+      readCommit(store, v).commitMs.map(v -> _))
     // checkpoints carry their own version's stamp, so a checkpointed
     // era survives retention in the time-addressable set too
-    val fromCheckpoints = l.checkpoints.flatMap { v =>
-      field(readCheckpoint(store, l, v), "at").headOption
-        .map(at => v -> at.toLong)
-    }
+    val fromCheckpoints = l.checkpoints.flatMap(v =>
+      readCheckpoint(store, l, v).commitMs.map(v -> _))
     val stamped = (fromCheckpoints.toMap ++ fromManifests.toMap)
       .toSeq.sortBy(_._1)
     require(stamped.nonEmpty, "no timestamped commits in the log")
@@ -1328,14 +1278,6 @@ object ManifestLog {
   def versionAtTimestamp(root: String, tsMs: Long): Long =
     versionAtTimestampIn(storeFor(root), tsMs)
 
-  /** EXACTLY-ONCE writer seam (Delta's txn action): the highest
-    * batchId this `appId` has ever committed, resolved from the log
-    * itself — so an idempotence decision survives even TOTAL loss of
-    * the writer's own checkpoint. None when the writer never
-    * committed (or the log is empty). */
-  def lastTxn(root: String, appId: String): Option[Long] =
-    latestSnapshot(root).flatMap(_.txns.get(appId))
-
   /** DATA SKIPPING: the live files of snapshot `r` that can contain a
     * row with tracked-column value in the CLOSED range [lo, hi] —
     * files whose [min, max] interval intersects it, plus every file
@@ -1345,8 +1287,7 @@ object ManifestLog {
     * path's first and cheapest filter, ahead of parquet row-group and
     * page pruning inside the surviving files. */
   def filesMatching(r: Replay, lo: Long, hi: Long): Seq[String] =
-    liveFiles(r).filter(f =>
-      r.stats.get(f).forall(st => st.max >= lo && st.min <= hi))
+    liveMatching(r)(_.stat.forall(st => st.max >= lo && st.min <= hi))
 
   /** MULTI-DIMENSIONAL data skipping: the live files of snapshot `r`
     * that can contain a row satisfying EVERY (column, [lo, hi]) range
@@ -1359,45 +1300,58 @@ object ManifestLog {
     * domain, so only ONE predicate of a box can ever prune. */
   def filesMatchingCols(r: Replay,
       preds: Seq[(String, Long, Long)]): Seq[String] =
-    liveFiles(r).filter { f =>
-      val cs = r.colStats.getOrElse(f, Map.empty)
-      preds.forall { case (c, lo, hi) =>
-        cs.get(c).forall(st => st.max >= lo && st.min <= hi) }
-    }
+    liveMatching(r)(a => preds.forall { case (c, lo, hi) =>
+      a.colStats.get(c).forall(st => st.max >= lo && st.min <= hi) })
 
-  /** The live set a prune helper filters: loud when the snapshot has
-    * no files at all (a prune of an empty table is a caller bug). */
-  private def liveFiles(r: Replay): Seq[String] = {
-    require(r.files.nonEmpty, s"version ${r.version} resolves to no files")
-    r.files
+  /** The live files of `r` whose record passes `keep`, in commit
+    * order: loud when the snapshot has no files at all (a prune of an
+    * empty table is a caller bug). */
+  private def liveMatching(r: Replay)(
+      keep: AddFile => Boolean): Seq[String] = {
+    require(r.live.nonEmpty, s"version ${r.version} resolves to no files")
+    r.live.valuesIterator.filter(keep).map(_.path).toVector
   }
 
-  /** INCREMENTAL CHANGE READ — the actions committed in versions
-    * (`from`, `to`], per version in commit order: the consumption
-    * shape of a change-data feed (Delta's startingVersion read /
-    * Iceberg's incremental scan). A downstream consumer that has
-    * processed up to `from` reads ONLY the tail's adds/removes —
-    * metadata first, then just the added files' data — instead of
-    * re-reading the table. Requires every manifest in the range to
-    * still exist (a tail pruned past `from` must fail loudly, never
-    * silently skip actions — re-bootstrap from a snapshot instead). */
-  def changesBetween(root: String, from: Long,
-      to: Long): Seq[(Long, Seq[String], Seq[String])] =
-    tailJsons(storeFor(root), from, to).map { case (v, json) =>
-      (v, field(json, "adds"), field(json, "removes"))
-    }
+  /** INCREMENTAL CHANGE READ — the commits of versions (`from`,
+    * `to`], in commit order: the consumption shape of a change-data
+    * feed (Delta's startingVersion read / Iceberg's incremental scan).
+    * A downstream consumer that has processed up to `from` reads ONLY
+    * the tail's actions — metadata first, then just the files it needs
+    * — instead of re-reading the table. Requires every manifest in the
+    * range to still exist (a tail pruned past `from` must fail loudly,
+    * never silently skip actions — re-bootstrap from a snapshot
+    * instead). */
+  def commitsBetween(root: String, from: Long,
+      to: Long): Seq[(Long, Commit)] = {
+    val store = storeFor(root)
+    tailCommits(store, listingOf(store), from, to)
+  }
 
-  /** The manifests of versions (`from`, `to`], each read once — the
-    * dense-range contract every change reader shares: a range with a
-    * pruned or missing manifest is loud. */
-  private def tailJsons(store: LogStore, from: Long,
-      to: Long): Seq[(Long, String)] = {
+  /** The manifests of versions (`from`, `to`] in listing `l`, each
+    * read once — the dense-range contract every change reader shares:
+    * a range with a pruned or missing manifest is loud. */
+  private def tailCommits(store: LogStore, l: Listing, from: Long,
+      to: Long): Seq[(Long, Commit)] = {
     require(from <= to, s"empty change range: ($from, $to]")
-    val have = versionsIn(store).filter(v => v > from && v <= to)
+    val have = l.manifests.filter(v => v > from && v <= to)
     require(have == ((from + 1) to to),
       s"change range ($from, $to] has pruned/missing manifests " +
         s"(have: $have) — re-bootstrap from a snapshot")
-    have.map(v => v -> readManifest(store, v))
+    have.map(v => v -> readCommit(store, v))
+  }
+
+  /** What a change feed plans one batch from, off ONE listing: the
+    * commits of versions (`from`, `to`] and, when `from` resolves, the
+    * schema DDL in force there (from the metadata-only fold; None
+    * inside the Some = undeclared). `from < 0` or an unresolvable
+    * `from` gives None. */
+  private[graft] def changeRangeIn(store: LogStore, from: Long, to: Long)
+      : (Option[Option[String]], Seq[(Long, Commit)]) = {
+    val l = listingOf(store)
+    val fromDdl =
+      if (from >= 0 && l.resolvable(from)) Some(metaAsOf(store, l, from)._1)
+      else None
+    (fromDdl, tailCommits(store, l, from, to))
   }
 
   /** OPTIMISTIC SERIALIZABLE COMMIT (r16) — the multi-writer protocol
@@ -1426,33 +1380,19 @@ object ManifestLog {
     * conflict check reads only manifest metadata; `maxRetries` bounds
     * pathological rebase storms (each retry means another writer WON
     * — the log never stalls, someone always makes progress). */
-  def commitSerializable(root: String, readVersion: Long,
-      adds: Seq[String], removes: Seq[String], op: String,
+  def commitSerializable(root: String, readVersion: Long, c: Commit,
       readFiles: Set[String] = Set.empty,
       policy: Option[CheckpointPolicy] = None,
-      stats: Map[String, FileStat] = Map.empty,
-      colStats: Map[String, Map[String, FileStat]] = Map.empty,
-      blooms: Map[String, Map[String, BloomRef]] = Map.empty,
-      txn: Option[(String, Long)] = None,
-      dvs: Map[String, DvRef] = Map.empty,
-      commitMs: Option[Long] = None,
-      schemaDdl: Option[String] = None,
-      checks: Option[Seq[(String, String)]] = None,
-      attest: Boolean = false,
-      strColStats: Map[String, Map[String, StrStat]] = Map.empty,
-      maxRetries: Int = 20,
-      nullStats: Map[String, Map[String, NullStat]] = Map.empty): Long = {
+      attest: Boolean = false, maxRetries: Int = 20): Long = {
     val store = storeFor(root)
     val footprint: Set[String] =
-      readFiles ++ removes ++ dvs.keySet
+      readFiles ++ c.removes ++ c.allDvs.keySet
     var target = readVersion + 1
     var attempts = 0
     var committed = -1L
     while (committed < 0) {
       try {
-        commitIn(store, target, adds, removes, op, policy, stats,
-          colStats, blooms, txn, dvs, commitMs, schemaDdl, checks,
-          attest, strColStats, nullStats)
+        commitIn(store, target, c, policy, attest)
         committed = target
       } catch {
         case Conflict(_) =>
@@ -1460,17 +1400,18 @@ object ManifestLog {
           require(attempts <= maxRetries,
             s"gave up after $maxRetries rebases — every attempt lost " +
               "to a concurrent winner")
-          val latest = versionsIn(store).max
-          // the winners' manifests, read once for all three checks
-          val winners = tailJsons(store, readVersion, latest)
-          winners.foreach { case (v, json) =>
-            val overlap = field(json, "removes").toSet.intersect(footprint)
+          // the winners' manifests, listed and read once for all three
+          // checks
+          val l = listingOf(store)
+          val latest = l.manifests.max
+          val winners = tailCommits(store, l, readVersion, latest)
+          winners.foreach { case (v, w) =>
+            val overlap = w.removes.toSet.intersect(footprint)
             if (overlap.nonEmpty) throw LogicalConflict(v,
               s"winner removed files this txn depends on: $overlap")
           }
-          winners.foreach { case (v, json) =>
-            val overlap = parseDvs(field(json, "dvs")).keySet
-              .intersect(footprint)
+          winners.foreach { case (v, w) =>
+            val overlap = w.dvs.keySet.intersect(footprint)
             if (overlap.nonEmpty) throw LogicalConflict(v,
               s"winner vectored files this txn depends on: $overlap")
           }
@@ -1483,9 +1424,8 @@ object ManifestLog {
           // update for exactly this reason; so do we, for every txn
           // shape (appends included — the constraint set governs
           // appends above all).
-          winners.foreach { case (v, json) =>
-            if (field(json, "schema").nonEmpty ||
-                field(json, "checks").nonEmpty)
+          winners.foreach { case (v, w) =>
+            if (w.schemaDdl.nonEmpty || w.checks.nonEmpty)
               throw LogicalConflict(v,
                 "winner declared table metadata (schema/checks) — " +
                   "re-validate against the fresh snapshot")
@@ -1495,18 +1435,6 @@ object ManifestLog {
     }
     committed
   }
-
-  /** The deletion-vector entries committed per version in
-    * (`from`, `to`] — the DV half of [[changesBetweenIn]] (same loud
-    * dense-range contract), for consumers that must know a version
-    * changed ROWS without touching files: an append-only row feed
-    * cannot replay a DV commit and must reject it, a change-image
-    * feed turns its delta into delete images. */
-  def dvChangesBetween(root: String, from: Long,
-      to: Long): Seq[(Long, Map[String, DvRef])] =
-    tailJsons(storeFor(root), from, to).map { case (v, json) =>
-      v -> parseDvs(field(json, "dvs"))
-    }
 
   /** POINT-LOOKUP data skipping: the live files of snapshot `r` whose
     * bloom sidecar for `column` does not rule out `value` — plus every
@@ -1520,17 +1448,15 @@ object ManifestLog {
     * decides membership (the oracle checks rows, never the prune). */
   def filesMatchingPoint(root: String, r: Replay, column: String,
       value: Long): Seq[String] =
-    liveFiles(r).filter { f =>
-      r.blooms.getOrElse(f, Map.empty).get(column).forall { ref =>
-        // a STRING-keyed bloom cannot answer a long probe (different
-        // hash → false negatives = wrong pruning); mismatch = must-read
-        ref.str || {
-          val bits =
-            Files.readAllBytes(resolvePath(root, ref.sidecar).toPath)
-          FileBloom.mightContain(bits, ref.m, ref.k, value)
-        }
+    liveMatching(r)(_.blooms.get(column).forall { ref =>
+      // a STRING-keyed bloom cannot answer a long probe (different
+      // hash → false negatives = wrong pruning); mismatch = must-read
+      ref.str || {
+        val bits =
+          Files.readAllBytes(resolvePath(root, ref.sidecar).toPath)
+        FileBloom.mightContain(bits, ref.m, ref.k, value)
       }
-    }
+    })
 
   /** STRING point-lookup prune (r17): the live files whose bloom
     * for `column` might contain the STRING `value` — keyed through
@@ -1543,13 +1469,13 @@ object ManifestLog {
   def filesMatchingStrPoint(root: String, r: Replay,
       column: String, value: String): Seq[String] = {
     val key = FileBloom.strKey(value)
-    liveFiles(r).filter { f =>
+    liveMatching(r) { a =>
       val boundsMaybe =
-        r.strColStats.getOrElse(f, Map.empty).get(column).forall(st =>
+        a.strColStats.get(column).forall(st =>
           ManifestFileIndex.utf8Cmp(value, st.min) >= 0 &&
           ManifestFileIndex.utf8Cmp(value, st.max) <= 0)
       lazy val bloomMaybe =
-        r.blooms.getOrElse(f, Map.empty).get(column).forall { ref =>
+        a.blooms.get(column).forall { ref =>
           // only a string-keyed bloom can answer a strKey probe
           !ref.str || {
             val bits =
@@ -1574,11 +1500,10 @@ object ManifestLog {
       // exists for must not degrade to a full-table scan (review
       // finding, r17): shape the empty answer from one file's
       // metadata at zero row cost
-      readFilesIndexed(spark, root, r.files.take(1),
-        declaredSchema = r.declaredSchema).limit(0)
+      readFilesIndexed(spark, root, r.files.take(1).map(AddFile(_)),
+        r.declaredSchema).limit(0)
     else
-      readFilesIndexed(spark, root, matching, dvs = r.dvs,
-        declaredSchema = r.declaredSchema, nullStats = r.nullStats)
+      readFilesIndexed(spark, root, matching.map(r.live), r.declaredSchema)
   }
 
   /** DYNAMIC FILE PRUNING (r16) — the dim-driven sibling of
@@ -1603,10 +1528,10 @@ object ManifestLog {
       keys: Seq[Long]): Seq[String] = {
     require(keys.nonEmpty, "dynamic file pruning needs a non-empty key set")
     val sorted = keys.distinct.sorted
-    liveFiles(r).filter { f =>
-      val statsMaybe = r.colStats.getOrElse(f, Map.empty).get(column)
+    liveMatching(r) { a =>
+      val statsMaybe = a.colStats.get(column)
         .forall(st => sorted.exists(k => k >= st.min && k <= st.max))
-      lazy val bloomMaybe = r.blooms.getOrElse(f, Map.empty).get(column)
+      lazy val bloomMaybe = a.blooms.get(column)
         .forall { ref =>
           // a string-keyed bloom cannot answer long probes
           ref.str || {
@@ -1630,9 +1555,9 @@ object ManifestLog {
     require(keys.nonEmpty, "dynamic file pruning needs a non-empty key set")
     val distinct = keys.distinct
     val hashed = distinct.map(FileBloom.strKey)
-    liveFiles(r).filter { f =>
+    liveMatching(r) { a =>
       val boundsMaybe =
-        r.strColStats.getOrElse(f, Map.empty).get(column).forall(st =>
+        a.strColStats.get(column).forall(st =>
           distinct.exists(k =>
             ManifestFileIndex.utf8Cmp(k, st.min) >= 0 &&
             ManifestFileIndex.utf8Cmp(k, st.max) <= 0))
@@ -1640,7 +1565,7 @@ object ManifestLog {
       // file survives only if SOME key might be present; a long-keyed
       // bloom cannot answer strKey probes (mismatch = must-read)
       lazy val bloomMaybe =
-        r.blooms.getOrElse(f, Map.empty).get(column).forall { ref =>
+        a.blooms.get(column).forall { ref =>
           !ref.str || {
             val bits =
               Files.readAllBytes(resolvePath(root, ref.sidecar).toPath)
@@ -1660,8 +1585,8 @@ object ManifestLog {
   private def readPruned(spark: SparkSession, root: String, r: Replay,
       matching: Seq[String]): DataFrame =
     readFilesIndexed(spark, root,
-      if (matching.nonEmpty) matching else r.files, r.colStats, r.dvs,
-      r.declaredSchema, r.nullStats)
+      (if (matching.nonEmpty) matching else r.files).map(r.live),
+      r.declaredSchema)
 
   /** The plan-bounded dim-key collect (r20; r19 verdict what's-wrong
     * #1): a corpus-sized keys frame used to materialize on the driver
@@ -1728,23 +1653,10 @@ object ManifestLog {
     readPruned(spark, root, r, filesMatchingPoint(root, r, column, value))
   }
 
-  def commit(root: String, version: Long, adds: Seq[String],
-      removes: Seq[String], op: String,
+  def commit(root: String, version: Long, c: Commit,
       policy: Option[CheckpointPolicy] = None,
-      stats: Map[String, FileStat] = Map.empty,
-      colStats: Map[String, Map[String, FileStat]] = Map.empty,
-      blooms: Map[String, Map[String, BloomRef]] = Map.empty,
-      txn: Option[(String, Long)] = None,
-      dvs: Map[String, DvRef] = Map.empty,
-      commitMs: Option[Long] = None,
-      schemaDdl: Option[String] = None,
-      checks: Option[Seq[(String, String)]] = None,
-      attest: Boolean = false,
-      strColStats: Map[String, Map[String, StrStat]] = Map.empty,
-      nullStats: Map[String, Map[String, NullStat]] = Map.empty): Unit =
-    commitIn(storeFor(root), version, adds, removes, op, policy, stats,
-      colStats, blooms, txn, dvs, commitMs, schemaDdl, checks, attest,
-      strColStats, nullStats)
+      attest: Boolean = false): Unit =
+    commitIn(storeFor(root), version, c, policy, attest)
 
   /** The rows ADDED in versions (`from`, `to`] with their commit
     * version as `_commit_version` — the data half of the incremental
@@ -1755,18 +1667,20 @@ object ManifestLog {
   def readChanges(spark: SparkSession, root: String, from: Long,
       to: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val changes = changesBetween(root, from, to)
+    val store = storeFor(root)
+    val l = listingOf(store)
+    val changes = tailCommits(store, l, from, to)
     // evolved ranges (r17): plan every per-version frame under the
     // `to` snapshot's declared schema, like the image feed — the
     // union across a schema-evolution boundary would otherwise crash,
     // and pre-evolution rows correctly surface NULL for new columns.
     // Index-planned, so an undeclared schema costs one footer read per
     // version, not a schema-inference job
-    val declared = snapshot(root, to).declaredSchema
+    val declared = foldIn(store, l, to).declaredSchema
     val perVersion = changes.collect {
-      case (v, adds, _) if adds.nonEmpty =>
+      case (v, c) if c.adds.nonEmpty =>
         ManifestFileIndex.read(spark, root,
-          adds.map(f => entryFor(root, f, Map.empty)),
+          c.adds.map(entryFor(root, _)),
           declaredSchema = declared)
           .withColumn("_commit_version", lit(v))
     }
@@ -1804,7 +1718,7 @@ object ManifestLog {
         fresh.iterator.filterNot(old).map(i => (dataPath, i))
       }.toDF("__dv_f", "__dv_idx")
     val scan = ManifestFileIndex.read(spark, root,
-      entries.map(e => entryFor(root, e._1, Map.empty)),
+      entries.map(e => entryFor(root, AddFile(e._1))),
       declaredSchema = declaredSchema)
     scan
       .join(broadcast(delta),
@@ -1841,7 +1755,7 @@ object ManifestLog {
     *
     * Output: `keys` ++ payload columns (from the image side) ++
     * `_change_type` ++ `_commit_version`. Requires every manifest in
-    * the range (same loud pruned-tail contract as [[changesBetween]]).
+    * the range (same loud pruned-tail contract as [[commitsBetween]]).
     * `keys` must identify a row within a version for the images to be
     * row-accurate (the same requirement Delta's MERGE puts on its
     * match condition).
@@ -1871,7 +1785,9 @@ object ManifestLog {
     // be resolvable — without its state the feed cannot know which
     // removed rows were alive (loud, like every pruned-tail read).
     var dvState: Map[String, DvRef] =
-      if (from >= 0 && l.resolvable(from)) foldIn(store, l, from).dvs
+      if (from >= 0 && l.resolvable(from))
+        foldIn(store, l, from).live.valuesIterator
+          .flatMap(a => a.dv.map(a.path -> _)).toMap
       else if (from < 0) Map.empty
       else {
         // unresolvable baseline: exact ONLY for a table that has
@@ -1885,7 +1801,7 @@ object ManifestLog {
             "classified; re-bootstrap from a snapshot")
         Map.empty
       }
-    val changes = tailJsons(store, from, to)
+    val changes = tailCommits(store, l, from, to)
     // SCHEMA-EVOLVED ranges (r17): a range spanning an additive
     // evolution mixes file generations — every frame must plan under
     // the `to` snapshot's DECLARED schema (pre-evolution rows surface
@@ -1895,19 +1811,19 @@ object ManifestLog {
     // construction and read from footers as before.
     val rTo = foldIn(store, l, to)
     val declared = rTo.declaredSchema
-    val perVersion = changes.flatMap { case (v, json) =>
-        val adds = field(json, "adds")
-        val removes = field(json, "removes")
-        val dvEntries = parseDvs(field(json, "dvs"))
+    // a file of this walk with the vector it carries at that point
+    def withDv(f: String) = AddFile(f, dv = dvState.get(f))
+    val perVersion = changes.flatMap { case (v, c) =>
+        val adds = c.adds.map(_.path)
+        val removes = c.removes
+        val dvEntries = c.dvs
         // pre side, two sources: rows of the files this commit
         // RETIRED (minus their already-dead rows), and rows this
         // commit's new VECTORS killed in files that stay live
-        val removeSet = removes.toSet
         val preRemoved =
           if (removes.isEmpty) None
-          else Some(readFilesIndexed(spark, root, removes,
-            dvs = dvState.filter { case (f, _) => removeSet(f) },
-            declaredSchema = declared))
+          else Some(readFilesIndexed(spark, root, removes.map(withDv),
+            declared))
         val preDelta =
           if (dvEntries.isEmpty) None
           else Some(readDvDeltaRows(spark, root,
@@ -1920,10 +1836,8 @@ object ManifestLog {
         // vector the same commit put on them
         val post =
           if (adds.isEmpty) None
-          else Some(readFilesIndexed(spark, root, adds,
-            dvs = { val addSet = adds.toSet
-              dvState.filter { case (f, _) => addSet(f) } },
-            declaredSchema = declared))
+          else Some(readFilesIndexed(spark, root, adds.map(withDv),
+            declared))
         val pre = (preRemoved, preDelta) match {
           case (Some(a), Some(b)) => Some(a.unionByName(b))
           case (a, b) => a.orElse(b)
@@ -1984,8 +1898,8 @@ object ManifestLog {
       require(live.nonEmpty,
         s"no file actions in ($from, $to] and no live files at $to — " +
           "cannot shape an empty change-image frame")
-      val base = readFilesIndexed(spark, root, live.take(1),
-        declaredSchema = declared).limit(0)
+      val base = readFilesIndexed(spark, root, live.take(1).map(AddFile(_)),
+        declared).limit(0)
       val payload = base.columns.filterNot(keys.contains)
       return (base.select((keys.map(col) ++ payload.map(col) :+
         lit("").as("_change_type") :+
@@ -1996,28 +1910,6 @@ object ManifestLog {
         perVersion.head.select(col("__img.*")).columns.map(c =>
           col(s"__img.$c").as(c)) ++
         Seq(col("_change_type"), col("_commit_version"))): _*), rTo)
-  }
-
-  /** The in-force declared-schema DDL for EVERY version in
-    * (`from`, `to`], computed with ONE snapshot at `from` plus one
-    * manifest read per version (the streaming gate previously
-    * replayed per version — O(V^2); review finding, r17). The map
-    * also holds `from` itself when `from` is resolvable; `from < 0`
-    * and an unresolvable `from` seed from nothing and leave it out. */
-  def schemaDdlsThrough(root: String, from: Long,
-      to: Long): Map[Long, Option[String]] = {
-    val store = storeFor(root)
-    val l = listingOf(store)
-    val seed =
-      if (from >= 0 && l.resolvable(from))
-        Map(from -> foldIn(store, l, from).schemaDdl)
-      else Map.empty[Long, Option[String]]
-    var cur = seed.get(from).flatten
-    seed ++ ((from + 1) to to).map { v =>
-      decodeSchemaField(field(readManifest(store, v), "schema"))
-        .foreach(d => cur = Some(d))
-      v -> cur
-    }
   }
 
   /** INVARIANT ENFORCEMENT at the write boundary (Delta's CHECK
@@ -2102,13 +1994,9 @@ object ManifestLog {
       s"CHECK constraint(s) violated: ${bad.mkString("; ")} — " +
         "nothing was committed")
     require(summaries.nonEmpty, "guarded append landed no files")
-    commitSerializable(root, read.getOrElse(-1L),
-      adds = summaries.map(_.rel), removes = Seq.empty, op = "append",
-      policy = policy, commitMs = commitMs,
-      colStats = SinglePassWriter.colStatsOf(summaries, statsCols),
-      blooms = SinglePassWriter.bloomsOf(summaries, bloomCol),
-      nullStats = SinglePassWriter.nullStatsOf(summaries, statsCols),
-      attest = true)
+    commitSerializable(root, read.getOrElse(-1L), Commit("append",
+      SinglePassWriter.addFiles(summaries, statsCols, bloomCol = bloomCol),
+      commitMs = commitMs), policy = policy, attest = true)
   }
 
   /** SHALLOW CLONE (r17) — a new, independently writable table whose
@@ -2146,29 +2034,16 @@ object ManifestLog {
         "seeds NEW tables")
     require(r.files.nonEmpty,
       s"clone source version $version resolves to no files")
-    val abs = r.files.map(f =>
-      f -> resolvePath(srcRoot, f).getAbsolutePath).toMap
-    def absSc(sc: String) = resolvePath(srcRoot, sc).getAbsolutePath
-    commitIn(dstStore, 0, adds = r.files.map(abs), removes = Seq.empty,
-      op = "clone", policy = policy,
-      stats = r.stats.collect {
-        case (f, st) if abs.contains(f) => abs(f) -> st },
-      colStats = r.colStats.collect {
-        case (f, cs) if abs.contains(f) => abs(f) -> cs },
-      blooms = r.blooms.collect {
-        case (f, bs) if abs.contains(f) => abs(f) -> bs.map {
-          case (c, ref) => c -> ref.copy(sidecar = absSc(ref.sidecar)) } },
-      txn = txn,
-      dvs = r.dvs.collect { case (f, d) if abs.contains(f) =>
-        abs(f) -> d.copy(sidecar = absSc(d.sidecar)) },
+    def abs(p: String) = resolvePath(srcRoot, p).getAbsolutePath
+    val adds = r.live.valuesIterator.map(a => a.copy(path = abs(a.path),
+      blooms = a.blooms.map { case (c, ref) =>
+        c -> ref.copy(sidecar = abs(ref.sidecar)) },
+      dv = a.dv.map(d => d.copy(sidecar = abs(d.sidecar))))).toVector
+    commitIn(dstStore, 0, Commit("clone", adds, txn = txn,
       commitMs = commitMs, schemaDdl = r.schemaDdl,
-      checks = if (r.checks.nonEmpty) Some(r.checks.toSeq.sortBy(_._1))
-        else None,
-      strColStats = r.strColStats.collect {
-        case (f, cs) if abs.contains(f) => abs(f) -> cs },
-      nullStats = r.nullStats.collect {
-        case (f, ns) if abs.contains(f) => abs(f) -> ns })
-    r.files.map(abs)
+      checks = if (r.checks.nonEmpty) Some(r.checks.toSeq) else None),
+      policy)
+    adds.map(_.path)
   }
 
   /** Hive `k=v` partition segments of ABSOLUTE references, resolved
@@ -2288,7 +2163,7 @@ object ManifestLog {
       return materializeExternalHive(spark, root, latest, r, ext,
         extSegs, files, policy)
     }
-    val live = readFilesIndexed(spark, root, ext, r.colStats, r.dvs,
+    val live = readFilesIndexed(spark, root, ext.map(r.live),
       r.declaredSchema)
     val n = if (files > 0) files
       else math.max(8, spark.sparkContext.defaultParallelism)
@@ -2302,14 +2177,9 @@ object ManifestLog {
     // attested: a materialization is content-preserving by
     // construction — every row was already committed and validated
     // upstream (the same exemption pure-layout rewrites get)
-    commit(root, latest + 1, adds = summaries.map(_.rel),
-      removes = ext, op = "materialize", policy = policy,
-      colStats = SinglePassWriter.colStatsOf(summaries, statsCols),
-      strColStats =
-        SinglePassWriter.strColStatsOf(summaries, strStatsCols),
-      nullStats =
-        SinglePassWriter.nullStatsOf(summaries, statsCols, strStatsCols),
-      attest = true)
+    commit(root, latest + 1, Commit("materialize",
+      SinglePassWriter.addFiles(summaries, statsCols, strStatsCols),
+      removes = ext), policy, attest = true)
     summaries.map(_.rel)
   }
 
@@ -2363,8 +2233,7 @@ object ManifestLog {
     val generations = ext.groupBy(f => extSegs(f).map(_._1)).toSeq
       .sortBy(_._1.size)
     val adds = generations.flatMap { case (names, gFiles) =>
-      val live = readFilesIndexed(spark, root, gFiles, r.colStats, r.dvs,
-        declaredSchema = declared)
+      val live = readFilesIndexed(spark, root, gFiles.map(r.live), declared)
       val gSub = s"$sub/g${names.size}"
       if (names.isEmpty) {
         // the pre-partitioning generation: flat files stay flat
@@ -2399,8 +2268,8 @@ object ManifestLog {
     }
     require(adds.nonEmpty, "hive materialization landed no files")
     // attested: content-preserving by construction, like the flat path
-    commit(root, latest + 1, adds = adds, removes = ext,
-      op = "materialize", policy = policy, attest = true)
+    commit(root, latest + 1, Commit("materialize", adds.map(AddFile(_)),
+      removes = ext), policy, attest = true)
     adds
   }
 
@@ -2679,8 +2548,8 @@ object ManifestLog {
               (if (keyPrunable && tupleBounded) broadcast(changedKeys)
                else changedKeys)
                 .alias("__ck")
-            val mirror = readFilesIndexed(spark, dstRoot, touched,
-                r.colStats, r.dvs, declaredSchema = Some(upserts.schema))
+            val mirror = readFilesIndexed(spark, dstRoot,
+                touched.map(r.live), Some(upserts.schema))
               .alias("__m")
             // NULL-SAFE key equality (review finding, r18): a plain
             // equality anti-join can never remove a NULL-keyed
@@ -2701,16 +2570,11 @@ object ManifestLog {
           // attested: every mirrored row already passed the SOURCE
           // table's write-side validation before it entered the feed
           commitSerializable(dstRoot, dst.fold(-1L)(_.version),
-            adds = summaries.map(_.rel), removes = touched,
-            op = "replicate", readFiles = touched.toSet,
-            txn = Some((appId, to)),
-            colStats = SinglePassWriter.colStatsOf(summaries, statsCols),
-            strColStats =
-              SinglePassWriter.strColStatsOf(summaries, strStatsCols),
-            nullStats = SinglePassWriter.nullStatsOf(summaries,
-              statsCols, strStatsCols),
-            schemaDdl = srcDdl.filterNot(d => mirrorDdl.contains(d)),
-            attest = true)
+            Commit("replicate",
+              SinglePassWriter.addFiles(summaries, statsCols, strStatsCols),
+              removes = touched, txn = Some((appId, to)),
+              schemaDdl = srcDdl.filterNot(d => mirrorDdl.contains(d))),
+            readFiles = touched.toSet, attest = true)
           done = true
         } catch {
           case LogicalConflict(v, d) =>
@@ -2770,19 +2634,16 @@ object ManifestLog {
       statsColumn: Option[String] = None): DataFrame =
     applyDvs(spark, root, ManifestFileIndex.read(spark, root,
       indexEntries(root, r, statsColumn),
-      declaredSchema = r.declaredSchema), r.dvs)
+      declaredSchema = r.declaredSchema), r.live.values)
 
   /** Every live file of `r` as an index entry carrying all its stats;
     * `statsColumn` names the column the unnamed single-column stats
     * describe. */
   private def indexEntries(root: String, r: Replay,
-      statsColumn: Option[String]): Seq[ManifestFileEntry] =
-    liveFiles(r).map { f =>
-      val merged = r.colStats.getOrElse(f, Map.empty[String, FileStat]) ++
-        statsColumn.flatMap(c => r.stats.get(f).map(c -> _))
-      entryFor(root, f, merged, r.strColStats.getOrElse(f, Map.empty),
-        r.nullStats.getOrElse(f, Map.empty))
-    }
+      statsColumn: Option[String]): Seq[ManifestFileEntry] = {
+    require(r.live.nonEmpty, s"version ${r.version} resolves to no files")
+    r.live.valuesIterator.map(entryFor(root, _, statsColumn)).toVector
+  }
 
   /** Snapshot read of a HIVE-PARTITIONED manifest table (r16): the
     * live files' `k=v` path segments become partition columns
@@ -2831,35 +2692,29 @@ object ManifestLog {
     })
     applyDvs(spark, root, ManifestFileIndex.read(spark, root,
       indexEntries(root, r, statsColumn), schema,
-      declaredSchema = r.declaredSchema), r.dvs)
+      declaredSchema = r.declaredSchema), r.live.values)
   }
 
-  private def entryFor(root: String, rel: String,
-      stats: Map[String, FileStat],
-      strStats: Map[String, StrStat] = Map.empty,
-      nullStats: Map[String, NullStat] = Map.empty): ManifestFileEntry = {
-    val p = resolvePath(root, rel).toPath
-    ManifestFileEntry(rel, Files.size(p), stats,
-      Files.getLastModifiedTime(p).toMillis, strStats, nullStats)
+  /** `a` as an index entry carrying all its stats; `statsColumn`
+    * names the column its unnamed single-column stat describes. */
+  private def entryFor(root: String, a: AddFile,
+      statsColumn: Option[String] = None): ManifestFileEntry = {
+    val p = resolvePath(root, a.path).toPath
+    ManifestFileEntry(a.path, Files.size(p),
+      a.colStats ++ statsColumn.flatMap(c => a.stat.map(c -> _)),
+      Files.getLastModifiedTime(p).toMillis, a.strColStats, a.nullStats)
   }
 
   /** Index-planned scan over an explicit pre-resolved file list (the
-    * legacy prune helpers' read half), merge-on-read-filtered when any
-    * of the files carries a deletion vector. */
+    * prune helpers' read half), merge-on-read-filtered by the
+    * vectors the records carry. */
   private def readFilesIndexed(spark: SparkSession, root: String,
-      files: Seq[String],
-      stats: Map[String, Map[String, FileStat]] = Map.empty,
-      dvs: Map[String, DvRef] = Map.empty,
-      declaredSchema: Option[org.apache.spark.sql.types.StructType],
-      nullStats: Map[String, Map[String, NullStat]] = Map.empty)
+      files: Seq[AddFile],
+      declaredSchema: Option[org.apache.spark.sql.types.StructType])
       : DataFrame =
     applyDvs(spark, root,
-      ManifestFileIndex.read(spark, root,
-        files.map(f => entryFor(root, f, stats.getOrElse(f, Map.empty),
-          nullStats = nullStats.getOrElse(f, Map.empty))),
-        declaredSchema = declaredSchema),
-      { val fileSet = files.toSet
-        dvs.filter { case (f, _) => fileSet(f) } })
+      ManifestFileIndex.read(spark, root, files.map(entryFor(root, _)),
+        declaredSchema = declaredSchema), files)
 
   /** The abs-path string a [[ManifestFileIndex]] scan reports in
     * `_metadata.file_path` for the live file `rel` — the SAME
@@ -2870,9 +2725,9 @@ object ManifestLog {
     new org.apache.hadoop.fs.Path(
       resolvePath(root, rel).toURI).toString
 
-  /** MERGE-ON-READ row filter: drop each file's DV-dead rows from
-    * `base` (a [[ManifestFileIndex]]-planned scan over exactly the
-    * files keyed in `dvs` plus any DV-less ones) by anti-joining
+  /** MERGE-ON-READ row filter: drop the DV-dead rows of `files` from
+    * `base` (a [[ManifestFileIndex]]-planned scan over exactly those
+    * files) by anti-joining
     * `(_metadata.file_path, _metadata.row_index)` against the decoded
     * vectors. The DV side is read DISTRIBUTED — each task decodes its
     * own sidecar's 8-byte big-endian indexes — and BROADCAST: its row
@@ -2882,14 +2737,13 @@ object ManifestLog {
     * dead-row count outgrows broadcast range is overdue for
     * [[compactDvs]] — the same threshold rule real formats apply. */
   private def applyDvs(spark: SparkSession, root: String,
-      base: DataFrame, dvs: Map[String, DvRef]): DataFrame = {
-    if (dvs.isEmpty) return base
+      base: DataFrame, files: Iterable[AddFile]): DataFrame = {
+    val pairs = files.iterator.flatMap(a => a.dv.map(d =>
+      (scanPath(root, a.path), resolvePath(root, d.sidecar).getAbsolutePath)))
+      .toVector
+    if (pairs.isEmpty) return base
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
-    val pairs = dvs.toSeq.map { case (f, d) =>
-      (scanPath(root, f),
-        resolvePath(root, d.sidecar).getAbsolutePath)
-    }
     val dead = spark.createDataset(pairs).flatMap { case (dataPath, sc) =>
       readDv(sc).iterator.map(i => (dataPath, i))
     }.toDF("__dv_f", "__dv_idx")
@@ -3020,8 +2874,7 @@ object ManifestLog {
     // evolved table must plan under it — a footer probe from the old
     // generation would fail a predicate over the new column
     val scan = ManifestFileIndex.read(spark, root,
-      candidates.map(f =>
-        entryFor(root, f, r.colStats.getOrElse(f, Map.empty))),
+      candidates.map(f => entryFor(root, r.live(f))),
       declaredSchema = r.declaredSchema)
     val matched = doomed(
         scan.withColumn("__f", col("_metadata.file_path"))
@@ -3029,7 +2882,7 @@ object ManifestLog {
       .select(col("__f"), col("__idx")).as[(String, Long)]
     val absToRel = candidates.map(f => scanPath(root, f) -> f).toMap
     val oldDv: Map[String, String] = candidates.flatMap(f =>
-      r.dvs.get(f).map(d => f -> d.sidecar)).toMap
+      r.live(f).dv.map(d => f -> d.sidecar)).toMap
     // minted ONCE on the driver per buildDvs invocation: retried
     // tasks share it (idempotent rewrite of identical bytes), racing
     // WRITERS cannot (each invocation gets its own paths)
@@ -3076,8 +2929,7 @@ object ManifestLog {
       if (candidates.isEmpty) Map.empty[String, DvRef]
       else buildDvs(spark, root, r, newVersion, candidates,
         _.filter(predicate))
-    commit(root, newVersion, Seq.empty, Seq.empty, op = "delete",
-      policy = policy, dvs = dvs)
+    commit(root, newVersion, Commit("delete", dvs = dvs), policy)
     dvs
   }
 
@@ -3088,11 +2940,9 @@ object ManifestLog {
       predicate: org.apache.spark.sql.Column): Seq[String] = {
     val ranges = ManifestFileIndex.ranges(Seq(
       org.apache.spark.sql.GraftColumnBridge.expression(predicate)))
-    r.files.filter { f =>
-      val cs = r.colStats.getOrElse(f, Map.empty)
-      ranges.forall { case (c, (lo, hi)) =>
-        cs.get(c).forall(st => st.max >= lo && st.min <= hi) }
-    }
+    r.live.valuesIterator.filter(a => ranges.forall { case (c, (lo, hi)) =>
+      a.colStats.get(c).forall(st => st.max >= lo && st.min <= hi) })
+      .map(_.path).toVector
   }
 
   /** The OPERATOR-level retry loop over [[commitSerializable]]
@@ -3126,9 +2976,8 @@ object ManifestLog {
         else buildDvs(spark, root, r, read + 1, candidates,
           _.filter(predicate))
       try {
-        committed = commitSerializable(root, read, Seq.empty, Seq.empty,
-          op = "delete", readFiles = candidates.toSet, policy = policy,
-          dvs = dvs)
+        committed = commitSerializable(root, read,
+          Commit("delete", dvs = dvs), candidates.toSet, policy)
       } catch {
         case LogicalConflict(v, d) =>
           if (attempt >= maxAttempts) throw LogicalConflict(v,
@@ -3185,7 +3034,7 @@ object ManifestLog {
       val morMatched =
         if (candidates.isEmpty)
           readSnapshot(spark, root, r).limit(0).filter(matched)
-        else readFilesIndexed(spark, root, candidates, r.colStats, r.dvs,
+        else readFilesIndexed(spark, root, candidates.map(r.live),
           r.declaredSchema).filter(matched)
       val postDf = post(morMatched)
       val summaries = SinglePassWriter.writeFiles(postDf, root,
@@ -3195,12 +3044,9 @@ object ManifestLog {
         else buildDvs(spark, root, r, read + 1, candidates,
           _.filter(matched))
       try {
-        committed = commitSerializable(root, read,
-          adds = summaries.map(_.rel), removes = Seq.empty,
-          op = "merge", readFiles = candidates.toSet, policy = policy,
-          dvs = dvs,
-          colStats = SinglePassWriter.colStatsOf(summaries, statsCols),
-          nullStats = SinglePassWriter.nullStatsOf(summaries, statsCols))
+        committed = commitSerializable(root, read, Commit("merge",
+          SinglePassWriter.addFiles(summaries, statsCols), dvs = dvs),
+          candidates.toSet, policy)
       } catch {
         case LogicalConflict(v, d) =>
           if (attempt >= maxAttempts) throw LogicalConflict(v,
@@ -3230,15 +3076,15 @@ object ManifestLog {
       policy: Option[CheckpointPolicy] = None,
       statsCols: Seq[String] = Seq.empty): Seq[String] = {
     val r = snapshot(root, version)
-    val doomed = r.files.filter(f =>
-      r.dvs.get(f).exists(_.nDeleted >= minDead))
+    val doomed = r.live.valuesIterator
+      .filter(_.dv.exists(_.nDeleted >= minDead)).map(_.path).toVector
     if (doomed.isEmpty) return Seq.empty
     val sub = s"data/c$newVersion"
     // DECLARED schema (r17): a mixed-generation rewrite planned from
     // an old-generation footer would silently DROP the new column's
     // values from the compacted files — the same hazard the replica
     // fold closed; old-generation rows correctly surface NULL
-    val live = readFilesIndexed(spark, root, doomed, r.colStats, r.dvs,
+    val live = readFilesIndexed(spark, root, doomed.map(r.live),
       r.declaredSchema)
     // attested: a compaction is content-preserving by construction —
     // every surviving row was already committed (and validated) in
@@ -3247,17 +3093,16 @@ object ManifestLog {
     if (statsCols.isEmpty) {
       live.write.parquet(s"$root/$sub")
       val adds = partFiles(root, sub)
-      commit(root, newVersion, adds, removes = doomed, op = "rewrite",
-        policy = policy, attest = true)
+      commit(root, newVersion,
+        Commit("rewrite", adds.map(AddFile(_)), removes = doomed),
+        policy, attest = true)
       adds
     } else {
       val summaries = SinglePassWriter.writeFiles(live, root, sub,
         statsCols)
-      commit(root, newVersion, adds = summaries.map(_.rel),
-        removes = doomed, op = "rewrite", policy = policy,
-        colStats = SinglePassWriter.colStatsOf(summaries, statsCols),
-        nullStats = SinglePassWriter.nullStatsOf(summaries, statsCols),
-        attest = true)
+      commit(root, newVersion, Commit("rewrite",
+        SinglePassWriter.addFiles(summaries, statsCols), removes = doomed),
+        policy, attest = true)
       summaries.map(_.rel)
     }
   }
@@ -3305,19 +3150,6 @@ object ManifestLog {
     restoreToIn(storeFor(root), root, target, policy, commitMs,
       attest, maxRetries)
 
-  /** [[restoreTo]] resolved by WALL-CLOCK (Delta's RESTORE ...
-    * TIMESTAMP AS OF): roll back to the table as it was at `tsMs`,
-    * under [[versionAtTimestampIn]]'s resolution contract — the
-    * latest commit stamped at or before `tsMs`; a timestamp before
-    * every stamped commit is loud, never a silent earliest-version
-    * restore. */
-  def restoreToTimestamp(root: String, tsMs: Long,
-      policy: Option[CheckpointPolicy] = None,
-      commitMs: Option[Long] = None, attest: Boolean = false,
-      maxRetries: Int = 10): Long =
-    restoreTo(root, versionAtTimestamp(root, tsMs), policy, commitMs,
-      attest, maxRetries)
-
   /** Store-parameterized [[restoreTo]] — the seam that lets the spec
     * inject a DETERMINISTIC commit race (a store whose publish lands
     * a competing commit first) and prove the loop re-derives the
@@ -3344,13 +3176,14 @@ object ManifestLog {
       // DV deltas on files live in BOTH states
       val both = rt.files.filter(curSet)
       val reassert = both.filter(f =>
-        rt.dvs.contains(f) && rt.dvs.get(f) != rc.dvs.get(f))
+        rt.live(f).dv.isDefined && rt.live(f).dv != rc.live(f).dv)
       val clears = both.filter(f =>
-        !rt.dvs.contains(f) && rc.dvs.contains(f))
-      val adds = reAdds ++ clears
+        rt.live(f).dv.isEmpty && rc.live(f).dv.isDefined)
+      // the target's records, stats, bloom refs and vectors included,
+      // so the restored table prunes and MOR-filters as it did then
+      val adds = (reAdds ++ clears).map(rt.live)
       val removes = drops ++ clears
-      val dvs = (reassert ++ reAdds.filter(rt.dvs.contains))
-        .map(f => f -> rt.dvs(f)).toMap
+      val dvs = reassert.map(f => f -> rt.live(f).dv.get).toMap
       // IDEMPOTENT (review finding, r17): the live state already
       // equals the target's — an at-least-once wrapper retrying
       // restoreTo must not append empty restore commits forever
@@ -3362,26 +3195,16 @@ object ManifestLog {
       // sidecars count too (r17 advice): a re-committed bloom ref
       // whose sidecar a source vacuum reclaimed would fail the next
       // point prune deep inside a read, not here where it's loud.
-      (adds ++ dvs.valuesIterator.map(_.sidecar).toSeq ++
-        adds.flatMap(f => rt.blooms.getOrElse(f, Map.empty)
-          .valuesIterator.map(_.sidecar))).foreach { f =>
+      (adds.map(_.path) ++
+        (dvs.values ++ adds.flatMap(_.dv)).map(_.sidecar) ++
+        adds.flatMap(_.blooms.values.map(_.sidecar))).foreach { f =>
         require(Files.exists(resolvePath(root, f).toPath),
           s"restore to $target needs $f, which no longer exists on " +
             "disk — reclaimed by vacuum; restore is impossible")
       }
       try {
-        commitIn(store, cur + 1, adds, removes, op = "restore",
-          policy = policy,
-          stats = adds.flatMap(f => rt.stats.get(f).map(f -> _)).toMap,
-          colStats =
-            adds.flatMap(f => rt.colStats.get(f).map(f -> _)).toMap,
-          blooms =
-            adds.flatMap(f => rt.blooms.get(f).map(f -> _)).toMap,
-          dvs = dvs, commitMs = commitMs, attest = attest,
-          strColStats =
-            adds.flatMap(f => rt.strColStats.get(f).map(f -> _)).toMap,
-          nullStats =
-            adds.flatMap(f => rt.nullStats.get(f).map(f -> _)).toMap)
+        commitIn(store, cur + 1, Commit("restore", adds, removes, dvs,
+          commitMs = commitMs), policy, attest)
         committed = cur + 1
       } catch {
         case Conflict(_) =>
@@ -3532,23 +3355,23 @@ object ManifestLog {
       if (stateV == v - 1 && l.hasManifest(v)) {
         // warm fold: this manifest's additions are the only NEW
         // referenced paths this version can introduce
-        val json = readManifest(store, v)
-        keep ++= field(json, "adds")
-        keep ++= parseBlooms(field(json, "blooms")).valuesIterator
-          .flatMap(_.valuesIterator.map(_.sidecar))
+        val c = readCommit(store, v)
+        c.adds.foreach { a =>
+          keep += a.path
+          keep ++= a.blooms.valuesIterator.map(_.sidecar)
+        }
         // a committed dv's file is live at this version by the commit
         // invariants (dvs never target a file the commit removes)
-        keep ++= parseDvs(field(json, "dvs")).valuesIterator
-          .map(_.sidecar)
+        keep ++= c.dvs.valuesIterator.map(_.sidecar)
       } else {
         // seed (first version, or a gap after an isolated checkpoint)
-        val r = foldIn(store, l, v)
-        keep ++= r.files
-        keep ++= r.blooms.valuesIterator.flatMap(
-          _.valuesIterator.map(_.sidecar))
         // each resolvable version's MOR reads need ITS deletion
         // vectors (the snapshot carries live files' vectors only)
-        keep ++= r.dvs.valuesIterator.map(_.sidecar)
+        foldIn(store, l, v).live.valuesIterator.foreach { a =>
+          keep += a.path
+          keep ++= a.blooms.valuesIterator.map(_.sidecar)
+          keep ++= a.dv.map(_.sidecar)
+        }
       }
       stateV = v
     }

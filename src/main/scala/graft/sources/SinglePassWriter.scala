@@ -16,7 +16,8 @@ import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.ManifestLog.{BloomRef, CheckpointPolicy, FileStat}
+import graft.sources.ManifestLog.{AddFile, BloomRef, CheckpointPolicy, Commit,
+  FileStat, NullStat, StrStat}
 
 /** SINGLE-PASS stats-bearing writer (r16; closes SURVEY §8.3.1-3's
   * remaining note): every stats-committed table so far computed its
@@ -177,86 +178,54 @@ object SinglePassWriter {
     val summaries = writeFiles(df, root, sub, statsCols, bloomCol,
       strStatsCols = strStatsCols)
     require(summaries.nonEmpty, "single-pass write produced no files")
-    ManifestLog.commit(root, version, adds = summaries.map(_.rel),
-      removes = Seq.empty, op = op, policy = policy,
-      colStats = colStatsOf(summaries, statsCols),
-      blooms = bloomsOf(summaries, bloomCol),
-      strColStats = strColStatsOf(summaries, strStatsCols),
-      nullStats = nullStatsOf(summaries, statsCols, strStatsCols))
+    ManifestLog.commit(root, version, Commit(op,
+      addFiles(summaries, statsCols, strStatsCols, bloomCol)), policy)
     summaries
   }
 
-
-  /** The committed-metadata views of a pass's summaries — exposed so
-    * composite commits (a compaction's remove+add, a merge) can fold
-    * single-pass-written files into their own single atomic commit. */
-  def colStatsOf(summaries: Seq[FileSummary],
-      statsCols: Seq[String])
-      : Map[String, Map[String, FileStat]] =
-    summaries.map(s => s.rel ->
-      statsCols.indices.flatMap { k =>
-        // a partition whose stats column was entirely NULL never
-        // updates its fold — the inverted sentinel (MaxValue,
-        // MinValue) must NOT be committed (r17 advice: a min > max
-        // stat is nonsense to any consumer that trusts the
-        // invariant); omitting the entry makes the file stats-less
-        // for that column = never skippable, the same conservative
-        // contract a stats-less add already has.
-        // The dbl TAG rides in the summary itself — writeFiles is
-        // the only party that knows the fold's type, so no caller
-        // can forget it and reopen the untyped-proof hole (review
-        // finding, r17)
-        if (s.los(k) <= s.his(k))
-          Some(statsCols(k) -> FileStat(s.los(k), s.his(k),
-            s.dbl.lift(k).getOrElse(false)))
-        else None
-      }.toMap)
-      .filter(_._2.nonEmpty).toMap
-
-  /** The committed string-bounds view of a pass's summaries (r17):
-    * UTF-8-ordered [min, max] per string stats column, with all-NULL
-    * partitions omitted (sSeen false → stats-less for that column —
-    * the same conservative contract as the integral fold). */
-  def strColStatsOf(summaries: Seq[FileSummary],
-      strStatsCols: Seq[String])
-      : Map[String, Map[String, ManifestLog.StrStat]] =
-    summaries.map(s => s.rel ->
-      strStatsCols.indices.flatMap { k =>
-        if (s.sSeen(k))
-          Some(strStatsCols(k) -> ManifestLog.StrStat(s.sLos(k), s.sHis(k)))
-        else None
-      }.toMap)
-      .filter(_._2.nonEmpty).toMap
-
-  /** The committed null-count view of a pass's summaries (r18): one
-    * (nulls, rows) pair per tracked column per file — folded in the
-    * same row loop as the bounds, so the `IS [NOT] NULL` prune costs
-    * the write zero extra IO. Unlike the bounds (whose all-NULL
-    * sentinel must be omitted), a null count is meaningful for EVERY
-    * file, including all-null ones — that case is exactly what the
-    * IS NOT NULL prune skips. */
-  def nullStatsOf(summaries: Seq[FileSummary], statsCols: Seq[String],
-      strStatsCols: Seq[String] = Seq.empty)
-      : Map[String, Map[String, ManifestLog.NullStat]] =
-    summaries.map(s => s.rel ->
-      (statsCols.indices.flatMap(k => s.nulls.lift(k).map(n =>
-          statsCols(k) -> ManifestLog.NullStat(n, s.n))) ++
-        strStatsCols.indices.flatMap(k => s.sNulls.lift(k).map(n =>
-          strStatsCols(k) -> ManifestLog.NullStat(n, s.n)))).toMap)
-      .filter(_._2.nonEmpty).toMap
-
-  def bloomsOf(summaries: Seq[FileSummary],
-      bloomCol: Option[String]): Map[String, Map[String, BloomRef]] =
-    bloomCol match {
-      // the key-type tag rides in the summary itself — writeFiles is
-      // the only party that knows which hash the fold used, so no
-      // caller can mis-tag and reopen the cross-type false-negative
-      // hole (r18 advice)
-      case Some(c) => summaries.filter(_.bloomM > 0).map(s =>
-        s.rel -> Map(c -> BloomRef(c, s"${s.rel}.bloom", s.bloomM, 4,
-          str = s.bloomStr)))
-        .toMap
-      case None => Map.empty
+  /** The file records a pass's summaries commit — exposed so composite
+    * commits (a compaction's remove+add, a merge) can fold
+    * single-pass-written files into their own single atomic commit.
+    * Per file:
+    *
+    *   - [min, max] per stats column, tagged `dbl` for double images.
+    *     A partition whose column was entirely NULL never updates its
+    *     fold, and the inverted sentinel (MaxValue, MinValue) is NOT
+    *     committed (r17 advice: a min > max stat is nonsense to any
+    *     consumer that trusts the invariant) — the file is stats-less
+    *     for that column, never skippable;
+    *   - UTF-8-ordered bounds per string stats column (r17), all-NULL
+    *     partitions omitted the same way;
+    *   - a (nulls, rows) pair per tracked column (r18), folded in the
+    *     same row loop, so the `IS [NOT] NULL` prune costs zero extra
+    *     IO; unlike the bounds it is meaningful for all-null files too,
+    *     which are exactly what the IS NOT NULL prune skips;
+    *   - the bloom ref for `bloomCol`, when the pass wrote one.
+    *
+    * The dbl and bloom key-type tags ride in the summary itself:
+    * writeFiles is the only party that knows the fold's type and hash,
+    * so no caller can mis-tag and reopen the untyped-proof or
+    * cross-type false-negative holes (review findings, r17/r18). */
+  def addFiles(summaries: Seq[FileSummary], statsCols: Seq[String],
+      strStatsCols: Seq[String] = Seq.empty,
+      bloomCol: Option[String] = None): Seq[AddFile] =
+    summaries.map { s =>
+      AddFile(s.rel,
+        colStats = statsCols.indices.collect {
+          case k if s.los(k) <= s.his(k) => statsCols(k) ->
+            FileStat(s.los(k), s.his(k), s.dbl.lift(k).getOrElse(false))
+        }.toMap,
+        strColStats = strStatsCols.indices.collect {
+          case k if s.sSeen(k) =>
+            strStatsCols(k) -> StrStat(s.sLos(k), s.sHis(k))
+        }.toMap,
+        nullStats = (statsCols.indices.flatMap(k => s.nulls.lift(k)
+          .map(n => statsCols(k) -> NullStat(n, s.n))) ++
+          strStatsCols.indices.flatMap(k => s.sNulls.lift(k)
+            .map(n => strStatsCols(k) -> NullStat(n, s.n)))).toMap,
+        blooms = bloomCol.filter(_ => s.bloomM > 0).map(c => c ->
+          BloomRef(c, s"${s.rel}.bloom", s.bloomM, 4, str = s.bloomStr))
+          .toMap)
     }
 
   /** The write pass alone: land the files + sidecars, fold the

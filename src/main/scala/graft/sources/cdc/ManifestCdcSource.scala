@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{CheckpointCodec, ManifestLog}
+import graft.sources.{CheckpointCodec, LogStore, ManifestLog}
 
 /** A real DataSource-V2 STREAMING SOURCE over the manifest log's
   * version tail — the binding §8.3.1-5 named as the one manifest
@@ -45,7 +45,7 @@ import graft.sources.{CheckpointCodec, ManifestLog}
   *     rewriting commits cannot be replayed as a row feed without
   *     per-row CDC images (consumers of rewriting tables diff
   *     snapshots instead; same stance as `ManifestLog.readChanges`).
-  *   - a tail pruned past the cursor throws via `changesBetween`'s
+  *   - a tail pruned past the cursor throws via `commitsBetween`'s
   *     dense-range require (re-bootstrap from a snapshot).
   *   - schema is inferred from the parquet FOOTER of the first added
   *     file and supports flat required/optional primitive columns
@@ -81,7 +81,7 @@ private[cdc] object ManifestCdc {
     * append-only/DV rejection applies: the consumer plans
     * [[ManifestLog.readChangeImages]] over each batch's range, which
     * replays rewrites AND vector deltas exactly; only the dense-range
-    * contract (via changesBetween) is enforced. */
+    * contract (via commitsBetween) is enforced. */
   def versionsMode(options: CaseInsensitiveStringMap): Boolean =
     "versions".equalsIgnoreCase(options.getOrDefault("mode", "rows"))
 
@@ -92,7 +92,7 @@ private[cdc] object ManifestCdc {
     *
     * Resolved through the latest RESOLVABLE version's live set
     * (checkpoint-seeded replay — prune-tolerant), NOT through
-    * `changesBetween(root, -1, latest)`: the change replay requires
+    * `commitsBetween(root, -1, latest)`: the change replay requires
     * every manifest 0..latest to exist, and a paired [[graft.streaming
     * .ManifestSink]] table prunes manifests behind its checkpoints, so
     * schema inference via the full change history would throw at
@@ -307,6 +307,9 @@ private[cdc] class ManifestCdcStream(root: String, startingVersion: Long,
   private def latestVersion: Long =
     ManifestLog.latestVersion(root).getOrElse(startingVersion)
 
+  /** The log the batches are planned from. */
+  private[cdc] lazy val store: LogStore = ManifestLog.storeFor(root)
+
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowCap = Some(latestVersion)
 
@@ -337,17 +340,19 @@ private[cdc] class ManifestCdcStream(root: String, startingVersion: Long,
       // foreachBatch bridge plans readChangeImages over the range.
       // The dense-range contract still holds (a pruned tail must be
       // loud, never a silent gap in the feed).
-      ManifestLog.changesBetween(root, from, to)
+      ManifestLog.commitsBetween(root, from, to)
       return Array(VersionsInputPartition(from + 1, to))
     }
+    // ONE listing and one read per manifest in the range plan the
+    // batch; the metadata-only fold at `from` gives its schema
+    val (fromDdl, commits) = ManifestLog.changeRangeIn(store, from, to)
     // a deletion-vector commit changes ROWS without touching files —
     // invisible to the file-action walk below, so it must be rejected
     // as loudly as a rewrite (silently emitting nothing would corrupt
     // every downstream consumer of the feed); MOR tables are consumed
     // via readChangeImages, which replays vector deltas as delete
     // images
-    val dvVersions = ManifestLog.dvChangesBetween(root, from, to)
-      .collect { case (v, dvs) if dvs.nonEmpty => v }
+    val dvVersions = commits.collect { case (v, c) if c.dvs.nonEmpty => v }
     require(dvVersions.isEmpty,
       s"versions $dvVersions commit deletion vectors — not replayable " +
         "as an append-only row feed; consume merge-on-read tables via " +
@@ -367,7 +372,12 @@ private[cdc] class ManifestCdcStream(root: String, startingVersion: Long,
     // matches the stream's — a late declaration that merely names
     // the existing physical schema must not strand the history
     // (both review findings, r17).
-    val ddlAt = ManifestLog.schemaDdlsThrough(root, from, to)
+    var cur = fromDdl.flatten
+    val ddlAt: Map[Long, Option[String]] = fromDdl.map(from -> _).toMap ++
+      commits.map { case (v, c) =>
+        c.schemaDdl.foreach(d => cur = Some(d))
+        v -> cur
+      }
     val declaringTable = ddlAt.get(to).flatten.isDefined ||
       (from >= 0 && ddlAt.getOrElse(from, throw new IllegalArgumentException(
         s"version $from not in manifest log — the stream start must " +
@@ -379,8 +389,9 @@ private[cdc] class ManifestCdcStream(root: String, startingVersion: Long,
     // — the padding source for old-generation versions (r18)
     lazy val streamData: Seq[StructField] =
       dataSchema.get.fields.toSeq.dropRight(1)
-    ManifestLog.changesBetween(root, from, to).flatMap {
-      case (v, adds, removes) =>
+    commits.flatMap { case (v, c) =>
+        val adds = c.adds.map(_.path)
+        val removes = c.removes
         require(removes.isEmpty,
           s"version $v rewrites files — not replayable as an " +
             "append-only row feed; consume rewrites via snapshot diff")

@@ -80,11 +80,8 @@ object ManifestSink {
     val summaries = graft.sources.SinglePassWriter.writeFiles(
       batch, root, sub, statsCols = Seq("user_id", "ts_us"),
       bloomCol = Some("event_id"))
-    val adds = summaries.map(_.rel)
-    val colStats = graft.sources.SinglePassWriter.colStatsOf(
-      summaries, Seq("user_id", "ts_us"))
-    val blooms = graft.sources.SinglePassWriter.bloomsOf(
-      summaries, Some("event_id"))
+    val adds = graft.sources.SinglePassWriter.addFiles(summaries,
+      Seq("user_id", "ts_us"), bloomCol = Some("event_id"))
     var committed = false
     while (!committed) {
       val snap = ManifestLog.latestSnapshot(root)
@@ -93,11 +90,9 @@ object ManifestSink {
       } else {
         val v = snap.map(_.version + 1).getOrElse(0L)
         try {
-          ManifestLog.commit(root, v, adds, Seq.empty,
-            op = "stream-append",
-            policy = Some(ManifestLog.CheckpointPolicy(every = 2)),
-            colStats = colStats, blooms = blooms,
-            txn = Some((AppId, batchId)))
+          ManifestLog.commit(root, v, ManifestLog.Commit("stream-append",
+            adds, txn = Some((AppId, batchId))),
+            policy = Some(ManifestLog.CheckpointPolicy(every = 2)))
           committed = true
         } catch {
           case ManifestLog.Conflict(_) => () // rebase: re-check txn

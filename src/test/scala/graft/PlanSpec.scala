@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.LogKit
+import graft.sources.LogKit.ReplayMaps
 
 /** Physical-plan assertions (the 100 TB posture, SURVEY.md §4): filters
   * and projections must reach the parquet scan, small dims must

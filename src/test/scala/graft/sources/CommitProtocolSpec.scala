@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import ManifestLog.{DvRef, LogicalConflict}
+import LogKit.ReplayMaps
 
 /** The optimistic serializable commit protocol (r16): losers of the
   * physical version race REBASE when winners are logically disjoint
@@ -40,7 +41,7 @@ class CommitProtocolSpec extends AnyFunSuite {
       pool.submit(new Runnable {
         def run(): Unit = {
           latch.await()
-          got.add(ManifestLog.commitSerializable(root, readVersion = -1L,
+          got.add(LogKit.commitSerializable(root, readVersion = -1L,
             adds = adds(i), removes = Seq.empty, op = "append"))
         }
       })
@@ -60,9 +61,9 @@ class CommitProtocolSpec extends AnyFunSuite {
     val a = land(root, "data/a", 1L)
     // writer W read snapshot -1 and prepared an append; meanwhile two
     // other commits land
-    ManifestLog.commit(root, 0, land(root, "data/x", 2L), Seq.empty, "w")
-    ManifestLog.commit(root, 1, land(root, "data/y", 3L), Seq.empty, "w")
-    val v = ManifestLog.commitSerializable(root, readVersion = -1L,
+    LogKit.commit(root, 0, land(root, "data/x", 2L), Seq.empty, "w")
+    LogKit.commit(root, 1, land(root, "data/y", 3L), Seq.empty, "w")
+    val v = LogKit.commitSerializable(root, readVersion = -1L,
       adds = a, removes = Seq.empty, op = "append")
     assert(v == 2L)
     assert(ManifestLog.filesAsOf(root, 2).size == 3)
@@ -72,24 +73,24 @@ class CommitProtocolSpec extends AnyFunSuite {
       "LogicalConflict for readers, removers and vector writers") {
     val root = newRoot()
     val f = land(root, "data/v0", 1L)
-    ManifestLog.commit(root, 0, f, Seq.empty, "write")
+    LogKit.commit(root, 0, f, Seq.empty, "write")
     // the winner compacts f away
-    ManifestLog.commit(root, 1, land(root, "data/v1", 1L), removes = f,
+    LogKit.commit(root, 1, land(root, "data/v1", 1L), removes = f,
       op = "rewrite")
     // loser 1: computed FROM f (readFiles) — stale
     intercept[LogicalConflict] {
-      ManifestLog.commitSerializable(root, readVersion = 0L,
+      LogKit.commitSerializable(root, readVersion = 0L,
         adds = land(root, "data/d1", 9L), removes = Seq.empty,
         op = "append", readFiles = f.toSet)
     }
     // loser 2: also removing f — double rewrite
     intercept[LogicalConflict] {
-      ManifestLog.commitSerializable(root, readVersion = 0L,
+      LogKit.commitSerializable(root, readVersion = 0L,
         adds = land(root, "data/d2", 9L), removes = f, op = "rewrite")
     }
     // loser 3: vectoring f — vector computed against a retired file
     intercept[LogicalConflict] {
-      ManifestLog.commitSerializable(root, readVersion = 0L,
+      LogKit.commitSerializable(root, readVersion = 0L,
         adds = Seq.empty, removes = Seq.empty, op = "delete",
         dvs = Map(f.head -> DvRef(s"${f.head}.v9.dv", 1)))
     }
@@ -99,16 +100,16 @@ class CommitProtocolSpec extends AnyFunSuite {
       "LogicalConflict; disjoint appends still rebase past it") {
     val root = newRoot()
     val f = land(root, "data/v0", 5L)
-    ManifestLog.commit(root, 0, f, Seq.empty, "write")
+    LogKit.commit(root, 0, f, Seq.empty, "write")
     ManifestLog.deleteWhereMor(spark, root, 0, 1, col("k") === 5L)
     // loser read f at v0 — the winner's DV invalidated those rows
     intercept[LogicalConflict] {
-      ManifestLog.commitSerializable(root, readVersion = 0L,
+      LogKit.commitSerializable(root, readVersion = 0L,
         adds = land(root, "data/d", 9L), removes = Seq.empty,
         op = "append", readFiles = f.toSet)
     }
     // write-serializable: a blind append never conflicts with the DV
-    val v = ManifestLog.commitSerializable(root, readVersion = 0L,
+    val v = LogKit.commitSerializable(root, readVersion = 0L,
       adds = land(root, "data/ok", 9L), removes = Seq.empty,
       op = "append")
     assert(v == 2L)
@@ -123,7 +124,7 @@ class CommitProtocolSpec extends AnyFunSuite {
       Seq((1L, 10L)).toDF("k", "v").coalesce(1), root, "data/b0",
       statsCols = Seq("k"))
     assert(v0 == 0L)
-    ManifestLog.commit(root, 1, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commit(root, 1, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("v_pos" -> "v > 0")))
     // a violating batch dies at the gate, landing nothing
     intercept[IllegalArgumentException] {
@@ -141,7 +142,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     val racerAdds = land(root, "data/racer", 7L)
     // the racer attests: since r17 a stats-less add on a constrained
     // table is refused at commit time unless row-validated
-    val t = new Thread(() => ManifestLog.commitSerializable(root, 1L,
+    val t = new Thread(() => LogKit.commitSerializable(root, 1L,
       racerAdds, Seq.empty, op = "append", attest = true))
     t.start(); t.join()
     val v = ManifestLog.appendChecked(spark,
@@ -183,7 +184,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     ManifestLog.appendChecked(spark,
       Seq((1L, 10L)).toDF("k", "v").coalesce(1), root, "data/s",
       statsCols = Seq("k"), bloomCol = Some("k"))
-    ManifestLog.commit(root, 1, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commit(root, 1, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("v_pos" -> "v > 0")))
     intercept[IllegalArgumentException] {
       ManifestLog.appendChecked(spark,
@@ -204,37 +205,37 @@ class CommitProtocolSpec extends AnyFunSuite {
       new InMemoryLogStore)
     roots.foreach { store =>
       // v0 declares (ALTER-style: the declarer validates) WITH an add
-      ManifestLog.commitIn(store, 0, Seq("data/f0.parquet"), Seq.empty,
+      LogKit.commitIn(store, 0, Seq("data/f0.parquet"), Seq.empty,
         op = "write", checks = Some(Seq("v_pos" -> "v > 0")))
       // a stats-less add on the constrained table is refused loudly
       val e = intercept[IllegalArgumentException] {
-        ManifestLog.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
+        LogKit.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
           op = "append")
       }
       assert(e.getMessage.contains("v_pos"))
       // stats that CANNOT prove it (min 0 < lo 1) are refused too
       intercept[IllegalArgumentException] {
-        ManifestLog.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
+        LogKit.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
           op = "append", colStats = Map("data/f1.parquet" ->
             Map("v" -> ManifestLog.FileStat(0L, 10L))))
       }
       assert(ManifestLog.versionsIn(store) == Seq(0L),
         "refused commits must leave the log untouched")
       // stats inside the constraint interval PROVE it — commit passes
-      ManifestLog.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
+      LogKit.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
         op = "append", colStats = Map("data/f1.parquet" ->
           Map("v" -> ManifestLog.FileStat(5L, 10L))))
       // an IS NOT NULL constraint cannot be proven by RANGE stats
       // (bounds fold over non-null rows only) — without a null count
       // (r18) only attest carries an add past it
-      ManifestLog.commitIn(store, 2, Seq.empty, Seq.empty, op = "checks",
+      LogKit.commitIn(store, 2, Seq.empty, Seq.empty, op = "checks",
         checks = Some(Seq("v_set" -> "v IS NOT NULL")))
       intercept[IllegalArgumentException] {
-        ManifestLog.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
+        LogKit.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
           op = "append", colStats = Map("data/f3.parquet" ->
             Map("v" -> ManifestLog.FileStat(5L, 10L))))
       }
-      ManifestLog.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
+      LogKit.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
         op = "append", attest = true)
       assert(ManifestLog.versionsIn(store) == (0L to 3L))
     }
@@ -244,42 +245,42 @@ class CommitProtocolSpec extends AnyFunSuite {
       "UTF-8 string bounds (r17): in-range bounds pass, straddling " +
       "or missing bounds are refused, equality needs a constant file") {
     val store = ManifestLog.storeFor(newRoot())
-    ManifestLog.commitIn(store, 0, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commitIn(store, 0, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("lang_band" -> "lang >= 'de' AND lang < 'zz'")))
     def strStats(f: String, lo: String, hi: String) =
       Map(f -> Map("lang" -> ManifestLog.StrStat(lo, hi)))
     // bounds inside the band prove the constraint
-    ManifestLog.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
+    LogKit.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
       op = "append", strColStats = strStats("data/f1.parquet", "en", "fr"))
     // a straddling lower bound cannot prove it
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
+      LogKit.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
         op = "append",
         strColStats = strStats("data/f2.parquet", "aa", "fr"))
     }
     // the exclusive upper bound is exact for proofs: max == 'zz' fails
     // `lang < 'zz'`, max == 'zy' passes
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
+      LogKit.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
         op = "append",
         strColStats = strStats("data/f2.parquet", "en", "zz"))
     }
-    ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
+    LogKit.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
       op = "append", strColStats = strStats("data/f2.parquet", "en", "zy"))
     // bound-less adds are refused (attest path unchanged)
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
+      LogKit.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
         op = "append")
     }
     // string EQUALITY: only a constant file proves it
-    ManifestLog.commitIn(store, 3, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commitIn(store, 3, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("one_lang" -> "lang = 'en'")))
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 4, Seq("data/f4.parquet"), Seq.empty,
+      LogKit.commitIn(store, 4, Seq("data/f4.parquet"), Seq.empty,
         op = "append",
         strColStats = strStats("data/f4.parquet", "en", "fr"))
     }
-    ManifestLog.commitIn(store, 4, Seq("data/f4.parquet"), Seq.empty,
+    LogKit.commitIn(store, 4, Seq("data/f4.parquet"), Seq.empty,
       op = "append", strColStats = strStats("data/f4.parquet", "en", "en"))
     assert(ManifestLog.versionsIn(store) == (0L to 4L))
   }
@@ -291,33 +292,33 @@ class CommitProtocolSpec extends AnyFunSuite {
       "ordering-mismatch hole double stats opened is closed") {
     val key = ManifestFileIndex.dblKey _
     val store = ManifestLog.storeFor(newRoot())
-    ManifestLog.commitIn(store, 0, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commitIn(store, 0, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("price_floor" -> "price >= 0.5")))
     def dblStats(f: String, lo: Double, hi: Double) =
       Map(f -> Map("price" ->
         ManifestLog.FileStat(key(lo), key(hi), dbl = true)))
     // tagged image bounds inside the constraint prove it
-    ManifestLog.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
+    LogKit.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
       op = "append", colStats = dblStats("data/f1.parquet", 0.5, 99.25))
     // a violating batch (min 0.25 < 0.5) refuses
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
+      LogKit.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
         op = "append",
         colStats = dblStats("data/f2.parquet", 0.25, 99.0))
     }
     // untagged (raw-long) stats can never prove a FRACTIONAL
     // constraint — the refusal is type-driven, not numeric luck
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
+      LogKit.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
         op = "append", colStats = Map("data/f2.parquet" ->
           Map("price" -> ManifestLog.FileStat(1L, 99L))))
     }
     // an INTEGRAL-literal constraint on a double column proves in
     // image space too — the same coercion Spark applies to
     // `double_col >= 5` (this declaration replaces the set)
-    ManifestLog.commitIn(store, 2, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commitIn(store, 2, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("price_min5" -> "price >= 5")))
-    ManifestLog.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
+    LogKit.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
       op = "append", colStats = dblStats("data/f3.parquet", 5.5, 9.0))
     // THE HOLE: a small positive double's image is a huge positive
     // long (image(0.25) >> 5), so an UNTYPED "price >= 5" proof
@@ -326,7 +327,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(key(0.25) > 5L,
       "precondition: small-double images are huge positive longs")
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 4, Seq("data/f4.parquet"), Seq.empty,
+      LogKit.commitIn(store, 4, Seq("data/f4.parquet"), Seq.empty,
         op = "append", colStats = dblStats("data/f4.parquet", 0.25, 0.5))
     }
     // the tag round-trips through manifest replay AND checkpoint fold
@@ -341,9 +342,9 @@ class CommitProtocolSpec extends AnyFunSuite {
       "cliff), and a sibling-less checkpoint — the crash window " +
       "between the two publishes — falls back to the full read") {
     val store = ManifestLog.storeFor(newRoot())
-    ManifestLog.commitIn(store, 0, Seq.empty, Seq.empty, op = "init",
+    LogKit.commitIn(store, 0, Seq.empty, Seq.empty, op = "init",
       checks = Some(Seq("v_pos" -> "v > 0")))
-    ManifestLog.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
+    LogKit.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
       op = "append", colStats = Map("data/f1.parquet" ->
         Map("v" -> ManifestLog.FileStat(1L, 9L))))
     ManifestLog.writeCheckpointIn(store, 1)
@@ -354,22 +355,22 @@ class CommitProtocolSpec extends AnyFunSuite {
     // checkpoint (+ sibling) — the gate must still see it
     (0L to 1L).foreach(v => store.delete(f"$v%020d.json"))
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
+      LogKit.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
         op = "append", colStats = Map("data/f2.parquet" ->
           Map("v" -> ManifestLog.FileStat(0L, 9L))))
     }
-    ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
+    LogKit.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
       op = "append", colStats = Map("data/f2.parquet" ->
         Map("v" -> ManifestLog.FileStat(2L, 9L))))
     // crash window: the sibling never landed — the gate falls back
     // to the full checkpoint and enforces identically
     store.delete(f"${1L}%020d.checkpoint.meta.json")
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
+      LogKit.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
         op = "append", colStats = Map("data/f3.parquet" ->
           Map("v" -> ManifestLog.FileStat(0L, 9L))))
     }
-    ManifestLog.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
+    LogKit.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
       op = "append", colStats = Map("data/f3.parquet" ->
         Map("v" -> ManifestLog.FileStat(3L, 9L))))
   }
@@ -380,38 +381,38 @@ class CommitProtocolSpec extends AnyFunSuite {
       "count-less adds stay attest-only, and the typed mixed path " +
       "composes range + IS NOT NULL in one constraint") {
     val store = ManifestLog.storeFor(newRoot())
-    ManifestLog.commitIn(store, 0, Seq.empty, Seq.empty, op = "init",
+    LogKit.commitIn(store, 0, Seq.empty, Seq.empty, op = "init",
       schemaDdl = Some("k BIGINT, v BIGINT"),
       checks = Some(Seq("v_set" -> "v IS NOT NULL")))
     // a zero-null count is an exact proof (NULL IS NOT NULL = FALSE,
     // so a null row violates; nulls = 0 means none can)
-    ManifestLog.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
+    LogKit.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
       op = "append", nullStats = Map("data/f1.parquet" ->
         Map("v" -> ManifestLog.NullStat(0L, 10L))))
     // a null-bearing batch refuses
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
+      LogKit.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
         op = "append", nullStats = Map("data/f2.parquet" ->
           Map("v" -> ManifestLog.NullStat(1L, 10L))))
     }
     // range stats alone cannot carry the proof (bounds fold over
     // NON-null rows and say nothing about nulls)
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
+      LogKit.commitIn(store, 2, Seq("data/f2.parquet"), Seq.empty,
         op = "append", colStats = Map("data/f2.parquet" ->
           Map("v" -> ManifestLog.FileStat(5L, 10L))))
     }
     // mixed shape through the typed path: range AND not-null
-    ManifestLog.commitIn(store, 2, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commitIn(store, 2, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("v_both" -> "v >= 0 AND v IS NOT NULL")))
-    ManifestLog.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
+    LogKit.commitIn(store, 3, Seq("data/f3.parquet"), Seq.empty,
       op = "append",
       colStats = Map("data/f3.parquet" ->
         Map("v" -> ManifestLog.FileStat(0L, 10L))),
       nullStats = Map("data/f3.parquet" ->
         Map("v" -> ManifestLog.NullStat(0L, 10L))))
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(store, 4, Seq("data/f4.parquet"), Seq.empty,
+      LogKit.commitIn(store, 4, Seq("data/f4.parquet"), Seq.empty,
         op = "append",
         colStats = Map("data/f4.parquet" ->
           Map("v" -> ManifestLog.FileStat(0L, 10L))),
@@ -438,18 +439,18 @@ class CommitProtocolSpec extends AnyFunSuite {
       Map(f -> Map("grade" -> ManifestLog.StrStat("b", "zz"))))
     Seq(ManifestLog.storeFor(newRoot()),
         new InMemoryLogStore: LogStore).foreach { store =>
-      ManifestLog.commitIn(store, 0, Seq.empty, Seq.empty, op = "init",
+      LogKit.commitIn(store, 0, Seq.empty, Seq.empty, op = "init",
         schemaDdl =
           Some("qty BIGINT, price DOUBLE, grade STRING"),
         checks = Some(Seq("mixed" -> mixed)))
       // every obligation proven under its own type → commit passes
       val (cs1, ss1) = proving("data/f1.parquet")
-      ManifestLog.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
+      LogKit.commitIn(store, 1, Seq("data/f1.parquet"), Seq.empty,
         op = "append", colStats = cs1, strColStats = ss1)
       // REFUSE direction, one failing obligation per type family:
       // integral out of bounds
       intercept[IllegalArgumentException] {
-        ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"),
+        LogKit.commitIn(store, 2, Seq("data/f2.parquet"),
           Seq.empty, op = "append",
           colStats = Map("data/f2.parquet" -> Map(
             "qty" -> ManifestLog.FileStat(9L, 99L),
@@ -460,7 +461,7 @@ class CommitProtocolSpec extends AnyFunSuite {
       }
       // fractional out of bounds (image arithmetic, not raw-long luck)
       intercept[IllegalArgumentException] {
-        ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"),
+        LogKit.commitIn(store, 2, Seq("data/f2.parquet"),
           Seq.empty, op = "append",
           colStats = Map("data/f2.parquet" -> Map(
             "qty" -> ManifestLog.FileStat(10L, 99L),
@@ -471,7 +472,7 @@ class CommitProtocolSpec extends AnyFunSuite {
       }
       // string bound below the atom
       intercept[IllegalArgumentException] {
-        ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"),
+        LogKit.commitIn(store, 2, Seq("data/f2.parquet"),
           Seq.empty, op = "append",
           colStats = Map("data/f2.parquet" -> Map(
             "qty" -> ManifestLog.FileStat(10L, 99L),
@@ -485,7 +486,7 @@ class CommitProtocolSpec extends AnyFunSuite {
       // ordering consistently — the typed gate must refuse, not
       // compare across orderings)
       intercept[IllegalArgumentException] {
-        ManifestLog.commitIn(store, 2, Seq("data/f2.parquet"),
+        LogKit.commitIn(store, 2, Seq("data/f2.parquet"),
           Seq.empty, op = "append",
           colStats = Map("data/f2.parquet" -> Map(
             "qty" -> ManifestLog.FileStat(key(10.0), key(99.0),
@@ -501,14 +502,14 @@ class CommitProtocolSpec extends AnyFunSuite {
     // an UNDECLARED table cannot resolve the mix — attest-only, as
     // before (the typed path needs the schema the log never got)
     val bare = ManifestLog.storeFor(newRoot())
-    ManifestLog.commitIn(bare, 0, Seq.empty, Seq.empty, op = "init",
+    LogKit.commitIn(bare, 0, Seq.empty, Seq.empty, op = "init",
       checks = Some(Seq("mixed" -> mixed)))
     val (csB, ssB) = proving("data/f1.parquet")
     intercept[IllegalArgumentException] {
-      ManifestLog.commitIn(bare, 1, Seq("data/f1.parquet"), Seq.empty,
+      LogKit.commitIn(bare, 1, Seq("data/f1.parquet"), Seq.empty,
         op = "append", colStats = csB, strColStats = ssB)
     }
-    ManifestLog.commitIn(bare, 1, Seq("data/f1.parquet"), Seq.empty,
+    LogKit.commitIn(bare, 1, Seq("data/f1.parquet"), Seq.empty,
       op = "append", attest = true)
   }
 
@@ -516,35 +517,35 @@ class CommitProtocolSpec extends AnyFunSuite {
       "txn's snapshot and its publish raises LogicalConflict — the " +
       "loser's validation premises are stale (r17 advice)") {
     val root = newRoot()
-    ManifestLog.commit(root, 0, land(root, "data/v0", 1L), Seq.empty,
+    LogKit.commit(root, 0, land(root, "data/v0", 1L), Seq.empty,
       op = "write")
     // loser prepared a blind append against v0; a winner then declares
     // a constraint set at v1
     val loserAdds = land(root, "data/loser", 2L)
-    ManifestLog.commit(root, 1, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commit(root, 1, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("v_pos" -> "v > 0")))
     val e = intercept[LogicalConflict] {
-      ManifestLog.commitSerializable(root, readVersion = 0L,
+      LogKit.commitSerializable(root, readVersion = 0L,
         adds = loserAdds, removes = Seq.empty, op = "append",
         attest = true)
     }
     assert(e.getMessage.contains("metadata"))
     // same for a schema declaration
     val root2 = newRoot()
-    ManifestLog.commit(root2, 0, land(root2, "data/v0", 1L), Seq.empty,
+    LogKit.commit(root2, 0, land(root2, "data/v0", 1L), Seq.empty,
       op = "write")
     val loser2 = land(root2, "data/loser", 2L)
-    ManifestLog.commit(root2, 1, Seq.empty, Seq.empty, op = "evolve",
+    LogKit.commit(root2, 1, Seq.empty, Seq.empty, op = "evolve",
       schemaDdl = Some("k BIGINT, v BIGINT, w BIGINT"))
     intercept[LogicalConflict] {
-      ManifestLog.commitSerializable(root2, readVersion = 0L,
+      LogKit.commitSerializable(root2, readVersion = 0L,
         adds = loser2, removes = Seq.empty, op = "append")
     }
     // a loser whose snapshot ALREADY includes the declaration rebases
     // fine past later disjoint data winners
-    ManifestLog.commit(root2, 2, land(root2, "data/w", 3L), Seq.empty,
+    LogKit.commit(root2, 2, land(root2, "data/w", 3L), Seq.empty,
       op = "append")
-    val v = ManifestLog.commitSerializable(root2, readVersion = 2L,
+    val v = LogKit.commitSerializable(root2, readVersion = 2L,
       adds = loser2, removes = Seq.empty, op = "append")
     assert(v == 3L)
   }
@@ -554,7 +555,7 @@ class CommitProtocolSpec extends AnyFunSuite {
       "folded by the writer, not a separate scan") {
     import spark.implicits._
     val root = newRoot()
-    ManifestLog.commit(root, 0, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commit(root, 0, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("v_pos" -> "v > 0", "k_cap" -> "k < 100")))
     val e = intercept[IllegalArgumentException] {
       ManifestLog.appendChecked(spark,
@@ -575,7 +576,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     val root = newRoot()
     (0L until 10L).map(k => (k, k * 10L)).toDF("k", "v").coalesce(1)
       .write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, op = "write")
     val latch = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(2)
@@ -615,7 +616,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     val root = newRoot()
     (0L until 10L).map(k => (k, k * 10L)).toDF("k", "v").coalesce(1)
       .write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, op = "write")
     val latch = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(2)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** Crash-recovery fuzz for the commit path (r15 verdict #7), on BOTH
   * store bindings: torn/partial staged writes, a checkpointer dying
@@ -20,7 +21,7 @@ class LogStoreCrashSpec extends AnyFunSuite {
     * v-1's file, with a txn marker every other commit. */
   private def build(store: LogStore, upTo: Long = 5L): Unit =
     (0L to upTo).foreach { v =>
-      ManifestLog.commitIn(store, v, Seq(s"data/v$v/f.parquet"),
+      LogKit.commitIn(store, v, Seq(s"data/v$v/f.parquet"),
         if (v == 0) Seq.empty else Seq(s"data/v${v - 1}/f.parquet"),
         "merge",
         txn = if (v % 2 == 0) Some(("writer", v)) else None)
@@ -44,7 +45,7 @@ class LogStoreCrashSpec extends AnyFunSuite {
       // and a version nobody finished publishing is simply absent —
       // the next writer takes it cleanly
       assert(ManifestLog.versionsIn(store) == Seq(0L, 1L, 2L))
-      ManifestLog.commitIn(store, 3, Seq("data/v3/f.parquet"),
+      LogKit.commitIn(store, 3, Seq("data/v3/f.parquet"),
         Seq("data/v2/f.parquet"), "merge")
       assert(ManifestLog.snapshotIn(store, 3).files == Seq("data/v3/f.parquet"))
     }
@@ -69,7 +70,7 @@ class LogStoreCrashSpec extends AnyFunSuite {
       // recovery needs no special case: the next policy'd winning
       // commit folds its own checkpoint and prunes behind the
       // PREVIOUS one (the crashed fold), restoring the invariant
-      ManifestLog.commitIn(store, 6, Seq("data/v6/f.parquet"),
+      LogKit.commitIn(store, 6, Seq("data/v6/f.parquet"),
         Seq("data/v5/f.parquet"), "merge",
         policy = Some(ManifestLog.CheckpointPolicy(every = 6)),
         txn = Some(("writer", 6L)))
@@ -116,13 +117,40 @@ class LogStoreCrashSpec extends AnyFunSuite {
     }
   }
 
+  for ((label, mk) <- stores) {
+    test(s"[$label] a deletion vector on a file that is not live is " +
+        "dropped: the genesis fold equals the checkpoint-seeded fold " +
+        "when a later commit adds that path") {
+      import ManifestLog.{AddFile, CheckpointPolicy, Commit, DvRef}
+      def build(store: LogStore, policy: Option[CheckpointPolicy]): Unit = {
+        ManifestLog.commitIn(store, 0,
+          Commit("write", Seq(AddFile("data/a.parquet"))), policy)
+        ManifestLog.commitIn(store, 1, Commit("delete", dvs =
+          Map("data/b.parquet" -> DvRef("data/b.parquet.v1.dv", 3L))),
+          policy)
+        ManifestLog.commitIn(store, 2,
+          Commit("append", Seq(AddFile("data/b.parquet"))), policy)
+      }
+      val genesis = mk()
+      build(genesis, None)
+      val seeded = mk()
+      build(seeded, Some(CheckpointPolicy(every = 1)))
+      assert(ManifestLog.checkpointVersionsIn(seeded) == Seq(1L, 2L))
+      val g = ManifestLog.snapshotIn(genesis, 2)
+      assert(g.files == Seq("data/a.parquet", "data/b.parquet") &&
+        g.live.values.forall(_.dv.isEmpty),
+        s"the vector committed before its file was live leaked: ${g.live}")
+      assert(g == ManifestLog.snapshotIn(seeded, 2))
+    }
+  }
+
   /** A metadata-rich 2-commit table: every per-file state class the
     * checkpoint carries (single+named stats incl. a double-image tag,
     * string bounds, null counts, long+string blooms, a dv, txns,
     * schema, checks, a commit timestamp). */
   private def buildRich(store: LogStore): Unit = {
     import ManifestLog.{BloomRef, DvRef, FileStat, NullStat, StrStat}
-    ManifestLog.commitIn(store, 0,
+    LogKit.commitIn(store, 0,
       Seq("data/a.parquet", "data/b.parquet"), Seq.empty, "write",
       stats = Map("data/a.parquet" -> FileStat(0, 9)),
       colStats = Map("data/a.parquet" ->
@@ -137,7 +165,7 @@ class LogStoreCrashSpec extends AnyFunSuite {
         Map("c" -> StrStat("aa", "zz"))),
       nullStats = Map("data/a.parquet" ->
         Map("k" -> NullStat(2, 10))))
-    ManifestLog.commitIn(store, 1, Seq("data/c.parquet"), Seq.empty,
+    LogKit.commitIn(store, 1, Seq("data/c.parquet"), Seq.empty,
       "append", dvs = Map("data/a.parquet" -> DvRef("data/a.dv", 3L)),
       txn = Some(("w", 2L)), commitMs = Some(1700000000000L),
       attest = true)
@@ -274,7 +302,7 @@ class LogStoreCrashSpec extends AnyFunSuite {
       "torn litter must never parse as a version")
     assert(ManifestLog.snapshotIn(store, 1).files == Seq("data/v1/f.parquet"))
     // the staged-but-dead version 2 is still free for the next writer
-    ManifestLog.commitIn(store, 2, Seq("data/v2/f.parquet"),
+    LogKit.commitIn(store, 2, Seq("data/v2/f.parquet"),
       Seq("data/v1/f.parquet"), "merge")
     assert(ManifestLog.snapshotIn(store, 2).files == Seq("data/v2/f.parquet"))
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** Row-level change images reconstructed from the log's file actions
   * (r15 verdict #4): every `_change_type` class including the DELETE
@@ -25,12 +26,12 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     }
     val f0 = land("data/v0", Seq((1L, "a", 10L), (2L, "b", 20L),
       (3L, "c", 30L), (4L, "d", 40L)))
-    ManifestLog.commit(root, 0, f0, Seq.empty, "write")
+    LogKit.commit(root, 0, f0, Seq.empty, "write")
     val f1 = land("data/v1", Seq((1L, "a", 10L), (2L, "B", 21L),
       (4L, "d", 40L), (5L, "e", 50L)))
-    ManifestLog.commit(root, 1, f1, f0, "merge")
+    LogKit.commit(root, 1, f1, f0, "merge")
     val f2 = land("data/v2", Seq((6L, "f", 60L), (7L, "g", 70L)))
-    ManifestLog.commit(root, 2, f2, Seq.empty, "append")
+    LogKit.commit(root, 2, f2, Seq.empty, "append")
     root
   }
 
@@ -44,12 +45,12 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     // v0: two-column generation, declared
     val f0 = Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, "write", schemaDdl = Some("k BIGINT, v BIGINT"))
     // v1: the widened generation appends WITH w, declaring it
     Seq((3L, 30L, 300L), (4L, 40L, 400L)).toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, "evolve",
       schemaDdl = Some("k BIGINT, v BIGINT, w BIGINT"))
     // v2: a COW rewrite retires the OLD-generation file (k=2's
@@ -58,7 +59,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       (2L, 21L, null.asInstanceOf[java.lang.Long]))
       .toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$root/data/v2")
-    ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
+    LogKit.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       ManifestLog.partFiles(root, "data/v0"), "merge")
     val feed = ManifestLog.readChangeImages(spark, root, -1, 2,
       Seq("k")).select("k", "v", "w", "_change_type", "_commit_version")
@@ -86,13 +87,13 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     // v0: two-column generation; mirror bootstraps on it
     Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$src/data/v0")
-    ManifestLog.commit(src, 0, ManifestLog.partFiles(src, "data/v0"),
+    LogKit.commit(src, 0, ManifestLog.partFiles(src, "data/v0"),
       Seq.empty, "write", schemaDdl = Some("k BIGINT, v BIGINT"))
     ManifestLog.replicateTo(spark, src, dst, keys = Seq("k"))
     // v1: evolve + append the widened generation
     Seq((3L, 30L, 300L)).toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$src/data/v1")
-    ManifestLog.commit(src, 1, ManifestLog.partFiles(src, "data/v1"),
+    LogKit.commit(src, 1, ManifestLog.partFiles(src, "data/v1"),
       Seq.empty, "evolve",
       schemaDdl = Some("k BIGINT, v BIGINT, w BIGINT"))
     // v2: update an OLD-generation key (k=2) under the new schema —
@@ -100,7 +101,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     Seq[(Long, Long, java.lang.Long)]((1L, 10L, null),
       (2L, 21L, java.lang.Long.valueOf(201L))).toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$src/data/v2")
-    ManifestLog.commit(src, 2, ManifestLog.partFiles(src, "data/v2"),
+    LogKit.commit(src, 2, ManifestLog.partFiles(src, "data/v2"),
       ManifestLog.partFiles(src, "data/v0"), "merge")
     ManifestLog.replicateTo(spark, src, dst, keys = Seq("k"))
     val mirror = ManifestLog.readVersion(spark, dst,
@@ -126,17 +127,17 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$src/data/v0")
-    ManifestLog.commit(src, 0, ManifestLog.partFiles(src, "data/v0"),
+    LogKit.commit(src, 0, ManifestLog.partFiles(src, "data/v0"),
       Seq.empty, "write", schemaDdl = Some("k BIGINT, v BIGINT"))
     Seq((3L, 30L, 300L)).toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$src/data/v1")
-    ManifestLog.commit(src, 1, ManifestLog.partFiles(src, "data/v1"),
+    LogKit.commit(src, 1, ManifestLog.partFiles(src, "data/v1"),
       Seq.empty, "evolve",
       schemaDdl = Some("k BIGINT, v BIGINT, w BIGINT"))
     Seq[(Long, Long, java.lang.Long)]((1L, 10L, null),
       (2L, 21L, java.lang.Long.valueOf(201L))).toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$src/data/v2")
-    ManifestLog.commit(src, 2, ManifestLog.partFiles(src, "data/v2"),
+    LogKit.commit(src, 2, ManifestLog.partFiles(src, "data/v2"),
       ManifestLog.partFiles(src, "data/v0"), "merge")
     // one version per micro-batch: the evolution lands MID-stream
     val progress = graft.streaming.ManifestSink
@@ -212,9 +213,9 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       "data commit lands") {
     val root = fixture()
     // two fileless commits: a checks declaration and a txn marker
-    ManifestLog.commit(root, 3, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commit(root, 3, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("amount_pos" -> "amount > 0")))
-    ManifestLog.commit(root, 4, Seq.empty, Seq.empty, op = "marker",
+    LogKit.commit(root, 4, Seq.empty, Seq.empty, op = "marker",
       txn = Some(("app", 9L)))
     val empty = ManifestLog.readChangeImages(spark, root, 2, 4,
       keys = Seq("id"))
@@ -225,7 +226,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     // a range with no live files anywhere stays loud
     val bare = java.nio.file.Files
       .createTempDirectory("graft_cdc_bare").toString
-    ManifestLog.commit(bare, 0, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commit(bare, 0, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("x_pos" -> "x > 0")))
     intercept[IllegalArgumentException] {
       ManifestLog.readChangeImages(spark, bare, -1, 0, keys = Seq("id"))
@@ -253,7 +254,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       (2L, Seq.empty[(java.lang.Long, String)]),
       (3L, null),
       (4L, Seq[(java.lang.Long, String)](null, (java.lang.Long.valueOf(5L), "s5")))))
-    ManifestLog.commit(src, 0, f0, Seq.empty, "write")
+    LogKit.commit(src, 0, f0, Seq.empty, "write")
     ManifestLog.replicateTo(spark, src, dst, keys = Seq("doc_id"))
     // COW update: doc 4 gains a span, doc 2 stays empty
     val f1 = land("data/v1", Seq(
@@ -261,7 +262,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       (2L, Seq.empty[(java.lang.Long, String)]),
       (3L, null),
       (4L, Seq[(java.lang.Long, String)](null, (java.lang.Long.valueOf(5L), "s5"), (java.lang.Long.valueOf(7L), "s7")))))
-    ManifestLog.commit(src, 1, f1, f0, "rewrite")
+    LogKit.commit(src, 1, f1, f0, "rewrite")
     ManifestLog.replicateTo(spark, src, dst, keys = Seq("doc_id"))
     def shape(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
       df.select("doc_id", "spans").collect().map { r =>
@@ -304,12 +305,12 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
         .coalesce(1).write.parquet(s"$root/data/v3")
       ManifestLog.partFiles(root, "data/v3")
     }
-    ManifestLog.commit(root, 3, f3, Seq.empty, "append")
+    LogKit.commit(root, 3, f3, Seq.empty, "append")
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("id"),
       mirrorFiles = 1)
     val v1 = ManifestLog.latestVersion(dst).get
     val (_, adds1, removes1) =
-      ManifestLog.changesBetween(dst, v0, v1).head
+      LogKit.changesBetween(dst, v0, v1).head
     assert(removes1.isEmpty,
       s"an untouched-key sync must rewrite ZERO mirror files: $removes1")
     assert(adds1.nonEmpty, "the new keys land as a fresh file")
@@ -324,10 +325,10 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     }
     val oldLive = ManifestLog.filesAsOf(root, 3)
       .filter(_.startsWith("data/v2"))
-    ManifestLog.commit(root, 4, f4, oldLive, "merge")
+    LogKit.commit(root, 4, f4, oldLive, "merge")
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("id"))
     val v2 = ManifestLog.latestVersion(dst).get
-    val (_, _, removes2) = ManifestLog.changesBetween(dst, v1, v2).head
+    val (_, _, removes2) = LogKit.changesBetween(dst, v1, v2).head
     val cs = ManifestLog.snapshot(dst, v1).colStats
     removes2.foreach { f =>
       val st = cs.get(f).flatMap(_.get("id"))
@@ -343,13 +344,14 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     assert(mir == src)
     // a metadata-only source tail advances the cursor with a
     // marker-bearing commit instead of crashing (r17 advice)
-    ManifestLog.commit(root, 5, Seq.empty, Seq.empty, op = "checks",
+    LogKit.commit(root, 5, Seq.empty, Seq.empty, op = "checks",
       checks = Some(Seq("amount_pos" -> "amount > 0")))
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("id"))
-    assert(ManifestLog.lastTxn(dst, "graft_replica").contains(5L))
+    assert(ManifestLog.latestSnapshot(dst)
+      .flatMap(_.txns.get("graft_replica")).contains(5L))
     val vLast = ManifestLog.latestVersion(dst).get
     val (_, addsM, removesM) =
-      ManifestLog.changesBetween(dst, v2, vLast).head
+      LogKit.changesBetween(dst, v2, vLast).head
     assert(addsM.isEmpty && removesM.isEmpty,
       "a no-change sync must be a pure marker commit")
   }
@@ -367,7 +369,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       ManifestLog.partFiles(root, sub)
     }
     // v0: codes across the alphabet; bootstrap clusters the mirror
-    ManifestLog.commit(root, 0,
+    LogKit.commit(root, 0,
       land("data/v0", Seq(("aa", 1L), ("bb", 2L), ("mm", 3L),
         ("nn", 4L), ("yy", 5L), ("zz", 6L))), Seq.empty, "write")
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("code"),
@@ -377,11 +379,11 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       "string-keyed mirror files must commit code bounds")
     // v1: append codes in the 'q' band — no existing mirror file's
     // bound interval can hold them
-    ManifestLog.commit(root, 1,
+    LogKit.commit(root, 1,
       land("data/v1", Seq(("qa", 7L), ("qb", 8L))), Seq.empty, "append")
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("code"))
     val v1 = ManifestLog.latestVersion(dst).get
-    val (_, adds1, removes1) = ManifestLog.changesBetween(dst, v0, v1).head
+    val (_, adds1, removes1) = LogKit.changesBetween(dst, v0, v1).head
     // the mirror is 3 range-clustered files over aa..zz: the 'q' band
     // may straddle ONE boundary file at most, never the whole mirror
     assert(removes1.size <= 1,
@@ -423,12 +425,12 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
         .coalesce(1).write.parquet(s"$root/data/v3b")
       ManifestLog.partFiles(root, "data/v3b")
     }
-    ManifestLog.commit(root, 3, f3, Seq.empty, "append")
+    LogKit.commit(root, 3, f3, Seq.empty, "append")
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("id"),
       maxKeys = 1)
     val v1 = ManifestLog.latestVersion(dst).get
     val (_, adds1, removes1) =
-      ManifestLog.changesBetween(dst, v0, v1).head
+      LogKit.changesBetween(dst, v0, v1).head
     assert(removes1.toSet == ManifestLog.filesAsOf(dst, v0).toSet,
       "an over-bound sync must fold the FULL mirror (prune skipped)")
     assert(adds1.nonEmpty)
@@ -446,7 +448,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     ManifestLog.replicateTo(spark, root, dst2, keys = Seq("id"))
     val w1 = ManifestLog.latestVersion(dst2).get
     val (_, _, removesP) =
-      ManifestLog.changesBetween(dst2, w0, w1).head
+      LogKit.changesBetween(dst2, w0, w1).head
     assert(removesP.isEmpty,
       "a bounded non-intersecting sync still rewrites zero files")
   }
@@ -467,7 +469,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       ManifestLog.partFiles(root, sub)
     }
     // v0: three non-null entities + one NULL-keyed row
-    ManifestLog.commit(root, 0, land("data/v0",
+    LogKit.commit(root, 0, land("data/v0",
       Seq((1L, 10L), (2L, 20L), (3L, 30L),
         (null.asInstanceOf[java.lang.Long], 99L))), Seq.empty, "write")
     // bootstrap at maxKeys = 2: 3 distinct non-null keys → over-bound
@@ -480,7 +482,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     val f1 = land("data/v1",
       Seq((1L, 11L), (2L, 21L), (3L, 31L),
         (null.asInstanceOf[java.lang.Long], 100L)))
-    ManifestLog.commit(root, 1, f1, ManifestLog.filesAsOf(root, 0),
+    LogKit.commit(root, 1, f1, ManifestLog.filesAsOf(root, 0),
       "rewrite")
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("id"),
       maxKeys = 2)
@@ -510,7 +512,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       rows.toDF("t", "amount").coalesce(1).write.parquet(s"$root/$sub")
       ManifestLog.partFiles(root, sub)
     }
-    ManifestLog.commit(root, 0, land("data/v0",
+    LogKit.commit(root, 0, land("data/v0",
       (0L until 8L).map(i => (ts(1700000000L + i), i * 10L))),
       Seq.empty, "write")
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("t"),
@@ -519,7 +521,7 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     val f1 = land("data/v1",
       (0L until 8L).map(i =>
         (ts(1700000000L + i), if (i == 3) 999L else i * 10L)))
-    ManifestLog.commit(root, 1, f1, ManifestLog.filesAsOf(root, 0),
+    LogKit.commit(root, 1, f1, ManifestLog.filesAsOf(root, 0),
       "rewrite")
     ManifestLog.replicateTo(spark, root, dst, keys = Seq("t"))
     val v = ManifestLog.latestVersion(dst).get
@@ -552,18 +554,19 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     // 6 versions: appends + one COW rewrite mid-stream, so windows
     // cross a rewriting commit too
     var prev = land("data/v0", Seq((1L, 10L), (2L, 20L)))
-    ManifestLog.commit(src, 0, prev, Seq.empty, "write")
+    LogKit.commit(src, 0, prev, Seq.empty, "write")
     for (v <- 1L to 4L) {
       val f = land(s"data/v$v", Seq((10 * v, v), (10 * v + 1, v)))
-      ManifestLog.commit(src, v, f, Seq.empty, "append")
+      LogKit.commit(src, v, f, Seq.empty, "append")
     }
     val f5 = land("data/v5", Seq((1L, 11L), (2L, 20L)))
-    ManifestLog.commit(src, 5, f5, prev, "rewrite")
+    LogKit.commit(src, 5, f5, prev, "rewrite")
     // chunked: bound 2 over a 6-version lag → 3 windows = 3 commits
     val got = ManifestLog.replicateTo(spark, src, dstChunk,
       keys = Seq("id"), maxVersionsPerSync = Some(2L))
     assert(got == 5L)
-    assert(ManifestLog.lastTxn(dstChunk, "graft_replica").contains(5L))
+    assert(ManifestLog.latestSnapshot(dstChunk)
+      .flatMap(_.txns.get("graft_replica")).contains(5L))
     val mirrorVs = ManifestLog.versions(dstChunk)
     assert(mirrorVs.size == 3,
       s"expected 3 window commits, got $mirrorVs")
@@ -610,12 +613,12 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       ManifestLog.partFiles(src, sub)
     }
     val f0 = land("data/v0", (1L to 20L).map(i => (7L, i, i * 10)))
-    ManifestLog.commit(src, 0, f0, Seq.empty, "write")
+    LogKit.commit(src, 0, f0, Seq.empty, "write")
     ManifestLog.replicateTo(spark, src, dst, keys = Seq("grp", "id"),
       maxKeys = 8)
     val f1 = land("data/v1",
       (1L to 20L).map(i => (7L, i, if (i == 3) 999L else i * 10)))
-    ManifestLog.commit(src, 1, f1, f0, "rewrite")
+    LogKit.commit(src, 1, f1, f0, "rewrite")
     ManifestLog.replicateTo(spark, src, dst, keys = Seq("grp", "id"),
       maxKeys = 8)
     val mir = ManifestLog.readVersion(spark, dst,
@@ -644,16 +647,16 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       ManifestLog.partFiles(r, sub)
     }
     val f0 = land(root, "data/v0", (1L to 8L).map(i => (i, i * 10)))
-    ManifestLog.commit(root, 0, f0, Seq.empty, "write")
+    LogKit.commit(root, 0, f0, Seq.empty, "write")
     ManifestLog.deleteWhereMor(spark, root, 0, 1,
       org.apache.spark.sql.functions.col("id") === 3L)
     // v2: COW rewrite folds the vector away — no surviving dv refs
     val f2 = land(root, "data/v2",
       (1L to 8L).filter(_ != 3L).map(i => (i, i * 10)))
-    ManifestLog.commit(root, 2, f2, ManifestLog.filesAsOf(root, 1),
+    LogKit.commit(root, 2, f2, ManifestLog.filesAsOf(root, 1),
       "rewrite")
     val f3 = land(root, "data/v3", Seq((9L, 90L)))
-    ManifestLog.commit(root, 3, f3, Seq.empty, "append")
+    LogKit.commit(root, 3, f3, Seq.empty, "append")
     ManifestLog.writeCheckpoint(root, 2)
     assert(ManifestLog.snapshot(root, 3).dvs.isEmpty)
     // prune manifests 0..1 behind the checkpoint → baseline v1 is
@@ -669,12 +672,12 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
     val clean = java.nio.file.Files
       .createTempDirectory("graft_dvsever_clean").toString
     val g0 = land(clean, "data/v0", (1L to 8L).map(i => (i, i * 10)))
-    ManifestLog.commit(clean, 0, g0, Seq.empty, "write")
+    LogKit.commit(clean, 0, g0, Seq.empty, "write")
     val g1 = land(clean, "data/v1",
       (1L to 8L).filter(_ != 3L).map(i => (i, i * 10)))
-    ManifestLog.commit(clean, 1, g1, g0, "rewrite")
+    LogKit.commit(clean, 1, g1, g0, "rewrite")
     val g2 = land(clean, "data/v2", Seq((9L, 90L)))
-    ManifestLog.commit(clean, 2, g2, Seq.empty, "append")
+    LogKit.commit(clean, 2, g2, Seq.empty, "append")
     ManifestLog.writeCheckpoint(clean, 1)
     ManifestLog.expireVersionsBefore(clean, 1)
     assert(!ManifestLog.dvsEverThrough(
@@ -699,14 +702,14 @@ class ManifestChangeImagesSpec extends AnyFunSuite {
       ManifestLog.partFiles(root, sub)
     }
     val f0 = land("data/v0", (1L to 8L).map(i => (i, i * 10)))
-    ManifestLog.commit(root, 0, f0, Seq.empty, "write")
+    LogKit.commit(root, 0, f0, Seq.empty, "write")
     // v1: MOR delete — the dv ref lives on
     ManifestLog.deleteWhereMor(spark, root, 0, 1,
       org.apache.spark.sql.functions.col("id") === 3L)
     // PQ checkpoint at 1: dv refs in the SIDECAR, inline "dvs" empty
     ManifestLog.writeCheckpoint(root, 1)
     val f2 = land("data/v2", Seq((9L, 90L)))
-    ManifestLog.commit(root, 2, f2, Seq.empty, "append")
+    LogKit.commit(root, 2, f2, Seq.empty, "append")
     // forge a NEWER all-JSON checkpoint without the bit — the
     // rollback/mixed-version writer shape; it now masks the pq
     // checkpoint as "last"

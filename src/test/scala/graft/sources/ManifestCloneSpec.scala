@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** SHALLOW CLONE (r17): a new table whose v0 references the source
   * snapshot's files by absolute path — one metadata-sized commit,
@@ -27,7 +28,7 @@ class ManifestCloneSpec extends AnyFunSuite {
       (0L until 40L).map(k => (k, k * 10L)).toDF("k", "amount")
         .repartitionByRange(4, col("k")),
       root, "data/v0", 0, statsCols = Seq("k"), bloomCol = Some("k"))
-    ManifestLog.commit(root, 1, Seq.empty, Seq.empty, op = "alter",
+    LogKit.commit(root, 1, Seq.empty, Seq.empty, op = "alter",
       checks = Some(Seq("k_nonneg" -> "k >= 0")))
     ManifestLog.deleteWhereMor(spark, root, 1, 2, col("k") % 10 === 7)
     root
@@ -82,7 +83,7 @@ class ManifestCloneSpec extends AnyFunSuite {
     // append locally
     (100L until 110L).map(k => (k, k * 10L)).toDF("k", "amount")
       .coalesce(1).write.parquet(s"$dst/data/v1")
-    ManifestLog.commit(dst, 1, ManifestLog.partFiles(dst, "data/v1"),
+    LogKit.commit(dst, 1, ManifestLog.partFiles(dst, "data/v1"),
       Seq.empty, op = "write", attest = true)
     // MOR delete rows that live in CLONED files
     val dvs = ManifestLog.deleteWhereMor(spark, dst, 1, 2,
@@ -152,7 +153,7 @@ class ManifestCloneSpec extends AnyFunSuite {
     // local divergence first: an appended file must NOT be rewritten
     (100L until 105L).map(k => (k, k * 10L)).toDF("k", "amount")
       .coalesce(1).write.parquet(s"$dst/data/v1")
-    ManifestLog.commit(dst, 1, ManifestLog.partFiles(dst, "data/v1"),
+    LogKit.commit(dst, 1, ManifestLog.partFiles(dst, "data/v1"),
       Seq.empty, op = "write", attest = true)
     val localBefore = ManifestLog.filesAsOf(dst, 1)
       .filterNot(_.startsWith("/"))
@@ -198,7 +199,7 @@ class ManifestCloneSpec extends AnyFunSuite {
     Seq((1L, 10L, "a"), (2L, 20L, "a"), (3L, 30L, "b"), (4L, 40L, "b"))
       .toDF("k", "amount", "part")
       .write.partitionBy("part").parquet(s"$src/data/v0")
-    ManifestLog.commit(src, 0,
+    LogKit.commit(src, 0,
       ManifestLog.partFilesRecursive(src, "data/v0"), Seq.empty,
       op = "write")
     val dst = newRoot()
@@ -228,7 +229,7 @@ class ManifestCloneSpec extends AnyFunSuite {
     val flatSrc = s"$base/flat"
     Seq((1L, 10L), (2L, 20L)).toDF("k", "amount")
       .coalesce(1).write.parquet(s"$flatSrc/data/v0")
-    ManifestLog.commit(flatSrc, 0,
+    LogKit.commit(flatSrc, 0,
       ManifestLog.partFiles(flatSrc, "data/v0"), Seq.empty, op = "write")
     val dst2 = newRoot()
     ManifestLog.cloneShallow(flatSrc, dst2, 0)
@@ -259,7 +260,7 @@ class ManifestCloneSpec extends AnyFunSuite {
       .map(_.getFileName.toString)
       .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
       .toSeq.sorted
-    ManifestLog.commit(ambRoot, 0, ambRel, Seq.empty, op = "write")
+    LogKit.commit(ambRoot, 0, ambRel, Seq.empty, op = "write")
     val dst3 = newRoot()
     ManifestLog.cloneShallow(ambRoot, dst3, 0)
     val e = intercept[IllegalArgumentException] {
@@ -285,20 +286,20 @@ class ManifestCloneSpec extends AnyFunSuite {
     // generations differ ONLY in their segment lists
     Seq((1L, 10L)).toDF("k", "amount")
       .coalesce(1).write.parquet(s"$src/data/v0")
-    ManifestLog.commit(src, 0, ManifestLog.partFiles(src, "data/v0"),
+    LogKit.commit(src, 0, ManifestLog.partFiles(src, "data/v0"),
       Seq.empty, op = "write")
     // generation 1: partitioned by part (long-typed values)
     Seq((2L, 20L, 1L), (3L, 30L, 2L))
       .toDF("k", "amount", "part")
       .write.partitionBy("part").parquet(s"$src/data/v1")
-    ManifestLog.commit(src, 1,
+    LogKit.commit(src, 1,
       ManifestLog.partFilesRecursive(src, "data/v1"), Seq.empty,
       op = "append")
     // generation 2: spec addition — partitioned by (part, sub)
     Seq((4L, 40L, 2L, "y"), (5L, 50L, 3L, "z"))
       .toDF("k", "amount", "part", "sub")
       .write.partitionBy("part", "sub").parquet(s"$src/data/v2")
-    ManifestLog.commit(src, 2,
+    LogKit.commit(src, 2,
       ManifestLog.partFilesRecursive(src, "data/v2"), Seq.empty,
       op = "append")
     val dst = newRoot()
@@ -337,12 +338,12 @@ class ManifestCloneSpec extends AnyFunSuite {
     val bad = s"$base/bad"
     Seq((1L, 10L, "a")).toDF("k", "amount", "part")
       .write.partitionBy("part").parquet(s"$bad/data/v0")
-    ManifestLog.commit(bad, 0,
+    LogKit.commit(bad, 0,
       ManifestLog.partFilesRecursive(bad, "data/v0"), Seq.empty,
       op = "write")
     Seq((2L, 20L, "b")).toDF("k", "amount", "other")
       .write.partitionBy("other").parquet(s"$bad/data/v1")
-    ManifestLog.commit(bad, 1,
+    LogKit.commit(bad, 1,
       ManifestLog.partFilesRecursive(bad, "data/v1"), Seq.empty,
       op = "append")
     val dstBad = newRoot()
@@ -368,7 +369,8 @@ class ManifestCloneSpec extends AnyFunSuite {
       bootstrap = "clone")
     assert(v0 == 0)
     assert(ManifestLog.partFilesRecursive(dst, "").isEmpty)
-    assert(ManifestLog.lastTxn(dst, "graft_replica").contains(0L))
+    assert(ManifestLog.latestSnapshot(dst)
+      .flatMap(_.txns.get("graft_replica")).contains(0L))
     // source moves on: one key changes (a COW rewrite of its file)
     val touched = ManifestLog.filesMatchingCols(ManifestLog.snapshot(src, 0),
       Seq(("k", 5L, 5L)))
@@ -377,7 +379,7 @@ class ManifestCloneSpec extends AnyFunSuite {
       .withColumn("amount",
         when(col("k") === 5L, lit(999L)).otherwise(col("amount")))
       .coalesce(1).write.parquet(s"$src/data/v1")
-    ManifestLog.commit(src, 1, ManifestLog.partFiles(src, "data/v1"),
+    LogKit.commit(src, 1, ManifestLog.partFiles(src, "data/v1"),
       removes = touched, op = "rewrite")
     // tail sync: key-pruned — ONLY the touched reference localizes
     val before = ManifestLog.filesAsOf(dst, 0).toSet

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** The change-image feed over MERGE-ON-READ commits (r16): DV-only
   * commits emit delete images (the vector delta), MOR merges emit
@@ -23,7 +24,7 @@ class ManifestDvFeedSpec extends AnyFunSuite {
       Files.createTempDirectory("graft_dvfeed")).toString
     (0L until 10L).map(k => (k, k * 10L)).toDF("k", "v").coalesce(1)
       .write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, op = "write")
     ManifestLog.deleteWhereMor(spark, root, 0, 1,
       col("k") === 2L || col("k") === 5L)
@@ -35,7 +36,7 @@ class ManifestDvFeedSpec extends AnyFunSuite {
     val r1 = ManifestLog.snapshot(root, 1)
     val dvs = ManifestLog.buildDvs(spark, root, r1, 2, r1.files,
       _.filter(col("k").isin(7L, 8L)))
-    ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
+    LogKit.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       Seq.empty, op = "merge", dvs = dvs)
     assert(ManifestLog.compactDvs(spark, root, 2, 3).nonEmpty)
     root

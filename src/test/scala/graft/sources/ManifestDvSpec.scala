@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import ManifestLog.{DvRef, FileStat}
+import LogKit.ReplayMaps
 
 /** DELETION VECTORS / merge-on-read (r16): a delete commits per-file
   * sidecars of dead row indexes instead of rewriting data files
@@ -36,7 +37,7 @@ class ManifestDvSpec extends AnyFunSuite {
       .collect()
       .map(r => s"data/v0/${r.getString(0).split('/').last}" ->
         Map("user_id" -> FileStat(r.getLong(1), r.getLong(2)))).toMap
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, op = "write", colStats = stats)
     root
   }
@@ -164,7 +165,7 @@ class ManifestDvSpec extends AnyFunSuite {
       .withColumn("bucket", col("user_id") % 2)
       .write.partitionBy("bucket").parquet(s"$root/data/v0")
     val adds = ManifestLog.partFilesRecursive(root, "data/v0")
-    ManifestLog.commit(root, 0, adds, Seq.empty, op = "write")
+    LogKit.commit(root, 0, adds, Seq.empty, op = "write")
     ManifestLog.deleteWhereMor(spark, root, 0, 1,
       col("user_id").between(4, 7))
     val rows = ManifestLog.readVersionHive(spark, root, 1)
@@ -188,12 +189,12 @@ class ManifestDvSpec extends AnyFunSuite {
     // gen-1: two-column file, declared
     Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, "write", schemaDdl = Some("k BIGINT, v BIGINT"))
     // gen-2: the widened generation, declared
     Seq((3L, 30L, 300L), (4L, 40L, 999L)).toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, "evolve",
       schemaDdl = Some("k BIGINT, v BIGINT, w BIGINT"))
     // a delete by the NEW column: gen-1 rows (w NULL) never match —
@@ -220,15 +221,15 @@ class ManifestDvSpec extends AnyFunSuite {
     val root = freshRoot()
     val f = ManifestLog.filesAsOf(root, 0).head
     intercept[IllegalArgumentException] {
-      ManifestLog.commit(root, 1, Seq.empty, removes = Seq(f),
+      LogKit.commit(root, 1, Seq.empty, removes = Seq(f),
         op = "bad", dvs = Map(f -> DvRef(s"$f.v1.dv", 1)))
     }
     intercept[IllegalArgumentException] {
-      ManifestLog.commit(root, 1, Seq.empty, Seq.empty,
+      LogKit.commit(root, 1, Seq.empty, Seq.empty,
         op = "bad", dvs = Map(f -> DvRef(s"$f.v1.dv", 0)))
     }
     intercept[IllegalArgumentException] {
-      ManifestLog.commit(root, 1, Seq.empty, Seq.empty,
+      LogKit.commit(root, 1, Seq.empty, Seq.empty,
         op = "bad", dvs = Map(f -> DvRef("side|car.dv", 1)))
     }
     // nothing committed by the rejected attempts

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** Log-carried schema evolution + timestamp time travel (r16). Pins:
   * declared-schema reads (old files null-fill new columns; version
@@ -24,12 +25,12 @@ class ManifestEvolutionSpec extends AnyFunSuite {
     val root = newRoot()
     Seq((1L, 10L), (2L, 20L)).toDF("k", "a").coalesce(1)
       .write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, op = "write", commitMs = Some(100L),
       schemaDdl = Some("k BIGINT, a BIGINT"))
     Seq((3L, 30L, 3.5)).toDF("k", "a", "b").coalesce(1)
       .write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, op = "evolve", commitMs = Some(200L),
       schemaDdl = Some("k BIGINT, a BIGINT, b DOUBLE"))
 
@@ -56,13 +57,13 @@ class ManifestEvolutionSpec extends AnyFunSuite {
         .write.parquet(s"$root/data/v$v")
     }
     land(0)
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, op = "write", commitMs = Some(1000L))
     land(1) // an untimestamped commit: version-addressable only
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, op = "write")
     land(2)
-    ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
+    LogKit.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       Seq.empty, op = "write", commitMs = Some(3000L))
 
     assert(ManifestLog.versionAtTimestamp(root, 1000L) == 0L)
@@ -83,7 +84,7 @@ class ManifestEvolutionSpec extends AnyFunSuite {
     val root = newRoot()
     Seq((1L, Some(5L))).toDF("k", "v").coalesce(1)
       .write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, op = "write",
       checks = Some(Seq("v_pos" -> "v > 0", "k_pos" -> "k > 0")))
     assert(ManifestLog.snapshot(root, 0).checks ==
@@ -95,10 +96,10 @@ class ManifestEvolutionSpec extends AnyFunSuite {
     Seq((2L, Some(6L))).toDF("k", "v").coalesce(1)
       .write.parquet(s"$root/data/v1")
     intercept[IllegalArgumentException] {
-      ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+      LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
         Seq.empty, op = "append")
     }
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, op = "append", attest = true)
     assert(ManifestLog.snapshot(root, 1).checks.keySet == Set("v_pos", "k_pos"))
     // the set folds through a checkpoint seed
@@ -116,7 +117,7 @@ class ManifestEvolutionSpec extends AnyFunSuite {
     // dropping ALL constraints is a real declaration, not an absence
     Seq((4L, Some(7L))).toDF("k", "v").coalesce(1)
       .write.parquet(s"$root/data/v2")
-    ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
+    LogKit.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       Seq.empty, op = "drop-checks", checks = Some(Seq.empty))
     assert(ManifestLog.snapshot(root, 2).checks.isEmpty)
     assert(ManifestLog.snapshot(root, 1).checks.nonEmpty)
@@ -131,7 +132,7 @@ class ManifestEvolutionSpec extends AnyFunSuite {
         .write.parquet(s"$root/data/v$v")
       val removes = if (v == 0) Seq.empty[String]
         else ManifestLog.partFiles(root, s"data/v${v - 1}")
-      ManifestLog.commit(root, v,
+      LogKit.commit(root, v,
         ManifestLog.partFiles(root, s"data/v$v"), removes, op = "merge",
         policy = Some(ManifestLog.CheckpointPolicy(every = 2)),
         commitMs = Some(1000L * (v + 1)))

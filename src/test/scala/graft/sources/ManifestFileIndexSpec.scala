@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import ManifestLog.FileStat
+import LogKit.ReplayMaps
 
 /** The manifest-planned scan (r15 verdict #1/#2): snapshot reads plan
   * from the log's own file list through [[ManifestFileIndex]] — no
@@ -278,7 +279,7 @@ class ManifestFileIndexSpec extends AnyFunSuite {
       ManifestLog.partFiles(root, "data/legacy").head
     val colStats = (0 until 4).map(i => adds(i) ->
       Map("user_id" -> FileStat(i * 10L, i * 10L + 9))).toMap
-    ManifestLog.commit(root, 0, adds, Seq.empty, "write",
+    LogKit.commit(root, 0, adds, Seq.empty, "write",
       colStats = colStats)
     root
   }
@@ -361,7 +362,7 @@ class ManifestFileIndexSpec extends AnyFunSuite {
     }
     val adds = (0 until 4).map(i =>
       ManifestLog.partFiles(root2, s"data/f$i").head)
-    ManifestLog.commit(root2, 0, adds, Seq.empty, "write",
+    LogKit.commit(root2, 0, adds, Seq.empty, "write",
       stats = adds.zipWithIndex.map { case (f, i) =>
         f -> FileStat(i * 10L, i * 10L + 9) }.toMap)
     val mapped = ManifestLog.readVersionIndexed(spark, root2, 0,

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** The manifest-log FORMAT FLOOR: a log written at the floor resolves
   * exactly (a checked-in table written by the build that set the
@@ -47,7 +48,7 @@ class ManifestFormatFloorSpec extends AnyFunSuite {
     val store = ManifestLog.storeFor(root)
     (0L to 1L).foreach { v =>
       val f = s"data/v$v.parquet"
-      ManifestLog.commitIn(store, v, Seq(f), Seq.empty, "append",
+      LogKit.commitIn(store, v, Seq(f), Seq.empty, "append",
         colStats = Map(f -> Map("k" -> FileStat(0, 9))),
         blooms = Map(f -> Map("k" -> BloomRef("k", s"$f.bloom", 64, 4))),
         checks = if (v == 0) Some(Seq("k_nonneg" -> "k >= 0")) else None,
@@ -60,11 +61,12 @@ class ManifestFormatFloorSpec extends AnyFunSuite {
   private def readers(root: String, store: LogStore,
       v: Long): Seq[(String, () => Any)] = Seq(
     "snapshot" -> (() => ManifestLog.snapshot(root, v)),
-    "commit gate" -> (() => ManifestLog.commitIn(store, v + 1,
+    "commit gate" -> (() => LogKit.commitIn(store, v + 1,
       Seq("data/next.parquet"), Seq.empty, "append",
       colStats = Map("data/next.parquet" ->
         Map("k" -> ManifestLog.FileStat(0, 9))))),
-    "latest snapshot" -> (() => ManifestLog.lastTxn(root, "app")),
+    "latest snapshot" -> (() => ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get("app"))),
     "timestamp" -> (() => ManifestLog.versionAtTimestamp(root, 5000L)),
     "vacuum" -> (() => ManifestLog.vacuum(root, dryRun = true)),
     "dvs-ever" -> (() => ManifestLog.dvsEverThrough(store, v)))
@@ -93,7 +95,7 @@ class ManifestFormatFloorSpec extends AnyFunSuite {
     // the commit gate reads the floor-era meta sibling: the fixture's
     // CHECK amount >= 0 still refuses an add its stats cannot prove
     val store = ManifestLog.storeFor(root.toString)
-    def add(min: Long) = ManifestLog.commitIn(store, 6,
+    def add(min: Long) = LogKit.commitIn(store, 6,
       Seq("data/d.parquet"), Seq.empty, "append", colStats = Map(
         "data/d.parquet" -> Map("amount" -> ManifestLog.FileStat(min, 9))))
     intercept[IllegalArgumentException](add(-1))
@@ -139,9 +141,8 @@ class ManifestFormatFloorSpec extends AnyFunSuite {
     val (root, store) = table()
     rewrite(store, name(1))(_.replace("\"fmt\":[\"2\"],", ""))
     refusedEverywhere(root, store, 1, name(1), Seq(
-      "change feed" -> (() => ManifestLog.changesBetween(root, 0, 1)),
-      "dv feed" -> (() => ManifestLog.dvChangesBetween(root, 0, 1)),
-      "schema walk" -> (() => ManifestLog.schemaDdlsThrough(root, 0, 1)),
+      "change feed" -> (() => LogKit.changesBetween(root, 0, 1)),
+      "cdc planning" -> (() => ManifestLog.changeRangeIn(store, 0, 1)),
       "checkpoint" -> (() => ManifestLog.writeCheckpoint(root, 1))))
   }
 
@@ -152,7 +153,7 @@ class ManifestFormatFloorSpec extends AnyFunSuite {
       _.replace("data/v1.parquet.bloom|64|4", "data/v1.parquet.bloom|64|4|l"))
     assert(store.read(name(1)).contains("|64|4|l\""))
     refusedEverywhere(root, store, 1, name(1), Seq(
-      "change feed" -> (() => ManifestLog.changesBetween(root, 0, 1)),
+      "change feed" -> (() => LogKit.changesBetween(root, 0, 1)),
       "checkpoint" -> (() => ManifestLog.writeCheckpoint(root, 1))))
   }
 
@@ -191,7 +192,7 @@ class ManifestFormatFloorSpec extends AnyFunSuite {
     ManifestLog.writeCheckpointIn(store2, 1)
     rewrite(store2, meta(1))(_.replace(",\"dvsever\":[\"0\"]", ""))
     Seq[() => Any](
-      () => ManifestLog.commitIn(store2, 2, Seq("data/n.parquet"),
+      () => LogKit.commitIn(store2, 2, Seq("data/n.parquet"),
         Seq.empty, "append", colStats = Map("data/n.parquet" ->
           Map("k" -> ManifestLog.FileStat(0, 9)))),
       () => ManifestLog.dvsEverThrough(store2, 1))
@@ -213,7 +214,7 @@ class ManifestFormatFloorSpec extends AnyFunSuite {
     val root = freshRoot()
     (1L to 8L).map(i => (i, i * 10)).toDF("id", "amount").coalesce(1)
       .write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, "write")
     val dv = ManifestLog.deleteWhereMor(spark, root, 0, 1,
       col("id") === 3L).head._2.sidecar

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** Commit protocol + replay semantics of the manifest log — above all
   * the CONCURRENT-WRITER race: two writers publishing the same version
@@ -14,11 +15,11 @@ class ManifestLogSpec extends AnyFunSuite {
 
   test("replay folds adds and removes in commit order") {
     val root = freshRoot()
-    ManifestLog.commit(root, 0, Seq("data/v0/a.parquet",
+    LogKit.commit(root, 0, Seq("data/v0/a.parquet",
       "data/v0/b.parquet"), Seq.empty, "write")
-    ManifestLog.commit(root, 1, Seq("data/v1/c.parquet"),
+    LogKit.commit(root, 1, Seq("data/v1/c.parquet"),
       Seq("data/v0/a.parquet", "data/v0/b.parquet"), "merge")
-    ManifestLog.commit(root, 2, Seq("data/v2/d.parquet"),
+    LogKit.commit(root, 2, Seq("data/v2/d.parquet"),
       Seq("data/v1/c.parquet"), "merge")
     assert(ManifestLog.versions(root) == Seq(0L, 1L, 2L))
     assert(ManifestLog.latestVersion(root).contains(2L))
@@ -32,7 +33,7 @@ class ManifestLogSpec extends AnyFunSuite {
 
   test("concurrent writers racing one version: exactly one commit wins") {
     val root = freshRoot()
-    ManifestLog.commit(root, 0, Seq("data/v0/base.parquet"), Seq.empty,
+    LogKit.commit(root, 0, Seq("data/v0/base.parquet"), Seq.empty,
       "write")
     // many writers, one contested version, one barrier start — the
     // loser set must all see Conflict and the log must hold ONE v1
@@ -45,7 +46,7 @@ class ManifestLogSpec extends AnyFunSuite {
           def call(): Boolean = {
             gate.await()
             try {
-              ManifestLog.commit(root, 1, Seq(s"data/v1/w$i.parquet"),
+              LogKit.commit(root, 1, Seq(s"data/v1/w$i.parquet"),
                 Seq("data/v0/base.parquet"), "merge")
               true
             } catch { case ManifestLog.Conflict(1L) => false }
@@ -72,11 +73,11 @@ class ManifestLogSpec extends AnyFunSuite {
   test("checkpoint: tail replay == full replay, idempotent, survives " +
       "manifest pruning") {
     val root = freshRoot()
-    ManifestLog.commit(root, 0, Seq("data/v0/a.parquet"), Seq.empty,
+    LogKit.commit(root, 0, Seq("data/v0/a.parquet"), Seq.empty,
       "write")
-    ManifestLog.commit(root, 1, Seq("data/v1/b.parquet"),
+    LogKit.commit(root, 1, Seq("data/v1/b.parquet"),
       Seq("data/v0/a.parquet"), "merge")
-    ManifestLog.commit(root, 2, Seq("data/v2/c.parquet"),
+    LogKit.commit(root, 2, Seq("data/v2/c.parquet"),
       Seq("data/v1/b.parquet"), "merge")
     val full2 = ManifestLog.filesAsOf(root, 2)
     ManifestLog.writeCheckpoint(root, 2)
@@ -85,7 +86,7 @@ class ManifestLogSpec extends AnyFunSuite {
     assert(ManifestLog.checkpointVersions(root) == Seq(2L))
     assert(ManifestLog.filesAsOf(root, 2) == full2,
       "checkpoint-seeded resolve must equal the full replay")
-    ManifestLog.commit(root, 3, Seq("data/v3/d.parquet"),
+    LogKit.commit(root, 3, Seq("data/v3/d.parquet"),
       Seq("data/v2/c.parquet"), "merge")
     assert(ManifestLog.filesAsOf(root, 3) == Seq("data/v3/d.parquet"),
       "tail replay after the checkpoint must fold manifest 3")
@@ -103,18 +104,18 @@ class ManifestLogSpec extends AnyFunSuite {
 
   test("conflicted writer rebases and commits the next version") {
     val root = freshRoot()
-    ManifestLog.commit(root, 0, Seq("data/v0/a.parquet"), Seq.empty,
+    LogKit.commit(root, 0, Seq("data/v0/a.parquet"), Seq.empty,
       "write")
-    ManifestLog.commit(root, 1, Seq("data/v1/b.parquet"),
+    LogKit.commit(root, 1, Seq("data/v1/b.parquet"),
       Seq("data/v0/a.parquet"), "merge")
     // a writer that read v0, lost the race for v1, retries on top of
     // the CURRENT latest — the standard optimistic-concurrency loop
     intercept[ManifestLog.Conflict] {
-      ManifestLog.commit(root, 1, Seq("data/v1/mine.parquet"),
+      LogKit.commit(root, 1, Seq("data/v1/mine.parquet"),
         Seq("data/v0/a.parquet"), "merge")
     }
     val next = ManifestLog.latestVersion(root).get + 1
-    ManifestLog.commit(root, next, Seq("data/v2/mine.parquet"),
+    LogKit.commit(root, next, Seq("data/v2/mine.parquet"),
       ManifestLog.filesAsOf(root, next - 1), "merge")
     assert(ManifestLog.filesAsOf(root, 2) == Seq("data/v2/mine.parquet"))
   }
@@ -122,7 +123,7 @@ class ManifestLogSpec extends AnyFunSuite {
   test("the 8-writer race holds on the CAS-mock store: conflict " +
       "semantics are the protocol's, not link(2)'s (r14 verdict #5)") {
     val store = new InMemoryLogStore
-    ManifestLog.commitIn(store, 0, Seq("data/v0/base.parquet"), Seq.empty,
+    LogKit.commitIn(store, 0, Seq("data/v0/base.parquet"), Seq.empty,
       "write")
     val n = 8
     val gate = new java.util.concurrent.CountDownLatch(1)
@@ -133,7 +134,7 @@ class ManifestLogSpec extends AnyFunSuite {
           def call(): Boolean = {
             gate.await()
             try {
-              ManifestLog.commitIn(store, 1, Seq(s"data/v1/w$i.parquet"),
+              LogKit.commitIn(store, 1, Seq(s"data/v1/w$i.parquet"),
                 Seq("data/v0/base.parquet"), "merge")
               true
             } catch { case ManifestLog.Conflict(1L) => false }
@@ -155,7 +156,7 @@ class ManifestLogSpec extends AnyFunSuite {
     val policy = Some(ManifestLog.CheckpointPolicy(every = 4))
     // 10 linear commits; each version rewrites the previous file set
     (0L to 9L).foreach { v =>
-      ManifestLog.commit(root, v, Seq(s"data/v$v/f.parquet"),
+      LogKit.commit(root, v, Seq(s"data/v$v/f.parquet"),
         if (v == 0) Seq.empty else Seq(s"data/v${v - 1}/f.parquet"),
         "merge", policy)
     }
@@ -173,7 +174,7 @@ class ManifestLogSpec extends AnyFunSuite {
     // the same policy drives the oracle-facing invariant: a fresh
     // commit keeps resolving (11 % 4 != 0 -> no fold; 12 folds again)
     (10L to 12L).foreach { v =>
-      ManifestLog.commit(root, v, Seq(s"data/v$v/f.parquet"),
+      LogKit.commit(root, v, Seq(s"data/v$v/f.parquet"),
         Seq(s"data/v${v - 1}/f.parquet"), "merge", policy)
     }
     assert(ManifestLog.checkpointVersions(root) == Seq(4L, 8L, 12L))
@@ -188,7 +189,7 @@ class ManifestLogSpec extends AnyFunSuite {
     val root = freshRoot()
     // v0: three stats-bearing files covering [0,9], [10,19], [20,29],
     // plus one legacy file committed WITHOUT stats
-    ManifestLog.commit(root, 0,
+    LogKit.commit(root, 0,
       Seq("data/v0/a.parquet", "data/v0/b.parquet", "data/v0/c.parquet",
         "data/v0/legacy.parquet"), Seq.empty, "write",
       stats = Map("data/v0/a.parquet" -> FileStat(0, 9),
@@ -207,7 +208,7 @@ class ManifestLogSpec extends AnyFunSuite {
       Seq("data/v0/legacy.parquet"))
     // v1 rewrites b: its stats must die with the remove, the
     // replacement's must take over
-    ManifestLog.commit(root, 1, Seq("data/v1/b2.parquet"),
+    LogKit.commit(root, 1, Seq("data/v1/b2.parquet"),
       Seq("data/v0/b.parquet"), "merge",
       stats = Map("data/v1/b2.parquet" -> FileStat(10, 24)))
     assert(ManifestLog.filesMatching(ManifestLog.snapshot(root, 1), 12, 14) ==
@@ -239,7 +240,7 @@ class ManifestLogSpec extends AnyFunSuite {
     // file with x-only stats and one with none
     def q(n: String, x: FileStat, y: FileStat) =
       s"data/v0/$n.parquet" -> Map("x" -> x, "y" -> y)
-    ManifestLog.commit(root, 0,
+    LogKit.commit(root, 0,
       Seq("data/v0/q00.parquet", "data/v0/q01.parquet",
         "data/v0/q10.parquet", "data/v0/q11.parquet",
         "data/v0/xonly.parquet", "data/v0/legacy.parquet"),
@@ -271,7 +272,7 @@ class ManifestLogSpec extends AnyFunSuite {
     assert(ManifestLog.filesMatchingCols(ManifestLog.snapshot(root, 0),
       Seq(("z", 5L, 6L))).size == 6)
     // a rewrite drops the removed file's colstats with it
-    ManifestLog.commit(root, 1, Seq("data/v1/q00b.parquet"),
+    LogKit.commit(root, 1, Seq("data/v1/q00b.parquet"),
       Seq("data/v0/q00.parquet"), "merge",
       colStats = Map("data/v1/q00b.parquet" ->
         Map("x" -> FileStat(0, 4), "y" -> FileStat(0, 4))))
@@ -292,17 +293,21 @@ class ManifestLogSpec extends AnyFunSuite {
   test("txn markers: latest batch per appId folds as max, survives " +
       "checkpoint + prune, independent per writer (r15 exactly-once)") {
     val root = freshRoot()
-    assert(ManifestLog.lastTxn(root, "ingest").isEmpty)
-    ManifestLog.commit(root, 0, Seq("data/b0/f.parquet"), Seq.empty,
+    assert(ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get("ingest")).isEmpty)
+    LogKit.commit(root, 0, Seq("data/b0/f.parquet"), Seq.empty,
       "stream-append", txn = Some(("ingest", 0L)))
-    ManifestLog.commit(root, 1, Seq("data/b1/f.parquet"), Seq.empty,
+    LogKit.commit(root, 1, Seq("data/b1/f.parquet"), Seq.empty,
       "stream-append", txn = Some(("ingest", 1L)))
     // a second, independent writer interleaves without clobbering
-    ManifestLog.commit(root, 2, Seq("data/c5/f.parquet"), Seq.empty,
+    LogKit.commit(root, 2, Seq("data/c5/f.parquet"), Seq.empty,
       "stream-append", txn = Some(("compactor", 5L)))
-    assert(ManifestLog.lastTxn(root, "ingest").contains(1L))
-    assert(ManifestLog.lastTxn(root, "compactor").contains(5L))
-    assert(ManifestLog.lastTxn(root, "unknown").isEmpty)
+    assert(ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get("ingest")).contains(1L))
+    assert(ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get("compactor")).contains(5L))
+    assert(ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get("unknown")).isEmpty)
     // the idempotence decision must survive checkpoint + prune of the
     // manifests that carried the markers (total-checkpoint-loss replay
     // arrives AFTER the log has been compacted)
@@ -311,12 +316,15 @@ class ManifestLogSpec extends AnyFunSuite {
       java.nio.file.Files.delete(java.nio.file.Paths.get(
         root, "_log", f"$v%020d.json"))
     }
-    assert(ManifestLog.lastTxn(root, "ingest").contains(1L))
-    assert(ManifestLog.lastTxn(root, "compactor").contains(5L))
+    assert(ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get("ingest")).contains(1L))
+    assert(ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get("compactor")).contains(5L))
     // post-compaction commits keep folding on top of the checkpoint
-    ManifestLog.commit(root, 3, Seq("data/b2/f.parquet"), Seq.empty,
+    LogKit.commit(root, 3, Seq("data/b2/f.parquet"), Seq.empty,
       "stream-append", txn = Some(("ingest", 2L)))
-    assert(ManifestLog.lastTxn(root, "ingest").contains(2L))
+    assert(ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get("ingest")).contains(2L))
   }
 
   test("bloom sidecars: no false negatives ever, point prune keeps " +
@@ -341,7 +349,7 @@ class ManifestLogSpec extends AnyFunSuite {
     // two files with disjoint value sets + one legacy file, no bloom
     sidecar("data/v0/a.bloom", Seq(1L, 2L, 3L))
     sidecar("data/v0/b.bloom", Seq(100L, 200L, 300L))
-    ManifestLog.commit(root, 0,
+    LogKit.commit(root, 0,
       Seq("data/v0/a.parquet", "data/v0/b.parquet",
         "data/v0/legacy.parquet"), Seq.empty, "write",
       blooms = Map(
@@ -362,7 +370,7 @@ class ManifestLogSpec extends AnyFunSuite {
       root, ManifestLog.snapshot(root, 0), "other", 2L)
       .size == 3)
     // refs die with their file's remove...
-    ManifestLog.commit(root, 1, Seq.empty,
+    LogKit.commit(root, 1, Seq.empty,
       Seq("data/v0/a.parquet"), "delete")
     assert(!ManifestLog.snapshot(root, 1).blooms.contains("data/v0/a.parquet"))
     // ...and survive checkpoint folding + manifest pruning
@@ -391,7 +399,7 @@ class ManifestLogSpec extends AnyFunSuite {
     // {11,12}; c: stats only [20,29]; legacy: no indexes at all
     sidecar("data/a.bloom", Seq(1L, 2L, 3L))
     sidecar("data/b.bloom", Seq(11L, 12L))
-    ManifestLog.commit(root, 0,
+    LogKit.commit(root, 0,
       Seq("data/a.parquet", "data/b.parquet", "data/c.parquet",
         "data/legacy.parquet"), Seq.empty, "write",
       colStats = Map(
@@ -442,11 +450,11 @@ class ManifestLogSpec extends AnyFunSuite {
       "data/v0/keep.parquet",
       "data/v1/a2.parquet", "data/b9/orphan.parquet",
       "data/v0/_SUCCESS").foreach(touch)
-    ManifestLog.commit(root, 0,
+    LogKit.commit(root, 0,
       Seq("data/v0/a.parquet", "data/v0/keep.parquet"), Seq.empty, "write",
       blooms = Map("data/v0/a.parquet" -> Map("id" ->
         ManifestLog.BloomRef("id", "data/v0/a.parquet.bloom", 1024, 4))))
-    ManifestLog.commit(root, 1, Seq("data/v1/a2.parquet"),
+    LogKit.commit(root, 1, Seq("data/v1/a2.parquet"),
       Seq("data/v0/a.parquet"), "merge")
     // both versions resolvable: only the crashed writer's file is GC'd
     // (a's sidecar is still referenced by resolvable v0)
@@ -485,12 +493,12 @@ class ManifestLogSpec extends AnyFunSuite {
     }
     Seq("data/v0/a.parquet", "data/v0/keep.parquet",
       "data/v1/a2.parquet", "data/v2/c.parquet").foreach(touch)
-    ManifestLog.commit(root, 0,
+    LogKit.commit(root, 0,
       Seq("data/v0/a.parquet", "data/v0/keep.parquet"), Seq.empty,
       "write")
-    ManifestLog.commit(root, 1, Seq("data/v1/a2.parquet"),
+    LogKit.commit(root, 1, Seq("data/v1/a2.parquet"),
       Seq("data/v0/a.parquet"), "merge")
-    ManifestLog.commit(root, 2, Seq("data/v2/c.parquet"), Seq.empty,
+    LogKit.commit(root, 2, Seq("data/v2/c.parquet"), Seq.empty,
       "write")
     // nothing is sweepable while every version resolves
     assert(ManifestLog.vacuum(root, dryRun = true).isEmpty)
@@ -527,24 +535,24 @@ class ManifestLogSpec extends AnyFunSuite {
     for (bad <- Seq("data/a|b.parquet", "data/a,b.parquet",
         "data/a\"b.parquet", "data/a]b.parquet")) {
       intercept[IllegalArgumentException](
-        ManifestLog.commit(root, 0, Seq(bad), Seq.empty, "write"))
+        LogKit.commit(root, 0, Seq(bad), Seq.empty, "write"))
       // removes are serialized through the same arrays
       intercept[IllegalArgumentException](
-        ManifestLog.commit(root, 0, Seq("data/ok.parquet"), Seq(bad),
+        LogKit.commit(root, 0, Seq("data/ok.parquet"), Seq(bad),
           "write"))
     }
     // colstat column names and txn appIds ride the same flat strings
     intercept[IllegalArgumentException](
-      ManifestLog.commit(root, 0, Seq("data/ok.parquet"), Seq.empty,
+      LogKit.commit(root, 0, Seq("data/ok.parquet"), Seq.empty,
         "write", colStats = Map("data/ok.parquet" ->
           Map("x,y" -> ManifestLog.FileStat(0, 1)))))
     intercept[IllegalArgumentException](
-      ManifestLog.commit(root, 0, Seq("data/ok.parquet"), Seq.empty,
+      LogKit.commit(root, 0, Seq("data/ok.parquet"), Seq.empty,
         "write", txn = Some(("app\"1", 0L))))
     // nothing was committed by any rejected attempt; a clean commit
     // at the same version then round-trips exactly
     assert(ManifestLog.versions(root).isEmpty)
-    ManifestLog.commit(root, 0, Seq("data/ok.parquet"), Seq.empty, "write")
+    LogKit.commit(root, 0, Seq("data/ok.parquet"), Seq.empty, "write")
     assert(ManifestLog.filesAsOf(root, 0) == Seq("data/ok.parquet"))
   }
 
@@ -562,7 +570,7 @@ class ManifestLogSpec extends AnyFunSuite {
     // by design, and exactly what an unscoped sweep would eat
     Seq("data/v0/a.parquet", "data/b9-dead/orphan.parquet",
       "landing/part-0.parquet", "landing/part-1.parquet").foreach(touch)
-    ManifestLog.commit(root, 0, Seq("data/v0/a.parquet"), Seq.empty,
+    LogKit.commit(root, 0, Seq("data/v0/a.parquet"), Seq.empty,
       "write")
     assert(ManifestLog.vacuum(root, exclude = Seq("landing")) ==
       Seq("data/b9-dead/orphan.parquet"))
@@ -580,13 +588,13 @@ class ManifestLogSpec extends AnyFunSuite {
   test("incremental change read: the tail's actions per version in " +
       "order; a pruned tail fails loudly, never skips (r15 CDC)") {
     val root = freshRoot()
-    ManifestLog.commit(root, 0, Seq("data/v0/a.parquet"), Seq.empty,
+    LogKit.commit(root, 0, Seq("data/v0/a.parquet"), Seq.empty,
       "write")
-    ManifestLog.commit(root, 1, Seq("data/v1/b.parquet"), Seq.empty,
+    LogKit.commit(root, 1, Seq("data/v1/b.parquet"), Seq.empty,
       "stream-append")
-    ManifestLog.commit(root, 2, Seq("data/v2/c.parquet"),
+    LogKit.commit(root, 2, Seq("data/v2/c.parquet"),
       Seq("data/v0/a.parquet"), "merge")
-    assert(ManifestLog.changesBetween(root, 0, 2) == Seq(
+    assert(LogKit.changesBetween(root, 0, 2) == Seq(
       (1L, Seq("data/v1/b.parquet"), Seq.empty),
       (2L, Seq("data/v2/c.parquet"), Seq("data/v0/a.parquet"))))
     // a cursor behind the retention horizon must re-bootstrap, not
@@ -595,16 +603,16 @@ class ManifestLogSpec extends AnyFunSuite {
     java.nio.file.Files.delete(java.nio.file.Paths.get(
       root, "_log", f"${1L}%020d.json"))
     intercept[IllegalArgumentException](
-      ManifestLog.changesBetween(root, 0, 2))
+      LogKit.changesBetween(root, 0, 2))
     // the surviving tail after the cursor is still consumable
-    assert(ManifestLog.changesBetween(root, 1, 2).map(_._1) == Seq(2L))
+    assert(LogKit.changesBetween(root, 1, 2).map(_._1) == Seq(2L))
   }
 
   test("a reader mid-prune never resolves a torn prefix: descending " +
       "deletion leaves only exact-or-loud states") {
     val root = freshRoot()
     (0L to 5L).foreach { v =>
-      ManifestLog.commit(root, v, Seq(s"data/v$v/f.parquet"),
+      LogKit.commit(root, v, Seq(s"data/v$v/f.parquet"),
         if (v == 0) Seq.empty else Seq(s"data/v${v - 1}/f.parquet"),
         "merge")
     }
@@ -706,22 +714,22 @@ class ManifestLogSpec extends AnyFunSuite {
       "commit, inherited from a checkpoint and baked into its JSON " +
       "and meta sibling") {
     val a = freshRoot(); val sA = ManifestLog.storeFor(a)
-    ManifestLog.commit(a, 0, Seq("data/a.parquet"), Seq.empty, "write")
+    LogKit.commit(a, 0, Seq("data/a.parquet"), Seq.empty, "write")
     assert(!ManifestLog.snapshotIn(sA, 0).dvsEver)
     assert(!ManifestLog.dvsEverThrough(sA, 0))
     // a dv commit latches it — and it stays latched after a COW
     // rewrite drops every surviving ref (strictly-conservative, same
     // contract as dvsEverThrough)
-    ManifestLog.commit(a, 1, Seq.empty, Seq.empty, "delete",
+    LogKit.commit(a, 1, Seq.empty, Seq.empty, "delete",
       dvs = Map("data/a.parquet" -> ManifestLog.DvRef("ext/a.dv", 2L)))
-    ManifestLog.commit(a, 2, Seq("data/b.parquet"),
+    LogKit.commit(a, 2, Seq("data/b.parquet"),
       Seq("data/a.parquet"), "rewrite")
     assert(ManifestLog.snapshotIn(sA, 2).dvsEver)
     assert(ManifestLog.dvsEverThrough(sA, 2))
     // a checkpoint inherits the bit; checkpoint-seeded replays stay
     // exact (versions ≤ the checkpoint need no manifest reads at all)
     ManifestLog.writeCheckpoint(a, 2)
-    ManifestLog.commit(a, 3, Seq("data/c.parquet"), Seq.empty, "append")
+    LogKit.commit(a, 3, Seq("data/c.parquet"), Seq.empty, "append")
     assert(ManifestLog.snapshotIn(sA, 3).dvsEver)
     assert(ManifestLog.dvsEverThrough(sA, 3))
     Seq(f"${2L}%020d.checkpoint.json", f"${2L}%020d.checkpoint.meta.json")
@@ -732,7 +740,7 @@ class ManifestLogSpec extends AnyFunSuite {
       "full checkpoint, and refuses a sibling without the bit as below " +
       "the format floor") {
     val root = freshRoot(); val s = ManifestLog.storeFor(root)
-    ManifestLog.commit(root, 0, Seq("data/f.parquet"), Seq.empty, "write")
+    LogKit.commit(root, 0, Seq("data/f.parquet"), Seq.empty, "write")
     ManifestLog.writeCheckpoint(root, 0)
     val meta = f"${0L}%020d.checkpoint.meta.json"
     def setMeta(json: String): Unit = { s.delete(meta); s.publish(meta, json) }

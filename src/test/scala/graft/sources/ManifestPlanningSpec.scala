@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** Planning a manifest-table read is metadata work on the driver. The
   * schema of a table without a declared schema comes from one footer
@@ -148,11 +149,11 @@ class ManifestPlanningSpec extends AnyFunSuite {
     val root = newDir("graft_plan_changes_evo")
     Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, "write", schemaDdl = Some("k BIGINT, v BIGINT"))
     Seq((3L, 30L, 300L)).toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, "evolve", schemaDdl = Some("k BIGINT, v BIGINT, w BIGINT"))
     val (changes, jobs) =
       jobsWhile(ManifestLog.readChanges(spark, root, -1, 1))

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** RESTORE TO VERSION (r17): one metadata-sized commit rolls the
   * table's data state back to a target version — removed files
@@ -36,7 +37,7 @@ class ManifestRestoreSpec extends AnyFunSuite {
     spark.read.parquet(s"$root/${doomed.head}")
       .withColumn("amount", col("amount") * 2)
       .coalesce(1).write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       removes = doomed, op = "rewrite")
     // v2: MOR delete — every k % 3 == 0 row dies by vector
     val dvs = ManifestLog.deleteWhereMor(spark, root, 1, 2,
@@ -113,13 +114,13 @@ class ManifestRestoreSpec extends AnyFunSuite {
     SinglePassWriter.writeCommit(
       (0L until 6L).map(k => (k, k * 2L)).toDF("k", "v").coalesce(1),
       root, "data/v0", 0, statsCols = Seq("k"))
-    ManifestLog.commit(root, 1, Seq.empty, Seq.empty, op = "alter",
+    LogKit.commit(root, 1, Seq.empty, Seq.empty, op = "alter",
       schemaDdl = Some("k BIGINT, v BIGINT"))
     // v2: evolve + rewrite everything under the widened schema
     val gen1 = ManifestLog.filesAsOf(root, 0)
     Seq[(Long, Long, java.lang.Long)]((0L, 0L, 100L))
       .toDF("k", "v", "w").coalesce(1).write.parquet(s"$root/data/v2")
-    ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
+    LogKit.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       removes = gen1, op = "evolve",
       schemaDdl = Some("k BIGINT, v BIGINT, w BIGINT"), attest = true)
     // restore the DATA to v0 — the current (widened) declaration
@@ -141,20 +142,21 @@ class ManifestRestoreSpec extends AnyFunSuite {
     // unstamped, so stamp v1 and v2 and restore between them
     (10L until 15L).map(k => (k, k)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, op = "write", commitMs = Some(1000L))
     (20L until 25L).map(k => (k, k)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v2")
-    ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
+    LogKit.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       Seq.empty, op = "write", commitMs = Some(2000L))
     // 1500 resolves to v1 (latest stamped <= 1500)
-    val v = ManifestLog.restoreToTimestamp(root, 1500L)
+    val v = ManifestLog.restoreTo(root,
+      ManifestLog.versionAtTimestamp(root, 1500L))
     assert(v == 3)
     assert(ManifestLog.filesAsOf(root, 3).toSet ==
       ManifestLog.filesAsOf(root, 1).toSet)
     // a timestamp before every stamped commit refuses loudly
     intercept[IllegalArgumentException] {
-      ManifestLog.restoreToTimestamp(root, 500L)
+      ManifestLog.restoreTo(root, ManifestLog.versionAtTimestamp(root, 500L))
     }
   }
 
@@ -192,7 +194,7 @@ class ManifestRestoreSpec extends AnyFunSuite {
     // v1 rewrites everything (removes the bloom-bearing files)
     ManifestLog.readVersion(spark, root, 0)
       .coalesce(1).write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       removes = ManifestLog.filesAsOf(root, 0), op = "rewrite")
     // reclaim ONE removed file's bloom sidecar (the data file stays —
     // the old check, which only looked at adds + DV sidecars, passes)
@@ -216,7 +218,7 @@ class ManifestRestoreSpec extends AnyFunSuite {
     // v1: a bad batch the restore exists to undo
     (100L until 105L).map(k => (k, k)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, op = "write")
     // the intruder's file must exist (restore never re-adds it, but
     // the post-race live read scans it before the re-derived restore)
@@ -231,7 +233,7 @@ class ManifestRestoreSpec extends AnyFunSuite {
       override def publish(name: String, content: String): Boolean = {
         if (!fired && name == f"${2L}%020d.json") {
           fired = true
-          ManifestLog.commitIn(inner, 2, adds = Seq(intruder),
+          LogKit.commitIn(inner, 2, adds = Seq(intruder),
             removes = Seq.empty, op = "write")
         }
         inner.publish(name, content)
@@ -262,10 +264,10 @@ class ManifestRestoreSpec extends AnyFunSuite {
       root, "data/v0", 0, statsCols = Seq("k"))
     val f0 = ManifestLog.filesAsOf(root, 0).head
     // v1: the file is removed (stats ride only in v0's manifest)
-    ManifestLog.commit(root, 1, Seq.empty, Seq(f0), op = "delete",
+    LogKit.commit(root, 1, Seq.empty, Seq(f0), op = "delete",
       attest = true)
     // v2: a constraint the v0 stats [0, 9] cannot prove
-    ManifestLog.commit(root, 2, Seq.empty, Seq.empty, op = "alter",
+    LogKit.commit(root, 2, Seq.empty, Seq.empty, op = "alter",
       checks = Some(Seq("k_small" -> "k <= 5")))
     val e = intercept[IllegalArgumentException] {
       ManifestLog.restoreTo(root, 0)

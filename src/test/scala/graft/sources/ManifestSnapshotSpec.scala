@@ -2,9 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import scala.collection.concurrent.TrieMap
-
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** The snapshot resolver: one listing and one read per log file per
   * resolve, and no caching across resolves — a commit by any other
@@ -12,23 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class ManifestSnapshotSpec extends AnyFunSuite {
 
   /** Counts the store calls a resolve makes. */
-  private final class CountingStore(inner: LogStore) extends LogStore {
-    val lists = new java.util.concurrent.atomic.AtomicInteger(0)
-    val reads = TrieMap.empty[String, Int]
-    private def count(name: String): Unit =
-      reads.updateWith(name)(n => Some(n.getOrElse(0) + 1))
-    override def publish(name: String, content: String): Boolean =
-      inner.publish(name, content)
-    override def list(): Seq[String] = { lists.incrementAndGet(); inner.list() }
-    override def read(name: String): String = { count(name); inner.read(name) }
-    override def delete(name: String): Unit = inner.delete(name)
-    override def publishBytes(name: String, content: Array[Byte]): Boolean =
-      inner.publishBytes(name, content)
-    override def readBytes(name: String): Array[Byte] = {
-      count(name); inner.readBytes(name)
-    }
-  }
-
   private def newLogDir() = graft.TempDirs.deleteOnExit(
     Files.createTempDirectory("graft_snap")).resolve("_log")
 
@@ -36,7 +18,7 @@ class ManifestSnapshotSpec extends AnyFunSuite {
       "tail manifest once") {
     val posix = new PosixLogStore(newLogDir())
     (0L to 7L).foreach { v =>
-      ManifestLog.commitIn(posix, v, Seq(s"data/v$v.parquet"), Seq.empty,
+      LogKit.commitIn(posix, v, Seq(s"data/v$v.parquet"), Seq.empty,
         "append", policy = Some(ManifestLog.CheckpointPolicy(every = 5)),
         txn = Some(("w", v)))
     }
@@ -65,10 +47,10 @@ class ManifestSnapshotSpec extends AnyFunSuite {
       Files.createTempDirectory("graft_snap2")).toString
     val first = ManifestLog.storeFor(root)
     val second = new PosixLogStore(Paths.get(root, "_log"))
-    ManifestLog.commitIn(first, 0, Seq("data/a.parquet"), Seq.empty, "write")
+    LogKit.commitIn(first, 0, Seq("data/a.parquet"), Seq.empty, "write")
     assert(ManifestLog.snapshotIn(first, 0).files == Seq("data/a.parquet"))
     assert(ManifestLog.latestSnapshot(root).map(_.version).contains(0L))
-    ManifestLog.commitIn(second, 1, Seq("data/b.parquet"), Seq.empty,
+    LogKit.commitIn(second, 1, Seq("data/b.parquet"), Seq.empty,
       "append")
     val r1 = ManifestLog.snapshotIn(first, 1)
     assert(r1.files == Seq("data/a.parquet", "data/b.parquet"))

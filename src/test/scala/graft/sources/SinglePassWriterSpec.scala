@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import LogKit.ReplayMaps
 
 /** The single-pass stats-bearing writer (r16; SURVEY §8.3.1-3): one
   * job writes the data files AND commits their manifest metadata —
@@ -378,10 +379,8 @@ class SinglePassWriterSpec extends AnyFunSuite {
       (10L until 20L).map(k => (k, if (k % 2 == 0) None else Some(k))))
     val sc = file("data/c", (20L until 30L).map(k => (k, None)))
     val all = sa ++ sb ++ sc
-    ManifestLog.commit(root, 0, adds = all.map(_.rel),
-      removes = Seq.empty, op = "write",
-      colStats = SinglePassWriter.colStatsOf(all, Seq("k", "v")),
-      nullStats = SinglePassWriter.nullStatsOf(all, Seq("k", "v")))
+    ManifestLog.commit(root, 0, ManifestLog.Commit("write",
+      SinglePassWriter.addFiles(all, Seq("k", "v"))))
     val ns = ManifestLog.snapshot(root, 0).nullStats
     assert(ns(sa.head.rel)("v") == ManifestLog.NullStat(0L, 10L))
     assert(ns(sb.head.rel)("v") == ManifestLog.NullStat(5L, 10L))
@@ -410,7 +409,7 @@ class SinglePassWriterSpec extends AnyFunSuite {
       (0L until 4L).map(k => (k, Option.empty[Long]))
         .toDF("k", "v").coalesce(1), bare, "data/a",
       statsCols = Seq("k"))
-    ManifestLog.commit(bare, 0, sb2.map(_.rel), Seq.empty, "write")
+    LogKit.commit(bare, 0, sb2.map(_.rel), Seq.empty, "write")
     assert(scannedFiles(ManifestLog.readVersion(spark, bare, 0)
       .filter(col("v").isNotNull)) == 1)
     // round-trip through the checkpoint fold + manifest pruning
@@ -437,8 +436,8 @@ class SinglePassWriterSpec extends AnyFunSuite {
       .repartitionByRange(2, col("id"))
     val sums = SinglePassWriter.writeFiles(df, root, "data/v0",
       statsCols = Seq("id"))
-    ManifestLog.commit(root, 0, sums.map(_.rel), Seq.empty, "write",
-      colStats = SinglePassWriter.colStatsOf(sums, Seq("id")))
+    ManifestLog.commit(root, 0, ManifestLog.Commit("write",
+      SinglePassWriter.addFiles(sums, Seq("id"))))
     val back = ManifestLog.readVersion(spark, root, 0)
     assert(back.schema("emb").dataType ==
       org.apache.spark.sql.types.ArrayType(
@@ -465,7 +464,7 @@ class SinglePassWriterSpec extends AnyFunSuite {
     val s2 = SinglePassWriter.writeFiles(
       Seq((1L, Seq(1.5d, 2.5d), Seq(7L, 8L))).toDF("id", "dv", "lv")
         .coalesce(1), root2, "data/v0")
-    ManifestLog.commit(root2, 0, s2.map(_.rel), Seq.empty, "write")
+    LogKit.commit(root2, 0, s2.map(_.rel), Seq.empty, "write")
     val r2 = ManifestLog.readVersion(spark, root2, 0).collect()(0)
     assert(r2.getSeq[Double](1) == Seq(1.5d, 2.5d) &&
       r2.getSeq[Long](2) == Seq(7L, 8L))
@@ -483,8 +482,8 @@ class SinglePassWriterSpec extends AnyFunSuite {
     val df = rows.toDF("id", "meta").coalesce(1)
     val sums = SinglePassWriter.writeFiles(df, root, "data/v0",
       statsCols = Seq("id"))
-    ManifestLog.commit(root, 0, sums.map(_.rel), Seq.empty, "write",
-      colStats = SinglePassWriter.colStatsOf(sums, Seq("id")))
+    ManifestLog.commit(root, 0, ManifestLog.Commit("write",
+      SinglePassWriter.addFiles(sums, Seq("id"))))
     val got = ManifestLog.readVersion(spark, root, 0)
       .selectExpr("id", "meta._1", "meta._2").collect()
       .map(r => (r.getLong(0),
@@ -536,8 +535,8 @@ class SinglePassWriterSpec extends AnyFunSuite {
     val df = rows.toDF("id", "spans").repartitionByRange(2, col("id"))
     val sums = SinglePassWriter.writeFiles(df, root, "data/v0",
       statsCols = Seq("id"))
-    ManifestLog.commit(root, 0, sums.map(_.rel), Seq.empty, "write",
-      colStats = SinglePassWriter.colStatsOf(sums, Seq("id")))
+    ManifestLog.commit(root, 0, ManifestLog.Commit("write",
+      SinglePassWriter.addFiles(sums, Seq("id"))))
     val back = ManifestLog.readVersion(spark, root, 0)
     assert(back.schema("spans").dataType.isInstanceOf[
       org.apache.spark.sql.types.ArrayType])

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ManifestLog
+import graft.sources.LogKit
+import graft.sources.LogKit.ReplayMaps
 
 /** The DSv2 version-tail source's streaming protocol: version-grained
   * admission (one real micro-batch per version under
@@ -55,11 +57,11 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, "write", schemaDdl = Some("k BIGINT, v BIGINT"))
     Seq((3L, 30L, 300L)).toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, "evolve",
       schemaDdl = Some("k BIGINT, v BIGINT, w BIGINT"))
     // spanning the boundary (r18; closes the r17 restart-at-every-
@@ -92,7 +94,7 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
     // pin stays (misaligned columns must never stream silently)
     Seq((4L, "s", 400L)).toDF("k", "v", "w")
       .coalesce(1).write.parquet(s"$root/data/v2")
-    ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
+    LogKit.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       Seq.empty, "retype",
       schemaDdl = Some("k BIGINT, v STRING, w BIGINT"))
     val e = intercept[Exception] {
@@ -114,17 +116,17 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
     // v0, v1: undeclared appends (footer schema k, v)
     Seq((1L, 10L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, "write")
     Seq((2L, 20L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/v1"),
       Seq.empty, "write")
     // v2: the IDENTICAL schema is declared (naming, not evolving)
     // alongside a new append
     Seq((3L, 30L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$root/data/v2")
-    ManifestLog.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
+    LogKit.commit(root, 2, ManifestLog.partFiles(root, "data/v2"),
       Seq.empty, "declare", schemaDdl = Some("k BIGINT, v BIGINT"))
     val (rows, _) = ManifestSink.cdcDrained(spark, root)
     assert(rows.select("k").collect().map(_.getLong(0)).sorted.toSeq ==
@@ -142,7 +144,7 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
       ids.map(i => (i, i, i, i.toDouble))
         .toDF("user_id", "event_id", "ts_us", "value")
         .write.parquet(s"$root/data/b$v")
-      ManifestLog.commit(root, v, ManifestLog.partFiles(root, s"data/b$v"),
+      LogKit.commit(root, v, ManifestLog.partFiles(root, s"data/b$v"),
         Seq.empty, "stream-append")
     }
     landCommit(0, Seq(1L, 2L)); landCommit(1, Seq(3L))
@@ -173,7 +175,7 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
       ids.map(i => (i, i, i, i.toDouble))
         .toDF("user_id", "event_id", "ts_us", "value")
         .write.parquet(s"$root/data/b$v")
-      ManifestLog.commit(root, v, ManifestLog.partFiles(root, s"data/b$v"),
+      LogKit.commit(root, v, ManifestLog.partFiles(root, s"data/b$v"),
         Seq.empty, "stream-append", policy)
     }
     // 6 commits under every=2 retention: the v4 fold prunes manifests
@@ -209,7 +211,7 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
     (0L to 3L).foreach { v =>
       Seq((v, v, v, v.toDouble)).toDF("user_id", "event_id", "ts_us", "value")
         .write.parquet(s"$root/data/b$v")
-      ManifestLog.commit(root, v, ManifestLog.partFiles(root, s"data/b$v"),
+      LogKit.commit(root, v, ManifestLog.partFiles(root, s"data/b$v"),
         Seq.empty, "stream-append")
     }
     ManifestLog.expireVersionsBefore(root, 2)
@@ -231,10 +233,10 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
       col("id").as("user_id"), col("id").as("event_id"),
       col("id").as("ts_us"), col("id").cast("double").as("value"))
     one.write.parquet(s"$root/data/b0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/b0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/b0"),
       Seq.empty, "write")
     one.write.parquet(s"$root/data/b1")
-    ManifestLog.commit(root, 1, ManifestLog.partFiles(root, "data/b1"),
+    LogKit.commit(root, 1, ManifestLog.partFiles(root, "data/b1"),
       removes = ManifestLog.partFiles(root, "data/b0"), op = "merge")
     val e = intercept[Exception](ManifestSink.cdcDrained(spark, root))
     def messages(t: Throwable): Seq[String] =
@@ -253,7 +255,7 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
       col("id").as("user_id"), col("id").as("event_id"),
       col("id").as("ts_us"), col("id").cast("double").as("value"))
     rows.coalesce(1).write.parquet(s"$root/data/b0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/b0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/b0"),
       Seq.empty, "write")
     ManifestLog.deleteWhereMor(spark, root, 0, 1, col("user_id") === 3L)
     val e = intercept[Exception](ManifestSink.cdcDrained(spark, root))
@@ -343,14 +345,14 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
       ManifestLog.partFiles(root, sub)
     }
     val f0 = land("data/v0", Seq((1L, "a"), (2L, "b")))
-    ManifestLog.commit(root, 0, f0, Seq.empty, "write")
+    LogKit.commit(root, 0, f0, Seq.empty, "write")
     val (first, p1) = ManifestSink.cdcImagesDrained(spark, root,
       keys = Seq("id"), workDir = Some(work))
     assert(p1.count(_.numInputRows > 0) == 1)
     assert(first.count() == 2) // v0 inserts
     // source moves on: a COW rewrite at v1 (update 2, delete 1, add 3)
     val f1 = land("data/v1", Seq((2L, "B"), (3L, "c")))
-    ManifestLog.commit(root, 1, f1, f0, "merge")
+    LogKit.commit(root, 1, f1, f0, "merge")
     val (all, p2) = ManifestSink.cdcImagesDrained(spark, root,
       keys = Seq("id"), workDir = Some(work))
     assert(p2.count(_.numInputRows > 0) == 1,
@@ -371,7 +373,7 @@ class ManifestCdcSourceSpec extends AnyFunSuite {
     // the commit DECLARES (k, v) but the landed file carries only k —
     // a buggy writer / corrupted add
     Seq(Tuple1(1L)).toDF("k").coalesce(1).write.parquet(s"$root/data/v0")
-    ManifestLog.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
+    LogKit.commit(root, 0, ManifestLog.partFiles(root, "data/v0"),
       Seq.empty, "write", schemaDdl = Some("k BIGINT, v BIGINT"))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
       ManifestSink.cdcDrained(spark, root))

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ManifestLog
+import graft.sources.LogKit
+import graft.sources.LogKit.ReplayMaps
 
 /** The exactly-once commit protocol of [[ManifestSink.commitBatch]]:
   * a replayed batchId must no-op (whatever rows the replay carries),
@@ -30,7 +32,8 @@ class ManifestSinkSpec extends AnyFunSuite {
     val root = freshRoot()
     ManifestSink.commitBatch(root, rows(1, 2), 0)
     assert(ManifestLog.versions(root) == Seq(0L))
-    assert(ManifestLog.lastTxn(root, ManifestSink.AppId).contains(0L))
+    assert(ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get(ManifestSink.AppId)).contains(0L))
     // the replay: same batchId, garbage rows — must not commit, must
     // not clobber the landed data
     ManifestSink.commitBatch(root, rows(99), 0)
@@ -53,7 +56,7 @@ class ManifestSinkSpec extends AnyFunSuite {
       "the slow copy before it lands data") {
     val root = freshRoot()
     // the fast duplicate won: its marker is already in the log
-    ManifestLog.commit(root, 0, Seq("data/b7/f.parquet"), Seq.empty,
+    LogKit.commit(root, 0, Seq("data/b7/f.parquet"), Seq.empty,
       "stream-append", txn = Some((ManifestSink.AppId, 7L)))
     ManifestSink.commitBatch(root, rows(1), 7)
     assert(ManifestLog.versions(root) == Seq(0L))
@@ -97,7 +100,8 @@ class ManifestSinkSpec extends AnyFunSuite {
     } finally pool.shutdown()
     // exactly one version, one marker
     assert(ManifestLog.versions(root) == Seq(0L))
-    assert(ManifestLog.lastTxn(root, ManifestSink.AppId).contains(0L))
+    assert(ManifestLog.latestSnapshot(root)
+      .flatMap(_.txns.get(ManifestSink.AppId)).contains(0L))
     // never-reuse-paths pin: both attempts landed their one-row batch
     // into data/b0 under distinct per-attempt tokens, and the commit
     // references exactly one attempt's files

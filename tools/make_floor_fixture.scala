@@ -29,14 +29,14 @@ def rows(ids: Range) =
   ids.map(i => (i.toLong, s"t${i % 3}", i * 10L)).toDF("id", "tag", "amount")
 def at(v: Long) = Some(1700000000000L + v * 1000L)
 
-ManifestLog.commit(root, 0, Seq.empty, Seq.empty, "init",
+ManifestLog.commit(root, 0, ManifestLog.Commit("init",
   schemaDdl = Some("id BIGINT, tag STRING, amount BIGINT"),
-  checks = Some(Seq("amount_nonneg" -> "amount >= 0")), commitMs = at(0))
+  checks = Some(Seq("amount_nonneg" -> "amount >= 0")), commitMs = at(0)))
 ManifestLog.appendChecked(spark, rows(1 to 8).repartition(2, col("id")),
   root, "data/a", statsCols = Seq("id", "amount"), bloomCol = Some("tag"),
   policy = policy, commitMs = at(1))
-ManifestLog.commit(root, 2, Seq.empty, Seq.empty, "txn", policy = policy,
-  txn = Some(("fixture_app", 7L)), commitMs = at(2))
+ManifestLog.commit(root, 2, ManifestLog.Commit("txn",
+  txn = Some(("fixture_app", 7L)), commitMs = at(2)), policy)
 ManifestLog.deleteWhereMor(spark, root, 2, 3, col("id") === 3L,
   policy = policy)
 ManifestLog.appendChecked(spark, rows(9 to 12).coalesce(1), root, "data/b",
@@ -53,16 +53,19 @@ def report(root: String): Seq[String] = {
     ManifestLog.checkpointVersions(root)).distinct.sorted
   vs.flatMap { v =>
     val r = ManifestLog.snapshot(root, v)
-    def sorted[A](m: Map[String, A]) = m.toSeq.sortBy(_._1)
+    def sorted[A](m: scala.collection.Map[String, A]) = m.toSeq.sortBy(_._1)
+    def per[A](f: ManifestLog.AddFile => Map[String, A]) =
+      sorted(r.live).flatMap { case (p, a) => sorted(f(a)).map(p -> _) }
     Seq(s"version $v") ++
       r.files.map(f => s"file $f") ++
-      sorted(r.dvs).map { case (f, d) => s"dv $f ${d.sidecar} ${d.nDeleted}" } ++
-      sorted(r.blooms).flatMap { case (f, bs) => sorted(bs).map {
-        case (c, b) => s"bloom $f $c ${b.sidecar} ${b.m} ${b.k} ${b.str}" } } ++
-      sorted(r.colStats).flatMap { case (f, cs) => sorted(cs).map {
-        case (c, s) => s"colstat $f $c ${s.min} ${s.max} ${s.dbl}" } } ++
-      sorted(r.nullStats).flatMap { case (f, ns) => sorted(ns).map {
-        case (c, s) => s"nullstat $f $c ${s.nulls} ${s.rows}" } } ++
+      sorted(r.live).flatMap { case (f, a) => a.dv.map(d =>
+        s"dv $f ${d.sidecar} ${d.nDeleted}") } ++
+      per(_.blooms).map { case (f, (c, b)) =>
+        s"bloom $f $c ${b.sidecar} ${b.m} ${b.k} ${b.str}" } ++
+      per(_.colStats).map { case (f, (c, s)) =>
+        s"colstat $f $c ${s.min} ${s.max} ${s.dbl}" } ++
+      per(_.nullStats).map { case (f, (c, s)) =>
+        s"nullstat $f $c ${s.nulls} ${s.rows}" } ++
       sorted(r.txns).map { case (a, b) => s"txn $a $b" } ++
       r.schemaDdl.map(d => s"schema $d") ++
       sorted(r.checks).map { case (n, e) => s"check $n $e" } ++

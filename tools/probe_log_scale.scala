@@ -32,21 +32,20 @@ def ms[A](f: => A): (A, Long) = {
 // a declared schema + one CHECK so every commit exercises the gate's
 // metadata fold (the production shape; an unconstrained log would
 // skip the fold entirely and hide the cliff)
-ManifestLog.commitIn(store, 0, Seq.empty, Seq.empty, op = "init",
+ManifestLog.commitIn(store, 0, ManifestLog.Commit("init",
   schemaDdl = Some("k BIGINT, v BIGINT"),
-  checks = Some(Seq("k_nonneg" -> "k >= 0")))
+  checks = Some(Seq("k_nonneg" -> "k >= 0"))))
 
 var earlyMs = 0L; var lateMs = 0L
 val (_, totalCommitMs) = ms {
   var v = 1L
   while (v <= nVersions) {
-    val adds = (0 until addsPer).map(i => f"data/v$v%05d/part-$i%03d.parquet")
-    val colStats = adds.map(f => f -> Map(
-      "k" -> ManifestLog.FileStat(v * 1000L, v * 1000L + 999L))).toMap
+    val adds = (0 until addsPer).map(i => ManifestLog.AddFile(
+      f"data/v$v%05d/part-$i%03d.parquet", colStats = Map(
+        "k" -> ManifestLog.FileStat(v * 1000L, v * 1000L + 999L))))
     val (_, t) = ms {
-      ManifestLog.commitIn(store, v, adds, Seq.empty, op = "append",
-        policy = policy, colStats = colStats,
-        commitMs = Some(1700000000000L + v * 1000L))
+      ManifestLog.commitIn(store, v, ManifestLog.Commit("append", adds,
+        commitMs = Some(1700000000000L + v * 1000L)), policy)
     }
     if (v <= 100) earlyMs += t
     if (v > nVersions - 100) lateMs += t
