@@ -291,7 +291,7 @@ object CheckpointCodec {
     * assembly, no per-row converter dispatch: each of the 9 flat
     * columns reads its (definition level, value) stream into arrays
     * in one tight loop, then a single row loop folds the arrays into
-    * the partial maps. Measured ~3× over the RecordReader form at a
+    * file records. Measured ~3× over the RecordReader form at a
     * 1M-file checkpoint; combined with row-group parallelism it is
     * what holds full replay under the probe's budget. `name` is the
     * sidecar's log name, for the floor refusal. Returns the group's

@@ -635,7 +635,7 @@ object ManifestLog {
     if (c.adds.nonEmpty && !attest && c.checks.isEmpty && version > 0) {
       // the gate needs only the in-force CHECKS and the declared
       // schema — resolved by the METADATA-ONLY fold (r18): a full
-      // snapshot builds the live-file maps too, which at 1M files is
+      // snapshot builds every file record too, which at 1M files is
       // a multi-second parse paid by EVERY add-commit (the log-scale
       // probe's one cliff); this fold skips the file fields entirely
       val (prevDdl, inForce) = metaAsOf(store, listingOf(store), version - 1)
@@ -1140,11 +1140,11 @@ object ManifestLog {
   }
 
   /** METADATA-ONLY fold (r18): the declared schema DDL and CHECK set
-    * in force at `version`, resolved WITHOUT building the live-file
-    * maps — seeded and tailed from listing `l` exactly like
-    * [[snapshotIn]], but reading the KB checkpoint sibling (or the
-    * full checkpoint when the sibling is missing) and touching only
-    * the `schema` and `checks` fields, so the commit gate's per-commit
+    * in force at `version`, resolved WITHOUT building file records —
+    * seeded and tailed from listing `l` exactly like [[snapshotIn]],
+    * but reading the KB checkpoint sibling (or the full checkpoint
+    * when the sibling is missing) and never forcing a tail commit's
+    * `adds`, so the commit gate's per-commit
     * cost stays flat in table size (a full replay of a 1M-file
     * checkpoint is a multi-second parse; schema/checks are a few
     * hundred bytes of it). Same resolution semantics: latest
@@ -1969,7 +1969,7 @@ object ManifestLog {
       commitMs: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     // the read version and its in-force checks come from ONE listing,
-    // and the checks from the metadata-only fold (no live-file maps)
+    // and the checks from the metadata-only fold (no file records)
     val store = storeFor(root)
     val l = listingOf(store)
     val read = l.manifests.lastOption
