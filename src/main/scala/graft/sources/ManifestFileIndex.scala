@@ -7,7 +7,10 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{DataFrame, GraftRelationBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, FilePartition, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
@@ -436,13 +439,71 @@ object ManifestFileIndex {
       partitionSchema: StructType = new StructType(),
       declaredSchema: Option[StructType] = None): DataFrame = {
     val index = new ManifestFileIndex(root, entries, partitionSchema)
-    val dataSchema = declaredSchema.getOrElse(footerSchema(spark,
-      index.listFiles(Nil, Nil).head.files.head.fileStatus))
-    val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
-      None, new ParquetFileFormat, Map.empty[String, String])(spark)
+    val relation = HadoopFsRelation(index, partitionSchema,
+      dataSchema(spark, index, declaredSchema), None,
+      new ParquetFileFormat, Map.empty[String, String])(spark)
     GraftRelationBridge.ofRows(spark,
       LogicalRelation(relation, isStreaming = false))
   }
+
+  /** The data schema a scan of `index` reads under: `declared` when
+    * the log declares one, else the first file's footer (see
+    * [[read]]). */
+  private[sources] def dataSchema(spark: SparkSession,
+      index: ManifestFileIndex, declared: Option[StructType]): StructType =
+    declared.getOrElse(footerSchema(spark,
+      index.listFiles(Nil, Nil).head.files.head.fileStatus))
+
+  /** The files of `index` when Spark's file planner packs a scan of
+    * them into ONE task, else None. The split size and the packing are
+    * the calls `FileSourceScanExec` makes, under the session's settings
+    * (`spark.sql.files.maxPartitionBytes`, `openCostInBytes`,
+    * `minPartitionNum`, `maxPartitionNum`), so the answer is the task
+    * count the distributed scan would launch. */
+  private[sources] def oneTask(spark: SparkSession,
+      index: ManifestFileIndex): Option[Seq[FileStatus]] = {
+    val dirs = index.listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+    // parquet is splitable: a file larger than the split size is cut
+    // into pieces, and every piece after the first opens a new task
+    val splits = dirs.flatMap(d => d.files.flatMap(f =>
+      PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = true,
+        maxSplit, d.values))).sortBy(-_.length)
+    if (FilePartition.getFilePartitions(spark, splits, maxSplit).size == 1)
+      Some(dirs.flatMap(_.files.map(_.fileStatus)))
+    else None
+  }
+
+  /** Decodes each of `files` WHOLE under `schema` on the calling
+    * thread, with the parquet scan's own reader under the session's
+    * Hadoop and SQL settings, calling `f(file, rowIndex, row)` per row.
+    * No filter is pushed, so a row's index is its position in its
+    * file (the `_metadata.row_index` a deletion vector names). `row`
+    * is reused between calls: `f` copies what it keeps. The reader is
+    * built per call, since it writes its settings into its Hadoop
+    * configuration. */
+  private[sources] def decodeLocal(spark: SparkSession,
+      files: Seq[FileStatus], schema: StructType)(
+      f: (FileStatus, Long, InternalRow) => Unit): Unit = {
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    files.foreach { st =>
+      val rows = read(PartitionedFileUtil.getPartitionedFile(
+        FileStatusWithMetadata(st), st.getPath, InternalRow.empty, 0L,
+        st.getLen))
+      var i = 0L
+      while (rows.hasNext) { f(st, i, rows.next()); i += 1 }
+    }
+  }
+
+  /** A frame over `rows` (internal rows of `schema`) held in the plan:
+    * it scans nothing and collects without a Spark job. */
+  private[sources] def local(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    GraftRelationBridge.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** The Spark schema of one parquet file, read from its footer on the
     * driver with the session's Hadoop and SQL parquet settings (binary

@@ -519,7 +519,7 @@ private[cdc] class CdcColumnarReader(absPath: String, version: Long,
   import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
 
   private val reader = new VectorizedParquetRecordReader(false, 4096)
-  reader.initialize(absPath, null) // null = every column, file order
+  CdcColumnarReader.open(reader, absPath)
   // old-generation files NULL-fill the columns they predate as
   // CONSTANT-NULL partition columns (r18) — zero per-row work, same
   // mechanism as the version stamp; ordering (file cols, pads,
@@ -553,6 +553,39 @@ private[cdc] class CdcColumnarReader(absPath: String, version: Long,
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
     reader.resultBatch()
   override def close(): Unit = reader.close()
+}
+
+private[cdc] object CdcColumnarReader {
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.mapred.FileSplit
+  import org.apache.hadoop.mapreduce.TaskAttemptID
+  import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+  import org.apache.parquet.hadoop.ParquetInputFormat
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** Opens every column of `absPath`, in file order, through the
+    * split-based `initialize` on a copy of the JVM's one loaded
+    * configuration. The flags are the ones Spark's path-based
+    * `initialize(String, List)` sets, but that overload loads a fresh
+    * `Configuration` (Hadoop's default resources) per file. */
+  def open(reader: VectorizedParquetRecordReader, absPath: String): Unit = {
+    val conf = new Configuration(CheckpointCodec.loadedConf)
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+      .foreach(e => conf.setBoolean(e.key, false))
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    // the requested schema is the file's own, so the clip keeps it whole
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+      new ParquetToSparkSchemaConverter(conf)
+        .convert(ManifestCdc.footerSchema(absPath)).json)
+    val path = new HPath(absPath)
+    val len = path.getFileSystem(conf).getFileStatus(path).getLen
+    reader.initialize(new FileSplit(path, 0L, len, Array.empty[String]),
+      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+  }
 }
 
 /** colShape marker for a LIST column whose elements are flat structs
