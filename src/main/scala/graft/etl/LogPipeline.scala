@@ -1,14 +1,14 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.{Ids, TimeOps}
+import graft.ops.TimeOps
 
 /** The reference's log-data pipeline (SURVEY.md §3.2; reference
-  * etl.py:136-314): users, time, songplays builders.
+  * etl.py:136-314): users, time, songplays over one cleaned event
+  * frame.
   *
   * The two Python UDFs (etl.py:215-220) are native expressions here
   * (TimeOps) — no BatchEvalPython fence, the whole chain stays in
@@ -18,48 +18,39 @@ import graft.ops.{Ids, TimeOps}
   */
 object LogPipeline {
 
-  /** Input dedup + the pipeline's only predicate (etl.py:177,186). */
+  /** The log side's one shuffle, its input dedup and its only predicate
+    * (etl.py:177,186). The raw log gains the reference's STRING
+    * `start_time` once, is hash-partitioned on it, then full-row deduped
+    * and filtered to NextSong. `start_time` is a function of `ts`, so the
+    * dedup over the 18 columns plus it keeps the reference's rows; the
+    * filter commutes with a full-row distinct and reaches the JSON scan.
+    *
+    * Every later key of the log side is a function of `start_time`: the
+    * `time` dedup ([[timeFromCleaned]]) and the J2 join
+    * ([[songplaysFromCleaned]]) both run partition-locally over this
+    * exchange. The key is the string, not the epoch second: J2 is string
+    * equality in the session time zone, and in a DST zone two epoch
+    * seconds an hour apart render the same string and must fan out
+    * together. */
   def nextSongEvents(logData: DataFrame): DataFrame =
-    logData.dropDuplicates().filter(col("page") === "NextSong")
+    logData.withColumn("start_time", TimeOps.startTimeString(col("ts")))
+      .repartition(col("start_time"))
+      .dropDuplicates()
+      .filter(col("page") === "NextSong")
 
-  /** `users` dim: 5-col projection, NO dedup — one row per NextSong
-    * event; a user who upgraded appears with both levels (etl.py:195-197). */
-  def usersTable(logData: DataFrame): DataFrame =
-    usersFromCleaned(nextSongEvents(logData))
-
-  /** Variant over an already-cleaned (deduped+filtered) event frame —
-    * lets a multi-sink job persist the shared prefix once (SURVEY §3.2). */
+  /** `users` dim over the cleaned events: 5-col projection, NO dedup —
+    * one row per NextSong event; a user who upgraded appears with both
+    * levels (etl.py:195-197). */
   def usersFromCleaned(cleaned: DataFrame): DataFrame =
     cleaned.select("userId", "firstName", "lastName", "gender", "level")
 
-  /** Deterministic keyed-dedup variant (SURVEY §7.2.6): latest level per
-    * user by event time — what the reference arguably intended. An
-    * ARGMAX aggregate (max over a struct ordered by the event key),
-    * not a row_number window: partial-aggregable, so a hot user
-    * collapses map-side instead of funneling every row through one
-    * task — the lake_latest_per_user scale shape. The struct's
-    * (ts, sessionId, itemInSession) prefix orders events; the trailing
-    * payload fields only break (impossible-after-dedup) full ties
-    * deterministically. */
-  def usersLatest(logData: DataFrame): DataFrame =
-    nextSongEvents(logData)
-      .groupBy("userId")
-      .agg(max(struct(col("ts"), col("sessionId"), col("itemInSession"),
-        col("firstName"), col("lastName"), col("gender"), col("level")))
-        .as("m"))
-      .select(col("userId"), col("m.firstName").as("firstName"),
-        col("m.lastName").as("lastName"), col("m.gender").as("gender"),
-        col("m.level").as("level"))
-
-  /** `time` dim (etl.py:215-236): epoch-millis ts + STRING start_time +
-    * six int units, full-row dedup. Written partitioned (year, month). */
-  def timeTable(logData: DataFrame): DataFrame =
-    timeFromCleaned(nextSongEvents(logData))
-
+  /** `time` dim (etl.py:215-236) over the cleaned events: epoch-millis
+    * ts + the carried STRING start_time + six int units, full-row dedup.
+    * The dedup keys include `start_time`, so it aggregates within the
+    * partitions of [[nextSongEvents]]' exchange. Written partitioned
+    * (year, month). */
   def timeFromCleaned(cleaned: DataFrame): DataFrame = {
-    val base = cleaned
-      .withColumn("start_time", TimeOps.startTimeString(col("ts")))
-      .withColumn("ts_ts", TimeOps.epochMillisToTs(col("ts")))
+    val base = cleaned.withColumn("ts_ts", TimeOps.epochMillisToTs(col("ts")))
     TimeOps.timeUnits(col("ts_ts")).foldLeft(base) {
         case (df, (name, c)) => df.withColumn(name, c.cast(IntegerType))
       }
@@ -68,16 +59,12 @@ object LogPipeline {
       .dropDuplicates()
   }
 
-  /** `songplays` fact (etl.py:257-297): NextSong events ⋈ song catalog on
-    * the two-key (title, artist_name) — the single-key join is wrong, see
-    * SURVEY §2.3 J1 — then ⋈ time dim on STRING start_time (fan-out
-    * quirk), id from monotonically_increasing_id for reference fidelity
-    * (non-deterministic across runs — excluded from oracle comparisons;
-    * use songplaysDeterministic for compared output). */
-  def songplaysTable(logData: DataFrame, songData: DataFrame,
-      time: DataFrame): DataFrame =
-    songplaysFromCleaned(nextSongEvents(logData), songData, time)
-
+  /** `songplays` fact (etl.py:257-297) over the cleaned events and the
+    * `time` dim built from them: events ⋈ song catalog on the two-key
+    * (title, artist_name) — the single-key join is wrong, see SURVEY §2.3
+    * J1 — then ⋈ time dim on STRING start_time (fan-out quirk), id from
+    * monotonically_increasing_id for reference fidelity (non-deterministic
+    * across runs — excluded from oracle comparisons). */
   def songplaysFromCleaned(cleaned: DataFrame, songData: DataFrame,
       time: DataFrame): DataFrame = {
     val base = songplayBase(cleaned, songData, time)
@@ -85,28 +72,12 @@ object LogPipeline {
       monotonically_increasing_id().as("songplay_id") +: factCols: _*)
   }
 
-  /** Deterministic twin: sequential id over (sessionId, itemInSession,
-    * ts, song_id) replaces the partition-encoded id (SURVEY §5
-    * determinism rule). Assigned with the two-phase partition-offset
-    * pattern (graft.ops.Ids) — a global-window row_number would funnel
-    * the whole fact through one task, a scale-killer at 100 TB. */
-  def songplaysDeterministic(logData: DataFrame, songData: DataFrame,
-      time: DataFrame): DataFrame = {
-    val keys = Seq(col("sessionId"), col("itemInSession"), col("ts"),
-      col("song_id"))
-    Ids.orderedId(songplayBase(nextSongEvents(logData), songData, time),
-        keys, "songplay_id")
-      .select(col("songplay_id") +: factCols: _*)
-  }
+  private[etl] val factCols = Seq("start_time", "userId", "level",
+    "song_id", "artist_id", "sessionId", "location", "userAgent", "month",
+    "year").map(col)
 
-  private val factCols = Seq("start_time", "userId", "level", "song_id",
-    "artist_id", "sessionId", "location", "userAgent", "month", "year")
-    .map(col)
-
-  private def songplayBase(cleaned: DataFrame, songData: DataFrame,
+  private[etl] def songplayBase(cleaned: DataFrame, songData: DataFrame,
       time: DataFrame): DataFrame = {
-    val log = cleaned
-      .withColumn("start_time", TimeOps.startTimeString(col("ts")))
     // Narrow the catalog to the join keys + carried ids BEFORE the join:
     // avoids the ambiguous `year` (song year vs time-dim year) and keeps
     // the broadcast payload minimal.
@@ -114,38 +85,37 @@ object LogPipeline {
       .select("song_id", "artist_id", "title", "artist_name")
     // J1: two-key equi inner join (etl.py:267-270). The song catalog is
     // the small side — broadcast it explicitly (at lake scale the event
-    // log is orders of magnitude larger than the catalog).
-    val joined = log.join(broadcast(songs),
-      songs("title") === log("song") &&
-        songs("artist_name") === log("artist"), "inner")
+    // log is orders of magnitude larger than the catalog). The streamed
+    // log side keeps its start_time partitioning.
+    val joined = cleaned.join(broadcast(songs),
+      songs("title") === cleaned("song") &&
+        songs("artist_name") === cleaned("artist"), "inner")
     // J2: string-equality join to the (already 8-col-deduped) time dim
     // for month/year (etl.py:282-297). NO re-dedup here: two distinct ts
     // in the same second are distinct time rows with equal start_time, so
     // the join fans out — exactly as the reference computes (§2.8.3).
+    // Both sides are already partitioned on start_time, so the hinted
+    // shuffled hash join adds no exchange; without the hint a time dim
+    // under the auto-broadcast threshold would be broadcast instead.
     val t = time.select(col("start_time").as("t_start_time"), col("month"),
       col("year"))
-    joined.join(broadcast(t),
+    joined.join(t.hint("shuffle_hash"),
         joined("start_time") === t("t_start_time"), "inner")
       .drop("t_start_time")
   }
 
-  /** Hive-layout sinks (etl.py:236,297). Small-files guard, but NOT a
-    * plain hash-repartition on the layout keys: (year, month) has FEW
-    * distinct values, so hashing on it collapses the write to
-    * dirs-many tasks (measured: the 10× probe's songplays write lost
-    * its parallelism). repartitionByRange on (layout keys, finer key)
-    * keeps the full partition count — each range partition is
-    * contiguous in (year, month), so a dir is written by the handful
-    * of partitions covering its range: files-per-dir bounded by the
-    * partition count (not tasks×dirs), parallelism intact. */
+  /** Hive-layout sinks (etl.py:236,297). The frames arrive
+    * hash-partitioned on `start_time` by [[nextSongEvents]], so they are
+    * written as they stand: no further exchange, full parallelism. Each
+    * (year, month) directory gets at most one file per partition, so
+    * files total partitions × months touched (a re-partition by range
+    * on the layout keys would give ~partitions + months, for a sampling
+    * pass and a shuffle). At lake scale the (year, month) layout makes
+    * those files large, not small. */
   def writeTime(time: DataFrame, outDir: String): Unit =
-    time.repartitionByRange(col("year"), col("month"), col("ts"))
-      .write.mode("overwrite").partitionBy("year", "month").parquet(outDir)
+    time.write.mode("overwrite").partitionBy("year", "month").parquet(outDir)
 
   def writeSongplays(songplays: DataFrame, outDir: String): Unit =
-    songplays
-      .repartitionByRange(col("year"), col("month"), col("sessionId"),
-        col("start_time"))
-      .write.mode("overwrite").partitionBy("year", "month")
+    songplays.write.mode("overwrite").partitionBy("year", "month")
       .parquet(outDir)
 }

@@ -8,11 +8,14 @@ import graft.sources.Readers
 
 /** The reference's whole `main()` (etl.py:316-334) as one composable job,
   * with the lineage fix the reference forgot (SURVEY.md §3.2): the
-  * log-side prefix (read → dedup → NextSong filter) feeds `users`, `time`
-  * AND `songplays`; without persist it is recomputed once per sink. We
-  * persist the shared prefix (and the time dim, consumed twice) at
-  * MEMORY_AND_DISK — on a 100 TB run those are the only two reuse points
-  * worth the storage, and everything else streams.
+  * log-side prefix (read → `start_time` → one hash exchange on it →
+  * dedup → NextSong filter) feeds `users`, `time` AND `songplays`;
+  * without persist it is recomputed once per sink. We persist that
+  * prefix, and only it, at MEMORY_AND_DISK. Every log-side key after it
+  * is a function of `start_time`, so the `time` dedup and the
+  * fact-to-time join run partition-locally over the cache: each consumer
+  * of `time` re-derives it with a partition-local aggregate instead of
+  * caching a second copy, and no exchange or broadcast of `time` runs.
   */
 object SparkifyJob {
 
@@ -29,31 +32,30 @@ object SparkifyJob {
 
     // Project to the union of the three consumers' columns BEFORE the
     // persist (guide §2.3 "project before the exchange", r21): users
-    // reads 5, time reads ts, songplays reads 9 — the other 7 log
-    // fields (auth, itemInSession, length, method, page, registration,
-    // status) were cached in every block for nothing. The dedup stays
-    // full-width (row identity is all 18 reference columns); only the
-    // materialized width shrinks.
+    // reads 5, time reads ts and start_time, songplays reads 10 — the
+    // other 7 log fields (auth, itemInSession, length, method, page,
+    // registration, status) were cached in every block for nothing. The
+    // dedup stays full-width (row identity is all 18 reference columns);
+    // only the materialized width shrinks.
     val cleanedLog = LogPipeline.nextSongEvents(logData)
       .select("userId", "firstName", "lastName", "gender", "level",
-        "ts", "song", "artist", "sessionId", "location", "userAgent")
+        "ts", "start_time", "song", "artist", "sessionId", "location",
+        "userAgent")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val songs = SongPipeline.songsTable(songData)
     val artists = SongPipeline.artistsTable(songData)
     val users = LogPipeline.usersFromCleaned(cleanedLog)
     val time = LogPipeline.timeFromCleaned(cleanedLog)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val songplays = LogPipeline.songplaysFromCleaned(cleanedLog, songData,
       time)
 
     outDir.foreach { out =>
-      // Materialize the two shared caches BEFORE the sinks fan out:
+      // Materialize the shared cache BEFORE the sinks fan out:
       // concurrent first-touch of a persisted plan can compute the same
       // cached partition more than once (the block wins, the work is
-      // wasted); one count on `time` pays a single pass that fills both
-      // caches, since the time dim is derived from the cleaned-log
-      // prefix. Then the five sinks are fully independent jobs. The
+      // wasted); one count on the prefix pays a single pass that fills
+      // it. Then the five sinks are fully independent jobs. The
       // CATALOG-side sinks (songs, artists) read only songData —
       // independent of those caches — so they launch BEFORE the
       // cache-fill count and overlap it (guide §2.6, r21).
@@ -76,7 +78,7 @@ object SparkifyJob {
           sink("artists",
             artists.write.mode("overwrite").parquet(s"$out/artists")))),
         () => {
-          time.count() // fills the cleanedLog + time caches (one pass)
+          cleanedLog.count() // fills the prefix cache (one pass)
           DriverPool.par(Seq(
             sink("users",
               users.write.mode("overwrite").parquet(s"$out/users")),

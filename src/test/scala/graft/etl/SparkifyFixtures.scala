@@ -32,7 +32,7 @@ object SparkifyFixtures {
     song("SOGRAFT0000000003", "River Song", "ARGRAFT0000000001", "Nova Ray", 0, 150.25),
     song("SOGRAFT0000000004", "Quiet Night", "ARGRAFT0000000003", "Luma", 2010, 240.0))
 
-  private def next(user: String, first: String, level: String, session: Long,
+  private[etl] def next(user: String, first: String, level: String, session: Long,
       item: Long, song: String, artist: String, ts: Long): String =
     s"""{"artist":"$artist","auth":"Logged In","firstName":"$first","gender":"F","itemInSession":$item,"lastName":"Tester","length":200.0,"level":"$level","location":"Testville","method":"PUT","page":"NextSong","registration":1540000000000.0,"sessionId":$session,"song":"$song","status":200,"ts":$ts,"userAgent":"ua","userId":"$user"}"""
 
