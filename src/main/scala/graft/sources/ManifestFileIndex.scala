@@ -494,8 +494,8 @@ object ManifestFileIndex {
     val sql = spark.sessionState.conf
     val conf = spark.sessionState.newHadoopConf()
     val opts = new ParquetOptions(Map.empty[String, String], sql)
-    val settings = Seq(
-      SQLConf.SESSION_LOCAL_TIMEZONE.key -> sql.sessionLocalTimeZone) ++ Seq(
+    // the settings the scan writes into its configuration
+    val flags = Seq(
       SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> sql.nestedSchemaPruningEnabled,
       SQLConf.CASE_SENSITIVE -> sql.caseSensitiveAnalysis,
       SQLConf.PARQUET_BINARY_AS_STRING -> sql.isParquetBinaryAsString,
@@ -505,7 +505,9 @@ object ManifestFileIndex {
       SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> sql.legacyParquetNanosAsLong,
       SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
         sql.parquetReaderRespectUnknownTypeAnnotation)
-      .map { case (e, v) => e.key -> v.toString }
+    val settings =
+      (SQLConf.SESSION_LOCAL_TIMEZONE.key -> sql.sessionLocalTimeZone) +:
+        flags.map { case (e, v) => e.key -> v.toString }
     def reader(meta: FileMetaData) = {
       val kv = meta.getKeyValueMetaData
       val dates = DataSourceUtils.datetimeRebaseSpec(kv.get(_),
