@@ -28,6 +28,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.etl.SparkifyJob
@@ -36,17 +37,28 @@ val in = sys.env("PROBE_IN")
 val nOps = sys.env.getOrElse("PROBE_OPS", "4").toInt
 val out = java.nio.file.Files.createTempDirectory("graft_etl_probe").toString
 
-final case class Job(id: Int, startMs: Long, stages: Seq[Int], desc: String)
+final case class Job(id: Int, startMs: Long, stages: Seq[Int], exec: Long)
 final case class Stage(id: Int, name: String, tasks: Int, submitMs: Long,
     endMs: Long, shuffleWrite: Long)
 val jobs = new ConcurrentLinkedQueue[Job]()
 val jobEnd = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
 val stages = new ConcurrentLinkedQueue[Stage]()
+// a job is labelled by the SQL execution that launched it (its root, for
+// the sub-executions adaptive planning starts), e.g. "parquet at ..."
+val execs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
 spark.sparkContext.addSparkListener(new SparkListener {
-  override def onJobStart(e: SparkListenerJobStart): Unit =
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: SparkListenerSQLExecutionStart =>
+      execs.put(x.executionId, x.description)
+    case _ =>
+  }
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    def prop(k: String) = Option(e.properties).flatMap(p =>
+      Option(p.getProperty(k))).map(_.toLong)
     jobs.add(Job(e.jobId, e.time, e.stageIds,
-      Option(e.properties).flatMap(p => Option(
-        p.getProperty("spark.job.description"))).getOrElse("")))
+      prop("spark.sql.execution.root.id")
+        .orElse(prop("spark.sql.execution.id")).getOrElse(-1L)))
+  }
   override def onJobEnd(e: SparkListenerJobEnd): Unit =
     jobEnd.put(e.jobId, e.time)
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -74,7 +86,7 @@ spark.sparkContext.addSparkListener(new SparkListener {
     val done = st.filter(s => j.stages.contains(s.id))
     println(f"PROBE   job ${j.id}%4d  ${j.startMs - t0}%6d -> $end%6d ms  " +
       f"${done.size} stages ${done.map(_.tasks).sum}%3d tasks  " +
-      done.map(_.name.takeWhile(_ != ' ')).distinct.mkString(","))
+      Option(execs.get(j.exec)).getOrElse("-"))
     done.foreach { s =>
       println(f"PROBE     stage ${s.id}%4d  ${s.submitMs - t0}%6d -> " +
         f"${s.endMs - t0}%6d ms  ${s.tasks}%3d tasks  " +
