@@ -104,18 +104,24 @@ object LogPipeline {
       .drop("t_start_time")
   }
 
-  /** Hive-layout sinks (etl.py:236,297). The frames arrive
-    * hash-partitioned on `start_time` by [[nextSongEvents]], so they are
-    * written as they stand: no further exchange, full parallelism. Each
-    * (year, month) directory gets at most one file per partition, so
-    * files total partitions × months touched (a re-partition by range
-    * on the layout keys would give ~partitions + months, for a sampling
-    * pass and a shuffle). At lake scale the (year, month) layout makes
-    * those files large, not small. */
+  /** Hive-layout sinks (etl.py:236,297), behind a small-files guard.
+    * The frames arrive hash-partitioned on `start_time`, so every
+    * partition holds rows of every month: written as they stand, each
+    * partition writes one file per month (partitions × months files;
+    * 608 per sink for a 38-month log at 16 partitions, against 38 with
+    * the guard). A rebalance on the layout keys gathers each (year,
+    * month) into one shuffle partition, which adaptive execution splits
+    * at the advisory size where it is large and merges where it is
+    * small: one file per month at small scale, advisory-sized files at
+    * large, every core writing once a month outgrows one partition.
+    * Unlike a repartition by range it needs no sampling pass, which
+    * here would recompute the un-cached J2 join. */
   def writeTime(time: DataFrame, outDir: String): Unit =
-    time.write.mode("overwrite").partitionBy("year", "month").parquet(outDir)
+    time.hint("rebalance", col("year"), col("month"))
+      .write.mode("overwrite").partitionBy("year", "month").parquet(outDir)
 
   def writeSongplays(songplays: DataFrame, outDir: String): Unit =
-    songplays.write.mode("overwrite").partitionBy("year", "month")
+    songplays.hint("rebalance", col("year"), col("month"))
+      .write.mode("overwrite").partitionBy("year", "month")
       .parquet(outDir)
 }

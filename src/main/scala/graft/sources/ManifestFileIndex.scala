@@ -1,13 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.hadoop.mapred.FileSplit
-import org.apache.hadoop.mapreduce.TaskAttemptID
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetInputFormat}
-import org.apache.parquet.hadoop.metadata.FileMetaData
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 
 import org.apache.spark.sql.{DataFrame, GraftRelationBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,10 +10,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileIndex, FilePartition, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, FilePartition, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.ManifestLog.{FileStat, NullStat, StrStat}
@@ -482,94 +475,27 @@ object ManifestFileIndex {
   }
 
   /** Decodes each of `files` WHOLE under `schema` on the calling
-    * thread, with the reader and the settings Spark's parquet scan uses
-    * (the session's Hadoop configuration, rebase modes, schema flags),
-    * calling `f(file, rowIndex, row)` per row. No filter is pushed, so
-    * a row's index is its position in its file (the
-    * `_metadata.row_index` a deletion vector names). `row` is reused
-    * between calls: `f` copies what it keeps. */
+    * thread, with the parquet scan's own reader under the session's
+    * Hadoop and SQL settings, calling `f(file, rowIndex, row)` per row.
+    * No filter is pushed, so a row's index is its position in its
+    * file (the `_metadata.row_index` a deletion vector names). `row`
+    * is reused between calls: `f` copies what it keeps. The reader is
+    * built per call, since it writes its settings into its Hadoop
+    * configuration. */
   private[sources] def decodeLocal(spark: SparkSession,
       files: Seq[FileStatus], schema: StructType)(
       f: (FileStatus, Long, InternalRow) => Unit): Unit = {
-    val sql = spark.sessionState.conf
-    val conf = spark.sessionState.newHadoopConf()
-    val opts = new ParquetOptions(Map.empty[String, String], sql)
-    // the settings the scan writes into its configuration
-    val flags = Seq(
-      SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> sql.nestedSchemaPruningEnabled,
-      SQLConf.CASE_SENSITIVE -> sql.caseSensitiveAnalysis,
-      SQLConf.PARQUET_BINARY_AS_STRING -> sql.isParquetBinaryAsString,
-      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> sql.isParquetINT96AsTimestamp,
-      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED ->
-        sql.parquetInferTimestampNTZEnabled,
-      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> sql.legacyParquetNanosAsLong,
-      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
-        sql.parquetReaderRespectUnknownTypeAnnotation)
-    val settings =
-      (SQLConf.SESSION_LOCAL_TIMEZONE.key -> sql.sessionLocalTimeZone) +:
-        flags.map { case (e, v) => e.key -> v.toString }
-    def reader(meta: FileMetaData) = {
-      val kv = meta.getKeyValueMetaData
-      val dates = DataSourceUtils.datetimeRebaseSpec(kv.get(_),
-        opts.datetimeRebaseModeInRead)
-      val int96 = DataSourceUtils.int96RebaseSpec(kv.get(_),
-        opts.int96RebaseModeInRead)
-      val convertTz =
-        if (sql.isParquetINT96TimestampConversion &&
-            !meta.getCreatedBy.startsWith("parquet-mr"))
-          DateTimeUtils.getZoneId(sql.sessionLocalTimeZone)
-        else null
-      new VectorizedParquetRecordReader(convertTz, dates.mode.toString,
-        dates.timeZone, int96.mode.toString, int96.timeZone, false,
-        sql.parquetVectorizedReaderBatchSize)
-    }
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
     files.foreach { st =>
-      val rows = openParquet(conf, st, settings, Some(schema))(reader)
-      try {
-        var i = 0L
-        while (rows.nextKeyValue()) {
-          f(st, i, rows.getCurrentValue.asInstanceOf[InternalRow])
-          i += 1
-        }
-      } finally rows.close()
+      val rows = read(PartitionedFileUtil.getPartitionedFile(
+        FileStatusWithMetadata(st), st.getPath, InternalRow.empty, 0L,
+        st.getLen))
+      var i = 0L
+      while (rows.hasNext) { f(st, i, rows.next()); i += 1 }
     }
-  }
-
-  /** The one parquet opener for readers that run outside Spark's scan:
-    * [[decodeLocal]] on the driver and the CDC feed's columnar reader.
-    * Writes `settings` and the read support into `conf`, a loaded
-    * configuration the caller owns; opens `file` whole and reads its
-    * footer once; builds the reader with `make` from the footer's
-    * metadata (where the rebase modes live) and initializes it under
-    * `requested`, or under the file's own schema as `conf`'s flags
-    * convert it. Spark's scan reaches the same reader through
-    * `buildReaderWithPartitionValues`, which broadcasts its Hadoop
-    * configuration on every call, and the path-based `initialize`
-    * loads a fresh `Configuration` per file. */
-  private[sources] def openParquet(conf: Configuration, file: FileStatus,
-      settings: Seq[(String, String)], requested: Option[StructType])(
-      make: FileMetaData => VectorizedParquetRecordReader)
-      : VectorizedParquetRecordReader = {
-    settings.foreach { case (k, v) => conf.set(k, v) }
-    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    val opened = ParquetFooterReader.openFileAndReadFooter(conf,
-      PartitionedFileUtil.getPartitionedFile(FileStatusWithMetadata(file),
-        file.getPath, InternalRow.empty, 0L, file.getLen), true)
-    val stream = opened.inputStream
-    try {
-      val meta = opened.footer.getFileMetaData
-      conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
-        requested.getOrElse(new ParquetToSparkSchemaConverter(conf)
-          .convert(meta.getSchema)).json)
-      val reader = make(meta)
-      try reader.initialize(
-        new FileSplit(file.getPath, 0L, file.getLen, Array.empty[String]),
-        new TaskAttemptContextImpl(conf, new TaskAttemptID()),
-        Some(opened.inputFile), Some(stream), Some(opened.footer))
-      catch { case t: Throwable => reader.close(); throw t }
-      reader
-    } catch { case t: Throwable => stream.close(); throw t }
   }
 
   /** A frame over `rows` (internal rows of `schema`) held in the plan:

@@ -516,7 +516,10 @@ private[cdc] class CdcReaderFactory extends PartitionReaderFactory {
 private[cdc] class CdcColumnarReader(absPath: String, version: Long,
     pad: StructType = new StructType(), expectWidth: Int = -1)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  private val reader = CdcColumnarReader.open(absPath)
+  import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+
+  private val reader = new VectorizedParquetRecordReader(false, 4096)
+  CdcColumnarReader.open(reader, absPath)
   // old-generation files NULL-fill the columns they predate as
   // CONSTANT-NULL partition columns (r18) — zero per-row work, same
   // mechanism as the version stamp; ordering (file cols, pads,
@@ -554,26 +557,34 @@ private[cdc] class CdcColumnarReader(absPath: String, version: Long,
 
 private[cdc] object CdcColumnarReader {
   import org.apache.hadoop.conf.Configuration
-  import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+  import org.apache.hadoop.mapred.FileSplit
+  import org.apache.hadoop.mapreduce.TaskAttemptID
+  import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+  import org.apache.parquet.hadoop.ParquetInputFormat
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
   import org.apache.spark.sql.internal.SQLConf
-  import graft.sources.ManifestFileIndex
 
-  /** Opens every column of `absPath`, in file order, through the one
-    * driver-side opener on a copy of the JVM's one loaded
-    * configuration, with the flags Spark's path-based
-    * `initialize(String, List)` sets; that overload loads a fresh
+  /** Opens every column of `absPath`, in file order, through the
+    * split-based `initialize` on a copy of the JVM's one loaded
+    * configuration. The flags are the ones Spark's path-based
+    * `initialize(String, List)` sets, but that overload loads a fresh
     * `Configuration` (Hadoop's default resources) per file. */
-  def open(absPath: String): VectorizedParquetRecordReader = {
+  def open(reader: VectorizedParquetRecordReader, absPath: String): Unit = {
     val conf = new Configuration(CheckpointCodec.loadedConf)
-    val path = new HPath(absPath)
-    val flags = Seq(SQLConf.PARQUET_BINARY_AS_STRING,
-      SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.CASE_SENSITIVE,
-      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
-      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).map(_.key -> "false")
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+      .foreach(e => conf.setBoolean(e.key, false))
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
     // the requested schema is the file's own, so the clip keeps it whole
-    ManifestFileIndex.openParquet(conf,
-      path.getFileSystem(conf).getFileStatus(path), flags, None)(
-      _ => new VectorizedParquetRecordReader(false, 4096))
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+      new ParquetToSparkSchemaConverter(conf)
+        .convert(ManifestCdc.footerSchema(absPath)).json)
+    val path = new HPath(absPath)
+    val len = path.getFileSystem(conf).getFileStatus(path).getLen
+    reader.initialize(new FileSplit(path, 0L, len, Array.empty[String]),
+      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
   }
 }
 

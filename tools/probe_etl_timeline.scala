@@ -4,12 +4,17 @@
 // stage, task and shuffle-write totals a SparkListener saw. After the
 // last op it prints one digest per sink (row count plus the sum of
 // xxhash64 over every column except `songplay_id`, columns by name),
-// so two trees' outputs can be compared line by line.
+// so two trees' outputs can be compared line by line, and the file
+// layout of each sink (files, directories, most files in one
+// directory, MB).
 //
 // Input: a sparkify_etl input set as perfbench generates it (the
 // directory holding `song-data/` and `log-data/`), in PROBE_IN:
 //   PROBE_IN=perfbench/.work/inputs/sparkify_etl/seed-1-<tag>/main
-// Optional PROBE_OPS (default 4); the first op warms the JVM.
+// or, instead, a TPC-H-style scale directory in PROBE_SF, from whose
+// events table the `etl_sparkify_full` input is synthesized
+// (`SparkifyBenchInput`). Optional PROBE_OPS (default 4); the first op
+// warms the JVM.
 //
 // Run (classes must be compiled; `local[3]` and 3 shuffle partitions
 // match perfbench's `--cores nproc-1` on a 4-core host):
@@ -33,7 +38,10 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.SparkifyJob
 
-val in = sys.env("PROBE_IN")
+val (songIn, logIn) = sys.env.get("PROBE_SF").fold {
+  val in = sys.env("PROBE_IN")
+  (s"$in/song-data", s"$in/log-data")
+}(graft.etl.SparkifyBenchInput.prepare(spark, _))
 val nOps = sys.env.getOrElse("PROBE_OPS", "4").toInt
 val out = java.nio.file.Files.createTempDirectory("graft_etl_probe").toString
 
@@ -74,7 +82,7 @@ spark.sparkContext.addSparkListener(new SparkListener {
   System.gc()
   jobs.clear(); jobEnd.clear(); stages.clear()
   val t0 = System.currentTimeMillis()
-  SparkifyJob.run(spark, s"$in/song-data", s"$in/log-data", Some(out))
+  SparkifyJob.run(spark, songIn, logIn, Some(out))
   val ms = System.currentTimeMillis() - t0
   Thread.sleep(500) // let the listener bus drain
   val st = stages.asScala.toSeq.sortBy(_.submitMs)
@@ -101,6 +109,13 @@ Seq("songs", "artists", "users", "time", "songplays").foreach { sink =>
   val r = df.agg(count(lit(1)),
     sum(xxhash64(cols: _*).cast("decimal(38,0)"))).head
   println(s"PROBE digest $sink rows=${r.getLong(0)} xxhash64_sum=${r.get(1)}")
+  val files = java.nio.file.Files.walk(java.nio.file.Paths.get(out, sink))
+    .iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+    .toSeq
+  val perDir = files.groupBy(_.getParent).values.map(_.size)
+  println(f"PROBE layout $sink files=${files.size} dirs=${perDir.size} " +
+    f"max_per_dir=${perDir.max} " +
+    f"mb=${files.map(java.nio.file.Files.size).sum / 1048576.0}%.2f")
 }
 graft.Caches.clearAll(spark)
 System.exit(0)
