@@ -104,24 +104,24 @@ object LogPipeline {
       .drop("t_start_time")
   }
 
-  /** Hive-layout sinks (etl.py:236,297), behind a small-files guard.
-    * The frames arrive hash-partitioned on `start_time`, so every
-    * partition holds rows of every month: written as they stand, each
-    * partition writes one file per month (partitions × months files;
-    * 608 per sink for a 38-month log at 16 partitions, against 38 with
-    * the guard). A rebalance on the layout keys gathers each (year,
-    * month) into one shuffle partition, which adaptive execution splits
-    * at the advisory size where it is large and merges where it is
-    * small: one file per month at small scale, advisory-sized files at
-    * large, every core writing once a month outgrows one partition.
-    * Unlike a repartition by range it needs no sampling pass, which
-    * here would recompute the un-cached J2 join. */
+  /** Hive-layout sinks (etl.py:236,297). The frames arrive
+    * hash-partitioned on `start_time` by [[nextSongEvents]] and are
+    * written as they stand: no further exchange, every core writing.
+    * Each (year, month) directory gets at most one file per partition,
+    * so files total partitions × months touched, against ~partitions +
+    * months under a guard that groups months. Measured on a 4-core
+    * host, `etl_sparkify_full`'s one-month input writes 32 time and 32
+    * songplays files at sf0.1 with 32 partitions (a guard: 1 and 3),
+    * and a 38-month log of 400k events writes 114 of each with 3
+    * partitions and 608 with 16 (a guard: 38 to 45), files of 10-60 KB.
+    * Both guards measured give up the job's gain: a range repartition
+    * samples its input, recomputing the un-cached J2 join, and a
+    * rebalance on (year, month) writes each small month in one task
+    * (SURVEY.md §6.4, "Composed ETL write layout"). */
   def writeTime(time: DataFrame, outDir: String): Unit =
-    time.hint("rebalance", col("year"), col("month"))
-      .write.mode("overwrite").partitionBy("year", "month").parquet(outDir)
+    time.write.mode("overwrite").partitionBy("year", "month").parquet(outDir)
 
   def writeSongplays(songplays: DataFrame, outDir: String): Unit =
-    songplays.hint("rebalance", col("year"), col("month"))
-      .write.mode("overwrite").partitionBy("year", "month")
+    songplays.write.mode("overwrite").partitionBy("year", "month")
       .parquet(outDir)
 }

@@ -15,9 +15,9 @@ import graft.sources.Readers
   * is a function of `start_time`, so the `time` dedup and the
   * fact-to-time join run partition-locally over the cache: each consumer
   * of `time` re-derives it with a partition-local aggregate instead of
-  * caching a second copy, and neither J2 nor the `time` dedup exchanges
-  * or broadcasts anything. The only later exchanges are the two hive
-  * sinks' small-files guard ([[LogPipeline.writeTime]]).
+  * caching a second copy, and no exchange or broadcast of `time` runs.
+  * The two hive sinks write that partitioning as it stands
+  * ([[LogPipeline.writeTime]]).
   */
 object SparkifyJob {
 
