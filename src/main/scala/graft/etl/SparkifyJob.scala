@@ -18,6 +18,12 @@ import graft.sources.Readers
   * caching a second copy, and no exchange or broadcast of `time` runs.
   * The two hive sinks write that partitioning as it stands
   * ([[LogPipeline.writeTime]]).
+  *
+  * The reference cached for the life of one cluster; this job runs in
+  * long-lived sessions, so a writing run pins the prefix only while the
+  * log sinks read it and releases it before it returns, whether the
+  * sinks succeed or fail (the 100 TB posture: no state that grows with
+  * the data outlives the call).
   */
 object SparkifyJob {
 
@@ -26,7 +32,19 @@ object SparkifyJob {
 
   /** Build all five tables; `write` sinks them with the reference's
     * partitioning (songs by year/artist_id, time+songplays by year/month,
-    * artists+users unpartitioned). */
+    * artists+users unpartitioned).
+    *
+    * With `outDir`, the persisted prefix is filled once, read by the
+    * three log sinks and unpersisted (blocking) before `run` returns or
+    * throws, so no block stays pinned; the returned frames then recompute
+    * from the inputs if read again. Without `outDir` nothing runs: the
+    * frames are lazy and read the persisted prefix, whose cache the
+    * caller owns (`unpersist` it, or `graft.Caches.clearAll`).
+    *
+    * Known limit: Spark's CacheManager keeps one entry per plan, so two
+    * concurrent writing runs over the same inputs in one session share
+    * the prefix, and the first to finish releases it under the other.
+    * The other run stays correct but recomputes its prefix. */
   def run(spark: SparkSession, songPath: String, logPath: String,
       outDir: Option[String] = None): Outputs = {
     val songData = Readers.songData(spark, songPath)
@@ -74,7 +92,7 @@ object SparkifyJob {
       def sink(name: String,
           write: => Unit): () => Option[(String, Throwable)] =
         () => scala.util.Try(write).failed.toOption.map(name -> _)
-      val (catalogFailed, logFailed) = DriverPool.par2(
+      val (catalogFailed, logFailed) = try DriverPool.par2(
         () => DriverPool.par(Seq(
           sink("songs", SongPipeline.writeSongs(songs, s"$out/songs")),
           sink("artists",
@@ -88,6 +106,7 @@ object SparkifyJob {
             sink("songplays",
               LogPipeline.writeSongplays(songplays, s"$out/songplays"))))
         })
+      finally cleanedLog.unpersist(blocking = true)
       val failed = (catalogFailed ++ logFailed).flatten
       if (failed.nonEmpty) {
         val err = new RuntimeException(

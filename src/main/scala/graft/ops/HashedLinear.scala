@@ -119,18 +119,10 @@ object HashedLinear {
 
   /** Raw dot product of a doc's bucket array against the learned table
     * — the zero-shuffle inference expression, emitted as the codegen'd
-    * [[graft.functions.BucketDotExpr]] (the HOF formulation below is
-    * interpreted; the custom expression runs inside whole-stage codegen
-    * with identical arithmetic — OpsSpec pins the two bit-equal). */
+    * [[graft.functions.BucketDotExpr]] (the DuckDB oracles replay it as
+    * an interpreted higher-order fold; the custom expression runs inside
+    * whole-stage codegen with identical arithmetic — OpsSpec pins it
+    * bit-equal to that fold). */
   def scoreColumn(buckets: Column, weights: Array[Long]): Column =
     graft.functions.BucketDotExpr.bucketDot(buckets, weights)
-
-  /** Higher-order-function twin of [[scoreColumn]] — the formulation
-    * the DuckDB oracles replay in SQL; kept as the differential
-    * reference for the codegen'd expression. */
-  def scoreColumnHof(buckets: Column, weights: Array[Long]): Column = {
-    val wLit = typedlit(weights.toSeq)
-    aggregate(buckets, lit(0L),
-      (acc, b) => acc + element_at(wLit, (b + 1).cast(IntegerType)))
-  }
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
   *
   * Correctness scope per SURVEY §7.4.4: there is no DuckDB oracle for
   * streaming, so these are demo/throughput surfaces proven by ScalaTest
-  * equivalence against the batch formulation (windowedCountsBatch) on the
-  * same input — the streaming and batch plans must agree row-for-row once
-  * the stream is fully drained.
+  * equivalence against the batch formulation on the same input — the
+  * streaming and batch plans must agree row-for-row once the stream is
+  * fully drained.
   */
 object EventStream {
 
@@ -25,26 +25,6 @@ object EventStream {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
-
-  /** Watermarked tumbling-window aggregate over a parquet directory
-    * stream. Append mode: windows emit once the watermark passes —
-    * bounded state, the only formulation that survives an unbounded
-    * stream at scale. */
-  def windowedCounts(spark: SparkSession, inputDir: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(inputDir)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-
-  /** Batch twin used by tests to check the drained stream. */
-  def windowedCountsBatch(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
 
   /** Session gap threshold shared by BOTH stateful session surfaces
     * (and mirrored as a literal in their SQL oracles, which must stay
@@ -82,11 +62,6 @@ object EventStream {
           UserSessionCount(uid, st.nEvents, st.nSessions)
       }
   }
-
-  def sessionCounts(spark: SparkSession, inputDir: String)
-      : Dataset[UserSessionCount] =
-    sessionCountsFrom(
-      spark.readStream.schema(eventSchema).parquet(inputDir))(spark)
 
   case class SessionListState(sessionIdx: Long, lastTsMicros: Long,
       curN: Long)
@@ -211,17 +186,6 @@ object EventStream {
       .groupBy("user_id")
       .agg(max(col("n_events")).as("n_events"),
         max(col("n_sessions")).as("n_sessions"))
-  }
-
-  /** Drain helper for tests/demos: run a streaming DF to a memory sink
-    * until all available input is processed, return the materialized
-    * table. */
-  def drainToMemory(spark: SparkSession, streaming: DataFrame,
-      name: String, outputMode: OutputMode): DataFrame = {
-    val q = streaming.writeStream.outputMode(outputMode)
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
   }
 
   /** Schema of a NANOS-generation events.parquet as the streaming source

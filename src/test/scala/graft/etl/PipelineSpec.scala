@@ -124,9 +124,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(refIds.distinct.length == refIds.length)
   }
 
-  test("SparkifyJob builds and writes all five tables with persist") {
+  /** Nothing pinned in the session: no persistent RDD, no cached plan. */
+  private def assertNothingPinned(): Unit = {
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      spark.sparkContext.getPersistentRDDs.values.mkString(", "))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("SparkifyJob writes all five tables and releases its prefix") {
+    graft.Caches.clearAll(spark)
     val out = java.nio.file.Files.createTempDirectory("graft_full").toString
     val res = SparkifyJob.run(spark, songPath, logPath, Some(out))
+    assertNothingPinned()
     assert(res.songs.count() == 4 && res.artists.count() == 4)
     assert(res.users.count() == 5 && res.time.count() == 5)
     assert(res.songplays.count() == 6)
@@ -136,6 +145,18 @@ class PipelineSpec extends AnyFunSuite {
     // the partitioned fact lost no columns to the layout
     assert(spark.read.parquet(s"$out/songplays").columns.toSet
       .contains("songplay_id"))
+  }
+
+  test("SparkifyJob releases its prefix when every sink fails") {
+    graft.Caches.clearAll(spark)
+    // a regular file as the output root: no sink can create its directory
+    val out = Files.createTempFile("graft_full", ".file").toString
+    val err = intercept[RuntimeException] {
+      SparkifyJob.run(spark, songPath, logPath, Some(out))
+    }
+    assert(err.getMessage ==
+      "Sparkify sink(s) failed: songs, artists, users, time, songplays")
+    assertNothingPinned()
   }
 
   /** The nodes of `p` down to the cached prefix, through adaptive
@@ -160,7 +181,13 @@ class PipelineSpec extends AnyFunSuite {
     }
 
   test("one exchange on start_time feeds both dedups and J2") {
+    graft.Caches.clearAll(spark)
     val res = SparkifyJob.run(spark, songPath, logPath)
+    // fill the prefix before planning, as the writing run's count does:
+    // the log sinks are planned over a filled cache, whose final
+    // adaptive plan reports the start_time partitioning (an unfilled
+    // one reports none)
+    res.users.count()
     Seq("time" -> res.time, "songplays" -> res.songplays).foreach {
       case (name, df) =>
         val plan = df.queryExecution.executedPlan

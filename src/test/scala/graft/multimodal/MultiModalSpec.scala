@@ -10,7 +10,7 @@ class MultiModalSpec extends AnyFunSuite {
   implicit lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  lazy val assets = MultiModal.syntheticAssets(
+  lazy val assets = MediaKit.syntheticAssets(
     Readers.table(spark, "/root/testdata/sf0.001", "documents"),
     "doc_id", "text")
 
@@ -75,7 +75,7 @@ class MultiModalSpec extends AnyFunSuite {
 
   test("real WAV decode: javax.sound.sampled round trip is sample-exact") {
     val samples = Array.tabulate(200)(i => ((i % 7) * 100 - 300).toShort)
-    val wav = MultiModal.encodeWav(16000, samples)
+    val wav = MediaKit.encodeWav(16000, samples)
     // genuine RIFF/WAVE container from the JDK writer
     assert(wav.take(4).toSeq == "RIFF".getBytes("US-ASCII").toSeq)
     assert(wav.slice(8, 12).toSeq == "WAVE".getBytes("US-ASCII").toSeq)
@@ -101,7 +101,7 @@ class MultiModalSpec extends AnyFunSuite {
       (44100, Array[Short](Short.MinValue, Short.MaxValue)),
       (12000, Array.empty[Short]))
     cases.foreach { case (rate, samples) =>
-      val jdk = MultiModal.encodeWav(rate, samples)
+      val jdk = MediaKit.encodeWav(rate, samples)
       val direct = MultiModal.encodeWavDirect(rate, samples)
       val viaJdk = MultiModal.decodeWav(direct)
       val viaDirectOfJdk = MultiModal.decodeWavDirect(jdk)
@@ -115,7 +115,7 @@ class MultiModalSpec extends AnyFunSuite {
     // rejection set matches: garbage, truncated header, stereo refusal
     assert(MultiModal.decodeWavDirect("not audio".getBytes("UTF-8")).isEmpty)
     assert(MultiModal.decodeWavDirect(
-      MultiModal.encodeWav(8000, Array[Short](1, 2)).take(20)).isEmpty)
+      MediaKit.encodeWav(8000, Array[Short](1, 2)).take(20)).isEmpty)
     val truncated = MultiModal.encodeWavDirect(8000, Array[Short](1, 2, 3))
     assert(MultiModal.decodeWavDirect(truncated.dropRight(2)).isEmpty,
       "data chunk overrunning the buffer must be rejected, not read")
@@ -135,7 +135,7 @@ class MultiModalSpec extends AnyFunSuite {
   }
 
   test("extractFeatures uses the real WAV decoder for audio assets") {
-    val wav = MultiModal.encodeWav(8000, Array.fill(50)(123.toShort))
+    val wav = MediaKit.encodeWav(8000, Array.fill(50)(123.toShort))
     val ds = Seq(MultiModal.MediaAsset(1L, "audio", wav, 0, 0, 8000)).toDS()
     val f = MultiModal.extractFeatures(ds).collect().head
     assert(f.feature.take(4).toSeq == Seq(8000f, 50f, 123f, 123f))
@@ -215,7 +215,7 @@ class MultiModalSpec extends AnyFunSuite {
   }
 
   test("frame sampling yields stride-aligned offsets per asset") {
-    val frames = MultiModal.sampleFrames(assets, stride = 100)
+    val frames = MediaKit.sampleFrames(assets, stride = 100)
     val one = frames.filter(col("asset_id") === 1L)
       .orderBy("frame_idx").collect()
     assert(one.nonEmpty)

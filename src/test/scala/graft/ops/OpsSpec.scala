@@ -601,6 +601,16 @@ class OpsSpec extends AnyFunSuite {
     assert(got == expected && tri.nonEmpty)
   }
 
+  /** Higher-order-function twin of `HashedLinear.scoreColumn`, the
+    * formulation the DuckDB oracles replay in SQL: the differential
+    * reference for the codegen'd expression. */
+  private def scoreColumnHof(buckets: org.apache.spark.sql.Column,
+      weights: Array[Long]) = {
+    val wLit = typedlit(weights.toSeq)
+    aggregate(buckets, lit(0L),
+      (acc, b) => acc + element_at(wLit, (b + 1).cast(IntegerType)))
+  }
+
   test("BucketDotExpr is bit-equal to the interpreted HOF fold") {
     import org.apache.spark.sql.functions._
     import graft.ops.HashedLinear
@@ -615,7 +625,7 @@ class OpsSpec extends AnyFunSuite {
         expr(HashedLinear.bucketsExprSql("text")).as("bk"))
     val both = prep
       .withColumn("fast", HashedLinear.scoreColumn(col("bk"), w))
-      .withColumn("slow", HashedLinear.scoreColumnHof(col("bk"), w))
+      .withColumn("slow", scoreColumnHof(col("bk"), w))
     assert(both.filter(col("fast") =!= col("slow")).count() == 0)
     assert(both.count() == 500)
     // null input stays null; empty array folds to 0 in both
@@ -623,7 +633,7 @@ class OpsSpec extends AnyFunSuite {
       "SELECT CAST(NULL AS ARRAY<BIGINT>) AS bk UNION ALL " +
       "SELECT CAST(ARRAY() AS ARRAY<BIGINT>)")
     val er = edge.select(HashedLinear.scoreColumn(col("bk"), w).as("f"),
-        HashedLinear.scoreColumnHof(col("bk"), w).as("s"))
+        scoreColumnHof(col("bk"), w).as("s"))
       .collect().map(r => (r.isNullAt(0), if (r.isNullAt(0)) -1L else r.getLong(0),
         r.isNullAt(1))).toSeq
     assert(er.map(_._1) == er.map(_._3), "null-propagation must match")
@@ -634,7 +644,7 @@ class OpsSpec extends AnyFunSuite {
     val nullElem = spark.sql(
       "SELECT ARRAY(CAST(1 AS BIGINT), CAST(NULL AS BIGINT)) AS bk")
       .select(HashedLinear.scoreColumn(col("bk"), w).as("f"),
-        HashedLinear.scoreColumnHof(col("bk"), w).as("s"))
+        scoreColumnHof(col("bk"), w).as("s"))
       .collect()(0)
     assert(nullElem.isNullAt(0) && nullElem.isNullAt(1),
       "null element must null the dot in both the expr and the HOF twin")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.streaming.EventStream
+import graft.streaming.{EventStream, StreamKit}
 
 /** Pins the dual ts-generation reader path (round-10's fix, previously
   * regression-unprotected): the driver's events.parquet has shipped as
@@ -56,7 +56,7 @@ class DualGenerationSpec extends AnyFunSuite {
   private def streamMicros(path: String, name: String): Map[Long, Long] = {
     val s = EventStream.eventsStream(spark, path)
       .select(col("event_id"), unix_micros(col("ts")).as("us"))
-    EventStream.drainToMemory(spark, s, name, OutputMode.Append())
+    StreamKit.drainToMemory(spark, s, name, OutputMode.Append())
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

@@ -23,9 +23,9 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("windowed counts: stream drained == batch") {
-    val streamed = EventStream.drainToMemory(spark,
-      EventStream.windowedCounts(spark, inputDir), "wc", OutputMode.Append)
-    val batch = EventStream.windowedCountsBatch(spark.read.parquet(inputDir))
+    val streamed = StreamKit.drainToMemory(spark,
+      StreamKit.windowedCounts(spark, inputDir), "wc", OutputMode.Append)
+    val batch = StreamKit.windowedCountsBatch(spark.read.parquet(inputDir))
     // append mode emits only watermark-closed windows: every emitted row
     // must match the batch result exactly, and most windows must emit
     val b = batch.collect().map(r => r.toSeq).toSet
@@ -134,8 +134,8 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("stateful session counts: totals match batch sessionization") {
-    val out = EventStream.drainToMemory(spark,
-      EventStream.sessionCounts(spark, inputDir).toDF(),
+    val out = StreamKit.drainToMemory(spark,
+      StreamKit.sessionCounts(spark, inputDir).toDF(),
       "sc", OutputMode.Update)
     // one final state row per user (single micro-batch over static input)
     val latest = out.groupBy("user_id")
