@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * bench/verify session they accumulate in the block manager and compete
   * with shuffle/execution memory. Bench and Verify call this between
   * queries — dropping every persistent RDD and SQL-cache entry is safe
-  * there because no state is shared across queries.
+  * there because no state is shared across queries. A writing
+  * `etl.SparkifyJob.run` needs none of this: it releases its own
+  * persisted prefix before it returns.
   */
 object Caches {
   def clearAll(spark: SparkSession): Unit = {

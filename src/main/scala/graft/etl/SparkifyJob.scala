@@ -19,11 +19,11 @@ import graft.sources.Readers
   * The two hive sinks write that partitioning as it stands
   * ([[LogPipeline.writeTime]]).
   *
-  * The reference cached for the life of one cluster; this job runs in
-  * long-lived sessions, so a writing run pins the prefix only while the
-  * log sinks read it and releases it before it returns, whether the
-  * sinks succeed or fail (the 100 TB posture: no state that grows with
-  * the data outlives the call).
+  * The reference ran once per cluster, so nothing it held outlived the
+  * cluster; this job runs in long-lived sessions, so a writing run pins
+  * the prefix only while the log sinks read it and releases it before
+  * it returns, whether the sinks succeed or fail (the 100 TB posture:
+  * no state that grows with the data outlives the call).
   */
 object SparkifyJob {
 

@@ -139,6 +139,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.songs.count() == 4 && res.artists.count() == 4)
     assert(res.users.count() == 5 && res.time.count() == 5)
     assert(res.songplays.count() == 6)
+    // the returned frames recompute from the inputs: nothing re-pinned
+    assertNothingPinned()
     Seq("songs", "artists", "users", "time", "songplays").foreach { t =>
       assert(spark.read.parquet(s"$out/$t").count() > 0, s"$t empty")
     }

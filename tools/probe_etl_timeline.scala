@@ -1,12 +1,14 @@
 // ETL TIMELINE probe: runs `SparkifyJob.run` op after op on one input
 // set, in the session shape of perfbench's sparkify_etl workload, and
-// prints per op the wall time, the job and stage timeline, and the
-// stage, task and shuffle-write totals a SparkListener saw. After the
-// last op it prints one digest per sink (row count plus the sum of
-// xxhash64 over every column except `songplay_id`, columns by name),
-// so two trees' outputs can be compared line by line, and the file
-// layout of each sink (files, directories, most files in one
-// directory, MB).
+// prints per op the wall time, the job and stage timeline, the stage,
+// task and shuffle-write totals a SparkListener saw, and what the op
+// left pinned: the MB the block manager still holds for cached RDDs and
+// the number of persistent RDDs (both 0 when the job released its
+// prefix). After the last op it prints one digest per sink (row count
+// plus the sum of xxhash64 over every column except `songplay_id`,
+// columns by name), so two trees' outputs can be compared line by line,
+// and the file layout of each sink (files, directories, most files in
+// one directory, MB).
 //
 // Input: a sparkify_etl input set as perfbench generates it (the
 // directory holding `song-data/` and `log-data/`), in PROBE_IN:
@@ -86,9 +88,13 @@ spark.sparkContext.addSparkListener(new SparkListener {
   val ms = System.currentTimeMillis() - t0
   Thread.sleep(500) // let the listener bus drain
   val st = stages.asScala.toSeq.sortBy(_.submitMs)
+  val heldMb = spark.sparkContext.getRDDStorageInfo
+    .map(i => i.memSize + i.diskSize).sum / 1048576.0
   println(f"PROBE op $op: $ms ms, ${st.size} stages, " +
     f"${st.map(_.tasks).sum} tasks, shuffle write " +
-    f"${st.map(_.shuffleWrite).sum / 1048576.0}%.2f MB")
+    f"${st.map(_.shuffleWrite).sum / 1048576.0}%.2f MB, held " +
+    f"$heldMb%.2f MB in ${spark.sparkContext.getPersistentRDDs.size} " +
+    "persistent RDDs")
   jobs.asScala.toSeq.sortBy(_.startMs).foreach { j =>
     val end = Option(jobEnd.get(j.id)).map(_ - t0).getOrElse(-1L)
     val done = st.filter(s => j.stages.contains(s.id))
