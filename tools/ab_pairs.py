@@ -36,9 +36,8 @@ from collections import defaultdict
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def contract():
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        return json.load(f)
+with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+    CONTRACT = json.load(f)
 
 
 def export(rev, dest):
@@ -58,9 +57,9 @@ def run(args):
               "change": os.path.join(work, "change")}
     export(args.parent, copies["parent"])
     export(args.change, copies["change"])
-    cmd = contract()["command"] + [
+    cmd = CONTRACT["command"] + [
         "--workload", args.workload, "--seed", str(args.seed),
-        "--seconds", str(contract()["run_seconds"]),
+        "--seconds", str(CONTRACT["run_seconds"]),
         "--trace", str(args.trace)]
     out = os.path.join(work, "ab.jsonl")
     same = (args.workload, args.seed, args.trace)
@@ -86,7 +85,7 @@ def run(args):
             m = res.get("metrics", {})
             print(f"pair {pair} {side}: correct={res.get('correct')} "
                   + " ".join(f"{e['name']}={m[e['name']]['value']:.6g}"
-                             for e in contract()["end_to_end"]
+                             for e in CONTRACT["end_to_end"]
                              if e["name"] in m),
                   flush=True)
 
@@ -118,7 +117,7 @@ def report(args):
               f"{bad[(workload, seed)]} incorrect or failed runs")
         print(f"{'metric':30} {'parent q1/med/q3':>28} "
               f"{'change q1/med/q3':>28} {'wins':>7}  verdict")
-        for e in contract()["end_to_end"]:
+        for e in CONTRACT["end_to_end"]:
             name, higher = e["name"], e["better"] == "higher"
             both = [(p["parent"][name]["value"], p["change"][name]["value"])
                     for p in pairs
